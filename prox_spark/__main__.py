@@ -148,9 +148,9 @@ def main(argv: list[str] | None = None) -> int:
             if "@" in path:
                 path, pin = path.rsplit("@", 1)
                 if pin.startswith("ts:"):
-                    from prox_spark.table_ds import version_at_timestamp_py
+                    from prox_spark.table_stream import resolve_timestamp
 
-                    version = version_at_timestamp_py(path, float(pin[3:]))
+                    version = resolve_timestamp(path, float(pin[3:]))
                 else:
                     version = int(pin)
             register_sql(spark, name, path, version=version)

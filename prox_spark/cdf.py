@@ -46,15 +46,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructType
 
-from prox_spark.table import (
-    _abs,
-    _manifest_versions,
-    _read_files,
-    read_manifest,
-)
-
-CHANGE_TYPE_COL = "_change_type"
-COMMIT_VERSION_COL = "_commit_version"
+from prox_spark import manifest as M
+from prox_spark.manifest import CHANGE_TYPE_COL, COMMIT_VERSION_COL
+from prox_spark.table import _manifest_versions, _read_files, read_manifest
 
 
 def _stamp(df: DataFrame, change_type: str, v: int) -> DataFrame:
@@ -67,47 +61,21 @@ def _version_changes(
     spark: SparkSession, table_path: str, prev: dict, cur: dict, v: int
 ) -> list[DataFrame]:
     """The signed rows of ONE commit, given its manifest and the
-    previous version's."""
-    prev_files = prev.get("files") or []
-    cur_files = cur.get("files") or []
-    prev_set, cur_set = set(prev_files), set(cur_files)
+    previous version's (classified by
+    :func:`prox_spark.manifest.commit_changes`)."""
     frames: list[DataFrame] = []
-
-    added = [f for f in cur_files if f not in prev_set]
-    if added:
-        frames.append(
-            _stamp(_read_files(spark, table_path, cur, added), "insert", v)
+    for c in M.commit_changes(prev, cur, v):
+        df = _read_files(
+            spark, table_path, cur if c.kind == "insert" else prev, c.files
         )
-
-    removed = [f for f in prev_files if f not in cur_set]
-    if removed:
-        frames.append(
-            _stamp(_read_files(spark, table_path, prev, removed), "delete", v)
-        )
-
-    prev_entry_files = {d["file"] for d in (prev.get("deletes") or [])}
-    for e in cur.get("deletes") or []:
-        if e["file"] in prev_entry_files:
-            continue  # carried over, already emitted at its own commit
-        # rows disappearing at v: the entry's targets as visible at
-        # v−1, semi-joined with the key set. Targets also REMOVED at v
-        # are excluded — their rows were already emitted above.
-        targets = [f for f in e["targets"] if f in prev_set and f in cur_set]
-        if not targets:
-            continue
-        base = _read_files(spark, table_path, prev, targets)
-        keys = (
-            spark.read.parquet(_abs(table_path, e["file"]))
-            .select(*e["keys"])
-            .distinct()
-        )
-        frames.append(
-            _stamp(
-                base.join(F.broadcast(keys), e["keys"], "left_semi"),
-                "delete",
-                v,
+        if c.entry is not None:
+            keys = (
+                spark.read.parquet(M.resolve(table_path, c.entry["file"]))
+                .select(*c.entry["keys"])
+                .distinct()
             )
-        )
+            df = df.join(F.broadcast(keys), c.entry["keys"], "left_semi")
+        frames.append(_stamp(df, c.kind, v))
     return frames
 
 

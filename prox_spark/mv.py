@@ -905,7 +905,7 @@ def rewrite_join_aggregate(
     candidates: list[str],
     avgs: list[str] = (),
 ) -> tuple[DataFrame, str | None]:
-    """The join twin of :func:`rewrite_aggregate`: route a
+    """The join counterpart of :func:`rewrite_aggregate`: route a
     count+sum(+avg)-by-keys aggregate over ``left ⋈ right`` to a
     covering registered JOIN view (same base pair in either order with
     the same join keys, requested keys/sums/avgs ⊆ the view's), served

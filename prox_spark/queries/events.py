@@ -2,7 +2,7 @@
 (SURVEY.md §2.10 extension; the reference is batch-only, so these
 extend PROX's capabilities onto the driver `events` table).
 
-Each query here is the *batch-mode* twin of a structured-streaming
+Each query here is the *batch-mode* counterpart of a structured-streaming
 operator in prox_spark/streaming.py, so DuckDB can oracle-check the
 windowed semantics (watermark-dependent behavior is covered by
 rows-only checks on the streaming side).

@@ -265,7 +265,8 @@ def _part_co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     is near-complete, 135M oriented wedges; this graph has thousands)."""
     from prox_spark.queries.text import _spread
 
-    assert CO_SUPPORT == 2, "min!=max rewrite requires CO_SUPPORT == 2"
+    if CO_SUPPORT != 2:
+        raise ValueError("min!=max rewrite requires CO_SUPPORT == 2")
     cat = testdata_catalog(spark, sf_dir)
     # spread rationale: see _interaction_edges — here the single-split
     # scan serializes the per-order pair fan-out (a measured 1.5 s

@@ -2498,7 +2498,7 @@ def _pca_iterate_local(
 
 
 def _sdiv_py(a: int, d: int) -> int:
-    """Python twin of _sdiv_spark/_sdiv_duck: truncate-toward-zero via
+    """Python counterpart of _sdiv_spark/_sdiv_duck: truncate-toward-zero via
     sign·(|a| // d), so all three agree on negatives."""
     return -((-a) // d) if a < 0 else a // d
 

@@ -114,7 +114,7 @@ def q44_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q69_streaming_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window aggregation run as a REAL stream
     (file source -> withWatermark + window groupBy -> memory sink,
-    availableNow): the streaming twin of q20, gated against the same
+    availableNow): the streaming counterpart of q20, gated against the same
     batch SQL. In a single availableNow pass the watermark cannot drop
     anything (it only advances between micro-batches), so stream output
     == batch aggregation — exactly the equivalence this query pins;
@@ -873,7 +873,7 @@ def view_merge_batch(
 def signed_view_merge_batch(
     batch_df: DataFrame, batch_id: int, store: str, dim_path: str
 ) -> None:
-    """The SIGNED twin of :func:`view_merge_batch` for change-feed
+    """The SIGNED counterpart of :func:`view_merge_batch` for change-feed
     batches (readChangeFeed=true): insert rows contribute +1/+chars,
     delete rows −1/−chars — so the maintained view tracks a table
     through deletes and updates (delete+insert pairs net), the full

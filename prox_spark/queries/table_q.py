@@ -649,7 +649,7 @@ def _chunked_table(spark: SparkSession, sf_dir: str) -> str:
 
 def q167_chunked_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point lookups through the CHUNKED (v2) manifest layout — the
-    driver-gated twin of tests/test_chunked_manifest.py: the documents
+    driver-gated counterpart of tests/test_chunked_manifest.py: the documents
     table is staged per process as a CHUNKED_N_FILES-way range-
     clustered commit, which exceeds CHUNK_THRESHOLD so the snapshot
     references immutable chunk files with per-chunk key ranges (the
@@ -1393,9 +1393,16 @@ def q183_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     dir_born: dict[str, int] = {}
     for v, fs in by_born.items():
         for f in fs:
+            if "/" not in f:
+                # its scanned parent is the table dir, which no
+                # generation names: the join below would drop its rows
+                raise ValueError(
+                    f"manifest entry {f!r} has no generation dir; "
+                    "cannot resolve its birth version by dir"
+                )
             # the file's immediate parent dir NAME (matches the
             # scanned path's last-but-one component below)
-            d = f.split("/")[-2] if "/" in f else ""
+            d = f.split("/")[-2]
             if dir_born.setdefault(d, v) != v:
                 raise ValueError(
                     f"generation dir {d!r} spans versions "
@@ -4088,7 +4095,8 @@ def _ds_table(spark: SparkSession, sf_dir: str) -> tuple:
         rename_column,
         split_files_by_key_ranges,
     )
-    from prox_spark.table_ds import ProxTableReader, manifest_py
+    from prox_spark.table_ds import ProxTableReader
+    from prox_spark.table_stream import load_manifest
 
     from ._staging import staged
 
@@ -4117,7 +4125,7 @@ def _ds_table(spark: SparkSession, sf_dir: str) -> tuple:
 
         # prune pins: the DataSource's pushed-filter file list must
         # equal the JVM point-lookup prune on the same predicate
-        mm = manifest_py(t)
+        mm = load_manifest(t)
         rd = ProxTableReader({}, mm, t)
         full = rd.pruned_files()
         rd.pushFilters([EqualTo(("doc_id",), 3)])

@@ -1796,7 +1796,8 @@ def q115_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ">= SEG_DUP_DOCS distinct docs" == min != max over doc_id —
     # valid exactly for a threshold of 2 (ADVICE r12: fail loudly at
     # the definition site if the constant ever moves)
-    assert SEG_DUP_DOCS == 2, "min!=max rewrite requires SEG_DUP_DOCS == 2"
+    if SEG_DUP_DOCS != 2:
+        raise ValueError("min!=max rewrite requires SEG_DUP_DOCS == 2")
     # ... computed as WHOLE-PARTITION window aggregates over the
     # segment digest instead of the r12 {groupBy + left-join-back}
     # pair: ONE shuffle of the segment frame replaces two (agg
@@ -2833,7 +2834,7 @@ def _bpe_round_frame(cur: DataFrame) -> DataFrame:
 
 
 def bpe_round_audit_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy round-1 twin of q163's loop body, for tools/plan_audit.py."""
+    """Lazy round-1 counterpart of q163's loop body, for tools/plan_audit.py."""
     wrapped = _docs(spark, sf_dir).select(
         F.concat(
             F.lit(_US + _US),

@@ -57,7 +57,7 @@ def read_event_stream(
 
 
 def hourly_stats(events: DataFrame, watermark: str | None = None) -> DataFrame:
-    """Tumbling 1-hour window stats — twin of q20_hourly_event_stats;
+    """Tumbling 1-hour window stats — counterpart of q20_hourly_event_stats;
     identical output schema so batch/stream results are comparable."""
     ev = events.withWatermark("ts", watermark) if watermark else events
     return (
@@ -319,11 +319,11 @@ def drain_table_stream(
     single-batch fallback runs unpaced, see the reader docstring).
     Returns the number of starts it took; bounded by
     ``max_starts``."""
-    from prox_spark.table_stream import _list_versions
+    from prox_spark.table_stream import list_versions
 
     starts = 0
     while True:
-        versions = _list_versions(table_path)
+        versions = list_versions(table_path)
         if not versions:
             return starts  # nothing committed yet: nothing to drain
         head = versions[-1]

@@ -1,77 +1,15 @@
-"""Minimal manifest-log table format: atomic commits, snapshot
-isolation, time travel, and FILE-GRANULAR commits for parquet tables,
-without adopting Delta/Iceberg.
-
-The reference full-refreshes Redshift tables (truncate + reload,
-reference glue_scripts/s3_to_redshift_script.py preactions), so it
-never faces concurrent-reader atomicity; a 100 TB merge pipeline does.
-A bare directory-swap publish (round-2 design) has a window where a
-reader lists the directory mid-rename and sees a half-published table.
-The fix is the same idea every log-structured table format uses:
-
-    table_path/
-      data/snap-00000002-ab12cd34/part-*.parquet   immutable data files
-      _manifests/manifest-00000002.json
-
-A manifest lists the exact FILES that make up its version (plus the
-table schema and per-file min/max stats on the declared key columns):
-
-    {"version": 2,
-     "files": ["data/snap-...-/part-0.parquet", ...],
-     "stats": {"data/.../part-0.parquet": {"id": [1, 499]}, ...},
-     "stat_cols": ["id"],
-     "schema": {...spark schema json...}}
-
-- WRITE: materialize new data files under ``data/`` (nothing reads
-  them yet), then publish by renaming a temp file to
-  ``manifest-{N+1}.json`` — a single atomic FS rename. A failed job
-  leaves orphan data files (vacuumed later), never a broken table.
-- DELTA COMMIT (:func:`commit_delta`): version N+1 re-lists N's
-  untouched files verbatim and adds only the rewritten ones — a merge
-  touching one key rewrites one file's worth of data, not the table.
-  That removes the copy-on-write-the-world scale killer: at 100 TB
-  with daily CDC feeds, commit cost is ∝ files whose key range
-  intersects the changed keys (min/max pruning over the manifest
-  stats, the same file-skipping Delta/Iceberg do), not table size.
-- READ: list ``_manifests``, take the highest version, read ONLY the
-  files it names, with the schema it declares — so add-column
-  evolution needs NO rewrite of old files (they read the new column
-  as NULL). Readers planned against version N keep reading N's
-  immutable files even while N+1 commits — snapshot isolation.
-- TIME TRAVEL: ``read_table(..., version=k)`` pins manifest k while
-  it hasn't been vacuumed.
-- POINT LOOKUP: data files carry parquet bloom filters on the stat
-  columns; :func:`read_table_point` prunes files by manifest min/max
-  BEFORE planning and lets the blooms reject row groups inside the
-  survivors.
-
-Single-writer by design (the driver of a merge pipeline serializes
-commits); the atomic rename makes a racing second writer fail loudly
-rather than corrupt. On object stores without atomic rename (raw S3)
-the manifest publish needs a conditional PUT instead — same protocol,
-different primitive.
-
-Metadata scaling: a SMALL table's manifest is one json document
-listing every live file (~150 bytes/entry) — the cheapest layout to
-read and reason about. Past ``CHUNK_THRESHOLD`` live files the
-snapshot splits (Iceberg's manifest-list/manifest-file pattern): the
-doc lists immutable CHUNK files of <= ``CHUNK_SIZE`` entries with
-per-chunk key ranges, and a commit rewrites only the chunks whose
-membership changed, carrying the rest by reference — metadata WRITE
-cost O(touched files) per commit, point-lookup metadata READ cost
-O(matching chunks) (chunks outside the probe's range are never
-opened), and the ceiling moves from ~10^5 files (single doc) to the
-chunk-count regime (~10^7 at the defaults). Same atomic-rename
-publish either way; deletes-only commits on a chunked table write
-one key file plus an O(chunk-count) snapshot doc. Footer stats for
-large commits are gathered executor-side.
+"""The manifest-log table format's driver side: commits, reads,
+branches, tags, clones, schema evolution and maintenance, with
+metadata IO through Hadoop FS (the only path for Hadoop-configured
+schemes and for HDFS's atomic rename). The format itself (layout,
+chunking, branch and tag names, sticky keys, the CAS rule) is
+specified and encoded in :mod:`prox_spark.manifest`.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import threading
 import uuid
 
@@ -79,21 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-MANIFEST_DIR = "_manifests"
-DATA_DIR = "data"
-
-# Chunked-manifest (v2) layout thresholds: beyond CHUNK_THRESHOLD live
-# files, the snapshot doc stops listing files inline and instead
-# points at immutable CHUNK files of <= CHUNK_SIZE entries each
-# (Iceberg's manifest-list/manifest-file split, on the same
-# atomic-rename publish). A delta commit then rewrites only the
-# chunks whose membership changed and carries the rest by reference:
-# per-commit metadata WRITE cost becomes O(touched files), not
-# O(live files), lifting the single-doc ceiling (~10^5 files) to the
-# chunk-count regime (~10^7 at the defaults). Tests shrink these to
-# exercise the layout on small tables.
-CHUNK_THRESHOLD = 256
-CHUNK_SIZE = 256
+from prox_spark import manifest as M
+from prox_spark.manifest import DATA_DIR, MANIFEST_DIR
 
 _SMALL_COMMIT_CONF_LOCK = threading.Lock()
 
@@ -107,11 +32,6 @@ class CommitConflictError(OSError):
     writer published it; the losing commit's data files are removed.
     Subclasses OSError so pre-CAS callers that caught the bare rename
     race keep working."""
-
-# values safe to JSON-encode and compare against Spark collect() output;
-# anything else (timestamps, decimals, binary) degrades to "no stats",
-# which pruning treats conservatively (file always considered touched)
-_STAT_TYPES = (int, float, str)
 
 
 class ConstraintViolationError(ValueError):
@@ -128,41 +48,21 @@ def _fs(spark: SparkSession, path: str):
     return jvm, fs, hpath
 
 
-_BRANCH_NAME_RE = re.compile(r"^[A-Za-z0-9_-]+$")
+def _manifest_listing(spark: SparkSession, table_path: str) -> list:
+    """The FileStatus entries of ``_manifests`` (empty when absent)."""
+    jvm, fs, _ = _fs(spark, table_path)
+    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
+    return list(fs.listStatus(mdir)) if fs.exists(mdir) else []
 
 
-def _mprefix(ref: str) -> str:
-    """Manifest filename prefix for a ref. ``main`` is the published
-    table (the classic ``manifest-`` names every existing table
-    already has); any other name is a BRANCH whose manifests live in
-    the same ``_manifests`` dir under a prefix the main listing's
-    ``manifest-`` filter never matches — so branch commits are
-    invisible to every reader that didn't ask for the branch."""
-    if ref == "main":
-        return "manifest-"
-    if not _BRANCH_NAME_RE.match(ref):
-        raise ValueError(
-            f"invalid branch name {ref!r}: use [A-Za-z0-9_-]+ (and not 'main')"
-        )
-    return f"branch.{ref}."
+def _manifest_names(spark: SparkSession, table_path: str) -> list[str]:
+    return [st.getPath().getName() for st in _manifest_listing(spark, table_path)]
 
 
 def _manifest_versions(
     spark: SparkSession, table_path: str, ref: str = "main"
 ) -> list[int]:
-    jvm, fs, _ = _fs(spark, table_path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
-    if not fs.exists(mdir):
-        return []
-    prefix = _mprefix(ref)
-    out = []
-    for st in fs.listStatus(mdir):
-        name = st.getPath().getName()
-        if name.startswith(prefix) and name.endswith(".json"):
-            v = name[len(prefix) : -len(".json")]
-            if v.isdigit():
-                out.append(int(v))
-    return sorted(out)
+    return M.versions_in(_manifest_names(spark, table_path), ref)
 
 
 def is_manifest_table(spark: SparkSession, table_path: str) -> bool:
@@ -199,39 +99,10 @@ def read_manifest(
 
 def _assemble(spark: SparkSession, table_path: str, doc: dict,
               chunk_filter=None) -> dict:
-    """Resolve a chunked snapshot into the classic manifest shape.
-    ``chunk_filter(entry) -> bool`` skips chunks it rejects — the
-    metadata half of a point lookup (entries carry per-chunk key
-    ranges; a rejected chunk provably holds no matching file, so its
-    chunk file is never even read). Classic docs pass through."""
-    if "chunks" not in doc:
-        return doc
-    files: list[str] = []
-    stats: dict = {}
-    born: dict = {}
-    sizes: dict = {}
-    entries: list[dict] = []
-    for entry in doc["chunks"]:
-        if chunk_filter is not None and not chunk_filter(entry):
-            continue
-        chunk = _read_json(spark, table_path, entry["file"])
-        files.extend(chunk["files"])
-        stats.update(chunk.get("stats") or {})
-        born.update(chunk.get("born") or {})
-        sizes.update(chunk.get("sizes") or {})
-        # membership rides along (stripped before re-serialization) so
-        # a later commit can carry untouched chunks by reference
-        # without re-reading them
-        entries.append({**entry, "_members": chunk["files"]})
-    out = dict(doc)
-    out["chunks"] = entries
-    out["files"] = files
-    out["stats"] = stats
-    if born:
-        out["born"] = born
-    if sizes:
-        out["sizes"] = sizes
-    return out
+    """:func:`prox_spark.manifest.assemble` over driver-side reads."""
+    return M.assemble(
+        doc, lambda rel: _read_json(spark, table_path, rel), chunk_filter
+    )
 
 
 def read_manifest_pruned(
@@ -255,35 +126,14 @@ def read_manifest_pruned(
     doc = _read_manifest_file(spark, table_path, v)
     return _assemble(
         spark, table_path, doc,
-        chunk_filter=lambda e: _overlaps(e.get("ranges"), key_ranges),
+        chunk_filter=lambda e: M.overlaps(e.get("ranges"), key_ranges),
     )
 
 
 def _read_manifest_file(
     spark: SparkSession, table_path: str, v: int, ref: str = "main"
 ) -> dict:
-    return _read_json(
-        spark, table_path, f"{MANIFEST_DIR}/{_mprefix(ref)}{v:08d}.json"
-    )
-
-
-def _is_foreign(entry: str) -> bool:
-    """True when a manifest file entry is an ABSOLUTE path or full URI
-    rather than a table-relative one. Relative entries are the norm;
-    a SHALLOW CLONE's manifest references the source table's files
-    absolutely (the Delta shallow-clone convention), so they resolve
-    as-is and never collide with the clone's own ``data/`` listing —
-    which is what keeps the clone's vacuum/compaction cleanup (both
-    act only on locally-listed files) physically unable to touch the
-    source's data."""
-    return entry.startswith("/") or "://" in entry
-
-
-def _abs(table_path: str, entry: str) -> str:
-    """Resolve a manifest file entry to a readable path: relative
-    entries join the table dir, foreign (absolute/URI) entries from a
-    shallow clone pass through untouched."""
-    return entry if _is_foreign(entry) else f"{table_path}/{entry}"
+    return _read_json(spark, table_path, M.manifest_rel(v, ref))
 
 
 def _is_missing_file_error(ex: Exception) -> bool:
@@ -368,7 +218,7 @@ def _read_files(
     born = manifest.get("born") or {}
     if not deletes and not renames:
         return spark.read.schema(schema).parquet(
-            *[_abs(table_path, f) for f in files]
+            *[M.resolve(table_path, f) for f in files]
         )
     d_sets = [set(d["targets"]) for d in deletes]
     groups: dict[tuple, list[str]] = {}
@@ -386,20 +236,17 @@ def _read_files(
         # physical read schema for this group: declared names walked
         # back through the applicable renames, newest first (a chain
         # a->b->c reverses to the file's original name a)
-        read_fields = []
-        for fld in schema.fields:
-            name = fld.name
-            # walk the chain backwards through every applicable rename
-            for i in reversed(r_sig):
-                r = renames[i]
-                if name == r["to"]:
-                    name = r["from"]
-            read_fields.append(
-                type(fld)(name, fld.dataType, fld.nullable, fld.metadata)
+        applicable = [renames[i] for i in r_sig]
+        read_fields = [
+            type(fld)(
+                M.physical_name(fld.name, applicable),
+                fld.dataType, fld.nullable, fld.metadata,
             )
+            for fld in schema.fields
+        ]
         read_schema = StructType(read_fields)
         df = spark.read.schema(read_schema).parquet(
-            *[_abs(table_path, f) for f in groups[(d_sig, r_sig)]]
+            *[M.resolve(table_path, f) for f in groups[(d_sig, r_sig)]]
         )
         if any(p.name != d.name for p, d in zip(read_fields, schema.fields)):
             # one positional select, not sequential withColumnRenamed:
@@ -414,7 +261,7 @@ def _read_files(
         for i in d_sig:
             d = deletes[i]
             dset = (
-                spark.read.parquet(_abs(table_path, d["file"]))
+                spark.read.parquet(M.resolve(table_path, d["file"]))
                 .select(*d["keys"])
                 .distinct()
             )
@@ -442,210 +289,35 @@ def read_table(
     return spark.read.parquet(f"{table_path}/{manifest['data']}")
 
 
-def _footer_rows(abs_path: str) -> int | None:
-    """The file's row count from the parquet footer, or None when the
-    footer is unreadable."""
-    try:
-        import pyarrow.parquet as pq
-
-        local = abs_path[len("file:"):] if abs_path.startswith("file:") else abs_path
-        return pq.ParquetFile(local).metadata.num_rows
-    except Exception:
-        return None
-
-
-def _footer_stats(abs_path: str, cols: list[str]) -> dict | None:
-    """Per-file min/max for ``cols`` from the parquet footer — no data
-    IO. Returns {col: [min, max]} (a col maps to None when the footer
-    carries no usable stats); None when the footer is unreadable
-    (non-local FS, in-flight write) — pruning treats both as
-    'unknown', i.e. the file is always a rewrite candidate."""
-    try:
-        import pyarrow.parquet as pq
-
-        local = abs_path[len("file:") :] if abs_path.startswith("file:") else abs_path
-        md = pq.ParquetFile(local).metadata
-        out: dict = {c: None for c in cols}
-        # a column's range is only usable if EVERY row group contributed
-        # min/max: a group with absent stats (parquet-mr omits them for
-        # oversized binary values) could hold keys outside the other
-        # groups' range, and recording the partial range would make
-        # "provably untouched" pruning unsound (missed update/delete)
-        poisoned: set = set()
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            seen: set = set()
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                name = col.path_in_schema
-                if name not in out or name in poisoned:
-                    continue
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    continue
-                lo, hi = st.min, st.max
-                if not isinstance(lo, _STAT_TYPES) or not isinstance(hi, _STAT_TYPES):
-                    continue
-                seen.add(name)
-                cur = out[name]
-                out[name] = (
-                    [lo, hi] if cur is None else [min(cur[0], lo), max(cur[1], hi)]
-                )
-            for c in cols:
-                if c not in seen and c not in poisoned:
-                    poisoned.add(c)
-                    out[c] = None
-        return out
-    except Exception:
-        return None
-
-
-def _chunk_ranges(files: list[str], stats: dict, stat_cols: list[str]):
-    """Per-chunk min/max over the member files' footer stats — the
-    chunk-level pruning index recorded in the snapshot doc. A column
-    degrades to None (never pruned on) if ANY member lacks stats."""
-    if not stat_cols:
-        return None
-    out: dict = {}
-    for c in stat_cols:
-        lo = hi = None
-        ok = True
-        for f in files:
-            fst = stats.get(f)
-            st = fst.get(c) if fst else None
-            if st is None:
-                ok = False
-                break
-            try:
-                lo = st[0] if lo is None else min(lo, st[0])
-                hi = st[1] if hi is None else max(hi, st[1])
-            except TypeError:
-                # incomparable stat types across files (int in some,
-                # stringified in others): degrade to no-range, the
-                # documented conservative path — never a failed commit
-                ok = False
-                break
-        out[c] = [lo, hi] if ok and lo is not None else None
-    return out
-
-
-def _write_chunk(spark: SparkSession, table_path: str, files: list[str],
-                 stats: dict, stat_cols: list[str],
-                 born: dict | None = None,
-                 sizes: dict | None = None) -> dict:
-    """Write one immutable manifest-chunk file; returns its snapshot
-    entry. Chunk files are invisible until a published snapshot
-    references them (same protocol as data files), so a failed commit
-    leaves only vacuum-able orphans."""
-    jvm, fs, _ = _fs(spark, table_path)
-    rel = f"{MANIFEST_DIR}/chunks/mc-{uuid.uuid4().hex}.json"
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}/chunks"))
-    doc = {"files": files, "stats": {f: stats.get(f) for f in files}}
-    if born:
-        doc["born"] = {f: born[f] for f in files if f in born}
-    if sizes:
-        doc["sizes"] = {f: sizes[f] for f in files if f in sizes}
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(f"{table_path}/{rel}"), False)
+def _write_json(jvm, fs, path: str, doc: dict):
+    """Create ``path`` (never overwriting) holding ``doc``; returns its
+    Hadoop Path."""
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs.mkdirs(hpath.getParent())
+    out = fs.create(hpath, False)
     out.write(bytearray(json.dumps(doc), "utf-8"))
     out.close()
-    entry = {"file": rel, "n": len(files)}
-    ranges = _chunk_ranges(files, stats, stat_cols)
-    if ranges is not None:
-        entry["ranges"] = ranges
-    return entry
+    return hpath
 
 
-def _build_layout(spark: SparkSession, table_path: str, cur: dict,
-                  keep_now: list[str], new_files: list[str],
-                  stats: dict, stat_cols: list[str],
-                  carry_entries: list | None = None,
-                  born: dict | None = None,
-                  sizes: dict | None = None) -> tuple[dict, list[str]]:
-    """The {files, stats} or {chunks} half of the next snapshot doc,
-    plus the chunk files written for it (for conflict cleanup).
-    Chunked when the previous version already is, or the table has
-    outgrown the inline single-doc layout: untouched chunks carry by
-    reference; members of partially-invalidated chunks and the new
-    files repack into fresh chunks sorted by leading stat column so
-    chunk ranges stay tight for pruning. ``carry_entries``: chunk
-    entries a chunk-pruned merge scope proved disjoint — carried
-    verbatim without ever having been read."""
-    total = len(keep_now) + len(new_files)
-    prev_chunks = cur.get("chunks") or []
-    if not prev_chunks and not carry_entries and total <= CHUNK_THRESHOLD:
-        out = {"files": [*keep_now, *new_files], "stats": stats}
-        if born:
-            out["born"] = born
-        if sizes:
-            out["sizes"] = sizes
-        return out, []
-    keep_set = set(keep_now)
-    carried = [
-        {k: v for k, v in e.items() if k != "_members"}
-        for e in carry_entries or []
-    ]
-    covered: set = set()
-    for entry in prev_chunks:
-        members = entry.get("_members")
-        if members is not None and set(members) <= keep_set:
-            carried.append({k: v for k, v in entry.items() if k != "_members"})
-            covered.update(members)
-    loose = [f for f in keep_now if f not in covered] + list(new_files)
-    if stat_cols:
-        lead = stat_cols[0]
+def _json_writer(spark: SparkSession, table_path: str):
+    """The codec's ``write_json(rel, doc)`` for files of ``table_path``."""
+    def write(rel: str, doc: dict) -> None:
+        jvm, fs, _ = _fs(spark, table_path)
+        _write_json(jvm, fs, f"{table_path}/{rel}", doc)
 
-        def key(f):
-            st = stats.get(f)
-            r = st.get(lead) if st else None
-            return (r is None, r[0] if r else None, f)
-
-        try:
-            loose.sort(key=key)
-        except TypeError:  # incomparable stat types across files
-            loose.sort()
-    written = []
-    for i in range(0, len(loose), CHUNK_SIZE):
-        entry = _write_chunk(
-            spark, table_path, loose[i : i + CHUNK_SIZE], stats, stat_cols,
-            born, sizes,
-        )
-        carried.append(entry)
-        written.append(entry["file"])
-    return {"chunks": carried}, written
+    return write
 
 
 def _cas_publish(jvm, fs, tmp, final) -> bool:
-    """Atomically promote ``tmp`` to ``final`` iff no other writer holds
-    that name; returns False on a lost race. ``tmp`` (and its local
-    checksum twin) is always consumed.
-
-    The classic ``exists() + rename()`` idiom is NOT a CAS on local
-    filesystems: Hadoop's local rename maps to ``File.renameTo`` →
-    POSIX ``rename(2)``, which silently REPLACES an existing
-    destination — two racing publishers can both pass the exists()
-    check, both rename, and both report success while one document
-    vanishes (reproduced by tests/test_txn.py's threaded race). Local
-    paths therefore publish via ``os.link``, which fails atomically on
-    an existing target (the ``table_ds._publish_cas`` primitive).
-    HDFS-like filesystems keep exists+rename: their rename is atomic
-    and refuses an existing destination."""
-    scheme = final.toUri().getScheme()
-    if scheme in (None, "file"):
-        src = tmp.toUri().getPath()
-        dst = final.toUri().getPath()
-        try:
-            os.link(src, dst)
-            ok = True
-        except OSError:
-            ok = False
-        # consume the tmp file and the .crc twin ChecksumFileSystem wrote
-        d, name = os.path.split(src)
-        for p in (src, os.path.join(d, f".{name}.crc")):
-            try:
-                os.unlink(p)
-            except OSError:
-                pass
-        return ok
+    """Promote ``tmp`` to ``final`` iff no other writer holds that name
+    (the codec's CAS rule); False on a lost race. ``tmp`` is always
+    consumed. Local paths publish through
+    :func:`prox_spark.manifest.link_publish`, because Hadoop's local
+    rename silently replaces an existing target; HDFS-like filesystems
+    keep exists + rename, which refuses one."""
+    if final.toUri().getScheme() in (None, "file"):
+        return M.link_publish(tmp.toUri().getPath(), final.toUri().getPath())
     if fs.exists(final):
         fs.delete(tmp, False)
         return False
@@ -658,17 +330,8 @@ def _cas_publish(jvm, fs, tmp, final) -> bool:
 def _write_manifest(spark: SparkSession, table_path: str, v: int,
                     manifest: dict, ref: str = "main") -> None:
     jvm, fs, _ = _fs(spark, table_path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
-    fs.mkdirs(mdir)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{table_path}/{MANIFEST_DIR}/.tmp-{uuid.uuid4().hex}.json"
-    )
-    out = fs.create(tmp, False)
-    out.write(bytearray(json.dumps(manifest), "utf-8"))
-    out.close()
-    final = jvm.org.apache.hadoop.fs.Path(
-        f"{table_path}/{MANIFEST_DIR}/{_mprefix(ref)}{v:08d}.json"
-    )
+    tmp = _write_json(jvm, fs, f"{table_path}/{M.tmp_rel()}", manifest)
+    final = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{M.manifest_rel(v, ref)}")
     if not _cas_publish(jvm, fs, tmp, final):
         # a racing writer published v first: fail the CAS loudly and
         # leave the winner's commit untouched. Only the tmp manifest
@@ -902,7 +565,7 @@ def commit_delta(
         for f in rewritten:
             try:
                 rewritten_bytes += fs2.getFileStatus(
-                    jvm2.org.apache.hadoop.fs.Path(_abs(table_path, f))
+                    jvm2.org.apache.hadoop.fs.Path(M.resolve(table_path, f))
                 ).getLen()
             except Exception:
                 pass
@@ -970,8 +633,8 @@ def commit_delta(
         gathered = [
             (
                 f,
-                _footer_stats(f"{table_path}/{f}", stat_cols),
-                _footer_rows(f"{table_path}/{f}"),
+                M.footer_stats(f"{table_path}/{f}", stat_cols),
+                M.footer_rows(f"{table_path}/{f}"),
             )
             for f in new_files
         ]
@@ -986,8 +649,8 @@ def commit_delta(
             .map(
                 lambda pf: (
                     pf[0],
-                    _footer_stats(pf[1], stat_cols),
-                    _footer_rows(pf[1]),
+                    M.footer_stats(pf[1], stat_cols),
+                    M.footer_rows(pf[1]),
                 )
             )
             .collect()
@@ -1116,124 +779,24 @@ def commit_delta(
         # minus what this commit rewrote — on first attempt that is
         # exactly keep_files; after a rebase it additionally keeps the
         # concurrent commits' (validated-disjoint) files
+        first = cur_v == base_version
         keep_now = (
             list(keep_files)
-            if cur_v == base_version
+            if first
             else [f for f in cur["files"] if f not in rewritten_set]
         )
-        stats = {f: (cur.get("stats") or {}).get(f) for f in keep_now}
-        stats.update(new_stats)
-        cur_sizes = cur.get("sizes") or {}
-        sizes_now = {
-            f: cur_sizes[f] for f in keep_now if f in cur_sizes
-        }
-        sizes_now.update(new_sizes)
-        # per-file birth versions drive rename-mapping applicability:
-        # a file born at version b physically carries the column names
-        # declared at b, so renames committed after b apply to it and
-        # renames before b don't. Files without a record are treated
-        # as born at 0 (pre-feature tables: every rename applies).
-        cur_born = cur.get("born") or {}
-        born_now = {f: cur_born.get(f, 0) for f in keep_now}
-        born_now.update(dict.fromkeys(new_files, v))
-        layout, written_chunks = _build_layout(
-            spark, table_path, cur, keep_now, new_files, stats, stat_cols,
+        manifest, written_chunks = M.next_doc(
+            cur, v, keep_now, new_files, new_stats, new_sizes,
+            stat_cols=stat_cols, schema=schema_json,
+            write_json=_json_writer(spark, table_path),
             # after a rebase, cur is FULLY assembled and its own chunk
             # entries cover the formerly-disjoint chunks — passing
             # carry_chunks again would double-list them
-            carry_entries=carry_chunks if cur_v == base_version else None,
-            born=born_now,
-            sizes=sizes_now,
+            carry_entries=carry_chunks if first else None,
+            partial=first and base_manifest is not None,
+            cluster_curve=cluster_curve, index_of=index_of,
+            data_change=data_change, extra_meta=extra_meta,
         )
-        manifest = {
-            "version": v,
-            **layout,
-            "stat_cols": stat_cols,
-            "schema": schema_json,
-        }
-        if cluster_curve != "range":
-            # layout POLICY metadata (recorded even by commits that
-            # didn't re-cluster, so it survives appends) — pruning runs
-            # on the per-column footer stats regardless; maintenance
-            # re-clusters by it
-            manifest["cluster_curve"] = cluster_curve
-        if index_of:
-            manifest["index_of"] = index_of
-        if not data_change:
-            manifest["data_change"] = False
-        # merge-on-read deletes survive only for files carried over
-        # verbatim: any file this commit REWROTE was read through
-        # _read_files with its deletes already applied, so the new
-        # files are delete-free and the entry must not target them (a
-        # rewritten file's name changes anyway; dropping stale targets
-        # keeps the manifest minimal and lets vacuum retire fully-
-        # applied delete files once no kept manifest references them).
-        keep_set = set(keep_now)
-        # under a chunk-pruned scope, cur is PARTIAL: a target outside
-        # its file list lives in an unread carried chunk and must keep
-        # its entry (dropping a delete would resurrect rows — and
-        # dropping a rename would mis-read a column — in a chunk this
-        # merge never looked at)
-        known = set(cur.get("files") or [])
-        carried = _carry_targeted(cur.get("deletes"), keep_set, known)
-        if carried:
-            manifest["deletes"] = carried
-        # rename mappings self-limit by birth version (a file this
-        # commit wrote is born NOW, after every pending rename, so no
-        # mapping applies to it); an entry retires once no live file
-        # predates it — provable only with the FULL born view, so a
-        # chunk-pruned commit carries entries verbatim and compaction
-        # (full rewrite) retires them.
-        live_renames = cur.get("renames") or []
-        if live_renames:
-            full_view = not (
-                cur_v == base_version and base_manifest is not None
-            )
-            if full_view:
-                live_renames = [
-                    e for e in live_renames
-                    if any(b < e["version"] for b in born_now.values())
-                ]
-            if live_renames:
-                manifest["renames"] = live_renames
-        full_rewrite = (
-            not keep_now
-            and not (cur_v == base_version and carry_chunks)
-        )
-        still_dropped = (
-            []
-            if full_rewrite  # every surviving file is new: none can
-            # physically carry a dropped column — the guard clears
-            else [
-                e for e in cur.get("dropped_cols") or []
-                if e["col"] not in set(new_df.columns)
-            ]
-        )
-        if still_dropped:
-            manifest["dropped_cols"] = still_dropped
-        if cur.get("constraints"):
-            manifest["constraints"] = cur["constraints"]
-        if cur.get("cloned_from"):
-            # a shallow clone's origin record survives every routine
-            # commit (like constraints): release_clone_pin resolves
-            # the source tag through the LATEST manifest, so the pin
-            # stays releasable even after the clone's genesis manifest
-            # is vacuumed away
-            manifest["cloned_from"] = cur["cloned_from"]
-        if cur.get("mv_of"):
-            # a materialized view's lineage likewise survives routine
-            # commits (compaction, maintenance); a refresh overrides
-            # it through extra_meta below — in the SAME atomic rename
-            # as the refreshed data
-            manifest["mv_of"] = cur["mv_of"]
-        if cur.get("quantizer"):
-            # an IVF index's coarse-quantizer parameters version WITH
-            # the data: appends assign against the stored centroids,
-            # and recluster_index overrides them through extra_meta in
-            # the same rename as the rebuilt assignment
-            manifest["quantizer"] = cur["quantizer"]
-        if extra_meta:
-            manifest.update(extra_meta)
         try:
             _write_manifest(spark, table_path, v, manifest, ref)
             # chunk files written for attempts that lost the race are
@@ -1277,21 +840,6 @@ def commit_delta(
                         False,
                     )
                 raise
-
-
-def _carry_targeted(entries: list | None, keep_set: set, known: set) -> list:
-    """Shrink file-targeted manifest entries (merge-on-read deletes,
-    rename mappings, dropped-column guards) to the targets that
-    survive a commit: kept files keep their entries, rewritten files
-    drop out (the rewrite materialized the effect), and targets
-    OUTSIDE the commit's known file list — unread carried chunks —
-    are preserved untouched."""
-    out = []
-    for e in entries or []:
-        targets = [f for f in e["targets"] if f in keep_set or f not in known]
-        if targets:
-            out.append({**e, "targets": targets})
-    return out
 
 
 def _validate_rebase(
@@ -1348,7 +896,7 @@ def _validate_rebase(
         )
     if update_key_ranges:
         stats = cur.get("stats") or {}
-        hot = [f for f in added if _overlaps(stats.get(f), update_key_ranges)]
+        hot = [f for f in added if M.overlaps(stats.get(f), update_key_ranges)]
         if hot:
             raise CommitConflictError(
                 "concurrently-added files may hold keys in this merge's "
@@ -1418,7 +966,7 @@ def create_branch(
     overwrite a live branch."""
     if name == "main":
         raise ValueError("'main' is the published table, not a branch name")
-    _mprefix(name)  # validate early, before any FS IO
+    M.ref_prefix(name)  # validate early, before any FS IO
     versions = _manifest_versions(spark, table_path)
     if not versions:
         raise ValueError(f"{table_path} is not a manifest table")
@@ -1435,19 +983,11 @@ def create_branch(
 def list_branches(spark: SparkSession, table_path: str) -> dict[str, list[int]]:
     """Live branches and their version lists (ascending; the first
     entry is the fork base)."""
-    jvm, fs, _ = _fs(spark, table_path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
-    if not fs.exists(mdir):
-        return {}
     out: dict[str, list[int]] = {}
-    for st in fs.listStatus(mdir):
-        fname = st.getPath().getName()
-        if not (fname.startswith("branch.") and fname.endswith(".json")):
-            continue
-        body = fname[len("branch.") : -len(".json")]
-        name, _, v = body.rpartition(".")
-        if name and v.isdigit():
-            out.setdefault(name, []).append(int(v))
+    for fname in _manifest_names(spark, table_path):
+        parsed = M.parse_branch(fname)
+        if parsed:
+            out.setdefault(parsed[0], []).append(parsed[1])
     return {k: sorted(vs) for k, vs in sorted(out.items())}
 
 
@@ -1457,11 +997,10 @@ def drop_branch(spark: SparkSession, table_path: str, name: str) -> None:
     post-grace :func:`vacuum` reclaims — same lifecycle as a failed
     commit's files."""
     jvm, fs, _ = _fs(spark, table_path)
-    prefix = _mprefix(name)
     for v in _manifest_versions(spark, table_path, name):
         fs.delete(
             jvm.org.apache.hadoop.fs.Path(
-                f"{table_path}/{MANIFEST_DIR}/{prefix}{v:08d}.json"
+                f"{table_path}/{M.manifest_rel(v, name)}"
             ),
             False,
         )
@@ -1526,13 +1065,8 @@ def fast_forward(spark: SparkSession, table_path: str, name: str) -> int:
             cborn = cdoc.get("born") or {}
             if any(bv > fork for bv in cborn.values()):
                 cdoc["born"] = _remap(cborn)
-                rel = f"{MANIFEST_DIR}/chunks/mc-{uuid.uuid4().hex}.json"
-                out = fs.create(
-                    jvm.org.apache.hadoop.fs.Path(f"{table_path}/{rel}"),
-                    False,
-                )
-                out.write(bytearray(json.dumps(cdoc), "utf-8"))
-                out.close()
+                rel = M.chunk_rel()
+                _write_json(jvm, fs, f"{table_path}/{rel}", cdoc)
                 written_chunks.append(rel)
                 entry = {**entry, "file": rel}
             new_entries.append(entry)
@@ -1574,7 +1108,7 @@ def create_tag(
     version."""
     if name == "main":
         raise ValueError("'main' is the published line, not a tag name")
-    _mprefix(name)  # same charset rules as branches
+    M.ref_prefix(name)  # same charset rules as branches
     versions = _manifest_versions(spark, table_path)
     if not versions:
         raise ValueError(f"{table_path} is not a manifest table")
@@ -1587,15 +1121,10 @@ def create_tag(
             "immutable — drop_tag it first to re-point"
         )
     jvm, fs, _ = _fs(spark, table_path)
-    final = jvm.org.apache.hadoop.fs.Path(
-        f"{table_path}/{MANIFEST_DIR}/tag.{name}.json"
+    final = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{M.tag_rel(name)}")
+    tmp = _write_json(
+        jvm, fs, f"{table_path}/{M.tmp_rel()}", {"name": name, "version": v}
     )
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{table_path}/{MANIFEST_DIR}/.tmp-tag-{uuid.uuid4().hex}.json"
-    )
-    out = fs.create(tmp, False)
-    out.write(bytearray(json.dumps({"name": name, "version": v}), "utf-8"))
-    out.close()
     if not _cas_publish(jvm, fs, tmp, final):
         raise ValueError(f"tag {name!r} already exists on {table_path}")
     # RE-VALIDATE after publish: a vacuum that already passed its tag
@@ -1614,14 +1143,9 @@ def create_tag(
 
 def list_tags(spark: SparkSession, table_path: str) -> dict[str, int]:
     """Live tags: name -> pinned main version."""
-    jvm, fs, _ = _fs(spark, table_path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
-    if not fs.exists(mdir):
-        return {}
     out: dict[str, int] = {}
-    for st in fs.listStatus(mdir):
-        fname = st.getPath().getName()
-        if not (fname.startswith("tag.") and fname.endswith(".json")):
+    for fname in _manifest_names(spark, table_path):
+        if not M.is_tag_name(fname):
             continue
         try:
             doc = _read_json(spark, table_path, f"{MANIFEST_DIR}/{fname}")
@@ -1638,10 +1162,7 @@ def drop_tag(spark: SparkSession, table_path: str, name: str) -> None:
     out through the normal vacuum policy."""
     jvm, fs, _ = _fs(spark, table_path)
     fs.delete(
-        jvm.org.apache.hadoop.fs.Path(
-            f"{table_path}/{MANIFEST_DIR}/tag.{name}.json"
-        ),
-        False,
+        jvm.org.apache.hadoop.fs.Path(f"{table_path}/{M.tag_rel(name)}"), False
     )
 
 
@@ -1697,20 +1218,11 @@ def _manifest_publish_times(
     modification times — the atomic renames that made each version
     visible (the same clock :func:`version_at_timestamp` resolves
     against, so age-based retention and TIMESTAMP AS OF agree)."""
-    jvm, fs, _ = _fs(spark, table_path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
-    prefix = _mprefix(ref)
-    out: dict[int, float] = {}
-    if not fs.exists(mdir):
-        return out
-    for st in fs.listStatus(mdir):
-        fname = st.getPath().getName()
-        if not (fname.startswith(prefix) and fname.endswith(".json")):
-            continue
-        body = fname[len(prefix):-len(".json")]
-        if body.isdigit():
-            out[int(body)] = float(st.getModificationTime())
-    return out
+    times = {
+        st.getPath().getName(): float(st.getModificationTime())
+        for st in _manifest_listing(spark, table_path)
+    }
+    return {v: times[n] for v, n in M.parse_versions(times, ref).items()}
 
 
 def version_at_timestamp(
@@ -1724,33 +1236,9 @@ def version_at_timestamp(
     existing table resolves. Raises when the timestamp predates the
     oldest readable version (it may have been vacuumed) or the table
     has no manifests."""
-    jvm, fs, _ = _fs(spark, table_path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
-    prefix = _mprefix(ref)
-    if not fs.exists(mdir):
-        raise ValueError(f"{table_path} is not a manifest table")
-    best = None
-    oldest = None
-    for st in fs.listStatus(mdir):
-        fname = st.getPath().getName()
-        if not (fname.startswith(prefix) and fname.endswith(".json")):
-            continue
-        body = fname[len(prefix):-len(".json")]
-        if not body.isdigit():
-            continue
-        v = int(body)
-        oldest = v if oldest is None else min(oldest, v)
-        if st.getModificationTime() <= ts_ms and (best is None or v > best):
-            best = v
-    if best is None:
-        if oldest is None:
-            raise ValueError(f"{table_path} is not a manifest table")
-        raise ValueError(
-            f"no version of {table_path} (ref {ref!r}) existed at "
-            f"{ts_ms}; the oldest readable version is {oldest} "
-            "(earlier ones may have been vacuumed)"
-        )
-    return best
+    return M.version_at(
+        _manifest_publish_times(spark, table_path, ref), ts_ms, table_path, ref
+    )
 
 
 def read_table_as_of(
@@ -1797,18 +1285,14 @@ def clone_table(
     - The source's ``index_of`` value-index registration is NOT
       carried (index artifacts live under the source; rebuild against
       the clone if needed)."""
-    import os as _os
-
     if is_manifest_table(spark, dst_path):
         raise ValueError(f"{dst_path} is already a manifest table")
-    base = src_path
-    if not _is_foreign(base):
-        base = _os.path.abspath(base)
+    base = src_path if M.is_foreign(src_path) else os.path.abspath(src_path)
     src = read_manifest(spark, src_path, version)
     src_v = int(src["version"])
 
     def a(e: str) -> str:
-        return e if _is_foreign(e) else f"{base}/{e}"
+        return M.resolve(base, e)
 
     tag = None
     if pin:
@@ -1965,32 +1449,17 @@ def commit_delete_file(
     entry = {"file": del_rel, "keys": list(keys), "targets": list(targets)}
     cur_v, cur = versions[-1], prev
     for attempt in range(6):
-        manifest = {
-            "version": cur_v + 1,
-            "stat_cols": cur.get("stat_cols") or [],
-            "schema": cur["schema"],
-            "deletes": [*(cur.get("deletes") or []), entry],
-        }
-        for kind in ("renames", "dropped_cols"):
-            if cur.get(kind):
-                manifest[kind] = cur[kind]
-        if cur.get("chunks"):
-            # chunked table: the data layout is untouched, so every
-            # chunk entry carries by reference — the commit writes one
-            # key file + a snapshot doc of O(chunk-count) entries,
-            # never the full file list (per-file born records live in
-            # the chunks and carry with them)
-            manifest["chunks"] = [
-                {k: val for k, val in e.items() if k != "_members"}
-                for e in cur["chunks"]
-            ]
-        else:
-            manifest["files"] = cur["files"]
-            manifest["stats"] = cur.get("stats") or {}
-            if cur.get("born"):
-                manifest["born"] = cur["born"]
-            if cur.get("sizes"):
-                manifest["sizes"] = cur["sizes"]
+        # the data layout is untouched: every chunk carries by
+        # reference, so the commit writes one key file plus a snapshot
+        # doc, never a chunk
+        manifest, _ = M.next_doc(
+            cur, cur_v + 1, list(cur["files"]), [], {}, {},
+            stat_cols=cur.get("stat_cols") or [], schema=cur["schema"],
+            write_json=_json_writer(spark, table_path),
+            cluster_curve=cur.get("cluster_curve") or "range",
+            index_of=cur.get("index_of"),
+            extra_meta={"deletes": [*(cur.get("deletes") or []), entry]},
+        )
         try:
             _write_manifest(spark, table_path, cur_v + 1, manifest)
             return cur_v + 1
@@ -2059,10 +1528,8 @@ def _files_carrying(
     want = set(cols)
     out = []
     for f in files:
-        p = _abs(table_path, f)
-        local = p[len("file:"):] if p.startswith("file:") else p
         try:
-            names = set(pq.read_schema(local).names)
+            names = set(pq.read_schema(M.local_file(table_path, f)).names)
         except Exception:
             out.append(f)
             continue
@@ -2310,7 +1777,7 @@ def set_cluster_spec(spark: SparkSession, table_path: str,
     - OLD files keep their recorded per-file min/max (and blooms) on
       the old columns — probes on the old columns still prune them
       exactly; probes on the NEW columns find no recorded range and
-      treat them conservatively hot (:func:`_overlaps` — sound, just
+      treat them conservatively hot (``manifest.overlaps`` — sound, just
       unpruned until rewritten);
     - NEW commits cluster, stat and bloom on the new spec
       (``commit_delta`` inherits the declared columns), so fresh data
@@ -2347,25 +1814,6 @@ def set_cluster_spec(spark: SparkSession, table_path: str,
     return _commit_meta_change(spark, table_path, mutate)
 
 
-def _overlaps(fstats: dict | None, key_ranges: dict[str, tuple]) -> bool:
-    """Could a file with footer stats ``fstats`` contain any key tuple
-    whose per-column values fall inside ``key_ranges``? Disjointness on
-    ANY single column proves no tuple can match; unknown stats are
-    conservatively 'yes'."""
-    if fstats is None:
-        return True
-    for col, (lo, hi) in key_ranges.items():
-        fr = fstats.get(col)
-        if fr is None or lo is None:
-            continue  # unknown on either side -> can't prune on this col
-        try:
-            if fr[1] < lo or fr[0] > hi:
-                return False
-        except TypeError:  # incomparable types (e.g. stats stringified)
-            continue
-    return True
-
-
 def split_files_by_key_ranges(
     manifest: dict, key_ranges: dict[str, tuple]
 ) -> tuple[list[str], list[str]]:
@@ -2376,7 +1824,7 @@ def split_files_by_key_ranges(
     touched, untouched = [], []
     stats = manifest.get("stats") or {}
     for f in manifest.get("files", []):
-        (touched if _overlaps(stats.get(f), key_ranges) else untouched).append(f)
+        (touched if M.overlaps(stats.get(f), key_ranges) else untouched).append(f)
     return touched, untouched
 
 
@@ -2560,12 +2008,8 @@ def _value_incidences(
         groups.setdefault(sig, []).append(f)
     parts = []
     for sig, fs in sorted(groups.items()):
-        phys = col
-        for i in reversed(sig):
-            r = renames[i]
-            if phys == r["to"]:
-                phys = r["from"]
-        df = spark.read.parquet(*[_abs(table_path, f) for f in fs])
+        phys = M.physical_name(col, [renames[i] for i in sig])
+        df = spark.read.parquet(*[M.resolve(table_path, f) for f in fs])
         parts.append(
             df.select(
                 F.col(phys).alias(col),
@@ -2781,7 +2225,7 @@ def compact_small_files(
         n = sizes.get(f)
         if n is None:
             n = fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(_abs(table_path, f))
+                jvm.org.apache.hadoop.fs.Path(M.resolve(table_path, f))
             ).getLen()
         if n < limit:
             small.append(f)
@@ -2880,7 +2324,7 @@ def maintain_table(
             for f in stat_fallback:
                 try:
                     if fs.getFileStatus(
-                        jvm.org.apache.hadoop.fs.Path(_abs(table_path, f))
+                        jvm.org.apache.hadoop.fs.Path(M.resolve(table_path, f))
                     ).getLen() < limit:
                         n_small += 1
                 except Exception:  # noqa: PERF203 - racing vacuum/rewrite
@@ -2922,7 +2366,7 @@ def table_history(spark: SparkSession, table_path: str) -> list[dict]:
         if f not in sizes:
             try:
                 sizes[f] = fs.getFileStatus(
-                    jvm.org.apache.hadoop.fs.Path(_abs(table_path, f))
+                    jvm.org.apache.hadoop.fs.Path(M.resolve(table_path, f))
                 ).getLen()
             except Exception:
                 sizes[f] = 0  # vacuumed-from-under or in-flight: unknown
@@ -3054,14 +2498,14 @@ def vacuum(
             kept_dirs.update(
                 f.split("/")[1]
                 for f in m["files"]
-                if "/" in f and not _is_foreign(f)
+                if "/" in f and not M.is_foreign(f)
             )
             # merge-on-read delete key files are data too: retiring one
             # that a kept manifest still references would resurrect rows
             kept_dirs.update(
                 d["file"].split("/")[1]
                 for d in m.get("deletes") or []
-                if not _is_foreign(d["file"])
+                if not M.is_foreign(d["file"])
             )
         else:
             kept_dirs.add(m["data"].split("/", 1)[1])
@@ -3099,7 +2543,7 @@ def vacuum(
     for v in dropped:
         fs.delete(
             jvm.org.apache.hadoop.fs.Path(
-                f"{table_path}/{MANIFEST_DIR}/manifest-{v:08d}.json"
+                f"{table_path}/{M.manifest_rel(v)}"
             ),
             False,
         )

@@ -32,8 +32,9 @@ queryable and writable without library imports:
      .option("readChangeFeed", "true")
      .option("startingVersion", "2").load(path))
 
-Full read semantics are replicated, not approximated — the module
-shares the manifest layout with ``table.py`` and applies, per file:
+Full read semantics are replicated, not approximated — the format's
+rules come from :mod:`prox_spark.manifest`, the same codec
+``table.py`` uses, and the reader applies, per file:
 
 - SCHEMA EVOLUTION: files written before an add-column read the new
   columns as typed nulls (declared schema drives the decode).
@@ -44,7 +45,7 @@ shares the manifest layout with ``table.py`` and applies, per file:
   equality-delete key sets (tiny parquet files, loaded task-side).
 - FILE PRUNING: ``pushFilters`` harvests range predicates on stat
   columns and drops files whose committed min/max ranges provably
-  exclude them — the same ``_overlaps`` rule as
+  exclude them — the codec's ``overlaps`` rule, as in
   ``table.read_table_point`` — then returns every filter unsupported
   so Spark re-applies them exactly (pruning is IO-only, never
   semantics).
@@ -53,9 +54,9 @@ Scale shape: one InputPartition per live data file, so a 10k-file
 snapshot scans with 10k-way task parallelism; the reader streams
 Arrow RecordBatches straight from the parquet decoder (never
 row-at-a-time Python tuples); partition planning is driver-side
-metadata only. Manifests are read with plain-Python IO — the format
-targets Hadoop-compatible FS via ``table.py`` for writes, and this
-reader's FS shim is where an fsspec backend would slot in.
+metadata only. Workers have no JVM: manifests are listed and read
+through the ``pyarrow.fs`` adapter in ``table_stream.py``, and
+commits publish local tables with the codec's ``os.link`` CAS.
 """
 
 from __future__ import annotations
@@ -80,149 +81,17 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-MANIFEST_DIR = "_manifests"
+from prox_spark import manifest as M
+from prox_spark.table_stream import (
+    load_manifest,
+    resolve_tag,
+    resolve_timestamp,
+    write_json,
+)
+
 # workspace staging area for writer-recorded (table → version) pins,
 # published atomically by txn.txn_publish_staged
 TXN_STAGING_DIR = "_txn_staging"
-
-
-def _local(path: str) -> str:
-    return path[len("file:"):] if path.startswith("file:") else path
-
-
-def _mprefix(ref: str) -> str:
-    return "manifest-" if ref == "main" else f"branch.{ref}."
-
-
-def manifest_py(
-    table_path: str, version: int | None = None, ref: str = "main"
-) -> dict:
-    """Pure-Python twin of ``table.read_manifest`` (which routes
-    through the JVM Hadoop FS — unavailable inside a DataSource):
-    resolve the manifest doc for ``version`` (default latest) on
-    ``ref`` and assemble chunked (v2) snapshots into the classic
-    ``{files, stats, born, sizes, ...}`` shape."""
-    root = _local(table_path)
-    mdir = os.path.join(root, MANIFEST_DIR)
-    pre = _mprefix(ref) if ref == "main" else f"branch.{ref}."
-    try:
-        names = os.listdir(mdir)
-    except FileNotFoundError:
-        raise ValueError(f"{table_path} is not a manifest table") from None
-    versions = sorted(
-        int(n[len(pre):-len(".json")])
-        for n in names
-        if n.startswith(pre)
-        and n.endswith(".json")
-        and n[len(pre):-len(".json")].isdigit()
-    )
-    if not versions:
-        raise ValueError(f"{table_path} has no manifests for ref {ref!r}")
-    v = versions[-1] if version is None else int(version)
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions} for {table_path}")
-    with open(os.path.join(mdir, f"{pre}{v:08d}.json")) as fh:
-        doc = json.load(fh)
-    if "chunks" in doc:
-        files: list[str] = []
-        stats: dict = {}
-        born: dict = {}
-        sizes: dict = {}
-        for entry in doc["chunks"]:
-            with open(os.path.join(root, entry["file"])) as fh:
-                chunk = json.load(fh)
-            files.extend(chunk["files"])
-            stats.update(chunk.get("stats") or {})
-            born.update(chunk.get("born") or {})
-            sizes.update(chunk.get("sizes") or {})
-        doc = dict(doc)
-        doc["files"] = files
-        doc["stats"] = stats
-        doc["born"] = born
-        doc["sizes"] = sizes
-    return doc
-
-
-def version_at_timestamp_py(
-    table_path: str, ts_ms: float, ref: str = "main"
-) -> int:
-    """Pure-Python twin of ``table.version_at_timestamp``: the newest
-    version whose manifest was PUBLISHED (file mtime — the atomic
-    rename that made it visible, the same clock the JVM path reads)
-    at or before ``ts_ms`` (epoch milliseconds)."""
-    root = _local(table_path)
-    mdir = os.path.join(root, MANIFEST_DIR)
-    pre = _mprefix(ref)
-    try:
-        names = os.listdir(mdir)
-    except FileNotFoundError:
-        raise ValueError(f"{table_path} is not a manifest table") from None
-    best = oldest = None
-    for n in names:
-        if not (n.startswith(pre) and n.endswith(".json")):
-            continue
-        body = n[len(pre):-len(".json")]
-        if not body.isdigit():
-            continue
-        v = int(body)
-        oldest = v if oldest is None else min(oldest, v)
-        mtime_ms = os.path.getmtime(os.path.join(mdir, n)) * 1000.0
-        if mtime_ms <= ts_ms and (best is None or v > best):
-            best = v
-    if best is None:
-        if oldest is None:
-            raise ValueError(f"{table_path} is not a manifest table")
-        raise ValueError(
-            f"no version of {table_path} (ref {ref!r}) existed at "
-            f"{ts_ms}; the oldest readable version is {oldest} "
-            "(earlier ones may have been vacuumed)"
-        )
-    return best
-
-
-def tag_version_py(table_path: str, name: str) -> int:
-    """Pure-Python twin of ``table.tag_version``: resolve an immutable
-    tag (``_manifests/tag.{name}.json``) to its pinned main version."""
-    root = _local(table_path)
-    p = os.path.join(root, MANIFEST_DIR, f"tag.{name}.json")
-    try:
-        with open(p) as f:
-            return int(json.load(f)["version"])
-    except FileNotFoundError:
-        raise ValueError(
-            f"tag {name!r} does not exist on {table_path}"
-        ) from None
-
-
-def _is_foreign(entry: str) -> bool:
-    return entry.startswith("/") or "://" in entry or entry.startswith("file:")
-
-
-def _abs(table_path: str, entry: str) -> str:
-    return _local(entry) if _is_foreign(entry) else os.path.join(
-        _local(table_path), entry
-    )
-
-
-def _overlaps(fstats: dict | None, key_ranges: dict[str, tuple]) -> bool:
-    """``table._overlaps`` semantics with explicit one-sided bounds:
-    ``(lo, None)`` means [lo, +inf), ``(None, hi)`` means (-inf, hi].
-    Disjointness on ANY column proves the file holds no matching
-    tuple; unknown stats never prune."""
-    if fstats is None:
-        return True
-    for col, (lo, hi) in key_ranges.items():
-        fr = fstats.get(col)
-        if fr is None:
-            continue
-        try:
-            if (lo is not None and fr[1] < lo) or (
-                hi is not None and fr[0] > hi
-            ):
-                return False
-        except TypeError:
-            continue
-    return True
 
 
 class _TableFilePartition(InputPartition):
@@ -409,40 +278,28 @@ class ProxTableReader(DataSourceReader):
         stats = self.manifest.get("stats") or {}
         return [
             f for f in files
-            if _overlaps(stats.get(f), self.key_ranges)
+            if M.overlaps(stats.get(f), self.key_ranges)
             and _set_overlaps(stats.get(f), self.key_sets)
         ]
 
     def partitions(self):
         m = self.manifest
         files = self.pruned_files()
-        renames = list(m.get("renames") or [])
-        born = m.get("born") or {}
-        deletes = m.get("deletes") or []
         sizes = m.get("sizes") or {}
         descs = []
         for f in files:
-            # rename resolution: declared name walked backwards
-            # through every entry applying to this file's birth
-            # version, newest first (chains recover the oldest name)
-            applicable = [
-                r for r in renames if born.get(f, 0) < r["version"]
+            applicable = M.renames_for(m, f)
+            phys = [
+                M.physical_name(fld.name, applicable)
+                for fld in self.schema_struct.fields
             ]
-            phys = []
-            for fld in self.schema_struct.fields:
-                name = fld.name
-                for r in reversed(applicable):
-                    if name == r["to"]:
-                        name = r["from"]
-                phys.append(name)
             dels = [
-                (_abs(self.table_path, d["file"]), list(d["keys"]))
-                for d in deletes
-                if f in set(d["targets"])
+                (M.local_file(self.table_path, d["file"]), list(d["keys"]))
+                for d in M.deletes_for(m, f)
             ]
             descs.append(
                 (
-                    (_abs(self.table_path, f), phys, dels),
+                    (M.local_file(self.table_path, f), phys, dels),
                     sizes.get(f),
                 )
             )
@@ -489,32 +346,16 @@ class ProxTableReader(DataSourceReader):
                 st = c.statistics
                 if st is not None and st.has_min_max:
                     rg_stats[c.path_in_schema] = (st.min, st.max)
-            admit = True
-            for col, (lo, hi) in self.key_ranges.items():
-                phys = name_map.get(col)
-                if phys is None or phys not in rg_stats:
-                    continue
-                mn, mx = rg_stats[phys]
-                try:
-                    if (lo is not None and mx < lo) or (
-                        hi is not None and mn > hi
-                    ):
-                        admit = False
-                        break
-                except TypeError:  # incomparable stat types
-                    continue
-            if admit and self.key_sets:
-                # per-value In-list skipping: the group survives only
-                # if SOME listed value can fall inside its min/max
-                admit = _set_overlaps(
-                    {
-                        col: rg_stats[phys]
-                        for col in self.key_sets
-                        if (phys := name_map.get(col)) in rg_stats
-                    },
-                    self.key_sets,
-                )
-            if admit:
+            declared = {
+                col: rg_stats[phys]
+                for col, phys in name_map.items()
+                if phys in rg_stats
+            }
+            # per-value In-list skipping: the group survives only if
+            # SOME listed value can fall inside its min/max
+            if M.overlaps(declared, self.key_ranges) and _set_overlaps(
+                declared, self.key_sets
+            ):
                 keep.append(rg)
         return keep
 
@@ -617,171 +458,6 @@ def _gather_messages(messages) -> tuple[list[str], dict, dict]:
     return new_files, sizes, stats
 
 
-def _snapshot_doc(v: int, new_files: list[str], stats: dict, sizes: dict,
-                  stat_cols: list[str], schema_json: dict) -> dict:
-    return {
-        "version": v,
-        "files": list(new_files),
-        "stats": {f: stats.get(f) for f in new_files},
-        "stat_cols": stat_cols,
-        "schema": schema_json,
-        "born": dict.fromkeys(new_files, v),
-        "sizes": dict(sizes),
-    }
-
-
-def _chunk_ranges_py(files: list[str], stats: dict,
-                     stat_cols: list[str]) -> dict | None:
-    """``table._chunk_ranges`` verbatim: per-chunk min/max over member
-    footer stats; a column degrades to None if ANY member lacks them."""
-    if not stat_cols:
-        return None
-    out: dict = {}
-    for c in stat_cols:
-        lo = hi = None
-        ok = True
-        for f in files:
-            fst = stats.get(f)
-            st = fst.get(c) if fst else None
-            if st is None:
-                ok = False
-                break
-            try:
-                lo = st[0] if lo is None else min(lo, st[0])
-                hi = st[1] if hi is None else max(hi, st[1])
-            except TypeError:
-                ok = False
-                break
-        out[c] = [lo, hi] if ok and lo is not None else None
-    return out
-
-
-def _write_chunks_py(table_path: str, files: list[str], stats: dict,
-                     born: dict, sizes: dict, stat_cols: list[str],
-                     chunk_size: int) -> tuple[list[dict], list[str]]:
-    """Write immutable manifest-chunk files for ``files`` (the
-    ``table._write_chunk`` layout, pure python); returns (snapshot
-    entries, written rel paths) — invisible until a published snapshot
-    references them, so a lost CAS leaves only vacuum-able orphans."""
-    import uuid
-
-    root = _local(table_path)
-    cdir = os.path.join(root, MANIFEST_DIR, "chunks")
-    os.makedirs(cdir, exist_ok=True)
-    entries: list[dict] = []
-    written: list[str] = []
-    ordered = sorted(files)
-    for i in range(0, len(ordered), chunk_size):
-        members = ordered[i:i + chunk_size]
-        rel = f"{MANIFEST_DIR}/chunks/mc-{uuid.uuid4().hex}.json"
-        doc = {
-            "files": members,
-            "stats": {f: stats.get(f) for f in members},
-            "born": {f: born[f] for f in members if f in born},
-            "sizes": {f: sizes[f] for f in members if f in sizes},
-        }
-        with open(os.path.join(root, rel), "w") as fh:
-            json.dump(doc, fh)
-        entry = {"file": rel, "n": len(members)}
-        ranges = _chunk_ranges_py(members, stats, stat_cols)
-        if ranges is not None:
-            entry["ranges"] = ranges
-        entries.append(entry)
-        written.append(rel)
-    return entries, written
-
-
-# table-level metadata that survives EVERY routine commit
-# (table.commit_delta's carry list): constraints keep enforcing,
-# a clone's origin stays releasable, MV lineage and the IVF quantizer
-# ride until their owners override them
-_CARRY_ALWAYS = ("constraints", "cloned_from", "mv_of", "quantizer")
-_CARRY_APPEND = ("deletes", "renames", "dropped_cols", "index_of",
-                 "cluster_curve", "stream_batches", *_CARRY_ALWAYS)
-
-
-def _append_doc(cur: dict, v: int, new_files: list[str], stats: dict,
-                sizes: dict, stat_cols: list[str], schema_json: dict,
-                table_path: str | None = None) -> tuple[dict, list[str]]:
-    """Pure-append next-version doc (plus any chunk files written for
-    it): carry EVERY current file (the ``update_key_ranges={}`` rule —
-    an append makes no claim about rows it didn't read, so concurrent
-    commits never conflict); deletes target only pre-existing files
-    and renames self-limit by birth version, so both carry verbatim.
-    A CHUNKED (v2) table appends by carrying every chunk entry by
-    reference and packing the new files into fresh chunk files —
-    per-commit metadata write cost stays O(new files), exactly
-    ``table._build_layout``'s contract."""
-    if "chunks" in cur:
-        from prox_spark.table import CHUNK_SIZE
-
-        entries, written = _write_chunks_py(
-            table_path, new_files, stats, dict.fromkeys(new_files, v),
-            sizes, stat_cols, CHUNK_SIZE,
-        )
-        raw_entries = [
-            {k: e[k] for k in ("file", "n", "ranges") if k in e}
-            for e in cur["chunks"]
-        ]
-        doc = {
-            "version": v,
-            "chunks": [*raw_entries, *entries],
-            "stat_cols": stat_cols,
-            "schema": schema_json,
-        }
-        for k in _CARRY_APPEND:
-            if cur.get(k):
-                doc[k] = cur[k]
-        return doc, written
-    keep = list(cur.get("files") or [])
-    cur_stats = cur.get("stats") or {}
-    cur_born = cur.get("born") or {}
-    cur_sizes = cur.get("sizes") or {}
-    doc = {
-        "version": v,
-        "files": [*keep, *new_files],
-        "stats": {
-            **{f: cur_stats.get(f) for f in keep},
-            **{f: stats.get(f) for f in new_files},
-        },
-        "stat_cols": stat_cols,
-        "schema": schema_json,
-        "born": {
-            **{f: cur_born.get(f, 0) for f in keep},
-            **dict.fromkeys(new_files, v),
-        },
-        "sizes": {
-            **{f: cur_sizes[f] for f in keep if f in cur_sizes},
-            **sizes,
-        },
-    }
-    for k in _CARRY_APPEND:
-        if cur.get(k):
-            doc[k] = cur[k]
-    return doc, []
-
-
-def _publish_cas(table_path: str, doc: dict, v: int) -> bool:
-    """Atomic manifest publish: tmp write + ``os.link`` (fails on an
-    existing target) — the CAS primitive ``table._write_manifest``
-    implements via Hadoop rename."""
-    import uuid
-
-    mdir = os.path.join(_local(table_path), MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as fh:
-        json.dump(doc, fh)
-    final = os.path.join(mdir, f"manifest-{v:08d}.json")
-    try:
-        os.link(tmp, final)
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.unlink(tmp)
-
-
 class _ProxWriteCore:
     """Shared write machinery for the batch and streaming writers —
     option/preflight resolution and the per-task Arrow→parquet encode
@@ -796,16 +472,15 @@ class _ProxWriteCore:
         path = options.get("path")
         if not path:
             raise ValueError("prox_table requires .save(<table path>)")
-        self.table_path = _local(path)
+        self.table_path = M.local_path(path)
         self.overwrite = bool(overwrite)
         self.schema_struct = schema
         self.schema_json = schema.jsonValue()
         self.rel_dir = f"data/snap-00000000-{uuid.uuid4().hex[:8]}"
         try:
-            prev = manifest_py(path)
+            prev = load_manifest(path)
         except ValueError:
             prev = None
-        self.prev_version = int(prev["version"]) if prev else 0
         if prev is not None:
             if not self.overwrite:
                 merge = str(
@@ -891,7 +566,7 @@ class _ProxWriteCore:
         if not self.txn_workspace:
             return
         sdir = os.path.join(
-            _local(self.txn_workspace), TXN_STAGING_DIR,
+            M.local_path(self.txn_workspace), TXN_STAGING_DIR,
             str(self.txn_stage),
         )
         os.makedirs(sdir, exist_ok=True)
@@ -904,14 +579,60 @@ class _ProxWriteCore:
             sdir, f"pin-{uuid.uuid4().hex}.json"
         ))
 
+    def publish(self, new_files: list[str], sizes: dict, stats: dict,
+                fence: tuple[str, int] | None = None) -> int | None:
+        """Commit the written files as the next version with the
+        format's CAS protocol (:mod:`prox_spark.manifest`): build the
+        doc against the current head, publish, rebase and retry on a
+        lost race. An append keeps every current file, an overwrite
+        none. ``fence`` = (writer id, batch id): when the head already
+        records that batch as applied nothing is committed and None is
+        returned; otherwise the fence lands in the same manifest as the
+        data. Returns the published version."""
+        for _ in range(self._MAX_CAS_RETRIES):
+            try:
+                cur = load_manifest(self.table_path)
+            except ValueError:
+                cur = {}
+            extra = None
+            if fence is not None:
+                writer, batch = fence
+                applied = cur.get("stream_batches") or {}
+                if writer in applied and int(applied[writer]) >= batch:
+                    return None
+                extra = {"stream_batches": {**applied, writer: batch}}
+            v = int(cur.get("version", 0)) + 1
+            doc, written = M.next_doc(
+                cur, v,
+                [] if self.overwrite else list(cur.get("files") or []),
+                new_files, stats, sizes,
+                stat_cols=self.stat_cols, schema=self.schema_json,
+                write_json=lambda rel, d: write_json(self.table_path, rel, d),
+                cluster_curve=cur.get("cluster_curve") or "range",
+                index_of=cur.get("index_of"), extra_meta=extra,
+            )
+            tmp = M.tmp_rel()
+            write_json(self.table_path, tmp, doc)
+            if M.link_publish(
+                os.path.join(self.table_path, tmp),
+                os.path.join(self.table_path, M.manifest_rel(v)),
+            ):
+                return v
+            # lost the race: this attempt's chunk files recorded a stale
+            # birth version — drop them and rebuild against the winner
+            for rel in written:
+                os.unlink(os.path.join(self.table_path, rel))
+        raise OSError(
+            f"commit to {self.table_path} lost the publish race "
+            f"{self._MAX_CAS_RETRIES} times"
+        )
+
     # -- executor side ------------------------------------------------
     def write(self, iterator):
         import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
-
-        from prox_spark.table import _footer_stats
 
         batches = [b for b in iterator if b.num_rows]
         if not batches:
@@ -927,7 +648,7 @@ class _ProxWriteCore:
         os.makedirs(os.path.dirname(abs_path), exist_ok=True)
         pq.write_table(tbl, abs_path)
         stats = (
-            _footer_stats(abs_path, self.stat_cols)
+            M.footer_stats(abs_path, self.stat_cols)
             if self.stat_cols else None
         )
         return _ProxWriteMessage(
@@ -953,7 +674,7 @@ class _ProxWriteCore:
         fails LOUDLY rather than publishing unvalidated bytes). A
         violation removes the written files and raises the counts."""
         try:
-            cur = manifest_py(self.table_path)
+            cur = load_manifest(self.table_path)
         except ValueError:
             return
         constraints = cur.get("constraints") or []
@@ -1007,12 +728,10 @@ class ProxTableArrowWriter(_ProxWriteCore, DataSourceArrowWriter):
     Arrow batches into one parquet file under a fresh ``data/snap-*``
     dir (sorted by the leading stat columns so footer min/max stay
     tight for pruning), and ``commit`` publishes the next manifest
-    version with the SAME atomic-CAS protocol as
-    ``table.commit_delta`` — tmp-write + ``os.link`` (fails on an
-    existing target), rebase and retry on a lost race; pure appends
-    carry every current file plus the previous version's
-    deletes/renames verbatim (new files are born at v, so no mapping
-    applies to them), overwrite publishes a full snapshot. Per-file
+    version through :meth:`_ProxWriteCore.publish` — the doc
+    ``table.commit_delta`` would build, published by the codec's CAS;
+    pure appends keep every current file with its deletes and renames,
+    overwrite publishes a full snapshot. Per-file
     footer stats are gathered TASK-SIDE (the file is local to the
     task that wrote it — no driver metadata loop), so a 10k-task
     write commits without serializing on footer IO. Appends to a
@@ -1025,44 +744,7 @@ class ProxTableArrowWriter(_ProxWriteCore, DataSourceArrowWriter):
     def commit(self, messages):
         new_files, sizes, stats = _gather_messages(messages)
         self.enforce_constraints(new_files)
-        for _ in range(self._MAX_CAS_RETRIES):
-            try:
-                cur = manifest_py(self.table_path)
-            except ValueError:
-                cur = None
-            v = (int(cur["version"]) if cur else 0) + 1
-            chunk_orphans: list[str] = []
-            if self.overwrite or cur is None:
-                doc = _snapshot_doc(v, new_files, stats, sizes,
-                                    self.stat_cols, self.schema_json)
-                # table-level metadata survives a full rewrite too
-                # (commit_delta carries these unconditionally):
-                # constraints keep enforcing, a clone's origin stays
-                # releasable; renames/deletes/dropped_cols clear — no
-                # old file remains for them to apply to
-                for k in _CARRY_ALWAYS:
-                    if cur and cur.get(k):
-                        doc[k] = cur[k]
-            else:
-                doc, chunk_orphans = _append_doc(
-                    cur, v, new_files, stats, sizes,
-                    self.stat_cols, self.schema_json, self.table_path,
-                )
-            if _publish_cas(self.table_path, doc, v):
-                self.record_txn_stage(v)
-                return
-            # lost the race: drop this attempt's chunk files (their
-            # recorded born version is stale) and rebuild against the
-            # winner's manifest
-            for rel in chunk_orphans:
-                try:
-                    os.unlink(os.path.join(self.table_path, rel))
-                except FileNotFoundError:
-                    pass
-        raise OSError(
-            f"commit to {self.table_path} lost the publish race "
-            f"{self._MAX_CAS_RETRIES} times"
-        )
+        self.record_txn_stage(self.publish(new_files, sizes, stats))
 
     def abort(self, messages):
         self.abort_cleanup()
@@ -1106,45 +788,11 @@ class ProxTableStreamWriter(_ProxWriteCore, DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int):  # noqa: N803 — Spark API
         new_files, sizes, stats = _gather_messages(messages)
         self.enforce_constraints(new_files)
-        for _ in range(self._MAX_CAS_RETRIES):
-            try:
-                cur = manifest_py(self.table_path)
-            except ValueError:
-                cur = None
-            applied = (cur or {}).get("stream_batches") or {}
-            if self.writer_id in applied and int(
-                applied[self.writer_id]
-            ) >= int(batchId):
-                # replayed batch: already folded — exactly-once means
-                # dropping the rewrite, never appending it twice
-                self._drop_batch_files(messages)
-                return
-            v = (int(cur["version"]) if cur else 0) + 1
-            chunk_orphans: list[str] = []
-            if cur is None:
-                doc = _snapshot_doc(v, new_files, stats, sizes,
-                                    self.stat_cols, self.schema_json)
-            else:
-                doc, chunk_orphans = _append_doc(
-                    cur, v, new_files, stats, sizes,
-                    self.stat_cols, self.schema_json, self.table_path,
-                )
-            # the fence and the data publish in ONE manifest rename —
-            # no crash window where one landed without the other
-            doc["stream_batches"] = {
-                **applied, self.writer_id: int(batchId),
-            }
-            if _publish_cas(self.table_path, doc, v):
-                return
-            for rel in chunk_orphans:
-                try:
-                    os.unlink(os.path.join(self.table_path, rel))
-                except FileNotFoundError:
-                    pass
-        raise OSError(
-            f"stream commit to {self.table_path} lost the publish race "
-            f"{self._MAX_CAS_RETRIES} times"
-        )
+        fence = (self.writer_id, int(batchId))
+        if self.publish(new_files, sizes, stats, fence) is None:
+            # replayed batch: already folded — exactly-once means
+            # dropping the rewrite, never appending it twice
+            self._drop_batch_files(messages)
 
     def abort(self, messages, batchId: int):  # noqa: N803 — Spark API
         self._drop_batch_files(messages)
@@ -1167,12 +815,12 @@ class ProxTableChangesBatchReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         from prox_spark.table_stream import (
             TableChangesStreamReader,
-            _list_versions,
+            list_versions,
         )
 
         opts = {k.lower(): v for k, v in options.items()}
         path = opts["path"]
-        versions = _list_versions(path)
+        versions = list_versions(path)
         if not versions:
             raise ValueError(f"{path} is not a manifest table")
         self._start = int(opts.get("startingversion", 0))
@@ -1234,13 +882,13 @@ class ProxTableDataSource(DataSource):
                         "prox_table: tags pin main versions — tag and "
                         "ref are exclusive"
                     )
-                v = tag_version_py(path, tag)
+                v = resolve_tag(path, tag)
             if ts is not None:
                 # TIMESTAMP AS OF (Delta parity): resolve against the
                 # manifests' publish times, same clock as
                 # table.version_at_timestamp
-                v = version_at_timestamp_py(path, float(ts), ref)
-            self._manifest = manifest_py(
+                v = resolve_timestamp(path, float(ts), ref)
+            self._manifest = load_manifest(
                 path, int(v) if v is not None else None, ref
             )
             self._path = path
@@ -1272,7 +920,7 @@ class ProxTableDataSource(DataSource):
             # columns (same contract as prox_table_changes)
             from pyspark.sql.types import LongType, StringType, StructField
 
-            from prox_spark.table_stream import (
+            from prox_spark.manifest import (
                 CHANGE_TYPE_COL,
                 COMMIT_VERSION_COL,
             )

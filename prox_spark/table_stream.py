@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -49,15 +48,14 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-MANIFEST_DIR = "_manifests"
-_MANIFEST_RE = re.compile(r"^manifest-(\d{8})\.json$")
+from prox_spark import manifest as M
+from prox_spark.manifest import CHANGE_TYPE_COL, COMMIT_VERSION_COL
 
-# the change-feed column contract — same names as the batch reader
-# (prox_spark/cdf.py), duplicated rather than imported: this module
-# runs inside the Python Data Source worker, which must not drag the
-# driver-side table/cdf machinery in
-CHANGE_TYPE_COL = "_change_type"
-COMMIT_VERSION_COL = "_commit_version"
+# --- worker-side IO: the pyarrow.fs adapter over the manifest codec -------
+#
+# Python Data Source workers have no JVM, so the stream source and the
+# prox_table connector list and read table metadata through pyarrow.fs;
+# every name, version and document rule comes from prox_spark.manifest.
 
 
 def _fs_base(path: str):
@@ -65,58 +63,68 @@ def _fs_base(path: str):
     for plain/``file:`` paths, the scheme's FS otherwise."""
     from pyarrow import fs as pafs
 
-    if path.startswith("file:"):
-        path = path[len("file:"):]
     if "://" in path:
         return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
+    return pafs.LocalFileSystem(), os.path.abspath(M.local_path(path))
 
 
-
-def _entry_path(base: str, entry: str) -> str:
-    """Resolve a manifest file entry: relative entries join the table
-    base; a shallow clone's foreign (absolute/URI) entries pass
-    through — the pure-python twin of table._abs."""
-    if entry.startswith("/") or "://" in entry:
-        return entry
-    return f"{base}/{entry}"
-
-def _list_versions(path: str) -> list[int]:
-    from pyarrow import fs as pafs
-
-    fs, base = _fs_base(path)
-    sel = pafs.FileSelector(f"{base}/{MANIFEST_DIR}", allow_not_found=True)
-    out = []
-    for info in fs.get_file_info(sel):
-        m = _MANIFEST_RE.match(os.path.basename(info.path))
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _read_json(path: str, rel: str) -> dict:
+def read_json(path: str, rel: str) -> dict:
     fs, base = _fs_base(path)
     with fs.open_input_file(f"{base}/{rel}") as f:
         return json.loads(f.read().decode("utf-8"))
 
 
-def _load_manifest(path: str, v: int) -> dict:
-    """Manifest ``v`` with files/born ASSEMBLED from chunk files when
-    chunked — the pure-python twin of table.read_manifest (no Spark
-    session exists where the stream reader runs)."""
-    doc = _read_json(path, f"{MANIFEST_DIR}/manifest-{v:08d}.json")
-    if "chunks" not in doc:
-        return doc
-    files: list[str] = []
-    born: dict = {}
-    for entry in doc["chunks"]:
-        chunk = _read_json(path, entry["file"])
-        files.extend(chunk["files"])
-        born.update(chunk.get("born") or {})
-    out = dict(doc)
-    out["files"] = files
-    out["born"] = born
-    return out
+def write_json(path: str, rel: str, doc: dict) -> None:
+    fs, base = _fs_base(path)
+    target = f"{base}/{rel}"
+    fs.create_dir(os.path.dirname(target), recursive=True)
+    with fs.open_output_stream(target) as f:
+        f.write(json.dumps(doc).encode("utf-8"))
+
+
+def _manifest_listing(path: str) -> dict[str, float]:
+    """{filename: modification time (epoch ms)} of ``_manifests``."""
+    from pyarrow import fs as pafs
+
+    fs, base = _fs_base(path)
+    sel = pafs.FileSelector(f"{base}/{M.MANIFEST_DIR}", allow_not_found=True)
+    return {
+        os.path.basename(i.path): i.mtime_ns / 1e6
+        for i in fs.get_file_info(sel)
+    }
+
+
+def list_versions(path: str, ref: str = "main") -> list[int]:
+    return M.versions_in(_manifest_listing(path), ref)
+
+
+def load_manifest(path: str, version: int | None = None,
+                  ref: str = "main") -> dict:
+    """The assembled manifest of ``version`` (default: the latest) on
+    ``ref``; FileNotFoundError when that version is gone."""
+    if version is None:
+        versions = list_versions(path, ref)
+        if not versions:
+            raise ValueError(f"{path} has no manifests for ref {ref!r}")
+        version = versions[-1]
+    doc = read_json(path, M.manifest_rel(version, ref))
+    return M.assemble(doc, lambda rel: read_json(path, rel))
+
+
+def resolve_timestamp(path: str, ts_ms: float, ref: str = "main") -> int:
+    """TIMESTAMP AS OF against the manifests' publish times."""
+    times = _manifest_listing(path)
+    return M.version_at(
+        {v: times[n] for v, n in M.parse_versions(times, ref).items()},
+        ts_ms, path, ref,
+    )
+
+
+def resolve_tag(path: str, name: str) -> int:
+    try:
+        return int(read_json(path, M.tag_rel(name))["version"])
+    except FileNotFoundError:
+        raise ValueError(f"tag {name!r} does not exist on {path}") from None
 
 
 def _checkpoint_committed_offset(checkpoint: str) -> int | None:
@@ -193,14 +201,13 @@ def _mask_rows(t, anti, semi):
 
 
 def _entries_for(
-    man: dict, f: str, base: str
+    man: dict, f: str, path: str
 ) -> list[tuple[str, list[str]]]:
     """The merge-on-read delete entries of manifest ``man`` that
-    target file ``f``, as (resolved key-file path, keys) pairs."""
+    target file ``f``, as (key-file path, keys) pairs."""
     return [
-        (_entry_path(base, d["file"]), list(d["keys"]))
-        for d in (man.get("deletes") or [])
-        if f in set(d["targets"])
+        (M.local_file(path, d["file"]), list(d["keys"]))
+        for d in M.deletes_for(man, f)
     ]
 
 
@@ -307,9 +314,9 @@ class TableChangesStreamReader(DataSourceStreamReader):
         # compaction retires them, which also rewrites the old files).
         self._evolution_guards: set[str] = set()
         if self._allow_evolution:
-            versions = _list_versions(self._path)
+            versions = list_versions(self._path)
             if versions:
-                head = _load_manifest(self._path, versions[-1])
+                head = load_manifest(self._path, versions[-1])
                 pinned_names = {
                     f.name for f in schema.fields
                 }
@@ -339,7 +346,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
             self._last_end = v
 
     def latestOffset(self) -> dict:
-        versions = _list_versions(self._path)
+        versions = list_versions(self._path)
         latest = versions[-1] if versions else self._start_v
         # pace only once a floor is known: on the FIRST trigger after a
         # (re)start self._last_end is None and the true floor lives in
@@ -374,7 +381,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
         """Manifest ``v``, or None when it was vacuumed and
         ``failOnDataLoss=false`` opted into skipping the gap."""
         try:
-            return _load_manifest(self._path, v)
+            return load_manifest(self._path, v)
         except FileNotFoundError as ex:
             if self._fail_on_data_loss:
                 raise RuntimeError(
@@ -397,7 +404,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         s, e = int(start["version"]), int(end["version"])
         self._advance_floor(e)
-        _, base = _fs_base(self._path)
+        path = self._path
         parts: list[InputPartition] = []
         # a SHALLOW CLONE's history begins at src_version+1, so offsets
         # below its first manifest never existed — distinguish that
@@ -405,9 +412,9 @@ class TableChangesStreamReader(DataSourceStreamReader):
         # genesis snapshot, Delta's clone-stream behavior) from a
         # genuinely vacuumed gap, which must keep raising data-loss
         clone_base = None
-        versions = _list_versions(self._path)
+        versions = list_versions(self._path)
         if versions and s < versions[0]:
-            first_doc = _load_manifest(self._path, versions[0])
+            first_doc = load_manifest(self._path, versions[0])
             if first_doc.get("cloned_from"):
                 s = versions[0] - 1
                 clone_base = versions[0]
@@ -427,7 +434,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
             self._check_schema(doc, v)
             if self._cdf:
                 if doc.get("data_change") is not False:
-                    parts.extend(self._cdf_parts(prev, doc, v, base))
+                    parts.extend(self._cdf_parts(prev, doc, v))
                 prev = doc
                 continue
             cur_files = doc.get("files") or []
@@ -466,9 +473,9 @@ class TableChangesStreamReader(DataSourceStreamReader):
                     for f in cur_files:
                         parts.append(
                             _FilesPartition(
-                                [_entry_path(base, f)],
+                                [M.local_file(path, f)],
                                 list(self._fields),
-                                anti=_entries_for(doc, f, base),
+                                anti=_entries_for(doc, f, path),
                             )
                         )
                 else:
@@ -476,7 +483,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
                     if fresh:
                         parts.append(
                             _FilesPartition(
-                                [_entry_path(base, f) for f in fresh],
+                                [M.local_file(path, f) for f in fresh],
                                 list(self._fields),
                             )
                         )
@@ -535,79 +542,36 @@ class TableChangesStreamReader(DataSourceStreamReader):
             )
 
     def _cdf_parts(
-        self, prev: dict | None, doc: dict, v: int, base: str
+        self, prev: dict | None, doc: dict, v: int
     ) -> list[_ChangePartition]:
-        """The signed rows of commit ``v`` as per-file partitions —
-        the pure-metadata twin of cdf._version_changes (same
-        classification, no Spark session in the source worker):
-        inserts = files present now but not before (set diff, so a
-        rollback that RESURRECTS files feeds their rows back in),
-        deletes = files removed plus new merge-on-read entries
-        semi-joined against their carried targets' visible rows."""
-        fields = list(self._fields)
-        cur_files = doc.get("files") or []
-        cur_set = set(cur_files)
-
-        def _guard_renames(man: dict, f: str) -> None:
-            born_v = (man.get("born") or {}).get(f, 0)
-            if any(born_v < r["version"] for r in man.get("renames") or []):
-                raise RuntimeError(
-                    f"file {f} of {self._path} reads through a live "
-                    "rename mapping; the streaming change feed does not "
-                    "resolve renames — run compact_table (retires the "
-                    "mappings) or use the batch reader "
-                    "(prox_spark.cdf.read_table_changes)"
-                )
-
+        """The signed rows of commit ``v`` as per-file partitions,
+        classified by :func:`prox_spark.manifest.commit_changes` (the
+        same rule as the batch reader). ``prev`` is None across a
+        vacuumed gap (failOnDataLoss=false)."""
         parts: list[_ChangePartition] = []
-        if prev is None:
-            # vacuumed gap (failOnDataLoss=false): no diff possible —
-            # approximate adds by birth version, skip delete detection
-            born = doc.get("born") or {}
-            added = [f for f in cur_files if born.get(f, 0) == v]
-            prev_set: set = set()
-        else:
-            prev_files = prev.get("files") or []
-            prev_set = set(prev_files)
-            added = [f for f in cur_files if f not in prev_set]
-        for f in added:
-            _guard_renames(doc, f)
-            parts.append(
-                _ChangePartition(
-                    [_entry_path(base, f)], fields, "insert", v,
-                    anti=_entries_for(doc, f, base),
-                )
+        for c in M.commit_changes(prev, doc, v):
+            man = doc if c.kind == "insert" else prev
+            semi = (
+                None if c.entry is None
+                else (M.local_file(self._path, c.entry["file"]),
+                      list(c.entry["keys"]))
             )
-        if prev is not None:
-            for f in prev_files:
-                if f not in cur_set:
-                    _guard_renames(prev, f)
-                    parts.append(
-                        _ChangePartition(
-                            [_entry_path(base, f)], fields, "delete", v,
-                            anti=_entries_for(prev, f, base),
-                        )
+            for f in c.files:
+                if M.renames_for(man, f):
+                    raise RuntimeError(
+                        f"file {f} of {self._path} reads through a live "
+                        "rename mapping; the streaming change feed does "
+                        "not resolve renames — run compact_table (retires "
+                        "the mappings) or use the batch reader "
+                        "(prox_spark.cdf.read_table_changes)"
                     )
-            prev_entry_files = {
-                d["file"] for d in (prev.get("deletes") or [])
-            }
-            for entry in doc.get("deletes") or []:
-                if entry["file"] in prev_entry_files:
-                    continue  # carried entry: emitted at its own commit
-                for f in entry["targets"]:
-                    # targets removed at v already fed above
-                    if f in prev_set and f in cur_set:
-                        _guard_renames(prev, f)
-                        parts.append(
-                            _ChangePartition(
-                                [_entry_path(base, f)], fields, "delete", v,
-                                anti=_entries_for(prev, f, base),
-                                semi=(
-                                    _entry_path(base, entry["file"]),
-                                    list(entry["keys"]),
-                                ),
-                            )
-                        )
+                parts.append(
+                    _ChangePartition(
+                        [M.local_file(self._path, f)], list(self._fields),
+                        c.kind, v, anti=_entries_for(man, f, self._path),
+                        semi=semi,
+                    )
+                )
         return parts
 
     def _read_file_table(self, p: str, fields: list[str]):
@@ -703,12 +667,12 @@ class TableChangesDataSource(DataSource):
         return "prox_table_changes"
 
     def schema(self):
-        versions = _list_versions(self.options["path"])
+        versions = list_versions(self.options["path"])
         if not versions:
             raise ValueError(
                 f"{self.options['path']} is not a manifest table"
             )
-        doc = _load_manifest(self.options["path"], versions[-1])
+        doc = load_manifest(self.options["path"], versions[-1])
         if "schema" not in doc:
             raise ValueError(
                 "manifest records no schema (legacy table); pass an "

@@ -212,9 +212,10 @@ def txn_publish_staged(
     import os
     import shutil
 
-    from prox_spark.table_ds import TXN_STAGING_DIR, _local
+    from prox_spark.manifest import local_path
+    from prox_spark.table_ds import TXN_STAGING_DIR
 
-    sdir = os.path.join(_local(workspace), TXN_STAGING_DIR, str(stage))
+    sdir = os.path.join(local_path(workspace), TXN_STAGING_DIR, str(stage))
     pins: dict[str, int] = {}
     names = sorted(os.listdir(sdir)) if os.path.isdir(sdir) else []
     for name in names:

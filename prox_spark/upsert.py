@@ -512,7 +512,7 @@ def delete_keys_mor(
     keys_df: DataFrame,
     keys: list[str],
 ) -> int:
-    """MERGE-ON-READ delete: the scale twin of :func:`delete_keys`.
+    """MERGE-ON-READ delete: the scale counterpart of :func:`delete_keys`.
     Instead of rewriting every file that holds a deleted key
     (copy-on-write — write cost ∝ touched data), this commits a tiny
     parquet of the deleted key tuples plus the pruned list of data

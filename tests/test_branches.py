@@ -164,10 +164,8 @@ def test_branch_on_chunked_table_carries_chunks(spark, tmp_path, monkeypatch):
     """Branch commits on a chunked (v2) table carry untouched chunk
     entries by reference, and the fast-forwarded main manifest resolves
     them identically."""
-    import prox_spark.table as T
-
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 8)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 4)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 8)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 4)
     path = str(tmp_path / "t")
     commit_snapshot(
         spark, path, _df(spark, [(i, "base") for i in range(64)]),
@@ -245,11 +243,10 @@ def test_multi_commit_branch_publish_on_chunked_table(spark, tmp_path, monkeypat
     """Chunked snapshots keep born inside immutable chunk files:
     publishing a multi-commit branch rewrites ONLY the chunks holding
     staged files, with remapped born."""
-    import prox_spark.table as T
     from prox_spark.table import files_metadata
 
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 8)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 4)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 8)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 4)
     path = str(tmp_path / "t")
     commit_snapshot(
         spark, path, _df(spark, [(i, "base") for i in range(64)]),
@@ -290,12 +287,11 @@ def test_streaming_branch_append_carries_chunks_by_reference(
     branch: every pre-existing chunk entry carries into the next
     branch manifest VERBATIM (same chunk file name — by reference,
     never re-read or rewritten); only the batch's own files repack."""
-    import prox_spark.table as T
     from prox_spark.streaming import run_stream_append_branch
     from prox_spark.table import _read_manifest_file
 
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 8)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 4)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 8)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 4)
     path = str(tmp_path / "t")
     commit_snapshot(
         spark, path, _df(spark, [(i, "base") for i in range(64)]),

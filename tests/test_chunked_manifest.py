@@ -23,20 +23,23 @@ import pytest
 import prox_spark.table as T
 from prox_spark.table import (
     _read_manifest_file,
+    commit_delta,
     commit_snapshot,
+    create_branch,
     read_manifest,
     read_table,
     read_table_point,
     table_versions,
     vacuum,
 )
+from prox_spark.table_stream import load_manifest
 from prox_spark.upsert import delete_keys_mor, upsert_parquet
 
 
 @pytest.fixture()
 def chunky(monkeypatch):
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 4)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 4)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
 
 
 def _df(spark, rows):
@@ -149,8 +152,8 @@ def test_classic_table_upgrades_when_it_outgrows_threshold(
     live file count crosses CHUNK_THRESHOLD; earlier versions stay
     readable."""
     path = str(tmp_path / "t")
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 6)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 4)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 6)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 4)
     commit_snapshot(
         spark, path, _df(spark, [(i, "a") for i in range(40)]),
         stat_cols=["id"], n_files=4,
@@ -226,3 +229,24 @@ def test_pending_delete_on_unread_chunk_survives_merge(spark, tmp_path, chunky):
         "pending delete dropped by a merge that never read its chunk"
     )
     assert (2, "upserted") in got and len(got) == 199
+
+
+def test_driver_and_worker_reads_assemble_the_same_doc(spark, tmp_path, chunky):
+    """The driver (Hadoop FS) and the Data Source workers (pyarrow.fs)
+    are two adapters over one codec: on a chunked table with a
+    merge-on-read delete and a branch they return the same assembled
+    doc, born/sizes and chunk membership included."""
+    path = str(tmp_path / "t")
+    _seed(spark, path)
+    delete_keys_mor(spark, path, _df(spark, [(7, "x")]), ["id"])
+    create_branch(spark, path, "audit")
+    base = read_manifest(spark, path, ref="audit")
+    commit_delta(
+        spark, path, _df(spark, [(500, "b")]), list(base["files"]),
+        ref="audit", update_key_ranges={},
+    )
+    for ref in ("main", "audit"):
+        want = read_manifest(spark, path, ref=ref)
+        assert "chunks" in want and want["deletes"]
+        assert want["born"] and want["sizes"]
+        assert load_manifest(path, ref=ref) == want

@@ -68,6 +68,16 @@ def test_clone_reads_equal_source_and_copies_nothing(spark):
     assert tags.get(tag) == m["cloned_from"]["version"]
 
 
+def test_clone_from_file_uri_source(spark):
+    """A ``file:`` URI source is foreign like any URI: its entries are
+    published as given, not joined onto the working directory."""
+    s = _scratch()
+    src, dst = f"{s}/src", f"{s}/dst"
+    _seed(spark, src)
+    clone_table(spark, f"file:{src}", dst)
+    assert _rows(read_table(spark, dst)) == _rows(read_table(spark, src))
+
+
 def test_clone_divergence_is_two_way_isolated(spark):
     s = _scratch()
     src, dst = f"{s}/src", f"{s}/dst"

@@ -276,11 +276,10 @@ def test_streaming_appends_rebase_over_midstream_compaction(
     commits, then the append publishes with the STALE base — the CAS
     must rebase it onto the compacted layout, losing neither the
     compaction nor any batch's rows."""
-    import prox_spark.table as T
     from prox_spark.table import commit_snapshot, compact_table, read_manifest
 
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 3)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 3)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
     table = str(tmp_path / "t")
     commit_snapshot(
         spark, table, _df(spark, [(i, "base") for i in range(100)]),

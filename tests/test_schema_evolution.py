@@ -141,8 +141,8 @@ def test_drop_then_rename_interactions_refused(spark, tmp_path):
 
 
 def test_rename_on_chunked_layout(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 3)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 3)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
     path = str(tmp_path / "t")
     _seed(spark, path, n_files=8)
     chunk_files_before = {
@@ -301,8 +301,8 @@ def test_cluster_spec_evolution_on_chunked_layout(spark, tmp_path, monkeypatch):
     writes chunks ranged on the new spec."""
     from prox_spark.table import commit_delta, read_manifest, set_cluster_spec
 
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 3)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 3)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
     path = str(tmp_path / "t")
     schema = "id long, grp long, v string"
     commit_snapshot(

@@ -81,9 +81,9 @@ def test_partition_packing_by_byte_budget(spark, tbl):
     budget degenerates to one task per live file; both read the same
     rows."""
     from prox_spark.table import read_table
-    from prox_spark.table_ds import manifest_py
+    from prox_spark.table_stream import load_manifest
 
-    n_files = len(manifest_py(tbl)["files"])
+    n_files = len(load_manifest(tbl)["files"])
     assert n_files > 1
     packed = spark.read.format("prox_table").load(tbl)
     assert packed.rdd.getNumPartitions() == 1
@@ -104,9 +104,10 @@ def test_pushed_filter_prunes_same_files_as_jvm_point_lookup(spark, tbl):
         read_manifest_pruned,
         split_files_by_key_ranges,
     )
-    from prox_spark.table_ds import ProxTableReader, manifest_py
+    from prox_spark.table_ds import ProxTableReader
+    from prox_spark.table_stream import load_manifest
 
-    mm = manifest_py(tbl)
+    mm = load_manifest(tbl)
     for key_ranges, filters in [
         ({"doc_id": (3, 3)}, [EqualTo(("doc_id",), 3)]),
         (
@@ -155,12 +156,9 @@ def test_one_sided_pushed_filter_keeps_matching_files(spark, tbl):
     from pyspark.sql.datasource import GreaterThan, LessThanOrEqual
 
     from prox_spark.table import read_table
-    from prox_spark.table_ds import (
-        ProxTableReader,
-        _filter_ranges,
-        _overlaps,
-        manifest_py,
-    )
+    from prox_spark.manifest import overlaps
+    from prox_spark.table_ds import ProxTableReader, _filter_ranges
+    from prox_spark.table_stream import load_manifest
 
     # unit: the harvested interval keeps its open side, and a file
     # wholly above a lone lower bound is NOT pruned
@@ -170,9 +168,9 @@ def test_one_sided_pushed_filter_keeps_matching_files(spark, tbl):
     assert _filter_ranges([LessThanOrEqual(("doc_id",), 5)]) == {
         "doc_id": (None, 5)
     }
-    assert _overlaps({"doc_id": (6, 9)}, {"doc_id": (5, None)})
-    assert not _overlaps({"doc_id": (6, 9)}, {"doc_id": (None, 5)})
-    assert not _overlaps({"doc_id": (1, 4)}, {"doc_id": (5, None)})
+    assert overlaps({"doc_id": (6, 9)}, {"doc_id": (5, None)})
+    assert not overlaps({"doc_id": (6, 9)}, {"doc_id": (None, 5)})
+    assert not overlaps({"doc_id": (1, 4)}, {"doc_id": (5, None)})
 
     # end-to-end parity: pruned format() read == read_table, and the
     # lone upper bound really prunes the high (appended) files
@@ -185,7 +183,7 @@ def test_one_sided_pushed_filter_keeps_matching_files(spark, tbl):
         a = spark.read.format("prox_table").load(tbl).filter(cond)
         b = read_table(spark, tbl).filter(cond)
         assert _diff(a, b) == 0, str(cond)
-    mm = manifest_py(tbl)
+    mm = load_manifest(tbl)
     rd = ProxTableReader({}, mm, tbl)
     full = rd.pruned_files()
     list(rd.pushFilters([LessThanOrEqual(("doc_id",), 200)]))
@@ -361,10 +359,15 @@ def test_stream_sink_exactly_once(spark, tmp_path):
     micro-batch with the applied batch id fenced in the SAME rename —
     a checkpoint restart with nothing new moves no version, and a
     crash-replay of an applied batch id lands nothing (its rewritten
-    files are dropped, not double-appended)."""
+    files are dropped, not double-appended), also after a compaction."""
     import pyarrow as pa
 
-    from prox_spark.table import read_manifest, read_table, table_versions
+    from prox_spark.table import (
+        compact_table,
+        read_manifest,
+        read_table,
+        table_versions,
+    )
     from prox_spark.table_ds import ProxTableStreamWriter, register
 
     register(spark)
@@ -398,9 +401,12 @@ def test_stream_sink_exactly_once(spark, tmp_path):
     assert _diff(read_table(spark, t), docs) == 0
     m = read_manifest(spark, t)
     assert int(m["stream_batches"]["stream"]) >= 1
-    head = versions[-1]
     run()  # restart, nothing new
-    assert table_versions(spark, t)[-1] == head
+    assert table_versions(spark, t)[-1] == versions[-1]
+    # maintenance rewrites every file and must keep the fence: without
+    # it the replay below would land a second time
+    head = compact_table(spark, t)
+    assert read_manifest(spark, t)["stream_batches"] == m["stream_batches"]
     # replay an already-applied batch id through a fresh writer
     w = ProxTableStreamWriter({"path": t}, schema)
     batch = pa.RecordBatch.from_pylist(
@@ -500,7 +506,7 @@ def test_sql_cli_over_committed_tables(spark, tbl, tmp_path, capsys):
 
 
 def test_reader_assembles_chunked_manifests(spark, tmp_path, monkeypatch):
-    """A table past the chunked-manifest (v2) threshold: manifest_py
+    """A table past the chunked-manifest (v2) threshold: load_manifest
     must assemble the chunk files into the classic shape, so the
     format() read equals read_table — and the pushed-filter prune
     still matches the JVM prune over the assembled stats."""
@@ -514,10 +520,11 @@ def test_reader_assembles_chunked_manifests(spark, tmp_path, monkeypatch):
         read_table,
         split_files_by_key_ranges,
     )
-    from prox_spark.table_ds import ProxTableReader, manifest_py, register
+    from prox_spark.table_ds import ProxTableReader, register
+    from prox_spark.table_stream import load_manifest
 
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 4)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 4)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
     register(spark)
     t = str(tmp_path / "chunky")
     docs = spark.read.parquet(
@@ -528,7 +535,7 @@ def test_reader_assembles_chunked_manifests(spark, tmp_path, monkeypatch):
     m = read_manifest(spark, t)
     commit_delta(spark, t, docs.filter(F.col("doc_id") >= 200),
                  list(m["files"]), stat_cols=["doc_id"], n_files=4)
-    mm = manifest_py(t)
+    mm = load_manifest(t)
     assert "chunks" in mm and len(mm["files"]) >= 5  # really chunked
     a = spark.read.format("prox_table").load(t)
     b = read_table(spark, t)
@@ -584,10 +591,11 @@ def test_writer_appends_to_chunked_table(spark, tmp_path, monkeypatch):
     exactly the union."""
     import prox_spark.table as T
     from prox_spark.table import commit_delta, read_manifest, read_table
-    from prox_spark.table_ds import manifest_py, register
+    from prox_spark.table_ds import register
+    from prox_spark.table_stream import load_manifest
 
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 4)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 4)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
     register(spark)
     t = str(tmp_path / "chunkw")
     docs = spark.read.parquet(
@@ -600,7 +608,7 @@ def test_writer_appends_to_chunked_table(spark, tmp_path, monkeypatch):
                  docs.filter((F.col("doc_id") >= 200)
                              & (F.col("doc_id") < 400)),
                  list(m["files"]), stat_cols=["doc_id"], n_files=4)
-    before = manifest_py(t)
+    before = load_manifest(t)
     assert "chunks" in before
     prev_entries = [e["file"] for e in before["chunks"]]
     (
@@ -610,7 +618,7 @@ def test_writer_appends_to_chunked_table(spark, tmp_path, monkeypatch):
         .mode("append")
         .save(t)
     )
-    after = manifest_py(t)
+    after = load_manifest(t)
     assert "chunks" in after
     got_entries = [e["file"] for e in after["chunks"]]
     # old entries carried verbatim, in order, plus >=1 fresh one
@@ -638,12 +646,9 @@ def test_row_group_skipping_inside_surviving_files(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from prox_spark.table import read_table
-    from prox_spark.table_ds import (
-        ProxTableReader,
-        _abs,
-        manifest_py,
-        register,
-    )
+    from prox_spark.manifest import local_file
+    from prox_spark.table_ds import ProxTableReader, register
+    from prox_spark.table_stream import load_manifest
 
     register(spark)
     t = str(tmp_path / "rgtbl")
@@ -661,9 +666,9 @@ def test_row_group_skipping_inside_surviving_files(spark, tmp_path):
         .option("stat_cols", "doc_id")
         .save(t)
     )
-    mm = manifest_py(t)
+    mm = load_manifest(t)
     assert len(mm["files"]) == 1
-    fpath = _abs(t, mm["files"][0])
+    fpath = local_file(t, mm["files"][0])
     # rewrite the single file with tiny row groups (pyarrow-level, the
     # manifest entry is unchanged — same path, same bytes semantics)
     tbl = pq.read_table(fpath)
@@ -671,7 +676,7 @@ def test_row_group_skipping_inside_surviving_files(spark, tmp_path):
     pf = pq.ParquetFile(fpath)
     assert pf.metadata.num_row_groups > 3
 
-    rd = ProxTableReader({}, manifest_py(t), t)
+    rd = ProxTableReader({}, load_manifest(t), t)
     rd.pushFilters([EqualTo(("doc_id",), 5)])
     parts = rd.partitions()
     assert len(parts) == 1
@@ -848,17 +853,18 @@ def test_chunked_read_packs_tasks_below_file_count(spark, tmp_path, monkeypatch)
     read_table."""
     import prox_spark.table as T
     from prox_spark.table import read_table
-    from prox_spark.table_ds import ProxTableReader, manifest_py, register
+    from prox_spark.table_ds import ProxTableReader, register
+    from prox_spark.table_stream import load_manifest
 
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 8)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 4)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 8)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 4)
     register(spark)
     t = str(tmp_path / "many")
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "source", "n_chars")
     T.commit_snapshot(spark, t, docs, stat_cols=["doc_id"], n_files=40)
-    mm = manifest_py(t)
+    mm = load_manifest(t)
     assert "chunks" in mm and len(mm["files"]) >= 30
     rd = ProxTableReader({}, mm, t)
     parts = rd.partitions()
@@ -893,17 +899,14 @@ def test_in_list_prunes_per_value_not_envelope(spark, tbl):
     from pyspark.sql.datasource import In
 
     from prox_spark.table import read_table
-    from prox_spark.table_ds import (
-        ProxTableReader,
-        _set_overlaps,
-        manifest_py,
-    )
+    from prox_spark.table_ds import ProxTableReader, _set_overlaps
+    from prox_spark.table_stream import load_manifest
 
     assert _set_overlaps({"doc_id": (0, 9)}, {"doc_id": [3, 1000003]})
     assert not _set_overlaps(
         {"doc_id": (100, 400)}, {"doc_id": [3, 1000003]}
     )
-    mm = manifest_py(tbl)
+    mm = load_manifest(tbl)
     rd = ProxTableReader({}, mm, tbl)
     full = rd.pruned_files()
     list(rd.pushFilters([In(("doc_id",), (3, 1000003))]))

@@ -744,13 +744,13 @@ def test_merge_on_key_subset_preserves_stat_cols(spark, tmp_path):
 
 
 def test_statless_file_is_always_a_rewrite_candidate(spark, tmp_path):
-    """_footer_stats on a file written WITHOUT parquet statistics must
+    """footer_stats on a file written WITHOUT parquet statistics must
     record unknown ranges, so pruning treats it as touched (conservative,
     never lossy) rather than provably untouched."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from prox_spark.table import _footer_stats, _overlaps
+    from prox_spark.manifest import footer_stats, overlaps
 
     f = str(tmp_path / "nostats.parquet")
     pq.write_table(
@@ -758,15 +758,15 @@ def test_statless_file_is_always_a_rewrite_candidate(spark, tmp_path):
         f,
         write_statistics=False,
     )
-    stats = _footer_stats(f, ["id"])
+    stats = footer_stats(f, ["id"])
     assert stats is not None and stats["id"] is None
-    assert _overlaps(stats, {"id": (500, 600)})  # unknown -> touched
+    assert overlaps(stats, {"id": (500, 600)})  # unknown -> touched
 
     with_stats = str(tmp_path / "stats.parquet")
     pq.write_table(pa.table({"id": list(range(100))}), with_stats)
-    s2 = _footer_stats(with_stats, ["id"])
+    s2 = footer_stats(with_stats, ["id"])
     assert s2["id"] == [0, 99]
-    assert not _overlaps(s2, {"id": (500, 600)})
+    assert not overlaps(s2, {"id": (500, 600)})
 
 
 def test_table_history_reports_versions_files_and_deletes(spark, tmp_path):
@@ -968,3 +968,20 @@ def test_vacuum_retain_hours_composes_with_registry(spark, tmp_path):
     out = refresh_mv(spark, mv)
     assert out["mode"] == "incremental"
     assert int(mv_info(spark, mv)["version"]) == 5
+
+
+def test_manifest_codec_imports_without_spark():
+    """The format codec runs inside Python Data Source workers, so it
+    must load with no pyspark at all: driver machinery pulled into it
+    fails this import."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys; sys.modules['pyspark'] = None; "
+        "import prox_spark.manifest as M; "
+        "assert M.versions_in(['manifest-00000002.json']) == [2]"
+    )
+    subprocess.run([sys.executable, "-c", code], cwd=root, check=True)

@@ -168,10 +168,8 @@ def test_random_merge_sequence_chunked_layout(spark, tmp_path, monkeypatch):
     chunk carry/repack on merges, chunk-referencing MoR deletes,
     compaction re-chunking, vacuum of orphan chunk files, and time
     travel across chunked versions — all against the same dict model."""
-    import prox_spark.table as T
-
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 3)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 3)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
     test_random_merge_sequence_matches_model(spark, tmp_path)
     from prox_spark.table import _read_manifest_file
 
@@ -279,10 +277,8 @@ def test_random_merge_sequence_with_renames_chunked(
     """Rename evolution + chunked layout + the full op mix together:
     mappings must survive chunk carry/repack and chunk-pruned merge
     scopes (renames carry verbatim under partial views)."""
-    import prox_spark.table as T
-
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 3)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 3)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
     test_random_merge_sequence_with_renames(spark, tmp_path)
 
 
@@ -407,10 +403,8 @@ def test_random_merge_sequence_with_refs_chunked(spark, tmp_path, monkeypatch):
     """Refs + chunked layout: branch fast-forward born-remap, tag
     pinning of chunk files, zorder/range re-chunking, and rollback of
     a chunked doc, all against the model."""
-    import prox_spark.table as T
-
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 3)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 3)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
     test_random_merge_sequence_with_refs(spark, tmp_path)
 
 
@@ -543,10 +537,9 @@ def test_txn_random_sequence_matches_model(spark, tmp_path):
 
 
 def test_txn_random_sequence_chunked(spark, tmp_path, monkeypatch):
-    import prox_spark.table as T
 
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 4)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 4)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
     _txn_model_sequence(spark, tmp_path)
 
 
@@ -695,10 +688,9 @@ def test_mv_random_sequence_matches_model(spark, tmp_path):
 
 
 def test_mv_random_sequence_chunked(spark, tmp_path, monkeypatch):
-    import prox_spark.table as T
 
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 3)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 3)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
     _mv_model_sequence(spark, tmp_path)
 
 

@@ -19,7 +19,7 @@ from prox_spark.table import (
     compact_table,
     read_manifest,
 )
-from prox_spark.table_stream import TableChangesDataSource, _load_manifest
+from prox_spark.table_stream import TableChangesDataSource, load_manifest
 
 
 @pytest.fixture()
@@ -153,8 +153,8 @@ def test_loader_assembles_chunked_manifests(spark, tmp_path, monkeypatch):
     """The stream reader's pure-python manifest loader must resolve
     chunked (v2) snapshots exactly like table.read_manifest — files
     and born maps assembled from the chunk files."""
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 4)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 2)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 4)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 2)
     t = str(tmp_path / "t")
     commit_snapshot(spark, t, _docs(spark, 0, 40), stat_cols=["doc_id"], n_files=6)
     prev = read_manifest(spark, t)
@@ -163,7 +163,7 @@ def test_loader_assembles_chunked_manifests(spark, tmp_path, monkeypatch):
     )
     want = read_manifest(spark, t)
     assert "chunks" in want  # the layout under test
-    got = _load_manifest(t, int(want["version"]))
+    got = load_manifest(t, int(want["version"]))
     assert sorted(got["files"]) == sorted(want["files"])
     assert got["born"] == want.get("born")
 

@@ -123,10 +123,8 @@ def test_rollback_and_tag_on_chunked_table(spark, tmp_path, monkeypatch):
     """Rollback re-targets a chunked (v2) snapshot's doc verbatim —
     chunk entries carry by reference — and a tag pins the chunk files
     against vacuum along with the data dirs."""
-    import prox_spark.table as T
-
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 8)
-    monkeypatch.setattr(T, "CHUNK_SIZE", 4)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_THRESHOLD", 8)
+    monkeypatch.setattr("prox_spark.manifest.CHUNK_SIZE", 4)
     path = str(tmp_path / "t")
     commit_snapshot(
         spark, path, _df(spark, [(i, "base") for i in range(64)]),
