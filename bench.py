@@ -1,6 +1,6 @@
 """Benchmark harness — runs the declared query set and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": sf}.
+"unit_queries": "ds", "queries": {number: deciseconds}, "sf": sf}.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default all cores),
@@ -144,46 +144,40 @@ def main() -> None:
     # r11/r12 "q"-string encoding defeated the driver's per-query
     # comparator entirely (PERF_r12: per_query={}, n_common=0), and
     # the r12 truncation fallback additionally dropped 7 queries from
-    # the line. r13 contract fix (VERDICT item 1): EVERY query's
-    # median is always present as a dict entry; what adapts to the
-    # ~2000-char tail budget is the per-query UNIT (declared in
-    # "unit_queries"), coarsening ms -> cs -> ds -> s only as the
-    # suite grows. At 229 queries the deciseconds dict fits whole;
-    # full-precision ms medians stay in BENCH_DETAIL.json (committed).
+    # the line. EVERY query's median is always present as a dict entry,
+    # in one fixed unit, deciseconds (declared in "unit_queries"): at
+    # 229 queries the ds dict fits the ~2000-char tail budget whole,
+    # and a unit that never changes keeps rounds comparable.
+    # Full-precision medians stay in BENCH_DETAIL.json (committed).
     # Keys are the bare query numbers of BENCH_KEYS.md ("142" =
     # q142_polymorphic_udtf), unchanged since round 5.
-    base = {
+    qnums = {
+        re.match(r"q(\d+)", name).group(1): v for name, v in medians.items()
+    }
+    compact = {
         "metric": "total_query_set_wall_sec",
         "value": detail["value"],
         "unit": "sec",
         "sf": sf,
         "reps": reps,
+        **{k: detail[k] for k in ("value_r1_subset", "vs_baseline") if k in detail},
+        "unit_queries": "ds",
+        # max(1, ...): a sub-half-unit median must not round to 0 — a
+        # zero would poison any per-query ratio; 1 is the smallest
+        # honest reading at the declared granularity
+        "queries": {k: max(1, int(round(v * 10))) for k, v in qnums.items()},
     }
-    for extra in ("value_r1_subset", "vs_baseline"):
-        if extra in detail:
-            base[extra] = detail[extra]
-    qnums = {
-        re.match(r"q(\d+)", name).group(1): v for name, v in medians.items()
-    }
-    line = None
-    for unit, scale in (("ms", 1000), ("cs", 100), ("ds", 10), ("s", 1)):
-        compact = dict(base)
-        compact["unit_queries"] = unit
-        # max(1, ...): a sub-half-unit median must not round to 0 —
-        # a zero would poison the driver's ratio math; 1 is the
-        # smallest honest reading at the declared granularity
-        compact["queries"] = {
-            k: max(1, int(round(v * scale))) for k, v in qnums.items()
-        }
-        line = json.dumps(compact, separators=(",", ":"))
-        if len(line) < 1985:
-            break
+    line = json.dumps(compact, separators=(",", ":"))
     if len(line) >= 1985:
-        # seconds-unit dict still too long (would take ~350+ queries):
         # drop the optional keys rather than any query entry
-        for k in ("reps", "value_r1_subset"):
+        for k in ("reps", "value_r1_subset", "vs_baseline"):
             compact.pop(k, None)
         line = json.dumps(compact, separators=(",", ":"))
+    if len(line) >= 2010:
+        raise SystemExit(
+            f"bench: the result line is {len(line)} chars; the 2000-char "
+            "tail window would cut its head off"
+        )
     # left-pad so the driver's 2000-char tail window lands inside the
     # padding: the captured tail is then whitespace + complete JSON,
     # which json.loads accepts whether the driver parses the raw tail

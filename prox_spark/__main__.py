@@ -190,9 +190,10 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "llm-pipeline":
         from prox_spark.llm_jobs import run_llm_pipeline
+        from prox_spark.io import read_parquet
 
         results = run_llm_pipeline(
-            spark, spark.read.parquet(args.docs), args.out
+            spark, read_parquet(spark, args.docs), args.out
         )
         width = max(len(n) for n in results)
         failed = False

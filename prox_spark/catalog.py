@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from prox_spark.io import read_parquet
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -87,7 +89,7 @@ def testdata_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
         # schema (queries/events.py normalizes to timestamp_ntz).
         # TIMESTAMP_MICROS generations read as-is.
         try:
-            spark.read.parquet(cat.paths["events"]).schema
+            read_parquet(spark, cat.paths["events"]).schema
         except Exception as exc:  # noqa: BLE001 - filtered below
             # Only the specific unsupported-type failure triggers the
             # fallback; corrupt files/permissions re-raise so the real

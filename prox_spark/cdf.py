@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructType
 
 from prox_spark import manifest as M
+from prox_spark.io import read_parquet
 from prox_spark.manifest import CHANGE_TYPE_COL, COMMIT_VERSION_COL
 from prox_spark.table import _manifest_versions, _read_files, read_manifest
 
@@ -70,7 +71,7 @@ def _version_changes(
         )
         if c.entry is not None:
             keys = (
-                spark.read.parquet(M.resolve(table_path, c.entry["file"]))
+                read_parquet(spark, M.resolve(table_path, c.entry["file"]))
                 .select(*c.entry["keys"])
                 .distinct()
             )

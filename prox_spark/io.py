@@ -11,16 +11,120 @@ Differences from the reference, by design (§4.2 anti-patterns):
   reference glue_scripts/s3_to_redshift_script.py:145-162);
 - CSV reads always carry an explicit schema + multiLine/escape
   (the reference's seed CSVs embed quoted JSON and newlines).
+
+:func:`read_parquet` is the one plain parquet reader of the package.
+A bare ``spark.read.parquet(path)`` runs Spark's footer read as a
+one-task job on every call, even when the file has not changed; at
+small scale that job costs more than the query. The reader memoizes
+the schema Spark itself inferred and, on a hit, reads with
+``spark.read.schema(memo)``, which launches no job. The memo rule:
+
+- an entry is keyed by the path string(s) and holds a driver-side
+  stat signature plus the values of the session confs that change
+  parquet inference (``_INFER_CONFS``: binaryAsString,
+  int96AsTimestamp, inferTimestampNTZ, mergeSchema, nanosAsLong,
+  caseSensitive, partition column type inference);
+- the signature of a file is its size, mtime (ns) and inode; of a
+  directory, every entry below it (hidden files included) with its
+  relative name, size and mtime. Any change to the signature or to
+  one of those confs re-infers and replaces the entry, so the memo
+  holds one entry per path (capped at ``_MEMO_MAX``, oldest first);
+- a path that does not exist, a glob, or a non-local scheme
+  (``s3a://``, ``hdfs://``, …) is not memoized: the read goes
+  straight to Spark. A miss is Spark's own inferring read, so its
+  errors (``PATH_NOT_FOUND``, ``UNABLE_TO_INFER_SCHEMA``) surface
+  unchanged and nothing is stored.
+
+Reads that pass a reader option or an explicit schema call Spark
+directly; they never infer, or infer differently.
 """
 
 from __future__ import annotations
 
+import os
+import re
+import stat
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+# session confs whose value changes the schema parquet inference returns
+_INFER_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+_MEMO_MAX = 1024
+_GLOB = re.compile(r"[*?\[{\\]")
+_SCHEME = re.compile(r"^([A-Za-z][A-Za-z0-9+.-]*):")
+_memo: dict[tuple[str, ...], tuple[tuple, StructType]] = {}
+_memo_lock = threading.Lock()
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+
+def _local_path(path: str) -> str | None:
+    """The local filesystem path ``path`` names, or None when it is a
+    glob or names another filesystem."""
+    if _GLOB.search(path):
+        return None
+    m = _SCHEME.match(path)
+    if m is None:
+        return path
+    if m.group(1).lower() != "file":
+        return None
+    rest = path[len("file:"):]
+    if rest.startswith("//"):
+        rest = rest[2:]  # file:///abs -> /abs
+    return rest if rest.startswith("/") else None
+
+
+def _signature(path: str) -> tuple | None:
+    """The stat signature of one local file or directory tree, or None
+    when it cannot be taken (missing path, a listing race)."""
+    local = _local_path(path)
+    if local is None:
+        return None
+    try:
+        st = os.stat(local)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_size, st.st_mtime_ns, st.st_ino)
+        entries = []
+        todo = [""]
+        while todo:
+            rel = todo.pop()
+            with os.scandir(os.path.join(local, rel)) as it:
+                for e in it:
+                    name = os.path.join(rel, e.name)
+                    s = e.stat()
+                    entries.append((name, s.st_size, s.st_mtime_ns))
+                    if e.is_dir():
+                        todo.append(name)
+        return tuple(sorted(entries))
+    except OSError:
+        return None
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` that infers the schema once per
+    unchanged input (the memo rule is in the module docstring)."""
+    sigs = [_signature(p) for p in paths]
+    if not paths or None in sigs:
+        return spark.read.parquet(*paths)
+    sig = (tuple(sigs), tuple(spark.conf.get(k, None) for k in _INFER_CONFS))
+    hit = _memo.get(paths)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    with _memo_lock:
+        _memo.pop(paths, None)
+        _memo[paths] = (sig, df.schema)
+        while len(_memo) > _MEMO_MAX:
+            del _memo[next(iter(_memo))]
+    return df
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None,
@@ -119,7 +223,7 @@ def compact_parquet(
     fs, src_path = _fs_path(src)
     total_bytes = fs.getContentSummary(src_path).getLength()
     n = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    spark.read.parquet(src).repartition(n).write.mode("overwrite").parquet(dst)
+    read_parquet(spark, src).repartition(n).write.mode("overwrite").parquet(dst)
     fs, dst_path = _fs_path(dst)
     return sum(
         1

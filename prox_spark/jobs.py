@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from prox_spark import kpi
 from prox_spark.gold import build_star_schema, write_gold
+from prox_spark.io import read_parquet
 from prox_spark.pipeline import Pipeline, StageResult
 from prox_spark.schemas import SILVER_SCHEMAS
 from prox_spark.silver import to_silver
@@ -58,7 +59,7 @@ def run_medallion(
         for name in SILVER_SCHEMAS:
             path = os.path.join(bronze_dir, f"{name}.parquet")
             if os.path.exists(path):
-                out[name] = spark.read.parquet(path)
+                out[name] = read_parquet(spark, path)
         if not out:
             raise FileNotFoundError(f"no bronze tables found under {bronze_dir}")
         return out

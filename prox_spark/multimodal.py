@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from prox_spark.io import read_parquet
+
 # media table shape: opaque payload + typed metadata
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
@@ -64,7 +66,7 @@ def documents_as_media(spark, sf_dir: str) -> DataFrame:
     """Ingest the ``documents`` table as a media table: utf-8 payload
     bytes stand in for image/audio blobs (encode stays JVM-side — no
     Python round-trip for the heavy column)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return docs.select(
         F.col("doc_id").alias("media_id"),
         F.encode(F.col("text"), "UTF-8").alias("payload"),

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from prox_spark.io import read_parquet
+
 
 # some driver-generated testdata writes ``ts`` as INT64
 # TIMESTAMP(NANOS), which Spark 4 refuses to read natively; requesting
@@ -47,7 +49,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     path = f"{sf_dir}/events.parquet"
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         kind = df.schema["ts"].dataType.typeName()
     except Exception:  # Illegal Parquet type: INT64 (TIMESTAMP(NANOS,...))
         kind = "nanos"

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from prox_spark import gold, kpi
 from prox_spark.fixture_store import stage_fixtures
+from prox_spark.io import read_parquet
 from prox_spark.schemas import PRIMARY_KEYS, SILVER_SCHEMAS
 from prox_spark.validate import dedup_by_key, enforce_schema
 
@@ -34,7 +35,7 @@ def _silver(spark: SparkSession, *names: str) -> dict[str, DataFrame]:
     paths = stage_fixtures()
     out: dict[str, DataFrame] = {}
     for n in names:
-        df = spark.read.parquet(paths[n])
+        df = read_parquet(spark, paths[n])
         out[n] = dedup_by_key(enforce_schema(df, SILVER_SCHEMAS[n]), PRIMARY_KEYS[n])
     return out
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from prox_spark.io import read_parquet
+
 
 def q43_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.multimodal import documents_as_media, extract_features
@@ -50,7 +52,7 @@ def q112_media_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = _spread_py(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
+        read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
     )
 
     def encode(batches):
@@ -118,7 +120,7 @@ def q121_audio_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = _spread_py(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
+        read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
     )
 
     def encode(batches):
@@ -227,7 +229,7 @@ def q134_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F  # noqa: F401 (parity with siblings)
 
     docs = _spread_py(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
+        read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
     )
 
     def encode(batches):
@@ -324,7 +326,7 @@ def q135_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     docs = _spread_py(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
+        read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
     )
 
     def encode(batches):
@@ -687,7 +689,7 @@ def q176_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = _spread_py(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
+        read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
     )
 
     def encode(batches):
@@ -818,7 +820,7 @@ def q186_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = _spread_py(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        read_parquet(spark, f"{sf_dir}/documents.parquet").select(
             "doc_id", "n_chars"
         )
     )

@@ -26,9 +26,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from prox_spark.io import read_parquet
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # --- q01: pricing summary (TPC-H Q1 shape; multi-agg group-by, A1-A3) ------
@@ -1843,7 +1845,7 @@ def q131_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     pk_lo, pk_hi = (4 * max_pk) // 10, (5 * max_pk) // 10
     sk_lo, sk_hi = (4 * max_sk) // 10, (5 * max_sk) // 10
-    z = spark.read.parquet(stage)
+    z = read_parquet(spark, stage)
     return (
         z.filter(
             F.col("l_partkey").between(pk_lo, pk_hi)

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from prox_spark.io import read_parquet
 from .text import TOKENS_DUCK, TOKENS_SPARK, _docs
 
 # fixed query workload: (query_id, term) — mixed rare ("dup") and
@@ -104,7 +105,7 @@ def _bm25_index(spark: SparkSession, sf_dir: str) -> tuple:
         _doc_lengths(docs).coalesce(1).write.parquet(dl_path)
         stats_path = f"{scratch}/corpus_stats"
         (
-            spark.read.parquet(dl_path)
+            read_parquet(spark, dl_path)
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_docs"),
                 F.sum("dl").cast("long").alias("tot"),
@@ -198,8 +199,8 @@ def q200_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         probed,
         q_terms,
-        spark.read.parquet(dl_path),
-        spark.read.parquet(stats_path),
+        read_parquet(spark, dl_path),
+        read_parquet(spark, stats_path),
     )
     return out.withColumn("files_pruned", F.lit(files_pruned)).orderBy(
         "query_id", "rnk"
@@ -730,8 +731,8 @@ def q203_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         probed,
         q_terms,
-        spark.read.parquet(dl_path),
-        spark.read.parquet(stats_path),
+        read_parquet(spark, dl_path),
+        read_parquet(spark, stats_path),
         top_k=HYBRID_CANDIDATES,
     )
     emb = _emb_n(spark, sf_dir).select(

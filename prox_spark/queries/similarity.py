@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from prox_spark.io import read_parquet
+
 EMB_DIM = 64
 N_QUERIES = 10  # vectors with vec_id < N_QUERIES form the query set
 TOP_K = 3
@@ -43,7 +45,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.queries.text import _spread
 
     return (
-        _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+        _spread(read_parquet(spark, f"{sf_dir}/embeddings.parquet"))
         .withColumn("dd", F.expr("cast(embedding as array<double>)"))
     )
 
@@ -801,7 +803,7 @@ def build_ivf_index(
 def probe_ivf_index(spark: SparkSession, path: str, probe_cids: list[int]) -> DataFrame:
     """Read ONLY the probed cluster lists (partition pruning does the
     work — no other directory is opened)."""
-    return spark.read.parquet(path).filter(F.col("cid").isin(probe_cids))
+    return read_parquet(spark, path).filter(F.col("cid").isin(probe_cids))
 
 
 # --- k-means training (iterative; serves the IVF coarse quantizer) ---------
@@ -2141,7 +2143,7 @@ def _sd_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus scan + K-centroid argmin fold."""
     cache_key = (spark.sparkContext.applicationId, sf_dir)
     if cache_key not in _SD_ASSIGN_CACHE:
-        n_vectors = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+        n_vectors = read_parquet(spark, f"{sf_dir}/embeddings.parquet").count()
         _tagged, assign, _probes = _ivf_parts(
             spark, sf_dir, k=_semdedup_k(n_vectors)
         )
@@ -2357,7 +2359,7 @@ def q195_top_principal_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thousands of parallel map tasks with zero shuffle before them,
     # and at bench scale it removes a full exchange of the embedding
     # bytes plus 32 near-empty Python dispatches (guide §2.4)
-    ei = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    ei = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         F.expr(
             "transform(cast(embedding as array<double>), "
             f"x -> cast(floor(x * {PCA_SCALE_E} + 0.5) as bigint))"
@@ -2756,7 +2758,7 @@ def _maintained_nd(spark: SparkSession, sf_dir: str) -> tuple:
         base = f"{scratch}/emb"
         pairs, buckets = f"{scratch}/nd_pairs", f"{scratch}/nd_buckets"
         reg = f"{scratch}/reg"
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
             "vec_id", "embedding"
         )
         commit_snapshot(

@@ -21,6 +21,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from prox_spark.io import read_parquet
+
 
 @contextmanager
 def _stream_partitions(
@@ -84,7 +86,7 @@ def q44_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.streaming import read_event_stream, run_to_memory, stateful_user_totals
 
     stage_dir = _staged_events(spark, sf_dir)
-    batch_schema = spark.read.parquet(stage_dir).schema
+    batch_schema = read_parquet(spark, stage_dir).schema
 
     stream = read_event_stream(spark, stage_dir, batch_schema)
     totals = stateful_user_totals(stream)
@@ -123,7 +125,7 @@ def q69_streaming_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.streaming import hourly_stats, read_event_stream, run_to_memory
 
     stage_dir = _staged_events(spark, sf_dir)
-    batch_schema = spark.read.parquet(stage_dir).schema
+    batch_schema = read_parquet(spark, stage_dir).schema
 
     stream = read_event_stream(spark, stage_dir, batch_schema)
     windowed = hourly_stats(stream, watermark="2 hours")
@@ -150,10 +152,10 @@ def q77_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.streaming import enrich_with_dim, read_event_stream, run_to_memory
 
     stage_dir = _staged_events(spark, sf_dir)
-    batch_schema = spark.read.parquet(stage_dir).schema
+    batch_schema = read_parquet(spark, stage_dir).schema
 
     dim = (
-        spark.read.parquet(stage_dir)
+        read_parquet(spark, stage_dir)
         .select("event_type")
         .distinct()
         .withColumn("weight", F.length("event_type").cast("long"))
@@ -198,7 +200,7 @@ def q78_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.streaming import clicks_before_purchases, read_event_stream, run_to_memory
 
     stage_dir = _staged_events(spark, sf_dir)
-    batch_schema = spark.read.parquet(stage_dir).schema
+    batch_schema = read_parquet(spark, stage_dir).schema
 
     clicks = read_event_stream(spark, stage_dir, batch_schema).filter(
         F.col("event_type") == "click"
@@ -265,7 +267,7 @@ def _staged_events_with_dups(spark: SparkSession, sf_dir: str) -> str:
     if sf_dir not in _DUP_STAGE_CACHE:
         base = _staged_events(spark, sf_dir)
         stage_dir = tempfile.mkdtemp(prefix="prox_spark_stream_dup_")
-        ev = spark.read.parquet(base)
+        ev = read_parquet(spark, base)
         ev.coalesce(4).write.mode("append").parquet(stage_dir)
         ev.coalesce(4).write.mode("append").parquet(stage_dir)
         _DUP_STAGE_CACHE[sf_dir] = stage_dir
@@ -285,7 +287,7 @@ def q100_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.streaming import dedup_within_watermark, read_event_stream, run_to_memory
 
     stage_dir = _staged_events_with_dups(spark, sf_dir)
-    batch_schema = spark.read.parquet(stage_dir).schema
+    batch_schema = read_parquet(spark, stage_dir).schema
 
     stream = read_event_stream(spark, stage_dir, batch_schema)
     deduped = dedup_within_watermark(stream, watermark="35 days")
@@ -328,7 +330,7 @@ def q101_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.streaming import read_event_stream, run_to_memory, session_stats
 
     stage_dir = _staged_events(spark, sf_dir)
-    batch_schema = spark.read.parquet(stage_dir).schema
+    batch_schema = read_parquet(spark, stage_dir).schema
 
     # scope to a user subset: the operator/state semantics are identical,
     # and the gate's full-result drain+collect stops dominating the run
@@ -385,7 +387,7 @@ def _staged_docs_with_dups(spark: SparkSession, sf_dir: str) -> str:
     delivered twice — the at-least-once crawl feed q109 dedups."""
     if sf_dir not in _DOC_DUP_STAGE_CACHE:
         stage_dir = tempfile.mkdtemp(prefix="prox_spark_doc_dup_")
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
         docs.coalesce(2).write.mode("append").parquet(stage_dir)
         docs.coalesce(2).write.mode("append").parquet(stage_dir)
         _DOC_DUP_STAGE_CACHE[sf_dir] = stage_dir
@@ -411,7 +413,7 @@ def q109_streaming_dedup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.upsert import upsert_keep_max
 
     stage_dir = _staged_docs_with_dups(spark, sf_dir)
-    batch_schema = spark.read.parquet(stage_dir).schema
+    batch_schema = read_parquet(spark, stage_dir).schema
     run = uuid.uuid4().hex[:8]
     store = tempfile.mkdtemp(prefix=f"prox_spark_dedup_store_{run}_") + "/store"
     ckpt = tempfile.mkdtemp(prefix=f"prox_spark_dedup_ckpt_{run}_")
@@ -504,7 +506,7 @@ def q136_streaming_neardup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.upsert import upsert_keep_max
 
     stage_dir = _staged_docs_with_dups(spark, sf_dir)
-    batch_schema = spark.read.parquet(stage_dir).schema
+    batch_schema = read_parquet(spark, stage_dir).schema
     run = uuid.uuid4().hex[:8]
     store = tempfile.mkdtemp(prefix=f"prox_spark_neardup_store_{run}_") + "/store"
     ckpt = tempfile.mkdtemp(prefix=f"prox_spark_neardup_ckpt_{run}_")
@@ -615,7 +617,7 @@ def _staged_docs_feed(spark: SparkSession, sf_dir: str) -> str:
     guard instead)."""
     if sf_dir not in _DOC_FEED_STAGE_CACHE:
         stage_dir = tempfile.mkdtemp(prefix="prox_spark_doc_feed_")
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
         docs.repartition(4).write.mode("overwrite").parquet(stage_dir)
         _DOC_FEED_STAGE_CACHE[sf_dir] = stage_dir
         atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
@@ -705,7 +707,7 @@ def _cms_store(spark: SparkSession, sf_dir: str) -> str:
 
     def build(scratch: str) -> str:
         stage_dir = _staged_docs_feed(spark, sf_dir)
-        batch_schema = spark.read.parquet(stage_dir).schema
+        batch_schema = read_parquet(spark, stage_dir).schema
         store = scratch + "/cms"
         ckpt = scratch + "/ckpt"
         stream = (
@@ -756,7 +758,7 @@ def q189_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _cms_store(spark, sf_dir)
     sketch = read_table(spark, store).filter(F.col("d") >= 0)
     cnt = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .select(F.explode(F.expr(TOKENS_SPARK)).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -858,7 +860,7 @@ def view_merge_batch(
     (ΔA⋈B; B static per batch), maintained against a REAL stream of
     table commits."""
     sp = batch_df.sparkSession
-    dim = sp.read.parquet(dim_path)
+    dim = read_parquet(sp, dim_path)
     part = (
         batch_df.join(F.broadcast(dim), "source")
         .groupBy("region")
@@ -882,7 +884,7 @@ def signed_view_merge_batch(
     unchanged rows) cancel inside the per-batch partial aggregate and
     never even reach the artifact."""
     sp = batch_df.sparkSession
-    dim = sp.read.parquet(dim_path)
+    dim = read_parquet(sp, dim_path)
     sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
         F.lit(-1)
     )
@@ -917,7 +919,7 @@ def _table_stream_view(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
 
     def build(scratch: str) -> tuple[str, int]:
         spark.dataSource.register(TableChangesDataSource)
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
             "doc_id", "source", "n_chars"
         )
         t = f"{scratch}/docs_t"
@@ -1055,7 +1057,7 @@ def _stream_cdf_view(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
 
     def build(scratch: str) -> tuple[str, int]:
         spark.dataSource.register(TableChangesDataSource)
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
             "doc_id", "source", "n_chars"
         )
         t = f"{scratch}/docs_t"
@@ -1251,7 +1253,7 @@ def _lsh_stream_index(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
 
     def build(scratch: str) -> tuple[str, int]:
         spark.dataSource.register(TableChangesDataSource)
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
             "doc_id", "text"
         )
         t = f"{scratch}/docs_t"
@@ -1519,7 +1521,7 @@ def _sem_stream_index(spark: SparkSession, sf_dir: str) -> tuple:
 
     def build(scratch: str) -> tuple:
         spark.dataSource.register(TableChangesDataSource)
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
             "vec_id", "embedding"
         )
         # the quantizer is a frozen PARAMETER of the index (q161's

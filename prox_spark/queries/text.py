@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from prox_spark.io import read_parquet
+
 # --- shared token / shingle fragments (Spark SQL expr + DuckDB SQL) --------
 
 TOKENS_SPARK = r"split(lower(trim(text)), '\\s+')"
@@ -94,7 +96,7 @@ def _spread_py(df: DataFrame, cap: int = 8) -> DataFrame:
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return _spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
 
 
 def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -662,7 +664,7 @@ def q39_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from prox_spark.queries._udfs import sentiment_counts_udf
 
-    docs = _spread_py(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = _spread_py(read_parquet(spark, f"{sf_dir}/documents.parquet"))
     counts = sentiment_counts_udf(POS_WORDS, NEG_WORDS)
     c = docs.select("doc_id", counts(F.col("text")).alias("c"))
     score = F.round((F.col("c.n_pos") - F.col("c.n_neg")) / F.col("c.n_tokens"), 6)
@@ -1249,7 +1251,7 @@ def q82_chunk_split_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.queries._udfs import make_chunk_udtf
 
     spark.udtf.register("prox_chunk_doc", make_chunk_udtf())
-    _spread_py(spark.read.parquet(f"{sf_dir}/documents.parquet")).createOrReplaceTempView(
+    _spread_py(read_parquet(spark, f"{sf_dir}/documents.parquet")).createOrReplaceTempView(
         "q82_docs"
     )
     return spark.sql(
@@ -2225,7 +2227,7 @@ def q142_polymorphic_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prox_spark.queries._udfs import make_ngram_udtf
 
     spark.udtf.register("prox_ngram", make_ngram_udtf())
-    _spread_py(spark.read.parquet(f"{sf_dir}/documents.parquet")).createOrReplaceTempView(
+    _spread_py(read_parquet(spark, f"{sf_dir}/documents.parquet")).createOrReplaceTempView(
         "q142_docs"
     )
     return spark.sql(

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from prox_spark import manifest as M
+from prox_spark.io import read_parquet
 from prox_spark.manifest import DATA_DIR, MANIFEST_DIR
 
 _SMALL_COMMIT_CONF_LOCK = threading.Lock()
@@ -261,7 +262,7 @@ def _read_files(
         for i in d_sig:
             d = deletes[i]
             dset = (
-                spark.read.parquet(M.resolve(table_path, d["file"]))
+                read_parquet(spark, M.resolve(table_path, d["file"]))
                 .select(*d["keys"])
                 .distinct()
             )
@@ -281,12 +282,12 @@ def read_table(
     if ref == "main" and not is_manifest_table(spark, table_path):
         if version is not None:
             raise ValueError(f"{table_path} is not a manifest table")
-        return spark.read.parquet(table_path)
+        return read_parquet(spark, table_path)
     manifest = read_manifest(spark, table_path, version, ref)
     if "files" in manifest:
         return _read_files(spark, table_path, manifest, manifest["files"])
     # legacy single-snapshot-dir manifest (round-3 format)
-    return spark.read.parquet(f"{table_path}/{manifest['data']}")
+    return read_parquet(spark, f"{table_path}/{manifest['data']}")
 
 
 def _write_json(jvm, fs, path: str, doc: dict):
@@ -2009,7 +2010,7 @@ def _value_incidences(
     parts = []
     for sig, fs in sorted(groups.items()):
         phys = M.physical_name(col, [renames[i] for i in sig])
-        df = spark.read.parquet(*[M.resolve(table_path, f) for f in fs])
+        df = read_parquet(spark, *[M.resolve(table_path, f) for f in fs])
         parts.append(
             df.select(
                 F.col(phys).alias(col),

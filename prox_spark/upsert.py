@@ -44,6 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from prox_spark.io import read_parquet
 from prox_spark.table import (
     _read_files,
     commit_delta,
@@ -63,7 +64,7 @@ def _current(spark: SparkSession, table_path: str) -> DataFrame | None:
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
     if not fs.exists(path):
         return None
-    return spark.read.parquet(table_path)  # legacy plain dir
+    return read_parquet(spark, table_path)  # legacy plain dir
 
 
 def _drop_legacy_files(spark: SparkSession, table_path: str) -> None:

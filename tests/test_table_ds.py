@@ -1303,3 +1303,11 @@ def test_columns_projection_option(spark, tmp_path):
         ProxTableDataSource(
             {"path": t, "columns": "source", "readchangefeed": "true"}
         ).schema()
+
+
+def test_q228_source_order_is_null_safe():
+    from prox_spark.queries.table_q import _by_source
+
+    rows = [("b", 2), (None, 5), ("a", 1), (None, 3)]
+    assert _by_source(rows) == [("a", 1), ("b", 2), (None, 3), (None, 5)]
+    assert _by_source(list(reversed(rows))) == _by_source(rows)

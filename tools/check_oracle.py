@@ -13,12 +13,14 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

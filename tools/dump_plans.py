@@ -16,10 +16,11 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
+OUT_DIR = os.path.join(ROOT, "plans", "r13")
 
 
 def frames_for(name: str, spark):

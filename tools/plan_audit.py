@@ -13,9 +13,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SKIP = {
     # building these RUNS a real stream (the query fn drains to a sink
