@@ -38,8 +38,8 @@ Kinds:
   ``tokens_expr``, ``covered``, ``stats``, ``since`` (frozen at
   registration — the rename-resolution low bound).
 - ``ivf``: conditional recluster — measure cell imbalance
-  (max cell / mean cell) and fire prox_spark.queries.similarity
-  recluster_index only past ``params["imbalance"]``; params: ``k``,
+  (max cell / mean cell) and fire prox_spark.ivf.recluster_index
+  only past ``params["imbalance"]``; params: ``k``,
   ``imbalance`` (default 3.0).
 - ``kmv`` / ``quantile_sketch`` / ``cms``: deterministic mergeable
   sketches (distinct / quantiles / heavy-hitter frequencies) — insert
@@ -55,6 +55,21 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from prox_spark.hashing import (
+    _HEXV_SPARK,
+    _cms_bucket_spark,
+    _u48_expr,
+    cms_grid,
+    kmv_u_frame,
+)
+from prox_spark.ivf import recluster_index
+from prox_spark.neardup import maintain_nd_pairs
+from prox_spark.postings import (
+    _signed_postings,
+    compact_postings,
+    maintained_postings,
+    postings_feed,
+)
 from prox_spark.table import is_manifest_table, read_manifest, read_table
 
 _SCHEMA = "artifact string, kind string, base string, params string"
@@ -67,17 +82,6 @@ KINDS = (
 # hashes estimate distinct counts as (k-1)/u_k — deterministic (no HLL
 # register randomness), so served estimates are oracle-reproducible
 KMV_K = 16
-
-
-def _kmv_u_frame(df, col: str, keys: list[str] = ()):
-    """([keys...,] u double) frame: the md5-derived uniform u ∈ [0, 1)
-    of each value of ``df.col`` — the deterministic hash the whole KMV
-    family shares (q209) — with optional group-key columns carried."""
-    from prox_spark.queries.text import _HEXV_SPARK, _u48_expr
-
-    return df.select(
-        *keys, F.md5(F.col(col).cast("string")).alias("m")
-    ).select(*keys, F.expr(_u48_expr(_HEXV_SPARK)).alias("u"))
 
 
 def _kmv_topk(values, keys: list[str], k: int = KMV_K):
@@ -124,7 +128,7 @@ def build_kmv_sketch(
     from prox_spark.table import commit_snapshot
 
     head = int(read_manifest(spark, base_path)["version"])
-    u = _kmv_u_frame(read_table(spark, base_path), col, list(keys))
+    u = kmv_u_frame(read_table(spark, base_path), col, list(keys))
     commit_snapshot(
         spark, sketch_path, _kmv_topk(u, list(keys), k),
         stat_cols=[*keys, "u"] if keys else ["u"],
@@ -146,8 +150,6 @@ def _qsk_u_frame(df, key: str, val: str, keys: list[str] = ()):
     hash the quantile-sketch family shares. Hashing the row key (not
     the value) makes the sample uniform over ROWS, so duplicated
     values keep their weight in the estimate."""
-    from prox_spark.queries.text import _HEXV_SPARK, _u48_expr
-
     return df.select(
         *keys,
         F.md5(F.col(key).cast("string")).alias("m"),
@@ -229,8 +231,6 @@ def serve_quantile_by(
     quantile interpolates over the sample in ONE pass (percentile
     takes the whole array). The fallback is the exact interpolated
     percentile over the base (same schema either way)."""
-    from prox_spark.queries.search import postings_feed
-
     keys = list(keys)
     multi = isinstance(q, (list, tuple))
     q_list = [float(x) for x in q] if multi else [float(q)]
@@ -330,30 +330,6 @@ def _cms_counts(items, keys: list[str] = ()):
     )
 
 
-def _cms_grid(cnt, d: int, w: int, keys: list[str] = ()):
-    """(keys..., d, bucket, c) grid rows from per-item counts: one
-    partial-agg per hash row over the vocabulary aggregate
-    (equivalent to per-occurrence increments), ≤ d×w rows per group."""
-    from functools import reduce
-
-    from prox_spark.queries.text import _cms_bucket_spark
-
-    rows = [
-        cnt.select(
-            *keys,
-            F.lit(dd).cast("int").alias("d"),
-            F.expr(_cms_bucket_spark(dd, w)).cast("long").alias("bucket"),
-            F.col("cnt").alias("c"),
-        )
-        for dd in range(d)
-    ]
-    return (
-        reduce(lambda a, b: a.unionByName(b), rows)
-        .groupBy(*keys, "d", "bucket")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-
-
 def _cms_estimates(toks, grid, d: int, w: int, keys: list[str] = ()):
     """(keys..., tok, est_cnt): min over the D bucket counters each
     tok hashes to — ≥ the true count by construction (the q174
@@ -361,8 +337,6 @@ def _cms_estimates(toks, grid, d: int, w: int, keys: list[str] = ()):
     size): a safe broadcast. A grouped grid is groups × d×w — corpus-
     derived, so it stays un-hinted and AQE broadcasts only when it
     genuinely fits."""
-    from prox_spark.queries.text import _cms_bucket_spark
-
     probes = toks.select(
         *keys,
         "tok",
@@ -453,7 +427,7 @@ def build_cms_sketch(
         keys,
     ).persist()  # grid + candidate branches share ONE corpus scan
     try:
-        grid = _cms_grid(cnt, d, w, keys)
+        grid = cms_grid(cnt, d, w, keys)
         cands = _cms_topc(
             cnt.select(*keys, "tok"), grid, d, w, cand_k, keys
         )
@@ -485,8 +459,6 @@ def serve_topk(
     est_cnt), ranked est_cnt DESC, tok ASC within each group; the
     fallback is the exact top-k count (same schema — an exact count
     IS a valid CMS estimate)."""
-    from prox_spark.queries.search import postings_feed
-
     tokens = bool(tokens)
     keys = list(keys)
 
@@ -540,7 +512,7 @@ def serve_topk(
                     _cms_items(feed, col, tokens, keys), keys
                 )
                 grid = (
-                    grid.unionByName(_cms_grid(bcnt, d, w, keys))
+                    grid.unionByName(cms_grid(bcnt, d, w, keys))
                     .groupBy(*keys, "d", "bucket")
                     .agg(F.sum("c").cast("long").alias("c"))
                 )
@@ -582,8 +554,6 @@ def serve_distinct(
     the fallback is the exact distinct count. Estimates are
     deterministic (md5-derived hashes), so a served answer is
     reproducible anywhere."""
-    from prox_spark.queries.search import postings_feed
-
     for ent in list_artifacts(spark, registry_path):
         if (
             ent["kind"] != "kmv"
@@ -614,7 +584,7 @@ def serve_distinct(
                 # k-smallest sets (KMV mergeability)
                 fresh = [
                     float(r["u"])
-                    for r in _kmv_u_frame(feed, col)
+                    for r in kmv_u_frame(feed, col)
                     .distinct().orderBy("u").limit(k).collect()
                 ]
                 stored = sorted(set(stored) | set(fresh))[:k]
@@ -734,7 +704,6 @@ def _maintain_one(spark: SparkSession, ent: dict) -> dict:
         head = int(read_manifest(spark, base)["version"])
         if head == covered:
             return {"status": "noop", "covered": covered}
-        from prox_spark.queries.search import postings_feed
         from prox_spark.wand import maintain_bounded_index
 
         feed = postings_feed(
@@ -754,12 +723,6 @@ def _maintain_one(spark: SparkSession, ent: dict) -> dict:
         # row debt exceeds fold_factor x the folded size, run the q205
         # fold-compaction (materialize the net, carry the replay
         # markers, refresh term stats for pruning)
-        from prox_spark.queries.search import (
-            _signed_postings,
-            compact_postings,
-            maintained_postings,
-            postings_feed,
-        )
         from prox_spark.table import commit_delta
 
         covered = _covered_version(spark, ent, art)
@@ -799,14 +762,11 @@ def _maintain_one(spark: SparkSession, ent: dict) -> dict:
         # the embedding near-dup pair index (q42's serving table):
         # touched vectors retire, new vectors bucket-join the STANDING
         # LSH state, coverage rides the pair commit (maintain_nd_pairs)
-        from prox_spark.queries.similarity import maintain_nd_pairs
-
         out = maintain_nd_pairs(spark, base, art, params["buckets"])
         if out["status"] == "refreshed":
             out["params_update"] = {"covered": out["covered"]}
         return out
     if kind == "kmv":
-        from prox_spark.queries.search import postings_feed
         from prox_spark.table import commit_delta
 
         col = params["col"]
@@ -827,7 +787,7 @@ def _maintain_one(spark: SparkSession, ent: dict) -> dict:
             # hash-project + top-k
             mode = "recompute"
             fresh = _kmv_topk(
-                _kmv_u_frame(
+                kmv_u_frame(
                     read_table(spark, base, version=head), col, keys
                 ),
                 keys, k,
@@ -835,7 +795,7 @@ def _maintain_one(spark: SparkSession, ent: dict) -> dict:
         else:
             stored = read_table(spark, art).select(*keys, "u")
             fresh = _kmv_topk(
-                stored.unionByName(_kmv_u_frame(feed, col, keys)),
+                stored.unionByName(kmv_u_frame(feed, col, keys)),
                 keys, k,
             )
         prev = read_manifest(spark, art)
@@ -849,7 +809,6 @@ def _maintain_one(spark: SparkSession, ent: dict) -> dict:
         return {"status": "refreshed", "covered": head, "mode": mode,
                 "params_update": {"covered": head}}
     if kind == "quantile_sketch":
-        from prox_spark.queries.search import postings_feed
         from prox_spark.table import commit_delta
 
         key, val = params["key"], params["val"]
@@ -891,7 +850,6 @@ def _maintain_one(spark: SparkSession, ent: dict) -> dict:
         return {"status": "refreshed", "covered": head, "mode": mode,
                 "params_update": {"covered": head}}
     if kind == "cms":
-        from prox_spark.queries.search import postings_feed
         from prox_spark.table import commit_delta
 
         col = params["col"]
@@ -923,7 +881,7 @@ def _maintain_one(spark: SparkSession, ent: dict) -> dict:
                 keys,
             ).persist()
             try:
-                grid = _cms_grid(cnt, d, w, keys)
+                grid = cms_grid(cnt, d, w, keys)
                 cands = _cms_topc(
                     cnt.select(*keys, "tok"), grid, d, w, cand_k, keys
                 )
@@ -945,7 +903,7 @@ def _maintain_one(spark: SparkSession, ent: dict) -> dict:
                 grid = (
                     stored.filter(F.col("d") >= 0)
                     .select(*keys, "d", "bucket", "c")
-                    .unionByName(_cms_grid(bcnt, d, w, keys))
+                    .unionByName(cms_grid(bcnt, d, w, keys))
                     .groupBy(*keys, "d", "bucket")
                     .agg(F.sum("c").cast("long").alias("c"))
                 )
@@ -992,8 +950,6 @@ def _maintain_one(spark: SparkSession, ent: dict) -> dict:
         )
         if imbalance <= threshold and len(sizes) >= k:
             return {"status": "noop", "imbalance": round(imbalance, 2)}
-        from prox_spark.queries.similarity import recluster_index
-
         out = recluster_index(spark, art, k=k)
         return {
             "status": "reclustered", "version": out["version"],
@@ -1149,8 +1105,6 @@ def serve_distinct_by(
     (KMV cannot retract). Returns ``(frame, sketch_path_or_None)``
     with columns (keys..., est_distinct); the fallback is the exact
     per-group distinct count (as double, same schema)."""
-    from prox_spark.queries.search import postings_feed
-
     keys = list(keys)
     for ent in list_artifacts(spark, registry_path):
         if (
@@ -1176,7 +1130,7 @@ def serve_distinct_by(
                 ).limit(1).count():
                     continue  # deletes: the sketch cannot answer
                 sk = _kmv_topk(
-                    sk.unionByName(_kmv_u_frame(feed, col, keys)),
+                    sk.unionByName(kmv_u_frame(feed, col, keys)),
                     keys, k,
                 )
             from pyspark.sql import Window

@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from prox_spark.io import read_parquet
+from prox_spark.schemas import EVENTS_RAW_SCHEMA
 
 TESTDATA_TABLES = (
     "region",
@@ -78,8 +79,6 @@ class Catalog:
 
 def testdata_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
     """Catalog over the driver-generated testdata directory."""
-    from prox_spark.queries.events import EVENTS_RAW_SCHEMA
-
     cat = Catalog(spark)
     cat.register_dir(sf_dir)
     if "events" in cat.paths:

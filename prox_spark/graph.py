@@ -1,12 +1,12 @@
 """Iterative graph algorithms over edge-list DataFrames.
 
-Connected components (min-label propagation with pointer jumping)
-lives next to its query in ``queries/text.py``; this module holds the
-rank-propagation family. The reference has no graph operators at all;
-these belong to the 100 TB training-data curation layer — web-crawl
-corpora are curated by link-graph importance (PageRank/harmonic
-centrality over the domain graph), and the same machinery scores
-entity importance in any bipartite interaction graph.
+Two families live here: connected components (min-label propagation
+with pointer jumping, q72 and the curation pipeline's dup clusters) and
+rank propagation (PageRank, q127/q150). The reference has no graph
+operators at all; these belong to the 100 TB training-data curation
+layer — web-crawl corpora are curated by link-graph importance
+(PageRank/harmonic centrality over the domain graph), and the same
+machinery scores entity importance in any bipartite interaction graph.
 
 Determinism design — EXACT INTEGER ARITHMETIC: a textbook PageRank
 sums doubles, and a double sum's value depends on partition/merge
@@ -33,12 +33,14 @@ sized to the EDGE count (the frames carry two BIGINTs per row), with
 map-side partial aggregation on the inflow sum. Ranks never visit the
 driver; lineage is rebased with an eager localCheckpoint every
 ``checkpoint_every`` rounds exactly like the connected-components
-fixpoint (queries/text.py:616).
+fixpoint (:func:`min_label_clusters`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from prox_spark.local_frames import values_df
 
 MASS = 10**12
 DAMP_NUM, DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
@@ -193,7 +195,7 @@ def _pagerank_body(
     # reuse this one exchange (the checkpoint preserves the
     # partitioning), so after setup NO per-iteration shuffle touches
     # edge-sized data. Width sized to edge count like the CC fixpoint
-    # (queries/text.py:619) at ~250k rows (~6 MB) per partition — edge
+    # (min_label_clusters) at ~250k rows (~6 MB) per partition — edge
     # rows are three BIGINTs, so finer slicing just buys per-round
     # task-scheduling overhead.
     ed = (
@@ -368,3 +370,166 @@ def triangle_count(edges: DataFrame) -> tuple[int, int, int, int]:
         e.unpersist()
         deg.unpersist()
     return int(n_nodes), int(n_edges), int(n_wedges), int(n_triangles)
+
+
+# --- connected components (min-label propagation, q72) ----------------------
+
+CC_MAX_ITERS = 15
+
+# truncate the label frame's lineage every N fixpoint rounds. Each round
+# references the previous label frame TWICE (the propagate join's input
+# and the update join's left side), so the logical-plan TREE doubles per
+# round: un-truncated, a 15-round run carries 2^16-2 ≈ 65k join nodes and
+# plan analysis itself becomes the bottleneck (measured: 2/6/14 joins
+# after 1/2/3 rounds). localCheckpoint rebases the plan on the
+# materialized partitions, bounding the tree at 2^(N+1)-2 joins and
+# releasing prior rounds' shuffle files.
+CC_CHECKPOINT_EVERY = 3
+
+# below this edge count the whole fixpoint is driver-side union-find:
+# a dedup edge list is orders of magnitude smaller than the corpus
+# (pairs that SURVIVED banding + verify), and a sub-million-row list
+# union-finds in milliseconds where the distributed fixpoint pays
+# rounds x job-scheduling overhead. 1M edges x 16 bytes ≈ 16 MB on the
+# driver — far under any sane driver heap. The distributed path stays
+# the default above the threshold; both produce identical min-labels.
+CC_DRIVER_MAX_EDGES = 1_000_000
+
+
+def _driver_union_find(edge_rows: list[tuple[int, int]]) -> list[tuple[int, int]]:
+    """Union-find with path compression; returns (node, min_label)."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edge_rows:
+        if a not in parent:
+            parent[a] = a
+        if b not in parent:
+            parent[b] = b
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # keep the SMALLER id as root so the root IS the min label
+            if ra < rb:
+                parent[rb] = ra
+            else:
+                parent[ra] = rb
+    return sorted((n, find(n)) for n in parent)
+
+
+def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """ONE min-label-propagation + pointer-jump round (shared by the
+    fixpoint loop and the plan-audit twin, so audited plan shape ==
+    executed plan shape). Returns the new label frame, carrying the
+    previous label as ``old`` so convergence is read off the SAME
+    materialization — one job per round, not a second change-detection
+    join.
+
+    Pointer jumping (label-of-label): after adopting the neighbor
+    minimum, also adopt the label OF the candidate label's node.
+    Labels are always node ids, so the lookup is a self-join on the
+    (narrow) label frame; it turns chain convergence from O(diameter)
+    rounds into O(log diameter) — the property that matters when a
+    billion-edge near-dup graph hides long paths. A fixpoint of the
+    combined update is in particular a fixpoint of plain neighbor-min
+    propagation, so the converged labels are unchanged."""
+    nbr_min = (
+        edges.join(labels, edges.doc1 == labels.doc_id)
+        .groupBy(F.col("doc2").alias("doc_id"))
+        .agg(F.min("label").alias("nbr"))
+    )
+    mid = labels.join(nbr_min, "doc_id", "left").select(
+        "doc_id",
+        F.col("label").alias("old"),
+        F.least(F.col("label"), F.coalesce(F.col("nbr"), F.col("label"))).alias("mid"),
+    )
+    l2 = labels.select(F.col("doc_id").alias("p_id"), F.col("label").alias("p_label"))
+    return mid.join(l2, mid.mid == l2.p_id, "left").select(
+        "doc_id",
+        "old",
+        F.least(F.col("mid"), F.coalesce(F.col("p_label"), F.col("mid"))).alias(
+            "label"
+        ),
+    )
+
+
+def min_label_clusters(
+    pairs: DataFrame,
+    max_iters: int = CC_MAX_ITERS,
+    driver_max_edges: int = CC_DRIVER_MAX_EDGES,
+) -> DataFrame:
+    """Connected components over an undirected pair list: every node
+    gets the minimum doc_id of its component, as ``(doc_id, label)``.
+
+    HYBRID: edge lists at or below ``driver_max_edges`` are collected
+    and union-found on the driver (a dedup edge list is tiny relative
+    to the corpus; the fixpoint's per-round job overhead dwarfs a
+    sub-second union-find). Larger graphs run the distributed
+    fixpoint below — identical labels either way (both tested).
+
+    Spark has no recursive CTE, so connectivity is iterative min-label
+    propagation: per round, every node adopts the smallest label among
+    itself and its neighbors; converged when no label changes. Rounds
+    needed = component diameter (near-dup clusters are tiny — chains
+    longer than ~10 docs are pathological), capped at ``max_iters``.
+    Per round: one groupBy over the edge list + one left join over the
+    (narrow) label frame; the only driver-side values are the converged?
+    count — the corpus never leaves the executors. Lineage is rebased
+    via eager localCheckpoint every CC_CHECKPOINT_EVERY rounds (see
+    constant note)."""
+    spark = pairs.sparkSession
+    # cache the PAIR list, not the symmetrized union: both the size
+    # probe and whichever path runs next re-read it, and an uncached
+    # union's two branches would each replay the upstream pair
+    # generation (the LSH pipeline — the expensive part)
+    pairs = pairs.select("doc1", "doc2").cache()
+    n_edges = 2 * pairs.count()
+    if n_edges <= driver_max_edges:
+        # small-graph fast path (see CC_DRIVER_MAX_EDGES note): one
+        # collect of the (cached) edge list, exact union-find, labels
+        # parallelized back — replaces rounds of fixpoint jobs
+        labels = _driver_union_find([(r[0], r[1]) for r in pairs.collect()])
+        if len(labels) <= 20_000:
+            # pure-JVM VALUES relation: a Python-RDD createDataFrame
+            # pays a Python-worker scan per downstream materialization
+            # (twice under a global sort — range sampler + sort), the
+            # q84/q195 pathology; 20k rows keeps the SQL text well
+            # under parser pain
+            out = values_df(spark, labels, "doc_id BIGINT, label BIGINT")
+        else:
+            out = spark.createDataFrame(labels, "doc_id BIGINT, label BIGINT")
+        pairs.unpersist()
+        return out
+    # size the fixpoint's shuffle width to the EDGE count, not the
+    # corpus: near-dup edge lists are a tiny fraction of the input
+    # (here hundreds of rows; at 100 TB maybe billions). Running a
+    # 500-row fixpoint at cluster-wide width would pay ~P tasks of
+    # pure scheduling overhead per round for no parallelism gain.
+    width = max(1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1))
+    edges = pairs.union(
+        pairs.select(F.col("doc2").alias("doc1"), F.col("doc1").alias("doc2"))
+    ).repartition(width, "doc1")
+    labels = (
+        edges.select(F.col("doc1").alias("doc_id"))
+        .distinct()
+        .withColumn("label", F.col("doc_id"))
+        .cache()
+    )
+    for i in range(max_iters):
+        new_labels = _cc_round(edges, labels).cache()
+        changed = new_labels.filter(F.col("label") < F.col("old")).count()
+        labels.unpersist()
+        labels = new_labels.drop("old")
+        if changed == 0:
+            break
+        if (i + 1) % CC_CHECKPOINT_EVERY == 0:
+            checkpointed = labels.localCheckpoint(eager=True)
+            new_labels.unpersist()
+            labels = checkpointed
+    return labels

@@ -51,27 +51,25 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prox_spark.graph import min_label_clusters
+from prox_spark.hashing import hex4_spark
+from prox_spark.neardup import (
+    JACCARD_THRESHOLD,
+    lsh_band_rows,
+    lsh_verify_pairs,
+    shingle_arrays,
+)
 from prox_spark.pipeline import Pipeline, StageResult
 
-# split-gate constants shared with the q65/q206 gate queries
+# split-gate thresholds, shared with the q65/q206/q218 gate queries
 TRAIN_LT, VAL_LT = 80, 90  # md5 bucket < 80 train, < 90 val, else test
 
 
-def _hex4(col: str) -> "F.Column":
-    """First-4-hex-digit value of an md5 column — the deterministic
-    0..65535 bucket source shared with the q65/q206 split gates (no
-    rand(): assignment is a pure projection, reproducible anywhere)."""
-    hx = " + ".join(
-        f"(locate(substring({col}, {i + 1}, 1), '0123456789abcdef') - 1)"
-        f" * {16 ** (3 - i)}"
-        for i in range(4)
-    )
-    return F.expr(hx).cast("long")
-
-
 def _split_of() -> "F.Column":
-    """train/val/test from the ``__m`` md5 column (q65's gate)."""
-    b = _hex4("__m") % 100
+    """train/val/test from the ``__m`` md5 column (q65's gate): its
+    first 4 hex digits mod 100 — no rand(), so assignment is a pure
+    projection, reproducible anywhere."""
+    b = F.expr(hex4_spark("__m")).cast("long") % 100
     return (
         F.when(b < TRAIN_LT, F.lit("train"))
         .when(b < VAL_LT, F.lit("val"))
@@ -99,14 +97,6 @@ def run_llm_pipeline(
 
     Returns the per-stage results. The `freeze` stage's output is the
     txn id; `register`'s is the maintain_artifacts report."""
-    from prox_spark.queries.text import (
-        SHINGLES_SPARK,
-        TOKENS_SPARK,
-        lsh_band_rows,
-        lsh_verify_pairs,
-        min_label_clusters,
-    )
-    from prox_spark.queries.text import JACCARD_THRESHOLD
     from prox_spark.table import commit_snapshot, read_manifest, read_table
 
     pairs_t = os.path.join(out_dir, "pairs")
@@ -128,12 +118,7 @@ def run_llm_pipeline(
 
     def signals(ctx) -> str:
         d = ctx["ingest"]
-        arr = (
-            d.withColumn("tokens", F.expr(TOKENS_SPARK))
-            .withColumn("shingles", F.array_distinct(F.expr(SHINGLES_SPARK)))
-            .select("doc_id", "shingles",
-                    F.size("shingles").alias("n_shingles"))
-        ).cache()
+        arr = shingle_arrays(d).cache()
         try:
             bands = lsh_band_rows(arr).cache()
             try:

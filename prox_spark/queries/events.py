@@ -21,18 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from prox_spark.io import read_parquet
-
-
-# some driver-generated testdata writes ``ts`` as INT64
-# TIMESTAMP(NANOS), which Spark 4 refuses to read natively; requesting
-# it as BIGINT via an explicit schema makes the vectorized reader hand
-# over the raw int64 — no session-wide legacy conf needed (the old
-# approach mutated spark.sql.legacy.parquet.nanosAsLong as a side
-# effect). Other generations write plain TIMESTAMP_MICROS; _events
-# sniffs the footer and handles both.
-EVENTS_RAW_SCHEMA = (
-    "event_id bigint, ts bigint, user_id bigint, event_type string, value double, props string"
-)
+from prox_spark.schemas import EVENTS_RAW_SCHEMA
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:

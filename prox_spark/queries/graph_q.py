@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from prox_spark.catalog import testdata_catalog
 from prox_spark.graph import MASS, pagerank
+from prox_spark.local_frames import values_df
 
 PR_ITERS = 5
 
@@ -317,8 +318,6 @@ def q160_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_nodes, n_edges, n_wedges, n_triangles = triangle_count(
         _part_co_edges(spark, sf_dir)
     )
-    from prox_spark.queries._local import values_df
-
     return values_df(
         spark,
         [(n_nodes, n_edges, n_wedges, n_triangles)],

@@ -35,7 +35,14 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from prox_spark.io import read_parquet
-from .text import TOKENS_DUCK, TOKENS_SPARK, _docs
+from prox_spark.local_frames import values_df
+from prox_spark.neardup import DOT_DUCK, DOT_SPARK, TOKENS_DUCK, TOKENS_SPARK
+from prox_spark.postings import (
+    _BATCH_MARKER,
+    _signed_postings,
+    maintained_postings,
+)
+from .text import _docs
 
 # fixed query workload: (query_id, term) — mixed rare ("dup") and
 # common terms so the scoring discriminates
@@ -192,8 +199,6 @@ def q200_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t, fs in per_term.items()
         ],
     )
-    from prox_spark.queries._local import values_df
-
     q_terms = values_df(spark, BM25_QUERIES, "query_id long, term string")
     out = _bm25_score(
         spark,
@@ -307,90 +312,6 @@ def _inc_postings(spark: SparkSession, sf_dir: str) -> tuple:
     return staged(_INC_IDX_CACHE, sf_dir, "prox_incidx_", build)
 
 
-def _signed_postings(feed: DataFrame) -> DataFrame:
-    """Signed postings delta from change-feed rows: insert rows
-    contribute +1 per token occurrence, delete rows −1; an update's
-    delete+insert pair nets its own term moves. One map-side explode,
-    one shuffle on (term, doc_id)."""
-    sgn = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
-        F.lit(-1)
-    )
-    return (
-        feed.select(
-            "doc_id",
-            sgn.alias("s"),
-            F.explode(F.expr(TOKENS_SPARK)).alias("term"),
-        )
-        .groupBy("term", "doc_id")
-        .agg(F.sum("s").cast("long").alias("tf"))
-        .filter(F.col("tf") != 0)
-    )
-
-
-def postings_feed(
-    spark: SparkSession,
-    table_path: str,
-    start_version: int,
-    end_version: int | None = None,
-    text_col: str = "text",
-    since: int = 0,
-) -> DataFrame:
-    """The corpus change feed prepared for postings maintenance, with
-    the tokenized column RESOLVED through the base's rename history
-    (the mv.py machinery): a feed window after — or spanning — a
-    ``text`` rename delivers frames under the new (or both) name
-    generations, and a naive ``_signed_postings`` over it would
-    silently drop the renamed rows' tokens (explode over a
-    NULL-backfilled column). ``since`` is the version the index
-    recorded the column name at (its build version) — rename events
-    after it resolve; a column that no longer resolves raises
-    ``MvSchemaError`` loudly (rebuild the index)."""
-    from prox_spark.cdf import read_table_changes
-    from prox_spark.mv import (
-        MvSchemaError,
-        _rename_events,
-        _resolve_cols,
-        _restore_names,
-    )
-    from prox_spark.table import read_manifest
-
-    head = (
-        int(read_manifest(spark, table_path)["version"])
-        if end_version is None
-        else int(end_version)
-    )
-    events = _rename_events(spark, table_path, int(since), head)
-    mapping = _resolve_cols([text_col], events)
-    schema = {
-        f["name"]
-        for f in read_manifest(spark, table_path, head)["schema"]["fields"]
-    }
-    if mapping[text_col] not in schema:
-        raise MvSchemaError(
-            f"postings index tokenizes column {text_col!r}, which no "
-            f"longer resolves in {table_path}'s schema (dropped, or "
-            "renamed beyond the reconstructable history) — rebuild the "
-            "index on the current column"
-        )
-    return _restore_names(
-        read_table_changes(spark, table_path, start_version, head), mapping
-    )
-
-
-def maintained_postings(spark: SparkSession, idx: str) -> DataFrame:
-    """The index's CURRENT logical postings: base rows plus signed
-    delta rows folded at read time (sum per (term, doc_id), zero and
-    negative nets drop out) — merge-on-read for an additive index."""
-    from prox_spark.table import read_table
-
-    return (
-        read_table(spark, idx)
-        .groupBy("term", "doc_id")
-        .agg(F.sum("tf").cast("long").alias("tf"))
-        .filter(F.col("tf") > 0)
-    )
-
-
 def q201_incremental_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The postings index maintained INCREMENTALLY through an insert +
     merge-on-read delete + update commit sequence must equal a
@@ -445,9 +366,6 @@ ORDER BY term
 
 # --- q205: STREAM-maintained postings index through deletes ----------------
 
-# marker rows record applied batch ids inside the index itself; \x00
-# can never be a token (the tokenizer splits lowercase words)
-_BATCH_MARKER = "\x00batch"
 N_SIDX_DOCS = 180
 _SIDX_CACHE: dict[str, tuple] = {}
 
@@ -485,8 +403,6 @@ def postings_index_batch(batch_df: DataFrame, batch_id: int,
         }
         if int(batch_id) in applied:
             return
-    from prox_spark.queries._local import values_df
-
     # VALUES, not createDataFrame: no Python-RDD scan per micro-batch
     marker = values_df(
         sp,
@@ -597,37 +513,6 @@ def _stream_postings(spark: SparkSession, sf_dir: str) -> tuple:
     return staged(_SIDX_CACHE, sf_dir, "prox_sidx_", build)
 
 
-def compact_postings(spark: SparkSession, idx: str,
-                     n_files: int = 8) -> int:
-    """FOLD-compaction for the additive postings index: rewrite the
-    raw signed rows as their materialized fold (sum per (term,
-    doc_id), zero/negative nets dropped) in one term-clustered commit.
-    Without it a long maintenance history accrues one signed delta
-    row per touched posting forever — the additive-index analogue of
-    merge-on-read delete debt. Applied-batch MARKER rows are carried
-    verbatim: they fence checkpoint replay, and folding them away
-    would let a replayed old batch re-apply after compaction. Term
-    stats (file pruning for q200-style probes) are refreshed by the
-    clustered rewrite. Returns the new version."""
-    from prox_spark.table import commit_delta, read_manifest
-
-    folded = maintained_postings(spark, idx)
-    markers = read_table_markers(spark, idx)
-    prev = read_manifest(spark, idx)
-    return commit_delta(
-        spark, idx, folded.unionByName(markers), [],
-        stat_cols=["term"], n_files=n_files,
-        base_version=prev.get("version"),
-    )
-
-
-def read_table_markers(spark: SparkSession, idx: str) -> DataFrame:
-    """The index's applied-batch marker rows (replay fence)."""
-    from prox_spark.table import read_table
-
-    return read_table(spark, idx).filter(F.col("term") == _BATCH_MARKER)
-
-
 def q205_streaming_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The postings index maintained by a STANDING STREAM through a
     workload that DELETES — the q194/q198 streaming-index pattern
@@ -701,7 +586,7 @@ def q203_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector table — at 100 TB that join is served by id point-lookups
     into the vector table, never a re-scan per query; cosine is the
     q40 fold on precomputed norms."""
-    from .similarity import DOT_SPARK, _emb_n
+    from .similarity import _emb_n
 
     postings, dl_path, stats_path = _bm25_index(spark, sf_dir)
     terms = sorted({t for _, t in BM25_QUERIES})
@@ -724,8 +609,6 @@ def q203_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t, fs in per_term.items()
         ],
     )
-    from prox_spark.queries._local import values_df
-
     q_terms = values_df(spark, BM25_QUERIES, "query_id long, term string")
     cand = _bm25_score(
         spark,
@@ -765,8 +648,6 @@ def q203_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_q203() -> str:
-    from .similarity import DOT_DUCK
-
     dot_nrm = DOT_DUCK.format(
         a="embedding::DOUBLE[]", b="embedding::DOUBLE[]"
     )

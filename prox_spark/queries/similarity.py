@@ -34,8 +34,26 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from prox_spark.io import read_parquet
+from prox_spark.ivf import (
+    IVF_K,
+    _assign_to_cents,
+    _tag_centroids,
+    nearest_l2,
+    recluster_index,
+)
+from prox_spark.local_frames import values_df, values_df_like
+from prox_spark.neardup import (
+    DOT_DUCK,
+    DOT_SPARK,
+    EMB_DIM,
+    NEARDUP_COS,
+    _ND_PLANE_ROWS,
+    _nd_candidates,
+    _nd_prep,
+    _nd_verify,
+    _plane_buckets,
+)
 
-EMB_DIM = 64
 N_QUERIES = 10  # vectors with vec_id < N_QUERIES form the query set
 TOP_K = 3
 LSH_BITS = 8
@@ -48,11 +66,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
         _spread(read_parquet(spark, f"{sf_dir}/embeddings.parquet"))
         .withColumn("dd", F.expr("cast(embedding as array<double>)"))
     )
-
-
-# fold-left expressions — MUST stay structurally identical across engines
-DOT_SPARK = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-DOT_DUCK = "list_reduce(list_transform(list_zip({a}, {b}), x -> x[1] * x[2]), (acc, x) -> acc + x)"
 
 
 # --- q40: brute-force cosine top-k (exact baseline) ------------------------
@@ -145,44 +158,6 @@ def _hyperplanes_seeded(table: int, bits: int, dim: int = EMB_DIM) -> list[list[
             row.append(1 if int(h[:2], 16) % 2 == 0 else -1)
         planes.append(row)
     return planes
-
-
-def _plane_buckets(
-    emb: DataFrame,
-    plane_rows: list[tuple[int, int, list[float]]],
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
-    """(vec_id, t, bkt [, carry...]) computed FULLY map-side: the whole
-    plane set rides in as ONE broadcast row holding all (t, b, plane)
-    structs, and each vector assembles its per-table bucket ids with an
-    in-row fold before a T-way explode. Round 1 crossJoined the corpus
-    against the plane TABLE (x T*B row explosion) and re-assembled bits
-    with a (vec_id, t) groupBy — a full-corpus shuffle this version
-    eliminates entirely; at 100 TB the only shuffle left in a bucketed
-    LSH consumer is the candidate equi-join itself. Plane data stays a
-    broadcast column, not inline literals, so generated code is small
-    and uniform (literal megamethods measured seconds of JIT stall; see
-    _emb_n note). ``carry`` columns simply stay on the row — there is
-    no aggregation to survive anymore."""
-    spark = emb.sparkSession
-    n_tables = max(t for t, _, _ in plane_rows) + 1
-    from prox_spark.queries._local import values_df
-
-    planes = values_df(spark, plane_rows, "t int, b int, plane array<double>")
-    plane_arr = planes.groupBy().agg(
-        F.array_sort(F.collect_list(F.struct("t", "b", "plane"))).alias("pl")
-    )
-    dot = DOT_SPARK.format(a="dd", b="p.plane")
-    bkts = (
-        f"transform(sequence(0, {n_tables - 1}), t -> named_struct('t', t, 'bkt', "
-        f"aggregate(filter(pl, p -> p.t = t), cast(0 as bigint), "
-        f"(acc, p) -> acc + if(({dot}) > 0, shiftleft(1L, p.b), cast(0 as bigint)))))"
-    )
-    return (
-        emb.crossJoin(F.broadcast(plane_arr))
-        .withColumn("tb", F.explode(F.expr(bkts)))
-        .select("vec_id", *carry, F.col("tb.t").alias("t"), F.col("tb.bkt").alias("bkt"))
-    )
 
 
 # OR-amplified LSH: T independent tables of B bits each. A true
@@ -282,27 +257,6 @@ ORDER BY query_id, rank
 
 
 # --- q42: embedding-cosine near-dup (multi-table LSH blocking) -------------
-
-NEARDUP_COS = 0.42
-ND_TABLES = 4   # L hash tables ...
-ND_BITS = 5     # ... of b bits each: recall = 1 - (1 - p^b)^L
-
-_ND_PLANES = [
-    [
-        [
-            1 if int(hashlib.md5(f"ndplane:{t}:{b}:{i}".encode()).hexdigest()[:2], 16) % 2 == 0 else -1
-            for i in range(EMB_DIM)
-        ]
-        for b in range(ND_BITS)
-    ]
-    for t in range(ND_TABLES)
-]
-
-_ND_PLANE_ROWS = [
-    (t, b, [float(v) for v in row])
-    for t, rows in enumerate(_ND_PLANES)
-    for b, row in enumerate(rows)
-]
 
 
 _ND_PAIRS_CACHE: dict[str, str] = {}
@@ -436,70 +390,6 @@ ORDER BY id1, id2
 # --- maintained near-dup pair index (the q42 artifact's write path) --------
 
 
-def _nd_prep(df: DataFrame) -> DataFrame:
-    """dd + nrm from a (vec_id, embedding) frame (the _emb_n shape
-    over an arbitrary frame instead of the sf fixture)."""
-    return df.withColumn(
-        "dd", F.expr("cast(embedding as array<double>)")
-    ).withColumn(
-        "nrm", F.expr(f"sqrt({DOT_SPARK.format(a='dd', b='dd')})")
-    )
-
-
-def _nd_candidates(a_b: DataFrame, b_b: DataFrame, same: bool) -> DataFrame:
-    """Distinct candidate id pairs colliding in any (t, bkt) bucket
-    between two bucket frames; ``same=True`` is the within-frame
-    self-join (each pair once), ``same=False`` the new-vs-standing
-    join (ids disjoint by construction, ordered via least/greatest)."""
-    a = a_b.alias("a")
-    b = b_b.alias("b")
-    cond = (F.col("a.t") == F.col("b.t")) & (F.col("a.bkt") == F.col("b.bkt"))
-    if same:
-        cond = cond & (F.col("a.vec_id") < F.col("b.vec_id"))
-    else:
-        cond = cond & (F.col("a.vec_id") != F.col("b.vec_id"))
-    return (
-        a.join(b, cond)
-        .select(
-            F.least(F.col("a.vec_id"), F.col("b.vec_id")).alias("id1"),
-            F.greatest(F.col("a.vec_id"), F.col("b.vec_id")).alias("id2"),
-        )
-        .distinct()
-    )
-
-
-def _nd_verify(cand: DataFrame, emb: DataFrame) -> DataFrame:
-    """Exact cosine verification of candidate id pairs against a
-    prepared (vec_id, dd, nrm) frame — semi-join prune first so only
-    vectors that will be verified move (the q42 shape)."""
-    cand = cand.cache()
-    ids = (
-        cand.select(F.col("id1").alias("vec_id"))
-        .union(cand.select(F.col("id2").alias("vec_id")))
-        .distinct()
-    )
-    emb_c = emb.join(ids, "vec_id", "left_semi")
-    e1 = emb_c.select(
-        F.col("vec_id").alias("id1"), F.col("dd").alias("v1"),
-        F.col("nrm").alias("n1"),
-    )
-    e2 = emb_c.select(
-        F.col("vec_id").alias("id2"), F.col("dd").alias("v2"),
-        F.col("nrm").alias("n2"),
-    )
-    out = (
-        cand.join(e1, "id1")
-        .join(e2, "id2")
-        .withColumn(
-            "cosine",
-            F.expr(f"{DOT_SPARK.format(a='v1', b='v2')} / (n1 * n2)"),
-        )
-        .filter(F.col("cosine") >= NEARDUP_COS)
-        .select("id1", "id2", "cosine")
-    )
-    return out
-
-
 def build_nd_pair_index(
     spark: SparkSession, base_path: str, pairs_path: str, buckets_path: str
 ) -> None:
@@ -527,107 +417,8 @@ def build_nd_pair_index(
         tagged.unpersist()
 
 
-def maintain_nd_pairs(
-    spark: SparkSession, base_path: str, pairs_path: str, buckets_path: str
-) -> dict:
-    """Fold the base's change feed into the pair index INCREMENTALLY —
-    the q194 maintained-LSH-index write path for embeddings: touched
-    vectors' bucket rows and pairs retire (file-pruned keyed deletes),
-    new vectors' bucket rows join the STANDING bucket table (work ∝
-    batch × bucket occupancy, never a corpus self-join) plus
-    themselves, survivors verify exact cosine against the base head,
-    and the pair upsert publishes the bumped coverage in its own
-    commit (``index_of`` — the wand.py/mv.py atomic-coverage
-    contract). Every step before the final commit is an idempotent
-    keyed delete/upsert, so a crashed run replays cleanly. Returns
-    maintenance counters."""
-    from prox_spark.cdf import read_table_changes
-    from prox_spark.table import read_manifest, read_table
-    from prox_spark.upsert import apply_changes, delete_keys, upsert_parquet
-    from pyspark.sql import Window
-
-    meta = read_manifest(spark, pairs_path).get("index_of") or {}
-    if meta.get("base") != base_path or "version" not in meta:
-        raise ValueError(
-            f"pair index {pairs_path} records no index_of lineage for "
-            f"{base_path}; bootstrap it with build_nd_pair_index"
-        )
-    covered = int(meta["version"])
-    head = int(read_manifest(spark, base_path)["version"])
-    if head == covered:
-        return {"status": "noop", "covered": covered}
-    feed = read_table_changes(spark, base_path, covered, head)
-    wd = Window.partitionBy("vec_id").orderBy(
-        F.col("_commit_version").desc(), F.col("_change_type").desc()
-    )
-    last = (
-        feed.withColumn("_r", F.row_number().over(wd))
-        .filter(F.col("_r") == 1)
-        .drop("_r", "_commit_version")
-    ).persist()
-    try:
-        touched = last.select("vec_id")
-        fresh = last.filter(F.col("_change_type") == "insert").select(
-            "vec_id", "embedding"
-        )
-        n_touched = touched.count()
-        if n_touched == 0:
-            # metadata-only window: bump coverage, touch nothing
-            empty = read_table(spark, pairs_path).limit(0).withColumn(
-                "change", F.lit("update")
-            )
-            apply_changes(
-                spark, pairs_path, empty, ["id1", "id2"],
-                extra_meta={
-                    "index_of": {"base": base_path, "version": head}
-                },
-            )
-            return {"status": "refreshed", "covered": head,
-                    "touched": 0, "new_pairs": 0}
-        # retire touched state — keyed deletes, idempotent on replay
-        delete_keys(spark, buckets_path, touched, ["vec_id"])
-        delete_keys(
-            spark, pairs_path,
-            touched.select(F.col("vec_id").alias("id1")), ["id1"],
-        )
-        delete_keys(
-            spark, pairs_path,
-            touched.select(F.col("vec_id").alias("id2")), ["id2"],
-        )
-        b_new = _plane_buckets(_nd_prep(fresh), _ND_PLANE_ROWS).select(
-            "vec_id", "t", "bkt"
-        ).cache()
-        try:
-            standing = read_table(spark, buckets_path)
-            cand = _nd_candidates(b_new, standing, same=False).unionByName(
-                _nd_candidates(b_new, b_new, same=True)
-            ).distinct()
-            emb_head = _nd_prep(read_table(spark, base_path, version=head))
-            pairs = _nd_verify(cand, emb_head)
-            # idempotent keyed upserts; coverage rides the pair commit
-            upsert_parquet(spark, buckets_path, b_new, ["vec_id", "t"])
-            n_new = pairs.count()
-            apply_changes(
-                spark, pairs_path,
-                pairs.withColumn("change", F.lit("update")),
-                ["id1", "id2"],
-                extra_meta={
-                    "index_of": {"base": base_path, "version": head}
-                },
-            )
-            return {
-                "status": "refreshed", "covered": head,
-                "touched": int(n_touched), "new_pairs": int(n_new),
-            }
-        finally:
-            b_new.unpersist()
-    finally:
-        last.unpersist()
-
-
 # --- q45: IVF-style ANN (coarse quantizer + cluster probe) -----------------
 
-IVF_K = 8        # centroids (deterministic: the first K vectors by vec_id)
 IVF_NPROBE = 2   # clusters probed per query
 
 
@@ -644,22 +435,6 @@ def _cent_arr(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
                          F.col("nrm").alias("cnrm")).alias("c"))
         .groupBy()
         .agg(F.array_sort(F.collect_list("c")).alias("cents"))
-    )
-
-
-def _tag_centroids(df: DataFrame, cent_arr: DataFrame) -> DataFrame:
-    """Rank the K centroid sims map-side for every row of ``df``
-    (columns dd, nrm): one broadcast crossJoin + a transform +
-    array_sort over K elements per row — no row explosion, no window,
-    no shuffle. array_sort on (negsim, cid) structs gives sim DESC,
-    cid ASC, the same deterministic order the DuckDB oracle's window
-    uses. ``sims[0].cid`` is the assignment."""
-    csim = DOT_SPARK.format(a="dd", b="c.cdd") + " / (nrm * c.cnrm)"
-    return df.crossJoin(F.broadcast(cent_arr)).withColumn(
-        "sims",
-        F.expr(
-            f"array_sort(transform(cents, c -> named_struct('negsim', -({csim}), 'cid', c.cid)))"
-        ),
     )
 
 
@@ -779,24 +554,7 @@ def build_ivf_index(
     ``cid IN (<nprobe ids>)`` partition-prunes to exactly those
     directories — the scan never touches the other (K - nprobe)/K of
     the corpus (asserted in tests/test_kmeans.py)."""
-    spark = emb.sparkSession
-    from prox_spark.queries._local import values_df
-
-    cent_arr = values_df(
-        spark, [(sorted(cents),)],
-        "cents array<struct<cid:int, cdd:array<double>>>",
-    )
-    d2 = "aggregate(zip_with(dd, c.cdd, (x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, x) -> acc + x)"
-    assigned = (
-        emb.crossJoin(F.broadcast(cent_arr))
-        .withColumn(
-            "cid",
-            F.expr(
-                f"array_sort(transform(cents, c -> named_struct('d2', {d2}, 'cid', c.cid)))[0].cid"
-            ),
-        )
-        .select("vec_id", "dd", "nrm", "cid")
-    )
+    assigned = nearest_l2(emb, cents).select("vec_id", "dd", "nrm", "cid")
     assigned.write.mode("overwrite").partitionBy("cid").parquet(path)
 
 
@@ -806,96 +564,7 @@ def probe_ivf_index(spark: SparkSession, path: str, probe_cids: list[int]) -> Da
     return read_parquet(spark, path).filter(F.col("cid").isin(probe_cids))
 
 
-# --- k-means training (iterative; serves the IVF coarse quantizer) ---------
-
-def kmeans_fit(
-    emb: DataFrame,
-    k: int = IVF_K,
-    max_iters: int = 5,
-    dim: int = EMB_DIM,
-) -> list[tuple[int, list[float]]]:
-    """Lloyd's k-means over the embedding corpus — the offline training
-    job q45's IVF serving plan assumes (its docstring: "training is an
-    offline job"). Iterative algorithms don't fit one SQL expression,
-    so this is the driver-coordinated loop done the scale-correct way:
-
-    - per iteration, ONLY the k centroids (k x dim doubles) cross the
-      driver boundary — the corpus never does (no collect of data);
-    - assignment is the same map-side pattern as q45: centroids ride in
-      as one broadcast array row, argmin computed with an in-row fold;
-    - centroid update is one explode + (cid, pos) partial+final avg —
-      the canonical distributed mean of vectors (never a per-cluster
-      collect_list, which would materialize whole clusters in memory).
-
-    Deterministic: init = first k vectors by vec_id, squared-L2
-    assignment with lowest-cid tie-break. Returns [(cid, centroid)].
-    Verified in tests/test_kmeans.py against a NumPy reference.
-    """
-    spark = emb.sparkSession
-    cents: list[tuple[int, list[float]]] = [
-        (int(r["vec_id"]), [float(x) for x in r["dd"]])
-        for r in emb.filter(F.col("vec_id") < k).select("vec_id", "dd").collect()
-    ]
-    for _ in range(max_iters):
-        from prox_spark.queries._local import values_df
-
-        cent_arr = values_df(
-            spark, [(sorted(cents),)],
-            "cents array<struct<cid:int, cdd:array<double>>>",
-        )
-        # squared L2 distance fold; argmin via array_sort on (dist, cid)
-        d2 = "aggregate(zip_with(dd, c.cdd, (x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, x) -> acc + x)"
-        assign = (
-            emb.crossJoin(F.broadcast(cent_arr))
-            .withColumn(
-                "cid",
-                F.expr(
-                    f"array_sort(transform(cents, c -> named_struct('d2', {d2}, 'cid', c.cid)))[0].cid"
-                ),
-            )
-            .select("cid", "dd")
-        )
-        new_rows = (
-            assign.select("cid", F.posexplode("dd").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cid")
-            .agg(F.expr("transform(array_sort(collect_list(struct(pos, m))), p -> p.m)").alias("cdd"))
-            .collect()
-        )
-        new = {int(r["cid"]): [float(x) for x in r["cdd"]] for r in new_rows}
-        # an emptied cluster keeps its previous centroid (standard
-        # Lloyd's fallback; keeps k stable)
-        cents = [(cid, new.get(cid, old)) for cid, old in cents]
-    return sorted(cents)
-
-
-# --- quantizer re-clustering: rebuild the IVF index on a WAP branch ---------
-
-
-def _assign_to_cents(
-    df: DataFrame, cents: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """Map-side nearest-centroid assignment by COSINE (highest sim,
-    lowest-cid tie-break) — one broadcast row, the q45/_tag_centroids
-    order. Cosine, not L2: the serving metric is cosine, and an L2
-    quantizer over unnormalized vectors partitions by NORM, not
-    direction — cells then correlate poorly with cosine neighborhoods
-    and probe recall collapses (measured: 0.80 → 0.52 on the
-    embeddings corpus)."""
-    spark = df.sparkSession
-    from prox_spark.queries._local import values_df
-
-    cent_arr = values_df(
-        spark,
-        [(sorted(
-            (c, v, float(sum(x * x for x in v) ** 0.5)) for c, v in cents
-        ),)],
-        "cents array<struct<cid:int, cdd:array<double>, cnrm:double>>",
-    )
-    return _tag_centroids(df, cent_arr).select(
-        *df.columns, F.expr("sims[0].cid").alias("cid")
-    )
+# --- stored quantizer (k-means and re-clustering live in prox_spark.ivf) ----
 
 
 def index_quantizer(
@@ -930,127 +599,6 @@ def append_to_index(
         spark, index_path, assigned, list(prev["files"]),
         stat_cols=["cid"], base_version=int(prev["version"]),
     )
-
-
-def recluster_index(
-    spark: SparkSession,
-    index_path: str,
-    k: int = IVF_K,
-    max_iters: int = 5,
-    sample_mod: int = 1,
-    branch: str = "recluster",
-    txn_ws: str | None = None,
-    txn_extra: dict | None = None,
-) -> dict:
-    """RE-CLUSTER the coarse quantizer and rebuild the cid-clustered
-    index — the maintenance a frozen-quantizer index (q161/q198)
-    eventually needs: as the corpus drifts, frozen cells go
-    unbalanced and probe recall decays. The rebuild is invisible to
-    serving until one atomic publish:
-
-    1. retrain centroids with Lloyd's on a deterministic sample of the
-       index's CURRENT vectors (``vec_id % sample_mod == 0``; per
-       iteration only k×dim doubles cross the driver boundary);
-    2. re-assign the whole index map-side and commit the rebuilt
-       cid-clustered table to a WAP BRANCH (q178's machinery) with the
-       new centroids in the SAME manifest (``quantizer`` metadata) —
-       main keeps serving the old index untouched;
-    3. audit the branch (row count must equal main's head — pending
-       merge-on-read deletes fold into the rebuild, never resurrect);
-    4. ``fast_forward`` publishes rebuilt data + new quantizer in one
-       CAS; with ``txn_ws``, a workspace txn additionally pins the
-       published index version against ``txn_extra`` tables (the q198
-       corpus/index pairing).
-
-    Returns {"version", "isolated", "cents"}; ``isolated`` pins that
-    main's version never moved between the branch fork and the
-    publish — serving was never interrupted or degraded."""
-    from prox_spark.table import (
-        commit_delta,
-        create_branch,
-        drop_branch,
-        fast_forward,
-        read_manifest,
-        read_table,
-    )
-
-    cur = read_table(spark, index_path).select("vec_id", "dd", "nrm")
-    v0 = int(read_manifest(spark, index_path)["version"])
-    sample = (
-        cur if sample_mod <= 1
-        else cur.filter(F.col("vec_id") % sample_mod == 0)
-    )
-    # SPHERICAL k-means: train on unit vectors, where Lloyd's L2 is
-    # monotone-equivalent to cosine — the serving metric. Training on
-    # raw vectors would cluster by norm, not direction (see
-    # _assign_to_cents).
-    sample = sample.select(
-        "vec_id",
-        F.expr("transform(dd, x -> x / nrm)").alias("dd"),
-    )
-    # kmeans_fit seeds from vec_id < k of its input; re-key the sample
-    # so the seeds are STRIDED across the id-ordered sample (k evenly
-    # spaced ranks) instead of the k head rows — head rows are often
-    # co-located (one ingest batch, one blob) and Lloyd's cannot
-    # recover from k co-located seeds
-    n = sample.count()
-    stride = max(1, n // k)
-    wr = W.orderBy("vec_id")
-    ranked = sample.withColumn("_r", F.row_number().over(wr) - 1)
-    seedable = ranked.withColumn(
-        "vec_id",
-        F.when(
-            (F.col("_r") % stride == 0) & (F.col("_r") / stride < k),
-            (F.col("_r") / stride).cast("long"),
-        ).otherwise((F.col("_r") + k).cast("long")),
-    ).drop("_r")
-    cents = kmeans_fit(seedable, k=k, max_iters=max_iters)
-
-    rebuilt = _assign_to_cents(cur, cents).select(
-        "vec_id", "dd", "nrm", "cid"
-    )
-    from prox_spark.table import list_branches
-
-    if branch in list_branches(spark, index_path):
-        # a dangling staging branch from a CRASHED rebuild: abandoned
-        # by definition (only this function ever publishes it, and a
-        # published one is dropped by fast_forward) — retire it so the
-        # retry can fork fresh instead of wedging on 'already exists'
-        drop_branch(spark, index_path, branch)
-    create_branch(spark, index_path, branch)
-    try:
-        prev = read_manifest(spark, index_path, ref=branch)
-        # a REBUILD: carry no prior file (the second argument is the
-        # carried-files list) — every row lands re-clustered
-        commit_delta(
-            spark, index_path, rebuilt, [],
-            stat_cols=["cid"], n_files=k, ref=branch,
-            base_version=int(prev["version"]),
-            extra_meta={"quantizer": {
-                "k": int(k), "cents": [[c, v] for c, v in cents],
-            }},
-        )
-        n_branch = read_table(spark, index_path, ref=branch).count()
-        n_main = read_table(spark, index_path).count()
-        if n_branch != n_main:
-            raise ValueError(
-                f"recluster audit failed: branch holds {n_branch} rows, "
-                f"main {n_main} — refusing to publish"
-            )
-        isolated = int(read_manifest(spark, index_path)["version"]) == v0
-    except Exception:
-        drop_branch(spark, index_path, branch)
-        raise
-    new_v = fast_forward(spark, index_path, branch)
-    if txn_ws is not None:
-        from prox_spark.txn import txn_commit
-
-        txn_commit(
-            spark, txn_ws,
-            {index_path: int(new_v), **(txn_extra or {})},
-        )
-    return {"version": int(new_v), "isolated": bool(isolated),
-            "cents": cents}
 
 
 # --- q85: per-label centroids (embedding aggregation) ----------------------
@@ -1185,8 +733,6 @@ def _subspace_dists_df(
 def _subspace_dists(
     emb: DataFrame, rows: list[tuple[int, int, list[float]]], n_sub: int, dsub: int
 ) -> DataFrame:
-    from prox_spark.queries._local import values_df
-
     cb = values_df(emb.sparkSession, rows, "m int, k int, cvec array<double>")
     return _subspace_dists_df(emb, cb, n_sub, dsub)
 
@@ -1826,8 +1372,6 @@ def q161_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     append_only = base_files < set(m2["files"])  # strict superset: all kept + new
 
     index = read_table(spark, work)
-    from prox_spark.queries._local import values_df_like
-
     probes = values_df_like(spark, probe_rows, probes_df.schema)
     scored = (
         index.join(F.broadcast(probes), "cid")
@@ -1945,8 +1489,6 @@ def q162_ivf_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero_rewrite = set(after["files"]) == before and bool(after.get("deletes"))
 
     index = read_table(spark, work)  # deleted ids masked on read
-    from prox_spark.queries._local import values_df_like
-
     probes = values_df_like(spark, probe_rows, probes_df.schema)
     scored = (
         index.join(F.broadcast(probes), "cid")
@@ -2568,8 +2110,6 @@ def _probe_recall(
     content (queries: vec_id < N_QUERIES)."""
     idx_df = idx_df.persist()
     try:
-        from prox_spark.queries._local import values_df
-
         cent_arr = values_df(
             spark,
             [(sorted(

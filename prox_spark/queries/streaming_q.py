@@ -21,7 +21,18 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from prox_spark.hashing import CMS_D, CMS_W, _cms_bucket_spark, cms_grid
 from prox_spark.io import read_parquet
+from prox_spark.ivf import _tag_centroids
+from prox_spark.local_frames import values_df
+from prox_spark.neardup import (
+    DOT_SPARK,
+    JACCARD_THRESHOLD,
+    TOKENS_SPARK,
+    lsh_band_rows,
+    lsh_verify_pairs,
+    shingle_arrays,
+)
 
 
 @contextmanager
@@ -627,32 +638,12 @@ def _staged_docs_feed(spark: SparkSession, sf_dir: str) -> str:
 def _cms_partial(df: DataFrame) -> DataFrame:
     """One micro-batch's (d, bucket, c) partial sketch — the same
     md5-bucketed grid q174 builds over the whole corpus."""
-    from functools import reduce
-
-    from prox_spark.queries.text import (
-        CMS_D,
-        TOKENS_SPARK,
-        _cms_bucket_spark,
-    )
-
     cnt = (
         df.select(F.explode(F.expr(TOKENS_SPARK)).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    rows = [
-        cnt.select(
-            F.lit(d).alias("d"),
-            F.expr(_cms_bucket_spark(d)).alias("bucket"),
-            "cnt",
-        )
-        for d in range(CMS_D)
-    ]
-    return (
-        reduce(lambda a, b: a.unionByName(b), rows)
-        .groupBy("d", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("c"))
-    )
+    return cms_grid(cnt, CMS_D, CMS_W)
 
 
 def cms_merge_batch(batch_df: DataFrame, batch_id: int, store: str) -> None:
@@ -677,8 +668,6 @@ def cms_merge_batch(batch_df: DataFrame, batch_id: int, store: str) -> None:
         }
         if int(batch_id) in applied:
             return
-    from prox_spark.queries._local import values_df
-
     # VALUES, not createDataFrame: no Python-RDD scan per micro-batch
     marker = values_df(
         sp, [(-1, int(batch_id), 1)], "d int, bucket long, c long"
@@ -752,7 +741,7 @@ def q189_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps a global frequency oracle fresh without ever re-scanning
     history. The stream run itself stages once per process
     (:func:`_cms_store`); serving reads the committed artifact."""
-    from prox_spark.queries.text import CMS_TOPK, TOKENS_SPARK, _cms_bucket_spark, CMS_D
+    from prox_spark.queries.text import CMS_TOPK
     from prox_spark.table import read_table
 
     store = _cms_store(spark, sf_dir)
@@ -832,8 +821,6 @@ def _fold_view(sp, store: str, part: DataFrame, batch_id: int) -> None:
         }
         if f"__b{int(batch_id)}" in applied:
             return
-    from prox_spark.queries._local import values_df
-
     marker = values_df(
         sp,
         [(f"__b{int(batch_id)}", -1, -1)],
@@ -1194,12 +1181,11 @@ def lsh_index_batch(
 ) -> None:
     """Transactional LSH-index sink for foreachBatch: compute the
     micro-batch's (doc_id, band, band_sig) rows — the same pure
-    projection the batch path uses (:func:`...text.lsh_band_rows`) —
+    projection the batch path uses (:func:`prox_spark.neardup.lsh_band_rows`) —
     and APPEND them to the index manifest table. An applied-batch
     marker row (band = −1, band_sig = str(batch_id)) makes re-delivery
     a no-op; each append is one atomic commit carrying every prior
     index file verbatim."""
-    from prox_spark.queries.text import SHINGLES_SPARK, TOKENS_SPARK, lsh_band_rows
     from prox_spark.table import (
         commit_delta,
         commit_snapshot,
@@ -1209,13 +1195,7 @@ def lsh_index_batch(
     )
 
     sp = batch_df.sparkSession
-    shingled = (
-        batch_df.withColumn("tokens", F.expr(TOKENS_SPARK))
-        .withColumn("shingles", F.array_distinct(F.expr(SHINGLES_SPARK)))
-        .select("doc_id", "shingles")
-    )
-    from prox_spark.queries._local import values_df
-
+    shingled = shingle_arrays(batch_df)
     marker = values_df(
         sp, [(-1, str(int(batch_id)), -1)],
         "band int, band_sig string, doc_id long",
@@ -1323,11 +1303,7 @@ def q194_streaming_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped batch, a double-applied batch, or a band computed
     differently in the streaming path all surface as missing/extra
     pairs."""
-    from prox_spark.queries.text import (
-        JACCARD_THRESHOLD,
-        _doc_shingle_arrays,
-        lsh_verify_pairs,
-    )
+    from prox_spark.queries.text import _doc_shingle_arrays
     from prox_spark.table import read_table
 
     idx, markers = _lsh_stream_index(spark, sf_dir)
@@ -1413,19 +1389,11 @@ def semantic_index_batch(
         if int(batch_id) in applied:
             return
     covered = batch_df.agg(F.max("_commit_version")).first()[0]
-    from prox_spark.queries.similarity import _tag_centroids
-
     vecs = batch_df.filter(F.col("_change_type") == "insert").select(
         "vec_id",
         F.expr("cast(embedding as array<double>)").alias("dd"),
         F.col("_commit_version").cast("long").alias("ver"),
-    ).withColumn(
-        "nrm",
-        F.expr(
-            "sqrt(aggregate(zip_with(dd, dd, (x, y) -> x * y), "
-            "cast(0.0 as double), (acc, x) -> acc + x))"
-        ),
-    )
+    ).withColumn("nrm", F.expr(f"sqrt({DOT_SPARK.format(a='dd', b='dd')})"))
     rows = _tag_centroids(vecs, cent_arr).select(
         F.expr("sims[0].cid").cast("long").alias("cid"),
         "vec_id", "dd", "nrm", "ver",
@@ -1438,8 +1406,6 @@ def semantic_index_batch(
         F.col("_commit_version").cast("long").alias("ver"),
     )
     rows = rows.unionByName(tombstones)
-    from prox_spark.queries._local import values_df
-
     marker = values_df(
         sp, [(-1, int(batch_id), [], -1.0, -1)],
         "cid long, vec_id long, dd array<double>, nrm double, ver long",

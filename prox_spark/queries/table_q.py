@@ -34,7 +34,14 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from prox_spark.hashing import (
+    _HEXV_DUCK,
+    _cms_bucket_duck,
+    _u48_expr,
+    hex4_duck,
+)
 from prox_spark.io import read_parquet
+from prox_spark.local_frames import values_df, values_df_like
 
 CDC_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -1410,8 +1417,6 @@ def q183_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"generation dir {d!r} spans versions "
                     f"{dir_born[d]} and {v}; cannot resolve birth by dir"
                 )
-    from prox_spark.queries._local import values_df
-
     dirs_df = values_df(
         spark, sorted(dir_born.items()), "dir string, born long"
     )
@@ -1712,8 +1717,6 @@ def q187_content_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_rows = [r for r, _ in results]
     pruned = all(p for _, p in results)
     fresh_found = any(r[0] == CIDX_FRESH_ID and r[2] == 1 for r in out_rows)
-    from prox_spark.queries._local import values_df
-
     # 4 driver-known rows: a pure-JVM VALUES relation instead of a
     # Python-RDD-backed createDataFrame (the values_df rationale —
     # no Python-worker scan under the final sort)
@@ -1841,8 +1844,6 @@ def q188_zorder_table_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("partkey", int(pk), p_rows, p_qty),
         ("suppkey", int(sk), s_rows, s_qty),
     ]
-    from prox_spark.queries._local import values_df
-
     return (
         values_df(
             spark, rows, "probe string, key long, n_rows long, sum_qty double"
@@ -2037,8 +2038,6 @@ def q190_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # createDataFrame paid a fresh-worker scan per materialization —
     # three measured 0.5-0.8 s zero-CPU single-task stages (r12, the
     # values_df rationale)
-    from prox_spark.queries._local import values_df
-
     b1 = values_df(spark, list(DIM_V1), "source string, region string")
     b2 = values_df(spark, list(DIM_V2), "source string, region string")
     db = (
@@ -2233,8 +2232,6 @@ def q196_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # — returning the lazy plan would re-derive the whole feed on
         # the caller's first action, after the unpersist below. VALUES
         # relation, not createDataFrame: no Python-RDD scan (r12)
-        from prox_spark.queries._local import values_df
-
         rows = [tuple(r) for r in out.collect()]
         return values_df(
             spark,
@@ -3771,11 +3768,9 @@ def q218_llm_pipeline_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_q218() -> str:
     from prox_spark.llm_jobs import TRAIN_LT, VAL_LT
-    from prox_spark.queries.text import _CC_LABELS_CTE, _HEXV_DUCK
+    from prox_spark.queries.text import _CC_LABELS_CTE
 
-    hx = " + ".join(
-        f"({_HEXV_DUCK.format(i=i + 1)}) * {16 ** (3 - i)}" for i in range(4)
-    )
+    hx = hex4_duck()
     return f"""{_CC_LABELS_CTE},
 own AS (
   SELECT md5(text) AS dg, min(doc_id) AS keeper FROM documents GROUP BY 1
@@ -3873,8 +3868,6 @@ def _served_stats(spark: SparkSession, sf_dir: str) -> tuple:
         )
         est, kmv_hit = serve_distinct(spark, reg, base, "text")
         rows = served.collect()
-        from prox_spark.queries._local import values_df_like
-
         return (
             values_df_like(spark, rows, served.schema),
             float(est),
@@ -3919,7 +3912,6 @@ def q220_registry_served_stats(
 
 def _oracle_q220() -> str:
     from prox_spark.artifacts import KMV_K
-    from prox_spark.queries.text import _HEXV_DUCK, _u48_expr
 
     return f"""
 WITH cur AS (
@@ -4006,8 +3998,6 @@ def _grouped_distinct(spark: SparkSession, sf_dir: str) -> tuple:
             spark, reg, base, "text", ["source"]
         )
         rows = served.collect()
-        from prox_spark.queries._local import values_df_like
-
         return (
             values_df_like(spark, rows, served.schema),
             hit == kmv, bool(fold_seen), bool(recompute_seen),
@@ -4043,7 +4033,6 @@ def q222_grouped_distinct_serving(
 
 def _oracle_q222() -> str:
     from prox_spark.artifacts import KMV_K
-    from prox_spark.queries.text import _HEXV_DUCK, _u48_expr
 
     return f"""
 WITH u_t AS (
@@ -4319,8 +4308,6 @@ def q224_registry_served_quantiles(
     rows, served_ok, fold_seen, recompute_seen = _served_quantiles(
         spark, sf_dir
     )
-    from prox_spark.queries._local import values_df
-
     # VALUES relation, not createDataFrame: the staged rows are
     # driver-known scalars, and the Python-RDD scan behind
     # createDataFrame paid a 32-task Python-worker stage TWICE per
@@ -4351,8 +4338,6 @@ def q224_registry_served_quantiles(
 
 
 def _oracle_q224() -> str:
-    from prox_spark.queries.text import _HEXV_DUCK, _u48_expr
-
     return f"""
 WITH final AS (
   SELECT doc_id, source,
@@ -4760,8 +4745,6 @@ def q227_registry_served_topk(
     rows, served_ok, fold_seen, recompute_seen, total = _served_topk(
         spark, sf_dir
     )[:5]
-    from prox_spark.queries._local import values_df
-
     # VALUES relation, not createDataFrame — see q224 (the Python-RDD
     # scan ran twice per evaluation under the global sort; in-suite
     # this query read 3.2 s for a staged 15-row serve)
@@ -4793,8 +4776,6 @@ def q227_registry_served_topk(
 
 
 def _oracle_q227() -> str:
-    from prox_spark.queries.text import _cms_bucket_duck
-
     buckets = " UNION ALL ".join(
         f"SELECT {d} AS d, {_cms_bucket_duck(d, TOPK_GATE_W)} AS bucket,"
         " cnt FROM cnt"
@@ -4972,8 +4953,6 @@ def q229_grouped_topk_serving(
     rows, served_ok, fold_seen, recompute_seen, totals = (
         _served_grouped_topk(spark, sf_dir)[:5]
     )
-    from prox_spark.queries._local import values_df
-
     # VALUES relation, not createDataFrame — see q224/q227
     out = values_df(
         spark,
@@ -5003,8 +4982,6 @@ def q229_grouped_topk_serving(
 
 
 def _oracle_q229() -> str:
-    from prox_spark.queries.text import _cms_bucket_duck
-
     buckets = " UNION ALL ".join(
         f"SELECT source, {d} AS d, {_cms_bucket_duck(d, GTOPK_W)}"
         " AS bucket, cnt FROM cnt"
@@ -5176,7 +5153,6 @@ def q228_datasource_multi_table_txn(
     view_rows = [(r["source"], int(r["n_docs"])) for r in view.collect()]
     pinned_rows = [(r["source"], int(r["n_docs"])) for r in pinned.collect()]
     consistent = _by_source(view_rows) == _by_source(pinned_rows)
-    from prox_spark.queries._local import values_df
     from prox_spark.table import read_manifest
 
     crashed_invisible = read_manifest(spark, t)["version"] > state[t]
@@ -5489,8 +5465,6 @@ def q231_datasource_change_feed(
             .orderBy("source")
         )
         rows = out.collect()
-        from prox_spark.queries._local import values_df_like
-
         return values_df_like(spark, rows, out.schema)
     finally:
         feed.unpersist()

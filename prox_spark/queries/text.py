@@ -26,32 +26,37 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from prox_spark.graph import _cc_round, min_label_clusters
+from prox_spark.hashing import (
+    CMS_D,
+    CMS_W,
+    _HEXV_DUCK,
+    _cms_bucket_duck,
+    _cms_bucket_spark,
+    _u48_expr,
+    cms_grid,
+    hex4_duck,
+    hex4_spark,
+    kmv_u_frame,
+)
 from prox_spark.io import read_parquet
-
-# --- shared token / shingle fragments (Spark SQL expr + DuckDB SQL) --------
-
-TOKENS_SPARK = r"split(lower(trim(text)), '\\s+')"
-TOKENS_DUCK = r"string_split_regex(lower(trim(text)), '\s+')"
-
-# 3-gram shingles as zip_with over three shifted slices: each slice is
-# evaluated ONCE per row and the binary zips do one concat per
-# element. The round-1 ``transform(sequence(1, n-2), i ->
-# concat_ws(' ', slice(tokens, i, 3)))`` formulation re-ran a slice
-# (array allocation) per INDEX inside an interpreted HOF lambda and
-# measured 4-6x slower on the same corpus — HOF lambdas don't
-# whole-stage-codegen, so per-element work inside them is the one
-# place expression choice dominates. Short docs (<3 tokens) take the
-# explicit whole-text branch, mirroring the DuckDB CASE.
-SHINGLES_SPARK = (
-    "CASE WHEN size(tokens) < 3 THEN array(concat_ws(' ', tokens)) "
-    "ELSE zip_with(slice(tokens, 1, size(tokens)-2), "
-    "zip_with(slice(tokens, 2, size(tokens)-2), slice(tokens, 3, size(tokens)-2), "
-    "(b, c) -> concat(b, ' ', c)), (a, bc) -> concat(a, ' ', bc)) END"
+from prox_spark.llm_jobs import TRAIN_LT, VAL_LT
+from prox_spark.local_frames import values_df
+from prox_spark.neardup import (
+    DOT_DUCK,
+    JACCARD_THRESHOLD,
+    LSH_BAND_ROWS,
+    MINHASH_K,
+    SHINGLES_DUCK,
+    SHINGLES_SPARK,
+    TOKENS_DUCK,
+    TOKENS_SPARK,
+    lsh_band_rows,
+    lsh_verify_pairs,
+    shingle_arrays,
 )
-SHINGLES_DUCK = (
-    "CASE WHEN len(tokens) < 3 THEN [array_to_string(tokens, ' ')] "
-    "ELSE list_transform(range(1, len(tokens)-1), i -> array_to_string(list_slice(tokens, i, i+2), ' ')) END"
-)
+
+# --- shared shingle CTE (DuckDB oracles; fragments in prox_spark.neardup) ---
 
 DUCK_SHINGLE_CTE = f"""
 WITH toks AS (
@@ -106,12 +111,7 @@ def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of exploded rows is what makes minhash signatures a pure
     projection and the verify step an ``array_intersect`` instead of an
     explode → join → re-aggregate chain."""
-    return (
-        _docs(spark, sf_dir)
-        .withColumn("tokens", F.expr(TOKENS_SPARK))
-        .withColumn("shingles", F.array_distinct(F.expr(SHINGLES_SPARK)))
-        .select("doc_id", "shingles", F.size("shingles").alias("n_shingles"))
-    )
+    return shingle_arrays(_docs(spark, sf_dir))
 
 
 # --- q30: exact deduplication (hash-groupBy on digest) ---------------------
@@ -245,8 +245,6 @@ ORDER BY doc_id
 
 # --- q35: n-gram Jaccard near-dup pairs (exact, quadratic verifier) --------
 
-JACCARD_THRESHOLD = 0.5
-
 
 def q35_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index pair generation: docs meet only on shared shingles
@@ -305,34 +303,6 @@ ORDER BY doc1, doc2
 
 # --- q36: MinHash + LSH near-dup detection (sub-quadratic scale path) ------
 
-MINHASH_K = 16          # signature length
-LSH_BAND_ROWS = 4       # rows per band -> 4 bands; s-curve threshold ~0.71
-
-
-def lsh_band_rows(shingled: DataFrame) -> DataFrame:
-    """(doc_id, band, band_sig) from a (doc_id, shingles) frame — the
-    map-side MinHash signature + banding front shared by q36/q147's
-    batch candidate generation and q194's STREAMING index maintenance
-    (each micro-batch of new docs runs exactly this projection and
-    appends the rows; no shuffle, no state)."""
-    sig_expr = (
-        f"transform(sequence(0, {MINHASH_K - 1}), "
-        "s -> array_min(transform(shingles, x -> md5(concat(cast(s as string), '|', x)))))"
-    )
-    n_bands = MINHASH_K // LSH_BAND_ROWS
-    bands_expr = (
-        f"transform(sequence(0, {n_bands - 1}), "
-        f"b -> named_struct('band', b, 'band_sig', array_join(slice(sig, b * {LSH_BAND_ROWS} + 1, {LSH_BAND_ROWS}), ',')))"
-    )
-    return (
-        shingled.withColumn("sig", F.expr(sig_expr))
-        .select("doc_id", F.explode(F.expr(bands_expr)).alias("bb"))
-        .select(
-            "doc_id", F.col("bb.band").alias("band"),
-            F.col("bb.band_sig").alias("band_sig"),
-        )
-    )
-
 
 def _minhash_candidate_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared LSH front half for q36/q147: banded-MinHash candidate
@@ -349,41 +319,6 @@ def _minhash_candidate_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluate it once per band per use — measured 10-50x slowdowns)
     bands = lsh_band_rows(arr).cache()
     return lsh_verify_pairs(arr, bands)
-
-
-def lsh_verify_pairs(arr: DataFrame, bands: DataFrame) -> DataFrame:
-    """Bucket-collision pair enumeration + exact overlap verify over
-    ANY (doc_id, band, band_sig) frame — the back half shared by the
-    batch path (bands computed inline) and q194 (bands read from the
-    stream-maintained index table). Returns (doc1, doc2, n_inter, n1,
-    n2)."""
-    # enumerate pairs within each bucket (single shuffle keyed by the
-    # bucket — no self-join, no second scan of the corpus)
-    pairs_expr = (
-        "flatten(transform(ds, (x, i) -> transform(slice(ds, i + 2, size(ds)), "
-        "y -> named_struct('doc1', least(x, y), 'doc2', greatest(x, y)))))"
-    )
-    candidates = (
-        bands.groupBy("band", "band_sig")
-        .agg(F.collect_list("doc_id").alias("ds"))
-        .filter(F.size("ds") > 1)
-        .select(F.explode(F.expr(pairs_expr)).alias("p"))
-        .select("p.doc1", "p.doc2")
-        .distinct()
-    )
-    pa = arr.select(F.col("doc_id").alias("doc1"), F.col("shingles").alias("sh1"), F.col("n_shingles").alias("n1"))
-    pb = arr.select(F.col("doc_id").alias("doc2"), F.col("shingles").alias("sh2"), F.col("n_shingles").alias("n2"))
-    # payload attach is deliberately UN-hinted: pa/pb are the full shingle
-    # corpus (O(N) full text-derived arrays — never driver-broadcastable at
-    # billions of docs). The candidate set is narrow ids, so the doc_id
-    # equi-join shuffles candidates + corpus once; AQE still broadcasts
-    # when the corpus actually fits (small scale) without the OOM cliff
-    return (
-        candidates.join(pa, "doc1")
-        .join(pb, "doc2")
-        .withColumn("n_inter", F.size(F.array_intersect("sh1", "sh2")))
-        .select("doc1", "doc2", "n_inter", "n1", "n2")
-    )
 
 
 def q36_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -565,8 +500,6 @@ ORACLE_Q37 = _langid_oracle()
 # --- q38: SimHash (16-bit, md5-derived token hashes) -----------------------
 
 SIMHASH_BITS = 16
-_HEXV_SPARK = "locate(substring(m, {i}, 1), '0123456789abcdef') - 1"
-_HEXV_DUCK = "strpos('0123456789abcdef', substring(m, {i}, 1)) - 1"
 
 
 def simhash_of(docs: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
@@ -575,14 +508,12 @@ def simhash_of(docs: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
     distinct tokens with one transform, then fold each of the 16 bit
     counters over that in-row array — no shuffle (see q38). Streaming
     micro-batches reuse this directly (q136)."""
-    hxm = " + ".join(
-        f"({_HEXV_SPARK.format(i=i + 1)}) * {16 ** (3 - i)}" for i in range(4)
-    )
+    hxm = hex4_spark()
     docs = docs.withColumn("tokens", F.expr(TOKENS_SPARK))
     docs = docs.withColumn(
         "hs",
         # inner transform binds lambda var `m` (the token md5) that the
-        # shared _HEXV_SPARK fragment references
+        # hex4_spark() fragment references
         F.expr(
             f"transform(transform(array_distinct(tokens), tok -> md5(tok)), "
             f"m -> cast({hxm} as bigint))"
@@ -613,9 +544,7 @@ def q38_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_oracle() -> str:
-    hx = " + ".join(
-        f"({_HEXV_DUCK.format(i=i + 1)}) * {16 ** (3 - i)}" for i in range(4)
-    )
+    hx = hex4_duck()
     bit_sums = ",\n         ".join(
         f"sum(CASE WHEN (h // {1 << j}) % 2 = 1 THEN 1 ELSE -1 END) AS b{j}"
         for j in range(SIMHASH_BITS)
@@ -709,88 +638,6 @@ ORDER BY doc_id
 
 # --- q72: duplicate-cluster resolution (connected components) --------------
 
-CC_MAX_ITERS = 15
-# truncate the label frame's lineage every N fixpoint rounds. Each round
-# references the previous label frame TWICE (the propagate join's input
-# and the update join's left side), so the logical-plan TREE doubles per
-# round: un-truncated, a 15-round run carries 2^16-2 ≈ 65k join nodes and
-# plan analysis itself becomes the bottleneck (measured: 2/6/14 joins
-# after 1/2/3 rounds). localCheckpoint rebases the plan on the
-# materialized partitions, bounding the tree at 2^(N+1)-2 joins and
-# releasing prior rounds' shuffle files.
-CC_CHECKPOINT_EVERY = 3
-# below this edge count the whole fixpoint is driver-side union-find:
-# a dedup edge list is orders of magnitude smaller than the corpus
-# (pairs that SURVIVED banding + verify), and a sub-million-row list
-# union-finds in milliseconds where the distributed fixpoint pays
-# rounds x job-scheduling overhead. 1M edges x 16 bytes ≈ 16 MB on the
-# driver — far under any sane driver heap. The distributed path stays
-# the default above the threshold; both produce identical min-labels.
-CC_DRIVER_MAX_EDGES = 1_000_000
-
-
-def _driver_union_find(edge_rows: list[tuple[int, int]]) -> list[tuple[int, int]]:
-    """Union-find with path compression; returns (node, min_label)."""
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in edge_rows:
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # keep the SMALLER id as root so the root IS the min label
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    return sorted((n, find(n)) for n in parent)
-
-
-def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """ONE min-label-propagation + pointer-jump round (shared by the
-    fixpoint loop and the plan-audit twin, so audited plan shape ==
-    executed plan shape). Returns the new label frame, carrying the
-    previous label as ``old`` so convergence is read off the SAME
-    materialization — one job per round, not a second change-detection
-    join.
-
-    Pointer jumping (label-of-label): after adopting the neighbor
-    minimum, also adopt the label OF the candidate label's node.
-    Labels are always node ids, so the lookup is a self-join on the
-    (narrow) label frame; it turns chain convergence from O(diameter)
-    rounds into O(log diameter) — the property that matters when a
-    billion-edge near-dup graph hides long paths. A fixpoint of the
-    combined update is in particular a fixpoint of plain neighbor-min
-    propagation, so the converged labels are unchanged."""
-    nbr_min = (
-        edges.join(labels, edges.doc1 == labels.doc_id)
-        .groupBy(F.col("doc2").alias("doc_id"))
-        .agg(F.min("label").alias("nbr"))
-    )
-    mid = labels.join(nbr_min, "doc_id", "left").select(
-        "doc_id",
-        F.col("label").alias("old"),
-        F.least(F.col("label"), F.coalesce(F.col("nbr"), F.col("label"))).alias("mid"),
-    )
-    l2 = labels.select(F.col("doc_id").alias("p_id"), F.col("label").alias("p_label"))
-    return mid.join(l2, mid.mid == l2.p_id, "left").select(
-        "doc_id",
-        "old",
-        F.least(F.col("mid"), F.coalesce(F.col("p_label"), F.col("mid"))).alias(
-            "label"
-        ),
-    )
-
 
 def cc_round_audit_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AUDIT TWIN for q72's fixpoint loop body, built LAZILY (no
@@ -807,84 +654,6 @@ def cc_round_audit_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("label", F.col("doc_id"))
     )
     return _cc_round(edges, labels).drop("old")
-
-
-def min_label_clusters(
-    pairs: DataFrame,
-    max_iters: int = CC_MAX_ITERS,
-    driver_max_edges: int = CC_DRIVER_MAX_EDGES,
-) -> DataFrame:
-    """Connected components over an undirected pair list: every node
-    gets the minimum doc_id of its component, as ``(doc_id, label)``.
-
-    HYBRID: edge lists at or below ``driver_max_edges`` are collected
-    and union-found on the driver (a dedup edge list is tiny relative
-    to the corpus; the fixpoint's per-round job overhead dwarfs a
-    sub-second union-find). Larger graphs run the distributed
-    fixpoint below — identical labels either way (both tested).
-
-    Spark has no recursive CTE, so connectivity is iterative min-label
-    propagation: per round, every node adopts the smallest label among
-    itself and its neighbors; converged when no label changes. Rounds
-    needed = component diameter (near-dup clusters are tiny — chains
-    longer than ~10 docs are pathological), capped at ``max_iters``.
-    Per round: one groupBy over the edge list + one left join over the
-    (narrow) label frame; the only driver-side values are the converged?
-    count — the corpus never leaves the executors. Lineage is rebased
-    via eager localCheckpoint every CC_CHECKPOINT_EVERY rounds (see
-    constant note)."""
-    spark = pairs.sparkSession
-    # cache the PAIR list, not the symmetrized union: both the size
-    # probe and whichever path runs next re-read it, and an uncached
-    # union's two branches would each replay the upstream pair
-    # generation (the LSH pipeline — the expensive part)
-    pairs = pairs.select("doc1", "doc2").cache()
-    n_edges = 2 * pairs.count()
-    if n_edges <= driver_max_edges:
-        # small-graph fast path (see CC_DRIVER_MAX_EDGES note): one
-        # collect of the (cached) edge list, exact union-find, labels
-        # parallelized back — replaces rounds of fixpoint jobs
-        labels = _driver_union_find([(r[0], r[1]) for r in pairs.collect()])
-        if len(labels) <= 20_000:
-            # pure-JVM VALUES relation: a Python-RDD createDataFrame
-            # pays a Python-worker scan per downstream materialization
-            # (twice under a global sort — range sampler + sort), the
-            # q84/q195 pathology; 20k rows keeps the SQL text well
-            # under parser pain
-            from prox_spark.queries._local import values_df
-
-            out = values_df(spark, labels, "doc_id BIGINT, label BIGINT")
-        else:
-            out = spark.createDataFrame(labels, "doc_id BIGINT, label BIGINT")
-        pairs.unpersist()
-        return out
-    # size the fixpoint's shuffle width to the EDGE count, not the
-    # corpus: near-dup edge lists are a tiny fraction of the input
-    # (here hundreds of rows; at 100 TB maybe billions). Running a
-    # 500-row fixpoint at cluster-wide width would pay ~P tasks of
-    # pure scheduling overhead per round for no parallelism gain.
-    width = max(1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1))
-    edges = pairs.union(
-        pairs.select(F.col("doc2").alias("doc1"), F.col("doc1").alias("doc2"))
-    ).repartition(width, "doc1")
-    labels = (
-        edges.select(F.col("doc1").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .cache()
-    )
-    for i in range(max_iters):
-        new_labels = _cc_round(edges, labels).cache()
-        changed = new_labels.filter(F.col("label") < F.col("old")).count()
-        labels.unpersist()
-        labels = new_labels.drop("old")
-        if changed == 0:
-            break
-        if (i + 1) % CC_CHECKPOINT_EVERY == 0:
-            checkpointed = labels.localCheckpoint(eager=True)
-            new_labels.unpersist()
-            labels = checkpointed
-    return labels
 
 
 def q72_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -949,18 +718,13 @@ ORDER BY doc_id
 
 # --- q65: deterministic train/val/test split (hash bucketing) --------------
 
-SPLIT_TRAIN, SPLIT_VAL = 80, 90  # bucket < 80 train, < 90 val, else test
-
-
 def q65_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic eval-split assignment: bucket = first 4 hex chars
     of md5(doc_id) mod 100 — the standard reproducible alternative to
     rand()-based sampling (stable across engines, runs, partitionings;
     adding documents never reassigns existing ones). Pure projection:
     at 100 TB this is map-only, no shuffle at all."""
-    hx = " + ".join(
-        f"({_HEXV_SPARK.format(i=i + 1)}) * {16 ** (3 - i)}" for i in range(4)
-    )
+    hx = hex4_spark()
     docs = _docs(spark, sf_dir)
     return (
         docs.withColumn("m", F.md5(F.col("doc_id").cast("string")))
@@ -968,8 +732,8 @@ def q65_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "bucket",
-            F.when(F.col("bucket") < SPLIT_TRAIN, "train")
-            .when(F.col("bucket") < SPLIT_VAL, "val")
+            F.when(F.col("bucket") < TRAIN_LT, "train")
+            .when(F.col("bucket") < VAL_LT, "val")
             .otherwise("test")
             .alias("split"),
         )
@@ -978,13 +742,11 @@ def q65_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hash_split_oracle() -> str:
-    hx = " + ".join(
-        f"({_HEXV_DUCK.format(i=i + 1)}) * {16 ** (3 - i)}" for i in range(4)
-    )
+    hx = hex4_duck()
     return f"""
 SELECT doc_id, bucket,
-       CASE WHEN bucket < {SPLIT_TRAIN} THEN 'train'
-            WHEN bucket < {SPLIT_VAL} THEN 'val'
+       CASE WHEN bucket < {TRAIN_LT} THEN 'train'
+            WHEN bucket < {VAL_LT} THEN 'val'
             ELSE 'test' END AS split
 FROM (
   SELECT doc_id, CAST({hx} AS BIGINT) % 100 AS bucket
@@ -1010,9 +772,7 @@ def q66_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is re-weighted across sources without rand() (reproducible,
     partitioning-independent) and without a shuffle (the gate is a
     map-side filter; only the per-source audit count aggregates)."""
-    hx = " + ".join(
-        f"({_HEXV_SPARK.format(i=i + 1)}) * {16 ** (3 - i)}" for i in range(4)
-    )
+    hx = hex4_spark()
     docs = _docs(spark, sf_dir)
     keep_pct = F.when(
         F.substring("source", 4, 10).cast("long") % 2 == 0, MIX_EVEN_PCT
@@ -1028,9 +788,7 @@ def q66_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _source_mixture_oracle() -> str:
-    hx = " + ".join(
-        f"({_HEXV_DUCK.format(i=i + 1)}) * {16 ** (3 - i)}" for i in range(4)
-    )
+    hx = hex4_duck()
     return f"""
 SELECT source, count(*) AS n_kept
 FROM (
@@ -1059,8 +817,6 @@ def q67_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts (it is genuinely tiny — eval phrases, not a corpus), so
     the scan is one map-side pass over documents; output is the narrow
     (doc, phrase) hit list."""
-    from prox_spark.queries._local import values_df
-
     phrases = values_df(spark, [(p,) for p in CONTAM_PHRASES], "phrase string")
     docs = _docs(spark, sf_dir)
     return (
@@ -1195,8 +951,6 @@ def q76_ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts and the corpus pass stays map-side (no corpus shuffle
     at all). Output: per contaminated doc, how many distinct eval
     shingles it shares and how many eval docs it touches."""
-    from prox_spark.queries._local import values_df
-
     ev = values_df(spark, list(EVAL_DOCS), "eval_id string, text string")
     ev_shingles = (
         ev.withColumn("tokens", F.expr(TOKENS_SPARK))
@@ -3087,27 +2841,7 @@ ORDER BY d0.source"""
 
 # --- q174: Count-Min-Sketch token frequencies ------------------------------
 
-CMS_D = 4     # hash rows
-CMS_W = 16    # counters per row (vocab here is tiny; small W makes collisions real)
 CMS_TOPK = 20
-
-
-def _cms_bucket_spark(d: int, w: int | None = None) -> str:
-    hx = " + ".join(
-        f"(locate(substring(md5(concat('{d}|', tok)), {i + 1}, 1), "
-        f"'0123456789abcdef') - 1) * {16 ** (3 - i)}"
-        for i in range(4)
-    )
-    return f"cast({hx} as long) % {CMS_W if w is None else int(w)}"
-
-
-def _cms_bucket_duck(d: int, w: int | None = None) -> str:
-    hx = " + ".join(
-        f"(strpos('0123456789abcdef', substring(md5('{d}|' || tok), {i + 1}, 1)) - 1)"
-        f" * {16 ** (3 - i)}"
-        for i in range(4)
-    )
-    return f"CAST({hx} AS BIGINT) % {CMS_W if w is None else int(w)}"
 
 
 # per-process cache of the persisted vocab-count frame (see q174 body)
@@ -3131,8 +2865,6 @@ def q174_cms_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, the CMS estimate, and the overestimate — all exact integer
     arithmetic on md5 buckets, bit-identical across engines (the q65
     hash-gate idiom applied to sketch hashing; no rand, no floats)."""
-    from functools import reduce
-
     toks = _docs(spark, sf_dir).select(
         F.explode(F.expr(TOKENS_SPARK)).alias("tok")
     )
@@ -3162,21 +2894,7 @@ def q174_cms_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         # consumer branch silently re-runs the full token explode
         cnt = cnt.persist()
         _CMS_CNT_CACHE[cache_key] = cnt
-    # sketch build: one (d, bucket) partial-agg per hash row, from the
-    # per-token counts (equivalent to per-occurrence increments)
-    rows = [
-        cnt.select(
-            F.lit(d).alias("d"),
-            F.expr(_cms_bucket_spark(d)).alias("bucket"),
-            "cnt",
-        )
-        for d in range(CMS_D)
-    ]
-    cms = (
-        reduce(lambda a, b: a.unionByName(b), rows)
-        .groupBy("d", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("c"))
-    )
+    cms = cms_grid(cnt, CMS_D, CMS_W)
     top = (
         cnt.orderBy(F.desc("cnt"), F.asc("tok"))
         .limit(CMS_TOPK)
@@ -3649,8 +3367,6 @@ def _bloom_hit_expr(bits: int, k: int) -> str:
 
 
 def _eval_shingles(spark: SparkSession) -> DataFrame:
-    from prox_spark.queries._local import values_df
-
     ev = values_df(spark, list(BLOOM_EVAL_DOCS), "eval_id string, text string")
     return (
         ev.withColumn("tokens", F.expr(TOKENS_SPARK))
@@ -3980,11 +3696,7 @@ def q193_dedup_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_q193() -> str:
-    from prox_spark.queries.similarity import (
-        _SD_K_DUCK,
-        DOT_DUCK,
-        SEMDEDUP_TAU,
-    )
+    from prox_spark.queries.similarity import _SD_K_DUCK, SEMDEDUP_TAU
 
     sd_dot = DOT_DUCK.format(a="a.dd", b="b.dd")
     nrm = DOT_DUCK.format(a="embedding::DOUBLE[]", b="embedding::DOUBLE[]")
@@ -4325,22 +4037,6 @@ KMV_K = 16
 _KMV_POW48 = float(2**48)
 
 
-def _u48_expr(hexv: str) -> str:
-    """The first 12 hex chars of column ``m`` as a uniform double in
-    [0, 1): Σ hexval(cᵢ)·16^(12−i) / 2^48 — every term exact in a
-    double (< 2^53), the same positional formula in both engines."""
-    # DOUBLE literals via exponent notation: hexval is an engine INT
-    # and 16^11 overflows int32 under ANSI, while a bare `123.0`
-    # parses as DECIMAL in Spark SQL (decimal division then truncates
-    # the quotient's scale); `123e0` is a double in BOTH dialects and
-    # every term is exact in a double (< 2^53)
-    s = " + ".join(
-        f"({hexv.format(i=i + 1)}) * {16 ** (11 - i)}e0"
-        for i in range(12)
-    )
-    return f"(({s}) / {2**48}e0)"
-
-
 def q209_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-minimum-values DISTINCT sketch per source — the cardinality
     estimator of the sketch family (CMS = frequencies q174, Bloom =
@@ -4359,9 +4055,7 @@ def q209_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever retained."""
     docs = _docs(spark, sf_dir)
     u = (
-        docs.withColumn("m", F.md5(F.col("text")))
-        .select("source", "m", F.expr(_u48_expr(_HEXV_SPARK)).alias("u"))
-        .select("source", "u")
+        kmv_u_frame(docs, "text", ["source"])
         .distinct()
         # EAGER barrier (r13): four consumers raced the r12 pin's
         # cold cache inside one action (the q75 adjudication); the
@@ -4543,13 +4237,10 @@ def q206_audit_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep = docs.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("label", F.col("doc_id")).alias("rep")
     )
-    hx = " + ".join(
-        f"({_HEXV_SPARK.format(i=i + 1)}) * {16 ** (3 - i)}"
-        for i in range(4)
-    )
+    hx = hex4_spark()
     split = (
-        F.when(F.col("bucket") < SPLIT_TRAIN, "train")
-        .when(F.col("bucket") < SPLIT_VAL, "val")
+        F.when(F.col("bucket") < TRAIN_LT, "train")
+        .when(F.col("bucket") < VAL_LT, "val")
         .otherwise("test")
     )
     assigned = (
@@ -4610,12 +4301,10 @@ def q206_audit_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_q206() -> str:
-    hx = " + ".join(
-        f"({_HEXV_DUCK.format(i=i + 1)}) * {16 ** (3 - i)}" for i in range(4)
-    )
+    hx = hex4_duck()
     case = (
-        f"CASE WHEN bucket < {SPLIT_TRAIN} THEN 'train' "
-        f"WHEN bucket < {SPLIT_VAL} THEN 'val' ELSE 'test' END"
+        f"CASE WHEN bucket < {TRAIN_LT} THEN 'train' "
+        f"WHEN bucket < {VAL_LT} THEN 'val' ELSE 'test' END"
     )
     return f"""{_CC_LABELS_CTE},
 rep_t AS (

@@ -215,3 +215,15 @@ FOREIGN_KEYS: dict[str, list[tuple[str, str, str]]] = {
     "dispute_requests": [("booking_id", "bookings", "booking_id")],
     "feedback_sentiment": [("id", "provider_reviews", "review_id")],
 }
+
+# The raw ``events`` testdata file (not a silver table): some
+# driver-generated testdata writes ``ts`` as INT64
+# TIMESTAMP(NANOS), which Spark 4 refuses to read natively; requesting
+# it as BIGINT via an explicit schema makes the vectorized reader hand
+# over the raw int64 — no session-wide legacy conf needed (the old
+# approach mutated spark.sql.legacy.parquet.nanosAsLong as a side
+# effect). Other generations write plain TIMESTAMP_MICROS;
+# queries/events.py's _events sniffs the footer and handles both.
+EVENTS_RAW_SCHEMA = (
+    "event_id bigint, ts bigint, user_id bigint, event_type string, value double, props string"
+)

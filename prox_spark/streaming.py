@@ -3,11 +3,11 @@
 a Step Functions schedule — so this is the capability extension that
 turns the same declarative builders into a continuous pipeline).
 
-Design: every streaming operator shares its builder with a batch twin
-in prox_spark/queries/events.py, so the DuckDB oracle checks the
-windowed *semantics* in batch mode, and the streaming tests check the
-incremental execution (watermarks, state cleanup, exactly-once file
-sinks) on the same data.
+Design: the stream queries (queries/streaming_q.py) call these
+builders, and each has a batch counterpart query over the same data
+(queries/events.py). The DuckDB oracle checks the windowed *semantics*
+in batch mode, and the streaming tests check the incremental execution
+(watermarks, state cleanup, exactly-once file sinks).
 
 Scale notes (1000-executor / 100 TB-day):
 - tumbling/session windows keyed by (window, type) / (user, window):

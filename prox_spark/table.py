@@ -19,6 +19,7 @@ from pyspark.sql.types import StructType
 
 from prox_spark import manifest as M
 from prox_spark.io import read_parquet
+from prox_spark.local_frames import values_df
 from prox_spark.manifest import DATA_DIR, MANIFEST_DIR
 
 _SMALL_COMMIT_CONF_LOCK = threading.Lock()
@@ -561,15 +562,24 @@ def commit_delta(
     rewritten_bytes = 0
     if bool(stat_cols) and not cluster and prev.get("files"):
         keep = set(keep_files)
+        sizes = prev.get("sizes") or {}
         rewritten = [f for f in prev["files"] if f not in keep]
-        jvm2, fs2, _ = _fs(spark, table_path)
-        for f in rewritten:
+        # commit-time recorded sizes; stat only legacy files committed
+        # before sizes were recorded. Only a file a concurrent vacuum
+        # removed since the manifest read is skipped — any other FS
+        # error raises rather than under-count and flip the layout
+        unsized = [f for f in rewritten if f not in sizes]
+        rewritten_bytes = sum(int(sizes[f]) for f in rewritten if f in sizes)
+        if unsized:
+            jvm2, fs2, _ = _fs(spark, table_path)
+        for f in unsized:
             try:
                 rewritten_bytes += fs2.getFileStatus(
                     jvm2.org.apache.hadoop.fs.Path(M.resolve(table_path, f))
                 ).getLen()
-            except Exception:
-                pass
+            except Exception as ex:
+                if not _is_missing_file_error(ex):
+                    raise
         cluster = rewritten_bytes > 64 * 1024 * 1024
     if cluster:
         # the range-clustered write samples its input to pick range
@@ -1399,8 +1409,6 @@ def files_metadata(
     # createDataFrame costs a fresh Python-worker task per consuming
     # job — q183's profile showed two 32-task ~5 s-CPU stages just to
     # materialize this metadata frame (r13, guide §4)
-    from prox_spark.queries._local import values_df
-
     return values_df(spark, rows, "file string, bytes long, born long")
 
 

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from prox_spark.io import read_parquet
+from prox_spark.local_frames import values_df_like
 from prox_spark.table import (
     _read_files,
     commit_delta,
@@ -819,8 +820,6 @@ def apply_changes(
         # anti-join a second scan of the feed lineage per applied
         # batch (r13, guide §1.2). Temporal/decimal keys fall back to
         # the distributed distinct.
-        from prox_spark.queries._local import values_df_like
-
         try:
             changed_keys = values_df_like(
                 spark,

@@ -55,6 +55,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from prox_spark.local_frames import values_df
 from prox_spark.table import (
     _read_files,
     read_manifest,
@@ -245,8 +246,6 @@ def bounded_bm25(
         )
 
     def score(probed: DataFrame) -> DataFrame:
-        from prox_spark.queries._local import values_df
-
         # VALUES relation: the Python-RDD createDataFrame paid a
         # Python-worker scan per pass (this runs twice per serving
         # call — r12, the values_df rationale)

@@ -48,7 +48,7 @@ def _docs(spark, lo, hi):
 
 def test_one_call_brings_every_artifact_current(spark):
     from prox_spark.mv import create_mv, mv_info
-    from prox_spark.queries.search import maintained_postings
+    from prox_spark.postings import maintained_postings
     from prox_spark.table import build_value_index
     from prox_spark.wand import build_bounded_index, bounded_bm25
 
@@ -168,10 +168,8 @@ def test_error_isolation_and_loud_raise(spark):
 
 
 def test_ivf_recluster_fires_only_past_imbalance(spark):
-    from prox_spark.queries.similarity import (
-        _assign_to_cents,
-        index_quantizer,
-    )
+    from prox_spark.ivf import _assign_to_cents
+    from prox_spark.queries.similarity import index_quantizer
     from prox_spark.table import table_versions
 
     s = _scratch()
@@ -343,10 +341,8 @@ def test_postings_kind_appends_and_fold_compacts(spark):
     debt exceeds fold_factor x the folded size the q205
     fold-compaction fires inside the same call. The index must always
     equal a from-scratch tokenize of the live corpus."""
-    from prox_spark.queries.search import (
-        _tokens_tf,
-        maintained_postings,
-    )
+    from prox_spark.postings import maintained_postings
+    from prox_spark.queries.search import _tokens_tf
     from prox_spark.upsert import upsert_parquet
 
     s = _scratch()
@@ -546,7 +542,8 @@ def test_crashed_registry_upsert_cannot_double_append_postings(spark):
     """Same crash window for the append-postings kind: the signed
     delta and the bumped coverage publish in one manifest rename, so a
     replay with a stale registry row re-appends NOTHING."""
-    from prox_spark.queries.search import _tokens_tf, maintained_postings
+    from prox_spark.postings import maintained_postings
+    from prox_spark.queries.search import _tokens_tf
 
     s = _scratch()
     base, reg, idx = f"{s}/base", f"{s}/reg", f"{s}/pidx"
@@ -601,7 +598,8 @@ def test_maintenance_races_live_base_writers(spark):
         build_quantile_sketch,
     )
     from prox_spark.mv import create_mv, mv_info
-    from prox_spark.queries.search import _tokens_tf, maintained_postings
+    from prox_spark.postings import maintained_postings
+    from prox_spark.queries.search import _tokens_tf
     from prox_spark.queries.similarity import build_nd_pair_index
     from prox_spark.table import build_value_index, compact_small_files
     from prox_spark.upsert import delete_keys_mor, upsert_parquet
@@ -991,10 +989,8 @@ def test_nd_pairs_maintenance_handles_updates(spark):
     against the standing buckets — the maintained index equals a
     from-scratch rebuild of the final corpus after append + update +
     delete windows."""
-    from prox_spark.queries.similarity import (
-        build_nd_pair_index,
-        maintain_nd_pairs,
-    )
+    from prox_spark.neardup import maintain_nd_pairs
+    from prox_spark.queries.similarity import build_nd_pair_index
     from prox_spark.upsert import delete_keys_mor, upsert_parquet
 
     s = _scratch()
@@ -1053,10 +1049,8 @@ def test_nd_pairs_random_op_sequence_matches_rebuild(spark):
     from-scratch rebuild of the current corpus at every checkpoint."""
     import hashlib
 
-    from prox_spark.queries.similarity import (
-        build_nd_pair_index,
-        maintain_nd_pairs,
-    )
+    from prox_spark.neardup import maintain_nd_pairs
+    from prox_spark.queries.similarity import build_nd_pair_index
     from prox_spark.table import compact_table
     from prox_spark.upsert import delete_keys, delete_keys_mor, upsert_parquet
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from prox_spark.queries.text import CC_CHECKPOINT_EVERY, min_label_clusters
+from prox_spark.graph import CC_CHECKPOINT_EVERY, min_label_clusters
 
 
 def _chain_pairs(spark, n):

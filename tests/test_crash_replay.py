@@ -100,10 +100,8 @@ def test_nd_pairs_maintenance_survives_any_crash(spark, monkeypatch):
     """The 5-commit nd_pairs maintenance (bucket delete, two pair
     deletes, bucket upsert, coverage-carrying pair upsert): killed at
     any boundary, a re-run converges bit-identically."""
-    from prox_spark.queries.similarity import (
-        build_nd_pair_index,
-        maintain_nd_pairs,
-    )
+    from prox_spark.neardup import maintain_nd_pairs
+    from prox_spark.queries.similarity import build_nd_pair_index
     from prox_spark.upsert import delete_keys_mor
 
     s = _scratch()
@@ -217,11 +215,7 @@ def test_recluster_survives_any_crash(spark, monkeypatch):
     or the fully-published NEW one (never a torn state), a dangling
     staging branch never wedges the retry, and the re-run converges to
     the no-crash rows + quantizer."""
-    from prox_spark.queries.similarity import (
-        _assign_to_cents,
-        kmeans_fit,
-        recluster_index,
-    )
+    from prox_spark.ivf import _assign_to_cents, kmeans_fit, recluster_index
 
     s = _scratch()
     idx = f"{s}/ivf"

@@ -23,7 +23,8 @@ def _numpy_kmeans(X: np.ndarray, k: int, iters: int) -> np.ndarray:
 
 
 def test_kmeans_matches_numpy_reference(spark):
-    from prox_spark.queries.similarity import _emb_n, kmeans_fit
+    from prox_spark.ivf import kmeans_fit
+    from prox_spark.queries.similarity import _emb_n
 
     emb = _emb_n(spark, SF_DIR)
     got = kmeans_fit(emb, k=K, max_iters=ITERS)
@@ -39,7 +40,8 @@ def test_kmeans_matches_numpy_reference(spark):
 
 
 def test_kmeans_reduces_sse(spark):
-    from prox_spark.queries.similarity import _emb_n, kmeans_fit
+    from prox_spark.ivf import kmeans_fit
+    from prox_spark.queries.similarity import _emb_n
 
     emb = _emb_n(spark, SF_DIR)
     X = np.array([r["dd"] for r in emb.select("dd").collect()])
@@ -60,10 +62,10 @@ def test_ivf_index_partition_prunes(spark, tmp_path):
     import contextlib
     import io
 
+    from prox_spark.ivf import kmeans_fit
     from prox_spark.queries.similarity import (
         _emb_n,
         build_ivf_index,
-        kmeans_fit,
         probe_ivf_index,
     )
 
@@ -131,13 +133,8 @@ def test_recluster_rebalances_shifted_corpus(spark, tmp_path):
     with full recall@5 at nprobe=1."""
     from pyspark.sql import functions as F
 
-    from prox_spark.queries.similarity import (
-        _assign_to_cents,
-        append_to_index,
-        index_quantizer,
-        kmeans_fit,
-        recluster_index,
-    )
+    from prox_spark.ivf import _assign_to_cents, kmeans_fit, recluster_index
+    from prox_spark.queries.similarity import append_to_index, index_quantizer
     from prox_spark.table import (
         commit_snapshot,
         read_manifest,
@@ -222,11 +219,7 @@ def test_recluster_folds_mor_deletes_and_txn_pins(spark, tmp_path):
     workspace txn."""
     from pyspark.sql import functions as F
 
-    from prox_spark.queries.similarity import (
-        _assign_to_cents,
-        kmeans_fit,
-        recluster_index,
-    )
+    from prox_spark.ivf import _assign_to_cents, kmeans_fit, recluster_index
     from prox_spark.table import commit_snapshot, read_manifest, read_table
     from prox_spark.txn import txn_read, txn_state
     from prox_spark.upsert import delete_keys_mor

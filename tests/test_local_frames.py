@@ -1,4 +1,4 @@
-"""Focused tests for queries/_local.py VALUES relations (r13:
+"""Focused tests for prox_spark/local_frames.py VALUES relations (r13:
 non-finite floats, loud rejection of unsupported types, empty-array
 markers) — the internals several serving/marker paths now rely on."""
 
@@ -8,7 +8,7 @@ import math
 
 import pytest
 
-from prox_spark.queries._local import values_df
+from prox_spark.local_frames import values_df
 
 
 def test_values_df_non_finite_floats_round_trip(spark):

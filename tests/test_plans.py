@@ -54,6 +54,7 @@ def test_q36_minhash_is_subquadratic(spark):
 
 
 def test_q42_neardup_is_subquadratic(spark):
+    from prox_spark import neardup as N
     from prox_spark.queries import similarity as S
 
     # the BUILD (the pair artifact's write path): corpus x corpus must
@@ -61,8 +62,8 @@ def test_q42_neardup_is_subquadratic(spark):
     # broadcast); candidate pairs must come from an equality join on
     # the bucket key
     emb = S._emb_n(spark, SF_DIR)
-    tagged = S._plane_buckets(emb, S._ND_PLANE_ROWS)
-    pairs = S._nd_verify(S._nd_candidates(tagged, tagged, same=True), emb)
+    tagged = N._plane_buckets(emb, N._ND_PLANE_ROWS)
+    pairs = N._nd_verify(N._nd_candidates(tagged, tagged, same=True), emb)
     plan = _plan(pairs)
     assert "CartesianProduct" not in plan
     assert "bkt" in plan  # bucket equi-join key present

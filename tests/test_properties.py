@@ -60,7 +60,7 @@ edge_strategy = st.lists(
 @given(edge_strategy)
 @settings(max_examples=200, deadline=None)
 def test_union_find_labels_are_component_minima(pairs):
-    from prox_spark.queries.text import _driver_union_find
+    from prox_spark.graph import _driver_union_find
 
     labels = dict(_driver_union_find(pairs))
     # brute-force reachability model

@@ -39,11 +39,8 @@ def test_incremental_postings_equal_from_scratch(spark):
     tokenize of the CDC table's head — inserts added, deleted docs'
     postings fully retracted, an update's term move (old retracted,
     'moved' added) netted exactly."""
-    from prox_spark.queries.search import (
-        _inc_postings,
-        _tokens_tf,
-        maintained_postings,
-    )
+    from prox_spark.postings import maintained_postings
+    from prox_spark.queries.search import _inc_postings, _tokens_tf
     from prox_spark.queries.table_q import _card_cdc_table
     from prox_spark.table import read_table, table_versions
 
@@ -102,11 +99,8 @@ def test_postings_batch_sink_is_idempotent_and_skips_empty(spark):
     import shutil
     import tempfile
 
-    from prox_spark.queries.search import (
-        _BATCH_MARKER,
-        maintained_postings,
-        postings_index_batch,
-    )
+    from prox_spark.postings import _BATCH_MARKER, maintained_postings
+    from prox_spark.queries.search import postings_index_batch
     from prox_spark.table import read_table, table_versions
 
     scratch = tempfile.mkdtemp(prefix="prox_sink_test_")
@@ -147,12 +141,12 @@ def test_fold_compaction_preserves_index_and_replay_fence(spark):
     re-clustered files) without changing the logical postings, and
     carries the applied-batch markers so a replayed old batch is
     still a no-op AFTER compaction."""
-    from prox_spark.queries.search import (
+    from prox_spark.postings import (
         _BATCH_MARKER,
         compact_postings,
         maintained_postings,
-        postings_index_batch,
     )
+    from prox_spark.queries.search import postings_index_batch
     from prox_spark.table import read_table, table_versions
 
     import atexit
@@ -214,11 +208,8 @@ def test_postings_feed_resolves_text_rename(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from prox_spark.mv import MvSchemaError
-    from prox_spark.queries.search import (
-        _signed_postings,
-        _tokens_tf,
-        postings_feed,
-    )
+    from prox_spark.postings import _signed_postings, postings_feed
+    from prox_spark.queries.search import _tokens_tf
     from prox_spark.table import (
         commit_delta,
         commit_snapshot,

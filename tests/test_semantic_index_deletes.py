@@ -14,11 +14,8 @@ def test_semantic_index_stream_folds_deletes(spark):
     tombstones, not be mis-indexed as a vector: the live index equals
     the frozen-quantizer assignment of exactly the surviving
     corpus."""
-    from prox_spark.queries.similarity import (
-        _cent_arr,
-        _semdedup_k,
-        _tag_centroids,
-    )
+    from prox_spark.ivf import _tag_centroids
+    from prox_spark.queries.similarity import _cent_arr, _semdedup_k
     from prox_spark.queries.streaming_q import (
         _stream_partitions,
         read_semantic_index,

@@ -247,7 +247,7 @@ def test_cms_merge_batch_is_replay_idempotent(spark, tmp_path):
     assert table_versions(spark, store) == [1, 2]
     # total mass (d >= 0 rows; tuples are (d, bucket, c)) grew by
     # exactly CMS_D * 1 token
-    from prox_spark.queries.text import CMS_D
+    from prox_spark.hashing import CMS_D
 
     mass = lambda rows: sum(r[2] for r in rows if r[0] >= 0)
     assert mass(after) == mass(first) + CMS_D

@@ -870,6 +870,49 @@ def test_manifest_records_file_sizes(spark, tmp_path):
     assert m3["sizes"] == m2["sizes"]
 
 
+def test_rewrite_sizing_reads_recorded_sizes(spark, tmp_path, monkeypatch):
+    """commit_delta sizes a merge's rewritten inputs (its clustering
+    decision) from the manifest's recorded sizes: a rewriting upsert
+    on a table whose files all carry a size stats no file."""
+    from prox_spark import table as T
+    from prox_spark.table import read_manifest
+
+    path = str(tmp_path / "t")
+    commit_snapshot(
+        spark, path,
+        spark.createDataFrame([(i, "x") for i in range(100)], "id long, v string"),
+        stat_cols=["id"], n_files=2,
+    )
+    m = read_manifest(spark, path)
+    assert set(m["sizes"]) == set(m["files"])
+    stats = []
+    real_fs = T._fs
+
+    class CountingFs:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def getFileStatus(self, p):
+            stats.append(str(p))
+            return self._fs.getFileStatus(p)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def counting_fs(sp, p):
+        jvm, fs, hpath = real_fs(sp, p)
+        return jvm, CountingFs(fs), hpath
+
+    monkeypatch.setattr(T, "_fs", counting_fs)
+    upsert_parquet(
+        spark, path,
+        spark.createDataFrame([(3, "upd")], "id long, v string"), ["id"],
+    )
+    m2 = read_manifest(spark, path)
+    assert set(m["files"]) - set(m2["files"])  # a file was rewritten
+    assert stats == []
+
+
 def test_missing_file_classifier_is_class_anchored(spark):
     """_is_missing_file_error must classify by the thrown exception's
     own class, not by substring-searching the full stack trace: a fatal
