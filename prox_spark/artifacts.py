@@ -63,7 +63,7 @@ from prox_spark.hashing import (
     kmv_u_frame,
 )
 from prox_spark.ivf import recluster_index
-from prox_spark.neardup import maintain_nd_pairs
+from prox_spark.neardup import maintain_nd_pairs, tokens_spark
 from prox_spark.postings import (
     _signed_postings,
     compact_postings,
@@ -312,14 +312,13 @@ CMS_CAND_K = 64
 def _cms_items(df, col: str, tokens: bool, keys: list[str] = ()):
     """One ``tok`` string row per counted occurrence (with its group
     keys): the column's value, or (``tokens``) its lowercased
-    whitespace tokens — q174's tokenization, applied to an arbitrary
+    whitespace tokens — the corpus tokenizer
+    (:func:`prox_spark.neardup.tokens_spark`), applied to an arbitrary
     text column."""
     if tokens:
         return df.select(
             *keys,
-            F.explode(
-                F.expr(f"split(lower(trim({col})), '\\\\s+')")
-            ).alias("tok"),
+            F.explode(F.expr(tokens_spark(col))).alias("tok"),
         )
     return df.select(*keys, F.col(col).cast("string").alias("tok"))
 

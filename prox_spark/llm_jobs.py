@@ -55,9 +55,11 @@ from prox_spark.graph import min_label_clusters
 from prox_spark.hashing import hex4_spark
 from prox_spark.neardup import (
     JACCARD_THRESHOLD,
+    bucket_pairs,
+    jaccard,
     lsh_band_rows,
-    lsh_verify_pairs,
     shingle_arrays,
+    shingle_overlaps,
 )
 from prox_spark.pipeline import Pipeline, StageResult
 
@@ -123,15 +125,10 @@ def run_llm_pipeline(
             bands = lsh_band_rows(arr).cache()
             try:
                 pairs = (
-                    lsh_verify_pairs(arr, bands)
-                    .withColumn(
-                        "jaccard",
-                        F.round(
-                            F.col("n_inter")
-                            / (F.col("n1") + F.col("n2") - F.col("n_inter")),
-                            6,
-                        ),
+                    shingle_overlaps(
+                        bucket_pairs(bands, "doc_id", ("band", "band_sig")), arr
                     )
+                    .withColumn("jaccard", jaccard("n_inter", "n1", "n2"))
                     .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
                     .select("doc1", "doc2", "jaccard")
                 )

@@ -1,14 +1,25 @@
-"""Near-duplicate candidate generators and their exact verifiers.
+"""Near-duplicate pairs: one bucket-collision operator, plus the
+signatures and scores its callers bring.
 
-Both partition by a signature, join only rows sharing a bucket, and
-verify each candidate pair exactly — never an all-pairs cross join:
+Every symmetric near-dup pair set is built in the same three steps —
+partition by a signature, pair only rows sharing a bucket, score each
+candidate exactly; never an all-pairs cross join:
 
-- MinHash over word 3-gram shingles (``lsh_band_rows`` →
-  ``lsh_verify_pairs``): q35/q36/q147, the streaming LSH index (q194)
-  and the curation pipeline's near-dup signals.
-- random-hyperplane LSH over embeddings (``_plane_buckets`` →
-  ``_nd_candidates`` → ``_nd_verify``): q41/q42 and the maintained
-  pair index (``maintain_nd_pairs``, the registry's ``nd_pairs``).
+1. signature (the caller's): bucket rows of (id, key...)
+   - MinHash bands over word 3-gram shingles (``lsh_band_rows``, keys
+     band/band_sig): q36/q147 (q72/q124 through q36), the streaming
+     LSH index (q194) and the curation pipeline's near-dup signals;
+   - random-hyperplane buckets over embeddings (``_plane_buckets``,
+     keys t/bkt): q42's pair artifact and the maintained pair index
+     (``build_nd_pair_index``/``maintain_nd_pairs``, the registry's
+     ``nd_pairs``).
+2. ``bucket_pairs`` — distinct ``id1 < id2`` pairs from one equi-join
+   on the keys; given a standing bucket frame, the new-vs-standing
+   plus new-vs-new pairs of an incremental fold.
+3. ``attach_pairs`` — both sides' payload by two plain id joins.
+
+The score stays with the caller: ``jaccard``, q147's containment, or
+``cosine_pairs``' ``cosine >= NEARDUP_COS``.
 
 Each Spark SQL fragment has a structurally identical DuckDB twin
 (``*_DUCK``) for the oracles.
@@ -17,8 +28,9 @@ Each Spark SQL fragment has a structurally identical DuckDB twin
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prox_spark.local_frames import values_df
@@ -26,7 +38,13 @@ from prox_spark.local_frames import values_df
 
 # --- token / shingle fragments (Spark SQL expr + DuckDB SQL) ----------------
 
-TOKENS_SPARK = r"split(lower(trim(text)), '\\s+')"
+
+def tokens_spark(col: str) -> str:
+    """Lowercased whitespace tokens of the string column ``col``."""
+    return rf"split(lower(trim({col})), '\\s+')"
+
+
+TOKENS_SPARK = tokens_spark("text")
 TOKENS_DUCK = r"string_split_regex(lower(trim(text)), '\s+')"
 
 # 3-gram shingles as zip_with over three shifted slices: each slice is
@@ -94,38 +112,80 @@ def lsh_band_rows(shingled: DataFrame) -> DataFrame:
     )
 
 
-def lsh_verify_pairs(arr: DataFrame, bands: DataFrame) -> DataFrame:
-    """Bucket-collision pair enumeration + exact overlap verify over
-    ANY (doc_id, band, band_sig) frame — the back half shared by the
-    batch path (bands computed inline) and q194 (bands read from the
-    stream-maintained index table). Returns (doc1, doc2, n_inter, n1,
-    n2)."""
-    # enumerate pairs within each bucket (single shuffle keyed by the
-    # bucket — no self-join, no second scan of the corpus)
-    pairs_expr = (
-        "flatten(transform(ds, (x, i) -> transform(slice(ds, i + 2, size(ds)), "
-        "y -> named_struct('doc1', least(x, y), 'doc2', greatest(x, y)))))"
+def jaccard(n_inter: str, n1: str, n2: str) -> Column:
+    """Jaccard of two sets from the columns holding their overlap and
+    sizes, rounded to the oracles' 6 places."""
+    return F.round(F.col(n_inter) / (F.col(n1) + F.col(n2) - F.col(n_inter)), 6)
+
+
+# --- the bucket-collision operator ------------------------------------------
+
+
+def bucket_pairs(
+    buckets: DataFrame,
+    id_col: str,
+    keys: Sequence[str],
+    standing: DataFrame | None = None,
+) -> DataFrame:
+    """Distinct (id1, id2) pairs, ``id1 < id2``, of ids sharing every
+    column of ``keys`` in some row of ``buckets`` — one equi-join on
+    the keys, never a cross join; a pair colliding in several buckets
+    appears once. With ``standing`` (a bucket frame of the same
+    columns: the already-indexed ids), the pairs are each new id
+    against the standing ids and the other new ids, ordered by
+    least/greatest — an incremental fold's work, ∝ new rows × bucket
+    occupancy, never a standing-corpus self-join."""
+    new = buckets.select(F.col(id_col).alias("_l"), *keys)
+    other = new if standing is None else new.unionByName(
+        standing.select(F.col(id_col).alias("_l"), *keys)
     )
-    candidates = (
-        bands.groupBy("band", "band_sig")
-        .agg(F.collect_list("doc_id").alias("ds"))
-        .filter(F.size("ds") > 1)
-        .select(F.explode(F.expr(pairs_expr)).alias("p"))
-        .select("p.doc1", "p.doc2")
-        .distinct()
-    )
-    pa = arr.select(F.col("doc_id").alias("doc1"), F.col("shingles").alias("sh1"), F.col("n_shingles").alias("n1"))
-    pb = arr.select(F.col("doc_id").alias("doc2"), F.col("shingles").alias("sh2"), F.col("n_shingles").alias("n2"))
-    # payload attach is deliberately UN-hinted: pa/pb are the full shingle
-    # corpus (O(N) full text-derived arrays — never driver-broadcastable at
-    # billions of docs). The candidate set is narrow ids, so the doc_id
-    # equi-join shuffles candidates + corpus once; AQE still broadcasts
-    # when the corpus actually fits (small scale) without the OOM cliff
-    return (
-        candidates.join(pa, "doc1")
-        .join(pb, "doc2")
-        .withColumn("n_inter", F.size(F.array_intersect("sh1", "sh2")))
-        .select("doc1", "doc2", "n_inter", "n1", "n2")
+    joined = new.join(other.withColumnRenamed("_l", "_r"), list(keys))
+    if standing is None:
+        joined = joined.filter(F.col("_l") < F.col("_r"))
+    else:
+        joined = joined.filter(F.col("_l") != F.col("_r"))
+    # the distinct's own shuffle at a FIXED count: the pairs are narrow
+    # ids (kilobytes compressed), so AQE would coalesce a plain
+    # distinct into ONE task and serialize the callers' payload attach
+    # and exact score onto one core — the sf0.1 embedding build
+    # measured 1.1-1.4 s that way against 0.5 s on 4 cores. A by-number
+    # repartition is never coalesced, and the aggregate reuses its
+    # hash partitioning: no extra exchange.
+    n = int(buckets.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return joined.select(
+        F.least("_l", "_r").alias("id1"), F.greatest("_l", "_r").alias("id2")
+    ).repartition(n, "id1", "id2").distinct()
+
+
+def attach_pairs(pairs: DataFrame, payload: DataFrame, id_col: str) -> DataFrame:
+    """(id1, id2) pairs with both sides' payload: every other column
+    ``c`` of ``payload`` arrives as ``c1`` (id1's) and ``c2`` (id2's).
+    Two plain id equi-joins, deliberately UN-hinted: the payload is
+    the full corpus (O(N) shingle arrays or vectors — never
+    driver-broadcastable at billions of rows), the pairs are narrow
+    ids, so each join shuffles pairs + payload once; AQE still
+    broadcasts when the payload actually fits (small scale)."""
+    cols = [c for c in payload.columns if c != id_col]
+
+    def side(i: int) -> DataFrame:
+        return payload.select(
+            F.col(id_col).alias(f"id{i}"), *[F.col(c).alias(f"{c}{i}") for c in cols]
+        )
+
+    return pairs.join(side(1), "id1").join(side(2), "id2")
+
+
+def shingle_overlaps(pairs: DataFrame, arr: DataFrame) -> DataFrame:
+    """(doc1, doc2, n_inter, n1, n2): candidate doc pairs with their
+    exact overlap against a :func:`shingle_arrays` frame — a
+    ``size(array_intersect)`` over the two attached shingle arrays, the
+    counts every MinHash consumer's score (Jaccard, containment) reads."""
+    return attach_pairs(
+        pairs, arr.select("doc_id", "shingles", "n_shingles"), "doc_id"
+    ).select(
+        F.col("id1").alias("doc1"), F.col("id2").alias("doc2"),
+        F.size(F.array_intersect("shingles1", "shingles2")).alias("n_inter"),
+        F.col("n_shingles1").alias("n1"), F.col("n_shingles2").alias("n2"),
     )
 
 
@@ -141,22 +201,24 @@ NEARDUP_COS = 0.42
 ND_TABLES = 4   # L hash tables ...
 ND_BITS = 5     # ... of b bits each: recall = 1 - (1 - p^b)^L
 
-_ND_PLANES = [
-    [
-        [
-            1 if int(hashlib.md5(f"ndplane:{t}:{b}:{i}".encode()).hexdigest()[:2], 16) % 2 == 0 else -1
-            for i in range(EMB_DIM)
-        ]
-        for b in range(ND_BITS)
-    ]
-    for t in range(ND_TABLES)
-]
 
-_ND_PLANE_ROWS = [
-    (t, b, [float(v) for v in row])
-    for t, rows in enumerate(_ND_PLANES)
-    for b, row in enumerate(rows)
-]
+def hyperplane_rows(prefix: str, n_tables: int, n_bits: int) -> list[tuple[int, int, list[float]]]:
+    """Deterministic ±1 hyperplanes as (t, b, plane) rows: component i
+    of table t's plane b is the parity of the first byte of
+    md5("{prefix}:{t}:{b}:{i}"). Python-side, so the Spark broadcast
+    row and the oracles' VALUES list carry the identical constants."""
+    return [
+        (t, b, [
+            1.0 if int(hashlib.md5(f"{prefix}:{t}:{b}:{i}".encode()).hexdigest()[:2], 16) % 2 == 0
+            else -1.0
+            for i in range(EMB_DIM)
+        ])
+        for t in range(n_tables)
+        for b in range(n_bits)
+    ]
+
+
+_ND_PLANE_ROWS = hyperplane_rows("ndplane", ND_TABLES, ND_BITS)
 
 
 def _plane_buckets(
@@ -205,58 +267,19 @@ def _nd_prep(df: DataFrame) -> DataFrame:
     )
 
 
-def _nd_candidates(a_b: DataFrame, b_b: DataFrame, same: bool) -> DataFrame:
-    """Distinct candidate id pairs colliding in any (t, bkt) bucket
-    between two bucket frames; ``same=True`` is the within-frame
-    self-join (each pair once), ``same=False`` the new-vs-standing
-    join (ids disjoint by construction, ordered via least/greatest)."""
-    a = a_b.alias("a")
-    b = b_b.alias("b")
-    cond = (F.col("a.t") == F.col("b.t")) & (F.col("a.bkt") == F.col("b.bkt"))
-    if same:
-        cond = cond & (F.col("a.vec_id") < F.col("b.vec_id"))
-    else:
-        cond = cond & (F.col("a.vec_id") != F.col("b.vec_id"))
+def cosine_pairs(pairs: DataFrame, emb: DataFrame) -> DataFrame:
+    """(id1, id2, cosine) of the candidate pairs whose exact cosine
+    clears NEARDUP_COS; ``emb`` is a prepared (vec_id, dd, nrm) frame
+    (:func:`_nd_prep`)."""
     return (
-        a.join(b, cond)
-        .select(
-            F.least(F.col("a.vec_id"), F.col("b.vec_id")).alias("id1"),
-            F.greatest(F.col("a.vec_id"), F.col("b.vec_id")).alias("id2"),
-        )
-        .distinct()
-    )
-
-
-def _nd_verify(cand: DataFrame, emb: DataFrame) -> DataFrame:
-    """Exact cosine verification of candidate id pairs against a
-    prepared (vec_id, dd, nrm) frame — semi-join prune first so only
-    vectors that will be verified move (the q42 shape)."""
-    cand = cand.cache()
-    ids = (
-        cand.select(F.col("id1").alias("vec_id"))
-        .union(cand.select(F.col("id2").alias("vec_id")))
-        .distinct()
-    )
-    emb_c = emb.join(ids, "vec_id", "left_semi")
-    e1 = emb_c.select(
-        F.col("vec_id").alias("id1"), F.col("dd").alias("v1"),
-        F.col("nrm").alias("n1"),
-    )
-    e2 = emb_c.select(
-        F.col("vec_id").alias("id2"), F.col("dd").alias("v2"),
-        F.col("nrm").alias("n2"),
-    )
-    out = (
-        cand.join(e1, "id1")
-        .join(e2, "id2")
+        attach_pairs(pairs, emb.select("vec_id", "dd", "nrm"), "vec_id")
         .withColumn(
             "cosine",
-            F.expr(f"{DOT_SPARK.format(a='v1', b='v2')} / (n1 * n2)"),
+            F.expr(f"{DOT_SPARK.format(a='dd1', b='dd2')} / (nrm1 * nrm2)"),
         )
         .filter(F.col("cosine") >= NEARDUP_COS)
         .select("id1", "id2", "cosine")
     )
-    return out
 
 
 def maintain_nd_pairs(
@@ -330,12 +353,12 @@ def maintain_nd_pairs(
             "vec_id", "t", "bkt"
         ).cache()
         try:
-            standing = read_table(spark, buckets_path)
-            cand = _nd_candidates(b_new, standing, same=False).unionByName(
-                _nd_candidates(b_new, b_new, same=True)
-            ).distinct()
+            cand = bucket_pairs(
+                b_new, "vec_id", ("t", "bkt"),
+                standing=read_table(spark, buckets_path),
+            )
             emb_head = _nd_prep(read_table(spark, base_path, version=head))
-            pairs = _nd_verify(cand, emb_head)
+            pairs = cosine_pairs(cand, emb_head)
             # idempotent keyed upserts; coverage rides the pair commit
             upsert_parquet(spark, buckets_path, b_new, ["vec_id", "t"])
             n_new = pairs.count()

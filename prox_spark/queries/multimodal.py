@@ -261,7 +261,8 @@ def q134_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 head, dims, _maxval, pix = bytes(payload).split(b"\n", 3)
-                assert head == b"P6"
+                if head != b"P6":
+                    raise ValueError(f"media_id {int(mid)}: not a binary PPM (P6) payload")
                 w, h = map(int, dims.split())
                 arr = np.frombuffer(pix, dtype=np.uint8).reshape(h, w, 3)
                 xs = (np.arange(8) * w) // 8
@@ -721,7 +722,8 @@ def q176_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 head, dims, _maxval, pix = bytes(payload).split(b"\n", 3)
-                assert head == b"P6"
+                if head != b"P6":
+                    raise ValueError(f"media_id {int(mid)}: not a binary PPM (P6) payload")
                 w, h = map(int, dims.split())
                 arr = np.frombuffer(pix, dtype=np.uint8).reshape(h, w, 3)
                 xs = (np.arange(8) * w) // 8

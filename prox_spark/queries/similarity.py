@@ -8,21 +8,23 @@ Two paths:
   zipped arrays (``F.aggregate``), which is bit-identical to DuckDB's
   ``list_reduce`` fold — verified experimentally — so the oracle
   compares full-precision doubles, no rounding tricks needed.
-- q41 random-hyperplane LSH: the scale path. An 8-bit signature from
-  a deterministic ±1 hyperplane matrix (generated in Python from md5)
-  buckets vectors; only same-bucket candidates are scored. The planes
-  live in a broadcast TABLE joined against the corpus — one uniform
-  dot fold per (vector, plane) — not as inline literal arrays, whose
-  megamethod codegen measured seconds of JIT stall. Sub-linear
-  candidate volume at 100 TB: the bucket join replaces the all-pairs
-  cross join. Norms are precomputed once per vector everywhere, so a
-  pairwise cosine is a single fold: dot / (n1 * n2).
+- q41 random-hyperplane LSH: the scale path. 8 OR-amplified tables
+  of 4-bit signatures from deterministic ±1 hyperplanes (generated in
+  Python from md5, :func:`prox_spark.neardup.hyperplane_rows`) bucket
+  vectors; only candidates sharing a (table, bucket) with a query are
+  scored. All 32 planes ride in as ONE broadcast row and each vector
+  folds its per-table bucket ids in-row — one uniform dot fold per
+  (vector, plane) — not as inline literal arrays, whose megamethod
+  codegen measured seconds of JIT stall. Sub-linear candidate volume
+  at 100 TB: the bucket join replaces the all-pairs cross join. Norms
+  are precomputed once per vector everywhere, so a pairwise cosine is
+  a single fold: dot / (n1 * n2).
 
 Scale notes: brute force is O(Q*N) — fine for small Q (broadcast the
 queries, scan candidates once, no shuffle beyond the final top-k).
-For large Q*N, q41's bucket equi-join shuffles on the 8-bit bucket
-key; more bits => smaller buckets => higher selectivity, tunable
-recall/cost like any LSH.
+For large Q*N, q41's bucket equi-join shuffles on the (table, 4-bit
+bucket) key; more bits => smaller buckets => higher selectivity,
+tunable recall/cost like any LSH.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ from prox_spark.ivf import (
     IVF_K,
     _assign_to_cents,
     _tag_centroids,
+    cosine_cent_row,
     nearest_l2,
     recluster_index,
 )
@@ -48,15 +51,15 @@ from prox_spark.neardup import (
     EMB_DIM,
     NEARDUP_COS,
     _ND_PLANE_ROWS,
-    _nd_candidates,
     _nd_prep,
-    _nd_verify,
     _plane_buckets,
+    bucket_pairs,
+    cosine_pairs,
+    hyperplane_rows,
 )
 
 N_QUERIES = 10  # vectors with vec_id < N_QUERIES form the query set
 TOP_K = 3
-LSH_BITS = 8
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,37 +132,6 @@ ORDER BY query_id, rank
 
 # --- q41: random-hyperplane LSH bucketed search (scale path) ---------------
 
-def _hyperplanes(bits: int = LSH_BITS, dim: int = EMB_DIM) -> list[list[int]]:
-    """Deterministic ±1 hyperplane matrix derived from md5 — identical
-    constants are embedded in the Spark expression and the oracle SQL."""
-    planes = []
-    for b in range(bits):
-        row = []
-        for i in range(dim):
-            h = hashlib.md5(f"plane:{b}:{i}".encode()).hexdigest()
-            row.append(1 if int(h[:2], 16) % 2 == 0 else -1)
-        planes.append(row)
-    return planes
-
-
-_PLANES = _hyperplanes()
-
-
-def _hyperplanes_seeded(table: int, bits: int, dim: int = EMB_DIM) -> list[list[int]]:
-    """Per-table variant of :func:`_hyperplanes`: the table index salts
-    the md5 seed so each of the T OR-amplified tables gets independent
-    planes, still bit-identical between the Spark expression and the
-    oracle SQL."""
-    planes = []
-    for b in range(bits):
-        row = []
-        for i in range(dim):
-            h = hashlib.md5(f"plane:{table}:{b}:{i}".encode()).hexdigest()
-            row.append(1 if int(h[:2], 16) % 2 == 0 else -1)
-        planes.append(row)
-    return planes
-
-
 # OR-amplified LSH: T independent tables of B bits each. A true
 # neighbor is a candidate if it collides in ANY table —
 # P = 1-(1-p^B)^T with p = 1-θ/π, so fewer bits per table and more
@@ -170,11 +142,7 @@ def _hyperplanes_seeded(table: int, bits: int, dim: int = EMB_DIM) -> list[list[
 # tests/test_ann_recall.py; tune T/B upward for higher recall).
 Q41_TABLES = 8
 Q41_BITS = 4
-_Q41_PLANE_ROWS = [
-    (t, b, [float(v) for v in row])
-    for t in range(Q41_TABLES)
-    for b, row in enumerate(_hyperplanes_seeded(t, Q41_BITS))
-]
+_Q41_PLANE_ROWS = hyperplane_rows("plane", Q41_TABLES, Q41_BITS)
 
 
 def _plane_values_duck(plane_rows: list[tuple[int, int, list[float]]]) -> str:
@@ -280,64 +248,15 @@ def _nd_pairs_table(spark: SparkSession, sf_dir: str) -> str:
     def build(scratch: str) -> str:
         out = f"{scratch}/nd_pairs"
         emb = _emb_n(spark, sf_dir)
-        # pin the bucket table: the self-join's two branches share one
+        # pin the bucket table: the self-join's two sides share one
         # plan, and uncached each would re-run the 4-table hyperplane
         # dot fold over the whole corpus (the expensive map pass here)
         tagged = _plane_buckets(emb, _ND_PLANE_ROWS).cache()
-        a = tagged.alias("a")
-        b = tagged.alias("b")
-        # candidate ids only (narrow shuffle), distinct BEFORE vectors
-        # rejoin
-        cand = (
-            a.join(
-                b,
-                (F.col("a.t") == F.col("b.t"))
-                & (F.col("a.bkt") == F.col("b.bkt"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select(
-                F.col("a.vec_id").alias("id1"),
-                F.col("b.vec_id").alias("id2"),
-            )
-            .distinct()
-        )
-        # prune the corpus to candidate members BEFORE attaching
-        # vectors: the two-sided attach would otherwise shuffle the
-        # full dense-vector corpus twice; the semi-join keys on the
-        # (tiny) candidate id set, so only vectors that will actually
-        # be verified move at all
-        cand = cand.cache()
-        ids = (
-            cand.select(F.col("id1").alias("vec_id"))
-            .union(cand.select(F.col("id2").alias("vec_id")))
-            .distinct()
-        )
-        emb_c = emb.join(ids, "vec_id", "left_semi")
-        e1 = emb_c.select(
-            F.col("vec_id").alias("id1"), F.col("dd").alias("v1"),
-            F.col("nrm").alias("n1"),
-        )
-        e2 = emb_c.select(
-            F.col("vec_id").alias("id2"), F.col("dd").alias("v2"),
-            F.col("nrm").alias("n2"),
-        )
-        # vector attach is UN-hinted: at adversarial candidate volumes
-        # the pruned frame is still O(N) dense vectors, which must
-        # never be pinned to a driver broadcast; AQE broadcasts only
-        # when it genuinely fits
-        pairs = (
-            cand.join(e1, "id1")
-            .join(e2, "id2")
-            .withColumn(
-                "cosine",
-                F.expr(f"{DOT_SPARK.format(a='v1', b='v2')} / (n1 * n2)"),
-            )
-            .filter(F.col("cosine") >= NEARDUP_COS)
-            .select("id1", "id2", "cosine")
-        )
-        commit_snapshot(spark, out, pairs, stat_cols=["id1"], n_files=4)
-        tagged.unpersist()
-        cand.unpersist()
+        try:
+            pairs = cosine_pairs(bucket_pairs(tagged, "vec_id", ("t", "bkt")), emb)
+            commit_snapshot(spark, out, pairs, stat_cols=["id1"], n_files=4)
+        finally:
+            tagged.unpersist()
         return out
 
     return staged(_ND_PAIRS_CACHE, sf_dir, "prox_ndpairs_", build)
@@ -404,7 +323,7 @@ def build_nd_pair_index(
     emb = _nd_prep(read_table(spark, base_path))
     tagged = _plane_buckets(emb, _ND_PLANE_ROWS).cache()
     try:
-        pairs = _nd_verify(_nd_candidates(tagged, tagged, same=True), emb)
+        pairs = cosine_pairs(bucket_pairs(tagged, "vec_id", ("t", "bkt")), emb)
         commit_snapshot(
             spark, buckets_path, tagged.select("vec_id", "t", "bkt"),
             stat_cols=["vec_id"], n_files=4,
@@ -2110,22 +2029,14 @@ def _probe_recall(
     content (queries: vec_id < N_QUERIES)."""
     idx_df = idx_df.persist()
     try:
-        cent_arr = values_df(
-            spark,
-            [(sorted(
-                (c, v, float(sum(x * x for x in v) ** 0.5))
-                for c, v in cents
-            ),)],
-            "cents array<struct<cid:int, cdd:array<double>, cnrm:double>>",
-        )
         # re-assign content map-side under THIS quantizer (the stored
         # cid column may belong to another quantizer generation)
-        assigned = _tag_centroids(idx_df.drop("cid"), cent_arr).select(
-            "vec_id", "dd", "nrm", F.expr("sims[0].cid").alias("cid")
+        assigned = _assign_to_cents(
+            idx_df.select("vec_id", "dd", "nrm"), cents
         )
         queries = _tag_centroids(
             idx_df.filter(F.col("vec_id") < N_QUERIES).drop("cid"),
-            cent_arr,
+            cosine_cent_row(spark, cents),
         )
         probes = queries.select(
             F.col("vec_id").alias("query_id"),

@@ -29,9 +29,11 @@ from prox_spark.neardup import (
     DOT_SPARK,
     JACCARD_THRESHOLD,
     TOKENS_SPARK,
+    bucket_pairs,
+    jaccard,
     lsh_band_rows,
-    lsh_verify_pairs,
     shingle_arrays,
+    shingle_overlaps,
 )
 
 
@@ -1309,16 +1311,9 @@ def q194_streaming_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx, markers = _lsh_stream_index(spark, sf_dir)
     bands = read_table(spark, idx).filter(F.col("band") >= 0)
     arr = _doc_shingle_arrays(spark, sf_dir).cache()
-    ov = lsh_verify_pairs(arr, bands)
+    ov = shingle_overlaps(bucket_pairs(bands, "doc_id", ("band", "band_sig")), arr)
     return (
-        ov.withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n1") + F.col("n2") - F.col("n_inter")),
-                6,
-            ),
-        )
+        ov.withColumn("jaccard", jaccard("n_inter", "n1", "n2"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc1", "doc2", "jaccard")
         .withColumn("incremental", F.lit(markers >= 2))
@@ -1638,7 +1633,8 @@ def _oracle_q198() -> str:
         " AS dup_pct,\n       TRUE AS index_consistent,\n"
         "       TRUE AS incremental\nFROM counts",
     )
-    assert out != ORACLE_Q170, "ORACLE_Q170 shape changed; fix the splice"
+    if out == ORACLE_Q170:
+        raise RuntimeError("ORACLE_Q170 shape changed; fix the splice")
     return out
 
 

@@ -51,9 +51,11 @@ from prox_spark.neardup import (
     SHINGLES_SPARK,
     TOKENS_DUCK,
     TOKENS_SPARK,
+    bucket_pairs,
+    jaccard,
     lsh_band_rows,
-    lsh_verify_pairs,
     shingle_arrays,
+    shingle_overlaps,
 )
 
 # --- shared shingle CTE (DuckDB oracles; fragments in prox_spark.neardup) ---
@@ -273,10 +275,7 @@ def q35_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         inter.join(sa, "doc1")
         .join(sb, "doc2")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / (F.col("n1") + F.col("n2") - F.col("n_inter")), 6),
-        )
+        .withColumn("jaccard", jaccard("n_inter", "n1", "n2"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc1", "doc2", "jaccard")
         .orderBy("doc1", "doc2")
@@ -305,9 +304,10 @@ ORDER BY doc1, doc2
 
 
 def _minhash_candidate_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared LSH front half for q36/q147: banded-MinHash candidate
-    pairs joined back to their shingle arrays, with the exact overlap
-    (n_inter, n1, n2) computed — the similarity METRIC (Jaccard vs
+    """Shared LSH front half for q36/q147: the banded-MinHash
+    candidate pairs (one bucket-collision join on (band, band_sig),
+    :func:`prox_spark.neardup.bucket_pairs`) with their exact shingle
+    overlap (n_inter, n1, n2) — the similarity METRIC (Jaccard vs
     containment) is the caller's one-line decision."""
     # cache, NOT an eager checkpoint barrier (r13 A/B: the barrier
     # lost ~10% here — see q35's note; the extraction is too cheap to
@@ -318,26 +318,25 @@ def _minhash_candidate_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # md5 minhash fold into every downstream consumer (which would
     # re-evaluate it once per band per use — measured 10-50x slowdowns)
     bands = lsh_band_rows(arr).cache()
-    return lsh_verify_pairs(arr, bands)
+    return shingle_overlaps(bucket_pairs(bands, "doc_id", ("band", "band_sig")), arr)
 
 
 def q36_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures as a pure projection (no shuffle): per doc,
     ``sig[s] = array_min(transform(shingles, x -> md5(s || '|' || x)))``.
     Bands are slices of the signature array; candidate pairs come from
-    one small equi-join on (band, band_sig); exact-Jaccard verification
-    is ``size(array_intersect(...))`` over the two shingle arrays joined
-    back by doc_id — no exploded postings, no re-aggregation.
+    one small self equi-join on (band, band_sig); exact-Jaccard
+    verification is ``size(array_intersect(...))`` over the two shingle
+    arrays joined back by doc_id — no exploded postings, no
+    re-aggregation.
 
-    Scale path: the only wide shuffle is on band_sig (short strings,
-    uniformly distributed md5s — no skew); verify joins are proportional
-    to the candidate count, which the band width tunes."""
+    Scale path: the wide shuffles are keyed on band_sig (short strings,
+    uniformly distributed md5s — no skew) and on the candidate ids;
+    verify joins are proportional to the candidate count, which the
+    band width tunes."""
     ov = _minhash_candidate_overlaps(spark, sf_dir)
     return (
-        ov.withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / (F.col("n1") + F.col("n2") - F.col("n_inter")), 6),
-        )
+        ov.withColumn("jaccard", jaccard("n_inter", "n1", "n2"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc1", "doc2", "jaccard")
         .orderBy("doc1", "doc2")

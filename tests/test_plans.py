@@ -63,7 +63,7 @@ def test_q42_neardup_is_subquadratic(spark):
     # the bucket key
     emb = S._emb_n(spark, SF_DIR)
     tagged = N._plane_buckets(emb, N._ND_PLANE_ROWS)
-    pairs = N._nd_verify(N._nd_candidates(tagged, tagged, same=True), emb)
+    pairs = N.cosine_pairs(N.bucket_pairs(tagged, "vec_id", ("t", "bkt")), emb)
     plan = _plan(pairs)
     assert "CartesianProduct" not in plan
     assert "bkt" in plan  # bucket equi-join key present
