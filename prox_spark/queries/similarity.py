@@ -2030,14 +2030,15 @@ def _probe_recall(
     idx_df = idx_df.persist()
     try:
         # re-assign content map-side under THIS quantizer (the stored
-        # cid column may belong to another quantizer generation)
-        assigned = _assign_to_cents(
-            idx_df.select("vec_id", "dd", "nrm"), cents
+        # cid column may belong to another quantizer generation); the
+        # queries' probe lists come from the same ranked sims
+        tagged = _tag_centroids(
+            idx_df.select("vec_id", "dd", "nrm"), cosine_cent_row(spark, cents)
         )
-        queries = _tag_centroids(
-            idx_df.filter(F.col("vec_id") < N_QUERIES).drop("cid"),
-            cosine_cent_row(spark, cents),
+        assigned = tagged.select(
+            "vec_id", "dd", "nrm", F.expr("sims[0].cid").alias("cid")
         )
+        queries = tagged.filter(F.col("vec_id") < N_QUERIES)
         probes = queries.select(
             F.col("vec_id").alias("query_id"),
             F.explode(F.expr(

@@ -1302,9 +1302,12 @@ def q194_streaming_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the stream-built index must equal the batch LSH end-to-end
     (q36's own oracle gates it, plus an `incremental` flag pinning
     that ≥2 separate micro-batches actually built the index) — a
-    dropped batch, a double-applied batch, or a band computed
-    differently in the streaming path all surface as missing/extra
-    pairs."""
+    dropped batch or a band computed differently in the streaming
+    path surfaces as missing/extra pairs. A batch applied twice (past
+    the marker fence, under a fresh batch id) adds no pair — the pair
+    operator's distinct absorbs the repeated bucket rows — so
+    `applied_once` pins that no (doc_id, band) row of the index
+    repeats."""
     from prox_spark.queries.text import _doc_shingle_arrays
     from prox_spark.table import read_table
 
@@ -1312,22 +1315,27 @@ def q194_streaming_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = read_table(spark, idx).filter(F.col("band") >= 0)
     arr = _doc_shingle_arrays(spark, sf_dir).cache()
     ov = shingle_overlaps(bucket_pairs(bands, "doc_id", ("band", "band_sig")), arr)
+    once = bands.groupBy("doc_id", "band").count().agg(
+        F.coalesce(F.max("count") == 1, F.lit(True)).alias("applied_once")
+    )
     return (
         ov.withColumn("jaccard", jaccard("n_inter", "n1", "n2"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc1", "doc2", "jaccard")
         .withColumn("incremental", F.lit(markers >= 2))
+        .crossJoin(F.broadcast(once))
         .orderBy("doc1", "doc2")
     )
 
 
 def _oracle_q194() -> str:
     # the stream-built index must reproduce the batch LSH exactly, so
-    # q36's oracle gates it (wrapped to carry the incremental flag)
+    # q36's oracle gates it (wrapped to carry the two index flags)
     from prox_spark.queries.text import ORACLE_Q36
 
     return (
-        "SELECT doc1, doc2, jaccard, TRUE AS incremental FROM ("
+        "SELECT doc1, doc2, jaccard, TRUE AS incremental, "
+        "TRUE AS applied_once FROM ("
         + ORACLE_Q36
         + ") ORDER BY doc1, doc2"
     )

@@ -215,6 +215,51 @@ def test_lsh_index_batch_replay_is_idempotent(spark, tmp_path):
     assert rows and all(r["count"] == 2 for r in rows)
 
 
+def test_q194_flags_a_batch_applied_twice(spark, tmp_path, monkeypatch):
+    """A batch that gets past the marker fence under a fresh batch id
+    doubles its band rows but adds no pair, so q194's pairs alone
+    would still match q36's oracle; its ``applied_once`` column must
+    not."""
+    import duckdb
+
+    from prox_spark.queries import streaming_q as S
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
+         (2, "alpha beta gamma delta epsilon zeta eta theta iota"),
+         (3, "one two three four five six seven eight"),
+         (4, "one two three four five six seven eight")],
+        "doc_id long, text string",
+    )
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    docs.toPandas().to_parquet(sf / "documents.parquet")
+    idx = str(tmp_path / "idx")
+    S.lsh_index_batch(docs.filter("doc_id <= 2"), 0, idx)
+    S.lsh_index_batch(docs.filter("doc_id > 2"), 1, idx)
+    monkeypatch.setattr(S, "_lsh_stream_index", lambda spark, sf_dir: (idx, 2))
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
+    )
+    oracle = sorted(con.execute(S._oracle_q194()).fetchall())
+    assert len(oracle) == 2
+
+    def q194():
+        return sorted(
+            tuple(r) for r in S.q194_streaming_lsh_index(spark, str(sf)).select(
+                "doc1", "doc2", "jaccard", "incremental", "applied_once"
+            ).collect()
+        )
+
+    assert q194() == oracle
+    S.lsh_index_batch(docs.filter("doc_id > 2"), 2, idx)  # applied again
+    doubled = q194()
+    assert [r[:3] for r in doubled] == [r[:3] for r in oracle]
+    assert doubled != oracle and not any(r[4] for r in doubled)
+
+
 def test_pacing_floor_never_regresses_after_restart(spark, tmp_path):
     """maxVersionsPerBatch's pacing floor must survive a query restart:
     a fresh reader (driver-local state reset) that learns the committed
