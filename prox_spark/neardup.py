@@ -148,18 +148,18 @@ def bucket_pairs(
     # ids (kilobytes compressed), so AQE would coalesce a plain
     # distinct into ONE task and serialize the callers' payload attach
     # and exact score onto one core — the sf0.1 embedding build on 4
-    # cores measured 1.16 s that way against 0.68 s. A by-number
+    # cores measured 1.16 s that way against 0.68 s (the curation
+    # pipeline's MinHash pairs time the same either way: the repartition
+    # is there for q42's artifact and the nd_pairs index). A by-number
     # repartition is never coalesced, and the aggregate reuses its
-    # hash partitioning: one exchange. It carries the raw join rows (a
-    # pair repeats once per shared bucket: 3x the distinct pairs for
-    # MinHash, 1.06x for the hyperplane tables) because the partial
-    # aggregate sits above it. Deduplicating first does not pay: Spark
-    # drops a (id1, id2) repartition above a distinct as redundant
-    # (back to the one coalesced task), any other key adds a second
-    # exchange of every distinct pair, and past broadcast scale the
-    # join is partitioned by bucket, so a pair's copies from different
-    # buckets land in different tasks and the partial aggregate
-    # cannot merge them anyway.
+    # hash partitioning: one exchange, of the raw join rows (a pair
+    # repeats per shared bucket: 3x the distinct pairs for MinHash,
+    # 1.06x for the hyperplane tables). Deduplicating first does not
+    # pay: Spark drops an (id1, id2) repartition above a distinct as
+    # redundant (back to one task), any other key adds a second
+    # exchange of every pair, and past broadcast scale the join is
+    # partitioned by bucket, so a pair's copies land in different
+    # tasks and a map-side partial aggregate cannot merge them.
     n = int(buckets.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return joined.select(
         F.least("_l", "_r").alias("id1"), F.greatest("_l", "_r").alias("id2")
