@@ -606,31 +606,45 @@ def register_artifact(
 ) -> None:
     """Register (or re-register — upsert by artifact path) a derived
     artifact for one-call maintenance."""
+    register_artifacts(spark, registry_path, [(kind, base_path, artifact_path, params)])
+
+
+def register_artifacts(
+    spark: SparkSession,
+    registry_path: str,
+    entries: list[tuple[str, str, str, dict | None]],
+) -> None:
+    """Register (or re-register) several artifacts in ONE registry
+    commit; each entry is ``(kind, base_path, artifact_path, params)``
+    as for :func:`register_artifact`."""
     from prox_spark.upsert import upsert_parquet
 
-    if kind not in KINDS:
-        raise ValueError(f"unknown artifact kind {kind!r}; one of {KINDS}")
-    params = dict(params or {})
-    if (
-        kind in ("bounded_postings", "postings", "kmv", "quantile_sketch",
-                 "cms")
-        and "since" not in params
-    ):
-        # freeze the rename-resolution window's low bound at
-        # REGISTRATION: the index records its text column's name as of
-        # now, so later maintenance resolves renames committed after
-        # this version only. Defaulting to 0 instead would replay
-        # pre-registration rename events — a 'from' name recreated as
-        # a NEW column would remap through the stale event to the
-        # wrong physical column (a silent wrong tokenization).
-        params["since"] = int(params.get(
-            "covered", read_manifest(spark, base_path)["version"]
-        ))
-    row = spark.createDataFrame(
-        [(artifact_path, kind, base_path, json.dumps(params))],
-        _SCHEMA,
-    )
-    upsert_parquet(spark, registry_path, row, ["artifact"])
+    paths = [e[2] for e in entries]
+    if len(set(paths)) != len(paths):
+        raise ValueError(f"artifact registered twice in one call: {paths}")
+    rows = []
+    for kind, base_path, artifact_path, params in entries:
+        if kind not in KINDS:
+            raise ValueError(f"unknown artifact kind {kind!r}; one of {KINDS}")
+        params = dict(params or {})
+        if (
+            kind in ("bounded_postings", "postings", "kmv", "quantile_sketch",
+                     "cms")
+            and "since" not in params
+        ):
+            # freeze the rename-resolution window's low bound at
+            # REGISTRATION: the index records its text column's name as
+            # of now, so later maintenance resolves renames committed
+            # after this version only. Defaulting to 0 instead would
+            # replay pre-registration rename events — a 'from' name
+            # recreated as a NEW column would remap through the stale
+            # event to the wrong physical column (a silent wrong
+            # tokenization).
+            params["since"] = int(params.get(
+                "covered", read_manifest(spark, base_path)["version"]
+            ))
+        rows.append((artifact_path, kind, base_path, json.dumps(params)))
+    upsert_parquet(spark, registry_path, spark.createDataFrame(rows, _SCHEMA), ["artifact"])
 
 
 def list_artifacts(spark: SparkSession, registry_path: str) -> list[dict]:

@@ -8,7 +8,10 @@ Stage graph (each stage retried with backoff, failures cascade to
 skips — O1-O4 semantics):
 
     load_bronze -> silver -> gold -> write_gold
-                                 \\-> kpis -> write_kpis
+                          \\-> kpis -> write_kpis
+
+The gold branch and the KPI branch share only ``silver``, so the runner
+runs them side by side: ``write_gold`` overlaps ``kpis``/``write_kpis``.
 """
 
 from __future__ import annotations

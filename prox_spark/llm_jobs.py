@@ -6,13 +6,23 @@ reference's OWN workload transposed, this one is the workload a
 100 TB training-data pipeline actually runs, built from the same
 first-class pieces the query surface gates individually:
 
-    ingest -> signals -> card ----------------\\
-                  \\-> corpus -> splits -> freeze -> register
+    ingest -> signals -> clusters -> card
+       |                     \\
+       \\-> corpus ------------> splits -> freeze -> mv ---\\
+                                                 \\-> vidx -> register
+
+Branches run concurrently (the runner starts a stage as soon as its
+dependencies have succeeded): ``corpus`` beside ``signals`` and
+``clusters``, ``card`` beside ``splits``/``freeze``, ``mv`` beside
+``vidx``.
 
 - **signals**: exact-dup keepers (md5 digest groups) + MinHash-LSH
   near-dup pairs (band buckets, never all-pairs) — the pair list is
-  COMMITTED as a manifest table (`<out>/pairs`): it feeds three
+  COMMITTED as a manifest table (`<out>/pairs`): it feeds two
   downstream stages and is the curation audit trail.
+- **clusters**: connected components over the pair list, once, as
+  ``(doc_id, label)`` — the label of each near-dup member is its
+  cluster's minimum doc_id. Both ``card`` and ``splits`` read it.
 - **card**: the per-source decision table (docs / exact dups /
   near-dup members / kept) committed as `<out>/card`.
 - **corpus**: the cleaned corpus (exact keepers) committed as
@@ -28,10 +38,13 @@ first-class pieces the query surface gates individually:
   input bytes stay re-servable byte-identical through later appends,
   deletes, compaction, and vacuum (prox_spark/txn.py pin-aware
   retention).
-- **register**: the corpus's derived artifacts (a per-source
-  materialized view + a doc_id value index) go into the artifact
-  registry and ``maintain_artifacts`` brings them current — later
-  churn is one `python -m prox_spark maintain --registry` away.
+- **mv** / **vidx**: the corpus's derived artifacts, built side by
+  side from the frozen corpus — a per-source materialized view
+  (`<out>/mv_source_chars`) and a doc_id value index
+  (`<out>/vidx_doc_id`).
+- **register**: both artifacts go into the artifact registry in one
+  commit and ``maintain_artifacts`` brings them current — later churn
+  is one `python -m prox_spark maintain --registry` away.
 
 Every stage runs under the O1-O4 pipeline semantics: retry with
 exponential backoff, downstream skip on failure, failure callbacks.
@@ -96,9 +109,12 @@ def run_llm_pipeline(
         splits/  split assignment          (manifest table)
         ws/      workspace txn log pinning (corpus, splits)
         registry/ derived-artifact registry (MV + value index)
+        mv_source_chars/  per-source materialized view
+        vidx_doc_id/      doc_id value index
 
-    Returns the per-stage results. The `freeze` stage's output is the
-    txn id; `register`'s is the maintain_artifacts report."""
+    Returns the per-stage results in stage order. The `freeze` stage's
+    output is the txn id; `register`'s is the maintain_artifacts
+    report."""
     from prox_spark.table import commit_snapshot, read_manifest, read_table
 
     pairs_t = os.path.join(out_dir, "pairs")
@@ -107,6 +123,8 @@ def run_llm_pipeline(
     splits_t = os.path.join(out_dir, "splits")
     ws = os.path.join(out_dir, "ws")
     registry = os.path.join(out_dir, "registry")
+    mv_t = os.path.join(out_dir, "mv_source_chars")
+    vidx_t = os.path.join(out_dir, "vidx_doc_id")
 
     def ingest(ctx) -> DataFrame:
         missing = [c for c in ("doc_id", "source", "text")
@@ -140,12 +158,15 @@ def run_llm_pipeline(
             arr.unpersist()
         return pairs_t
 
+    def clusters(ctx) -> DataFrame:
+        return min_label_clusters(
+            read_table(spark, ctx["signals"]).select("doc1", "doc2")
+        )
+
     def card(ctx) -> str:
         d = ctx["ingest"].withColumn("digest", F.md5("text"))
         owners = d.groupBy("digest").agg(F.min("doc_id").alias("keeper"))
-        labels = min_label_clusters(
-            read_table(spark, ctx["signals"]).select("doc1", "doc2")
-        )
+        labels = ctx["clusters"]
         # label attach is UN-hinted: cluster membership is small by
         # nature in a curated corpus, but a heavily duplicated crawl
         # makes it O(N) — AQE broadcasts only when it genuinely fits
@@ -178,9 +199,7 @@ def run_llm_pipeline(
         return corpus_t
 
     def splits(ctx) -> dict:
-        labels = min_label_clusters(
-            read_table(spark, ctx["signals"]).select("doc1", "doc2")
-        )
+        labels = ctx["clusters"]
         kept = read_table(spark, ctx["corpus"]).select("doc_id")
         assigned = (
             kept.join(labels, "doc_id", "left")
@@ -230,20 +249,25 @@ def run_llm_pipeline(
         return {"workspace": ws, "txn": txn,
                 "corpus_version": cv, "splits_version": sv}
 
-    def register(ctx) -> dict:
-        from prox_spark.artifacts import (
-            maintain_artifacts,
-            register_artifact,
-        )
+    def mv(ctx) -> str:
         from prox_spark.mv import create_mv
+
+        create_mv(spark, corpus_t, mv_t, ["source"], ["n_chars"])
+        return mv_t
+
+    def vidx(ctx) -> str:
         from prox_spark.table import build_value_index
 
-        mv_t = os.path.join(out_dir, "mv_source_chars")
-        vidx_t = os.path.join(out_dir, "vidx_doc_id")
-        create_mv(spark, corpus_t, mv_t, ["source"], ["n_chars"])
         build_value_index(spark, corpus_t, "doc_id", vidx_t)
-        register_artifact(spark, registry, "mv", corpus_t, mv_t)
-        register_artifact(spark, registry, "value_index", corpus_t, vidx_t)
+        return vidx_t
+
+    def register(ctx) -> dict:
+        from prox_spark.artifacts import maintain_artifacts, register_artifacts
+
+        register_artifacts(spark, registry, [
+            ("mv", corpus_t, ctx["mv"], None),
+            ("value_index", corpus_t, ctx["vidx"], None),
+        ])
         report = maintain_artifacts(spark, registry)
         return {"registry": registry, "report": report}
 
@@ -251,10 +275,13 @@ def run_llm_pipeline(
     (
         pipe.add_stage("ingest", ingest)
         .add_stage("signals", signals, depends_on=["ingest"])
-        .add_stage("card", card, depends_on=["signals"])
+        .add_stage("clusters", clusters, depends_on=["signals"])
+        .add_stage("card", card, depends_on=["ingest", "clusters"])
         .add_stage("corpus", corpus, depends_on=["ingest"])
-        .add_stage("splits", splits, depends_on=["signals", "corpus"])
+        .add_stage("splits", splits, depends_on=["signals", "clusters", "corpus"])
         .add_stage("freeze", freeze, depends_on=["corpus", "splits"])
-        .add_stage("register", register, depends_on=["freeze"])
+        .add_stage("mv", mv, depends_on=["freeze"])
+        .add_stage("vidx", vidx, depends_on=["freeze"])
+        .add_stage("register", register, depends_on=["mv", "vidx"])
     )
     return pipe.run()

@@ -594,8 +594,10 @@ def commit_delta(
     # session default, AQE off (each adaptive stage is a separate job,
     # and a sub-64MB merge pays ~0.2s of scheduling per stage for
     # nothing — measured 2x on sequential SCD-2 merges). Scoped
-    # set/restore; the table is single-writer by design, so no
-    # concurrent query observes the window. A commit that rewrites
+    # set/restore of SESSION conf: a query another thread runs in the
+    # window (a concurrent pipeline stage, say) is planned under it
+    # too. Its answer is unaffected — AQE and the shuffle width change
+    # plan shape, never results — only its sizing. A commit that rewrites
     # NOTHING (pure append — keep = all previous files) is excluded:
     # its size signal is the unknown new-data volume, not the zero
     # touched bytes, and squeezing a multi-GB append through 4

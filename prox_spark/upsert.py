@@ -198,7 +198,11 @@ def _collect_capped(df: DataFrame, cap: int = _KEY_SET_CAP) -> list | None:
     job: CollectLimit's default incremental strategy (1 → 4 → 16
     partitions...) launches up to four jobs for a batch spread over a
     32-partition feed, and per-job scheduling is exactly the fixed
-    per-merge cost sequential CDC pipelines pay T times."""
+    per-merge cost sequential CDC pipelines pay T times. The setting is
+    SESSION conf, held for the collect: a limit query another thread
+    plans in that window (a concurrent pipeline stage, say) scans all
+    its partitions at once too. Its answer is unaffected — the setting
+    changes how many partitions the first job scans, never the rows."""
     spark = df.sparkSession
     key = "spark.sql.limit.initialNumPartitions"
 

@@ -16,6 +16,7 @@ from prox_spark.artifacts import (
     list_artifacts,
     maintain_artifacts,
     register_artifact,
+    register_artifacts,
 )
 from prox_spark.table import (
     commit_delta,
@@ -126,6 +127,29 @@ def test_one_call_brings_every_artifact_current(spark):
     # a second call with nothing new: all noop
     again = maintain_artifacts(spark, reg)
     assert all(r["status"] == "noop" for r in again.values()), again
+
+
+def test_register_artifacts_is_one_registry_commit(spark):
+    """Several registrations land in ONE registry commit, re-registering
+    by artifact path like the one-entry call; a path named twice in
+    one call is refused."""
+    s = _scratch()
+    base, reg = f"{s}/base", f"{s}/registry"
+    commit_snapshot(spark, base, _docs(spark, 0, 10), stat_cols=["doc_id"])
+    register_artifact(spark, reg, "mv", base, f"{s}/mv")
+    v0 = int(read_manifest(spark, reg)["version"])
+    register_artifacts(spark, reg, [
+        ("mv", base, f"{s}/mv", {"note": "again"}),
+        ("value_index", base, f"{s}/vidx", None),
+    ])
+    assert int(read_manifest(spark, reg)["version"]) == v0 + 1
+    got = {e["artifact"]: (e["kind"], e["params"]) for e in list_artifacts(spark, reg)}
+    assert got == {f"{s}/mv": ("mv", {"note": "again"}),
+                   f"{s}/vidx": ("value_index", {})}
+    with pytest.raises(ValueError, match="twice"):
+        register_artifacts(spark, reg, [("mv", base, f"{s}/mv", None),
+                                        ("mv", base, f"{s}/mv", None)])
+    assert int(read_manifest(spark, reg)["version"]) == v0 + 1
 
 
 def test_error_isolation_and_loud_raise(spark):

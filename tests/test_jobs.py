@@ -182,9 +182,10 @@ def test_llm_pipeline_stage_failure_skips_downstream(spark, tmp_path):
     out = str(tmp_path / "bad")
     results = run_llm_pipeline(spark, bad, out)
     assert results["ingest"].status == "failed"
-    assert results["freeze"].status == "skipped"
-    assert results["register"].status == "skipped"
-    assert not os.path.exists(os.path.join(out, "ws"))
+    for stage in ("clusters", "freeze", "mv", "vidx", "register"):
+        assert results[stage].status == "skipped", stage
+    for d in ("ws", "registry", "mv_source_chars"):
+        assert not os.path.exists(os.path.join(out, d)), d
 
 
 def test_cli_llm_pipeline(spark, tmp_path, capsys):
