@@ -755,9 +755,12 @@ def _maintain_one(spark: SparkSession, ent: dict) -> dict:
         # the delta append and the bumped coverage publish in ONE
         # manifest rename: a crash before it replays cleanly, a crash
         # after it replays as a noop — the signed delta can never be
-        # appended twice (which would silently double-count tf)
+        # appended twice (which would silently double-count tf). The
+        # append is based on the manifest it carries over: a commit
+        # landing on ``art`` after that read rebases in, not out
         commit_delta(
             spark, art, delta, list(prev["files"]),
+            base_version=int(prev["version"]), base_manifest=prev,
             update_key_ranges={},
             index_of={"base": base, "version": head},
         )

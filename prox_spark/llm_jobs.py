@@ -6,7 +6,7 @@ reference's OWN workload transposed, this one is the workload a
 100 TB training-data pipeline actually runs, built from the same
 first-class pieces the query surface gates individually:
 
-    ingest -> signals -> clusters -> card
+    ingest -> signals -> clusters -> card (card also reads corpus)
        |                     \\
        \\-> corpus ------------> splits -> freeze -> mv ---\\
                                                  \\-> vidx -> register
@@ -14,7 +14,8 @@ first-class pieces the query surface gates individually:
 Branches run concurrently (the runner starts a stage as soon as its
 dependencies have succeeded): ``corpus`` beside ``signals`` and
 ``clusters``, ``card`` beside ``splits``/``freeze``, ``mv`` beside
-``vidx``.
+``vidx``. ``card`` also waits for ``corpus`` (it counts the kept docs
+there), which keeps it off the critical path all the same.
 
 - **signals**: exact-dup keepers (md5 digest groups) + MinHash-LSH
   near-dup pairs (band buckets, never all-pairs) — the pair list is
@@ -24,9 +25,13 @@ dependencies have succeeded): ``corpus`` beside ``signals`` and
   ``(doc_id, label)`` — the label of each near-dup member is its
   cluster's minimum doc_id. Both ``card`` and ``splits`` read it.
 - **card**: the per-source decision table (docs / exact dups /
-  near-dup members / kept) committed as `<out>/card`.
-- **corpus**: the cleaned corpus (exact keepers) committed as
-  `<out>/corpus` — file-granular manifest table, doc_id-clustered.
+  near-dup members / kept) committed as `<out>/card`. ``n_kept`` is
+  counted from the committed corpus and ``n_exact_dup`` is
+  ``n_docs − n_kept``, so the digest aggregation runs once per
+  curation, in ``corpus``.
+- **corpus**: the cleaned corpus (exact keepers — the minimum doc_id
+  of each md5 digest group) committed as `<out>/corpus` —
+  file-granular manifest table, doc_id-clustered.
 - **splits**: leakage-free train/val/test assignment — each kept doc
   hashes by its DUP-CLUSTER REPRESENTATIVE (connected components over
   the pair list; singletons represent themselves), so near-duplicate
@@ -164,24 +169,29 @@ def run_llm_pipeline(
         )
 
     def card(ctx) -> str:
-        d = ctx["ingest"].withColumn("digest", F.md5("text"))
-        owners = d.groupBy("digest").agg(F.min("doc_id").alias("keeper"))
-        labels = ctx["clusters"]
-        # label attach is UN-hinted: cluster membership is small by
-        # nature in a curated corpus, but a heavily duplicated crawl
-        # makes it O(N) — AQE broadcasts only when it genuinely fits
-        flags = (
-            d.join(owners, "digest")
-            .withColumn("exact_dup", F.col("doc_id") > F.col("keeper"))
-            .join(labels, "doc_id", "left")
-            .withColumn("near_dup_member", F.col("label").isNotNull())
+        # a NULL-text doc has no digest, so corpus never keeps it and
+        # the card leaves it out as well. The label attach is
+        # UN-hinted: cluster membership is small by nature in a
+        # curated corpus, but a heavily duplicated crawl makes it
+        # O(N) — AQE broadcasts only when it genuinely fits
+        kept = (
+            read_table(spark, ctx["corpus"])
+            .groupBy(F.col("source").alias("_src"))
+            .agg(F.count(F.lit(1)).alias("n_kept"))
         )
-        n_if = lambda c: F.sum(F.when(c, 1).otherwise(0)).cast("long")  # noqa: E731
-        out = flags.groupBy("source").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            n_if(F.col("exact_dup")).alias("n_exact_dup"),
-            n_if(F.col("near_dup_member")).alias("n_near_dup"),
-            n_if(~F.col("exact_dup")).alias("n_kept"),
+        # null-safe: a NULL source is a group like any other; a source
+        # whose every doc duplicates another source's keeper has none
+        n_kept = F.coalesce("n_kept", F.lit(0)).cast("long")
+        out = (
+            ctx["ingest"].filter(F.col("text").isNotNull())
+            .join(ctx["clusters"], "doc_id", "left")
+            .groupBy("source")
+            .agg(F.count(F.lit(1)).alias("n_docs"),
+                 F.count("label").alias("n_near_dup"))
+            .join(kept, F.col("source").eqNullSafe(F.col("_src")), "left")
+            .select("source", "n_docs",
+                    (F.col("n_docs") - n_kept).alias("n_exact_dup"),
+                    "n_near_dup", n_kept.alias("n_kept"))
         )
         commit_snapshot(spark, card_t, out, stat_cols=["source"], n_files=1)
         return card_t
@@ -276,8 +286,8 @@ def run_llm_pipeline(
         pipe.add_stage("ingest", ingest)
         .add_stage("signals", signals, depends_on=["ingest"])
         .add_stage("clusters", clusters, depends_on=["signals"])
-        .add_stage("card", card, depends_on=["ingest", "clusters"])
         .add_stage("corpus", corpus, depends_on=["ingest"])
+        .add_stage("card", card, depends_on=["ingest", "clusters", "corpus"])
         .add_stage("splits", splits, depends_on=["signals", "clusters", "corpus"])
         .add_stage("freeze", freeze, depends_on=["corpus", "splits"])
         .add_stage("mv", mv, depends_on=["freeze"])

@@ -86,7 +86,17 @@ def read_manifest(
     consumer sees the classic {files, stats, ...} shape regardless of
     layout (the "chunks" key is kept for chunk-granular commits).
     ``ref`` selects a branch's manifest line instead of main's."""
-    versions = _manifest_versions(spark, table_path, ref)
+    return _manifest_at(
+        spark, table_path, _manifest_versions(spark, table_path, ref),
+        version, ref,
+    )
+
+
+def _manifest_at(
+    spark: SparkSession, table_path: str, versions: list[int],
+    version: int | None, ref: str = "main", chunk_filter=None,
+) -> dict:
+    """:func:`read_manifest` over an already-made ``versions`` listing."""
     if not versions:
         raise ValueError(f"{table_path} has no manifests for ref {ref!r}")
     v = versions[-1] if version is None else version
@@ -95,7 +105,8 @@ def read_manifest(
             f"version {v} not in {versions} for {table_path} (ref {ref!r})"
         )
     return _assemble(
-        spark, table_path, _read_manifest_file(spark, table_path, v, ref)
+        spark, table_path, _read_manifest_file(spark, table_path, v, ref),
+        chunk_filter,
     )
 
 
@@ -119,15 +130,8 @@ def read_manifest_pruned(
     ride on the snapshot doc, so merge-on-read masking still applies
     to every file actually read. Classic tables return the full
     manifest."""
-    versions = _manifest_versions(spark, table_path)
-    if not versions:
-        raise ValueError(f"{table_path} is not a manifest table")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions} for {table_path}")
-    doc = _read_manifest_file(spark, table_path, v)
-    return _assemble(
-        spark, table_path, doc,
+    return _manifest_at(
+        spark, table_path, _manifest_versions(spark, table_path), version,
         chunk_filter=lambda e: M.overlaps(e.get("ranges"), key_ranges),
     )
 
@@ -272,6 +276,21 @@ def _read_files(
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
+def _read_rows(
+    spark: SparkSession, table_path: str, manifest: dict,
+    files: list[str] | None = None,
+) -> DataFrame:
+    """The rows of ``files`` (default: every file) of an assembled
+    manifest; a legacy single-snapshot-dir manifest (round-3 format)
+    reads its data dir whole."""
+    if "files" in manifest:
+        return _read_files(
+            spark, table_path, manifest,
+            manifest["files"] if files is None else files,
+        )
+    return read_parquet(spark, f"{table_path}/{manifest['data']}")
+
+
 def read_table(
     spark: SparkSession, table_path: str, version: int | None = None,
     ref: str = "main",
@@ -279,16 +298,17 @@ def read_table(
     """Read the table at its latest committed version (or a pinned
     historical ``version``) on ``ref`` (main, or a branch created by
     :func:`create_branch`). Falls back to a plain parquet read for
-    legacy directories that predate the manifest log."""
-    if ref == "main" and not is_manifest_table(spark, table_path):
+    legacy directories that predate the manifest log. One manifest
+    listing serves both the format probe and the version resolve."""
+    versions = _manifest_versions(spark, table_path, ref)
+    if ref == "main" and not versions:
         if version is not None:
             raise ValueError(f"{table_path} is not a manifest table")
         return read_parquet(spark, table_path)
-    manifest = read_manifest(spark, table_path, version, ref)
-    if "files" in manifest:
-        return _read_files(spark, table_path, manifest, manifest["files"])
-    # legacy single-snapshot-dir manifest (round-3 format)
-    return read_parquet(spark, f"{table_path}/{manifest['data']}")
+    return _read_rows(
+        spark, table_path,
+        _manifest_at(spark, table_path, versions, version, ref),
+    )
 
 
 def _write_json(jvm, fs, path: str, doc: dict):
@@ -494,13 +514,22 @@ def commit_delta(
     with a new merge-on-read delete, is a conflict — those rows were
     merged from a stale view.
 
+    ``base_manifest``: the assembled manifest of ``base_version`` the
+    caller already read — the commit derives its carry-over and
+    conflict scope from it instead of resolving the table again, so
+    a merge, delete or compaction commits against exactly the
+    manifest its inputs came from. Omitted, it is read here.
+
     CHUNK-LEVEL merges: a caller that chunk-pruned its scope (read
     only the chunk files overlapping the batch keys) passes the
     PARTIAL manifest it read as ``base_manifest`` and the unread,
     provably-disjoint chunk entries as ``carry_chunks`` — those carry
     into the next version by reference without this commit ever
     naming their files, so per-merge metadata IO is O(matching
-    chunks) on both the read and the write side.
+    chunks) on both the read and the write side. Whether the base is
+    partial follows ``carry_chunks`` (not ``base_manifest``): only a
+    partial base keeps records that may concern unread files, so a
+    full base still retires renames no live file predates.
 
     ``ref``: commit to a BRANCH's manifest line instead of main's —
     the write-audit-publish staging flow (:func:`create_branch` /
@@ -526,14 +555,16 @@ def commit_delta(
     latest = versions[-1] if versions else 0
     if base_version is None:
         base_version = latest
-    if base_manifest is not None:
-        prev = base_manifest
-    else:
-        prev = (
+
+    def _read_base() -> dict:
+        return (
             read_manifest(spark, table_path, base_version, ref)
             if base_version
             else {}
         )
+
+    partial = carry_chunks is not None
+    prev = _read_base() if base_manifest is None else base_manifest
     if stat_cols is None:
         stat_cols = prev.get("stat_cols") or []
     if cluster_curve is None:
@@ -776,15 +807,7 @@ def commit_delta(
         # chunks' files as concurrent adds. Assembled lazily — only a
         # lost publish race pays for it.
         if not base_full_cache:
-            base_full_cache.append(
-                prev
-                if base_manifest is None
-                else (
-                    read_manifest(spark, table_path, base_version, ref)
-                    if base_version
-                    else {}
-                )
-            )
+            base_full_cache.append(_read_base() if partial else prev)
         return base_full_cache[0]
     while True:
         v = cur_v + 1
@@ -806,7 +829,7 @@ def commit_delta(
             # entries cover the formerly-disjoint chunks — passing
             # carry_chunks again would double-list them
             carry_entries=carry_chunks if first else None,
-            partial=first and base_manifest is not None,
+            partial=first and partial,
             cluster_curve=cluster_curve, index_of=index_of,
             data_change=data_change, extra_meta=extra_meta,
         )
@@ -1438,10 +1461,7 @@ def commit_delete_file(
     touches those files (both fold pending deletes in and drop the
     entry via :func:`commit_delta`'s carry-forward). Returns the new
     version."""
-    versions = _manifest_versions(spark, table_path)
-    if not versions:
-        raise ValueError(f"{table_path} is not a manifest table")
-    prev = read_manifest(spark, table_path, versions[-1])
+    prev = read_manifest(spark, table_path)
     if "files" not in prev:
         raise ValueError(
             f"{table_path} predates file-granular manifests; use the "
@@ -1451,14 +1471,14 @@ def commit_delete_file(
     unknown = [t for t in targets if t not in live]
     if unknown:
         raise ValueError(f"delete targets not in current version: {unknown}")
-    v = versions[-1] + 1
+    v = int(prev["version"]) + 1
     del_rel = f"{DATA_DIR}/del-{v:08d}-{uuid.uuid4().hex[:8]}"
     # one part file: a deletion batch is driver-small by nature
     keys_df.select(*keys).distinct().coalesce(1).write.mode("error").parquet(
         f"{table_path}/{del_rel}"
     )
     entry = {"file": del_rel, "keys": list(keys), "targets": list(targets)}
-    cur_v, cur = versions[-1], prev
+    cur_v, cur = v - 1, prev
     for attempt in range(6):
         # the data layout is untouched: every chunk carries by
         # reference, so the commit writes one key file plus a snapshot
@@ -2174,10 +2194,15 @@ def compact_table(
     manifest's stat columns) into range-disjoint files, after which
     ``vacuum`` can retire every pre-compaction dir. Readers are never
     disturbed: this is an ordinary atomic commit. Returns the new
-    version."""
+    version.
+
+    The rows come from the manifest the compaction resolved, and the
+    commit rebases from that same manifest: reading the latest version
+    again would fold in an append that landed between the two reads
+    and then keep that append's files a second time on rebase."""
     manifest = read_manifest(spark, table_path)
     cols = stat_cols if stat_cols is not None else (manifest.get("stat_cols") or [])
-    df = read_table(spark, table_path)
+    df = _read_rows(spark, table_path, manifest)
     nf = n_files if n_files is not None else 8
     if not cols:
         # no clustering columns: plain file-count compaction
@@ -2191,7 +2216,8 @@ def compact_table(
     # any compacted input still conflicts via the rewritten-set check.
     return commit_delta(
         spark, table_path, df, [], stat_cols=cols, n_files=nf,
-        base_version=manifest.get("version"), update_key_ranges={},
+        base_version=manifest.get("version"), base_manifest=manifest,
+        update_key_ranges={},
         # None: cluster_curve inherits from the manifest (zorder stays
         # zorder); an explicit value re-clusters onto a new curve — the
         # OPTIMIZE ZORDER / back-to-range maintenance entry point
@@ -2262,7 +2288,8 @@ def compact_small_files(
     commit_delta(
         spark, table_path, df, big, stat_cols=cols,
         n_files=n_out if pin else None,
-        base_version=manifest.get("version"), update_key_ranges={},
+        base_version=manifest.get("version"), base_manifest=manifest,
+        update_key_ranges={},
         data_change=False,  # read-only rewrite: the change feed skips it
     )
     return len(small), len(big)

@@ -9,18 +9,29 @@ the day's changed rows into the standing table instead. Without
 adopting Delta/Iceberg/Hudi, the parquet-native pattern is
 copy-on-write — but copy-on-write of WHAT? Round 3 rewrote the whole
 table per merge (snapshot-granular commits); this version rewrites
-only the files whose key range intersects the update batch:
+only the files whose key range intersects the update batch.
 
-1. one tiny aggregate over the update batch yields its per-key-column
-   min/max;
-2. the current manifest's per-file footer stats split the table into
-   TOUCHED files (range overlap — could hold a changed key) and
+Every keyed write (the merges, ``apply_changes``, both deletes, and
+the materialized-view fold in :mod:`prox_spark.mv`) goes through one
+front end, :func:`_merge_scope`, which does each step once:
+
+1. ONE resolution: one manifest listing and one read of the latest
+   manifest (chunk-pruned on a chunked table);
+2. ONE key landing: the batch's distinct keys are collected
+   driver-side when they fit the cap (skipped when the caller already
+   landed them, and on tables of ≤2 files, where pruning buys
+   nothing);
+3. ONE pruning step over that manifest's per-file footer stats: key
+   set → chunks → files (or per-column min/max ranges past the cap)
+   splits the table into TOUCHED files (could hold a batch key) and
    UNTOUCHED files (provably hold none);
-3. the merge logic runs over the touched subset only:
+4. the merge logic runs over the touched subset only:
        new_files = merge(touched, updates)
-4. :func:`prox_spark.table.commit_delta` publishes
-   untouched ∪ new_files as the next version in one atomic manifest
-   rename.
+5. :func:`prox_spark.table.commit_delta` publishes untouched ∪
+   new_files as the next version in one atomic manifest rename,
+   against the manifest step 1 read — a concurrent commit since then
+   rebases in (or conflicts loudly), never slips between the read and
+   the commit.
 
 Because commits cluster data by the merge keys (range partition +
 sort + per-file min/max + bloom filters), steady-state merge cost is
@@ -42,30 +53,24 @@ assumption, as for all merges here).
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from prox_spark.io import read_parquet
 from prox_spark.local_frames import values_df_like
 from prox_spark.table import (
-    _read_files,
+    _assemble,
+    _fs,
+    _manifest_versions,
+    _read_manifest_file,
+    _read_rows,
     commit_delta,
     commit_snapshot,
-    is_manifest_table,
-    read_manifest,
-    read_table,
+    split_chunks_by_key_sets,
+    split_files_by_key_ranges,
+    split_files_by_key_sets,
 )
-
-
-def _current(spark: SparkSession, table_path: str) -> DataFrame | None:
-    """The table's current snapshot, or None if the table is absent."""
-    if is_manifest_table(spark, table_path):
-        return read_table(spark, table_path)
-    jvm = spark._jvm  # noqa: SLF001 - hadoop FS side channel
-    path = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    if not fs.exists(path):
-        return None
-    return read_parquet(spark, table_path)  # legacy plain dir
 
 
 def _drop_legacy_files(spark: SparkSession, table_path: str) -> None:
@@ -74,12 +79,16 @@ def _drop_legacy_files(spark: SparkSession, table_path: str) -> None:
     log and snapshot dirs)."""
     from prox_spark.table import DATA_DIR, MANIFEST_DIR
 
-    jvm = spark._jvm  # noqa: SLF001
-    path = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    _, fs, path = _fs(spark, table_path)
     for st in fs.listStatus(path):
         if st.getPath().getName() not in (DATA_DIR, MANIFEST_DIR):
             fs.delete(st.getPath(), True)
+
+
+def _check_keys(scope, keys: list[str]) -> None:
+    missing = [k for k in keys if k not in scope.touched.columns]
+    if missing:
+        raise ValueError(f"delete keys not in table schema: {missing}")
 
 
 def _check_schema(current: DataFrame, updates: DataFrame, what: str) -> None:
@@ -121,6 +130,16 @@ def _key_ranges(key_df: DataFrame, keys: list[str]) -> dict[str, tuple]:
         aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
     row = key_df.agg(*aggs).collect()[0]
     return {k: (row[f"__lo_{k}"], row[f"__hi_{k}"]) for k in keys}
+
+
+def _key_values(rows, keys: list[str]) -> tuple[dict, dict | None]:
+    """Landed key rows as (sorted distinct non-NULL values per key
+    column, their per-column (min, max) — the commit's conflict scope —
+    or None when no column has a value)."""
+    vals = {
+        k: sorted({r[k] for r in rows if r[k] is not None}) for k in keys
+    }
+    return vals, ({k: (v[0], v[-1]) for k, v in vals.items() if v} or None)
 
 
 # driver-side bound on the collected distinct-key list used for file
@@ -178,8 +197,9 @@ def _row_width_bound(schema) -> int | None:
     return max(total, 48)
 
 
-def _collect_capped(df: DataFrame, cap: int = _KEY_SET_CAP) -> list | None:
-    """``df``'s rows when there are at most ``cap`` of them AND the
+def _collect_capped(df: DataFrame, cap: int | None = None) -> list | None:
+    """``df``'s rows when there are at most ``cap`` (default: the
+    key-set cap, read at call time) of them AND the
     batch is plausibly small in BYTES, else None (batch too big to
     land driver-side — caller keeps the distributed path).
 
@@ -203,6 +223,8 @@ def _collect_capped(df: DataFrame, cap: int = _KEY_SET_CAP) -> list | None:
     plans in that window (a concurrent pipeline stage, say) scans all
     its partitions at once too. Its answer is unaffected — the setting
     changes how many partitions the first job scans, never the rows."""
+    if cap is None:
+        cap = _KEY_SET_CAP
     spark = df.sparkSession
     key = "spark.sql.limit.initialNumPartitions"
 
@@ -251,104 +273,81 @@ def _collect_capped(df: DataFrame, cap: int = _KEY_SET_CAP) -> list | None:
     return rows
 
 
-def _prune_files(manifest: dict, key_df: DataFrame, keys: list[str],
-                 key_rows: list | None = None, force_ranges: bool = False):
-    """(touched_files, keep_files, key_ranges) for the merge: exact
-    key-SET pruning for small batches (the CDC norm — scattered keys
-    that a min/max range test couldn't prune at all), per-column
-    min/max range pruning beyond the cap. ``key_ranges`` is the update
-    batch's per-column min/max — the commit's conflict scope for
-    optimistic concurrency — or None when it wasn't derived (the
-    tiny-table fast path skips the key job entirely → strict-mode
-    commit).
-
-    ``key_rows``: the batch's rows already collected by the caller
-    (any iterable of Rows carrying the key columns). Skips this
-    function's own distinct-collect job — the per-merge fixed cost
-    that dominates sequential CDC pipelines."""
-    from prox_spark.table import split_files_by_key_ranges, split_files_by_key_sets
-
-    files = manifest.get("files", [])
-    if key_rows is not None:
-        vals = {
-            k: sorted({r[k] for r in key_rows if r[k] is not None})
-            for k in keys
-        }
-        ranges = {k: (v[0], v[-1]) for k, v in vals.items() if v}
-        if len(files) <= 2:
-            return list(files), [], (ranges or None)
-        touched, keep = split_files_by_key_sets(manifest, vals)
-        return touched, keep, (ranges or None)
-    if len(files) <= 2:
-        # nothing worth pruning: skip the key-collect job entirely
-        # (small tables — e.g. AQE-coalesced dimensions — hit this on
-        # every merge of a sequential pipeline)
-        return list(files), [], None
-    if force_ranges:
-        # caller already proved the key set exceeds the cap — don't
-        # re-run the identical distinct-collect just to re-learn it
-        ranges = _key_ranges(key_df, keys)
-        touched, keep = split_files_by_key_ranges(manifest, ranges)
-        return touched, keep, ranges
-    rows = key_df.select(*keys).distinct().limit(_KEY_SET_CAP + 1).collect()
-    if len(rows) <= _KEY_SET_CAP:
-        vals = {
-            k: sorted({r[k] for r in rows if r[k] is not None}) for k in keys
-        }
-        ranges = {k: (v[0], v[-1]) for k, v in vals.items() if v}
-        touched, keep = split_files_by_key_sets(manifest, vals)
-        return touched, keep, (ranges or None)
-    ranges = _key_ranges(key_df, keys)
-    touched, keep = split_files_by_key_ranges(manifest, ranges)
-    return touched, keep, ranges
-
-
+@dataclass
 class _MergeScope:
-    """The slice of the table a key-based merge must actually touch.
+    """The slice of the table a keyed write must actually touch.
 
-    ``touched``  — DataFrame of rows from files whose key range
-                   intersects the update batch (the merge input);
-    ``keep``     — file names provably free of updated keys, carried
-                   into the next version verbatim;
-    ``commit(df)`` — publish ``keep`` + newly-written ``df``.
+    ``touched``       — DataFrame of rows from files that could hold a
+                        batch key (the merge input);
+    ``touched_files`` — those files' names;
+    ``keep``          — file names provably free of batch keys, carried
+                        into the next version verbatim;
+    ``manifest``      — the manifest the scope read (chunk-pruned when
+                        the table is chunked), or None for a legacy
+                        plain dir;
+    ``key_values``    — sorted distinct landed key values per column,
+                        or None when the keys were not landed;
+    ``key_frame()``   — the batch's distinct key tuples;
+    ``commit(df)``    — publish ``keep`` + newly-written ``df`` against
+                        ``manifest``.
 
     For legacy plain dirs / stat-less manifests, ``touched`` is the
     whole table and ``keep`` is empty — a full rewrite, exactly the
     pre-file-granular behavior."""
 
-    def __init__(self, spark, table_path, keys, touched, keep, migrated,
-                 stat_cols=None, base_version=None, key_ranges=None,
-                 carry_chunks=None, base_manifest=None):
-        self.spark = spark
-        self.table_path = table_path
-        self.keys = keys
-        self.touched = touched
-        self.keep = keep
-        self._migrated = migrated
-        self._stat_cols = list(stat_cols or [])
-        self._base_version = base_version
-        self._key_ranges = key_ranges
-        self._carry_chunks = carry_chunks
-        self._base_manifest = base_manifest
+    spark: SparkSession
+    table_path: str
+    key_df: DataFrame
+    keys: list
+    touched: DataFrame
+    touched_files: list = field(default_factory=list)
+    keep: list = field(default_factory=list)
+    manifest: dict | None = None
+    key_rows: list | None = None
+    key_values: dict | None = None
+    key_ranges: dict | None = None
+    carry_chunks: list | None = None
+
+    def key_frame(self) -> DataFrame:
+        """The batch's distinct key tuples. Landed keys become a VALUES
+        relation (pure-JVM LocalRelation — not the createDataFrame
+        Python-RDD scan an earlier round measured as a loss), which
+        spares each consumer a re-scan of the batch lineage plus its
+        distinct shuffle; temporal/decimal keys fall back to the
+        distributed distinct."""
+        dset = self.key_df.select(*self.keys).distinct()
+        if self.key_rows is None:
+            return dset
+        try:
+            return values_df_like(
+                self.spark,
+                # dedupe preserving landed order (sorted() would trip
+                # over NULL keys)
+                list(dict.fromkeys(
+                    tuple(r[k] for k in self.keys) for r in self.key_rows
+                )),
+                dset.schema,
+            )
+        except TypeError:
+            return dset
 
     def commit(self, merged: DataFrame, extra_meta: dict | None = None) -> None:
+        m = self.manifest or {}
         # preserve the table's declared stat columns (they may be a
         # SUPERSET of this merge's keys — committing just the keys
         # would silently shrink them and break file pruning for later
         # merges on the dropped columns); keys not yet tracked append
-        cols = [
-            *self._stat_cols,
-            *[k for k in self.keys if k not in self._stat_cols],
-        ]
+        stat_cols = m.get("stat_cols") or []
+        cols = [*stat_cols, *[k for k in self.keys if k not in stat_cols]]
         commit_delta(
             self.spark, self.table_path, merged, self.keep, stat_cols=cols,
-            base_version=self._base_version,
-            update_key_ranges=self._key_ranges,
-            carry_chunks=self._carry_chunks,
-            base_manifest=self._base_manifest,
+            base_version=m.get("version"),
+            update_key_ranges=self.key_ranges,
+            carry_chunks=self.carry_chunks,
+            base_manifest=self.manifest,
             extra_meta=extra_meta,
         )
-        if self._migrated:
+        if self.manifest is None:
             _drop_legacy_files(self.spark, self.table_path)
 
 
@@ -360,93 +359,82 @@ def _merge_scope(
     key_rows: list | None = None,
     prune: bool = True,
 ) -> _MergeScope | None:
-    """Build the merge scope, or None when the table doesn't exist.
-    ``key_rows``: pre-collected batch rows (see :func:`_prune_files`).
-    ``prune=False`` forces a FULL-TABLE scope (touched = every row,
-    keep = nothing) even when stats could prune — required when the
-    batch keys contain NULLs, which footer min/max stats cannot
-    locate (a pruned scope would miss the NULL-keyed group's file and
-    a merge would duplicate that group).
+    """Resolve the table once and build the scope of a keyed write
+    over ``key_df``'s keys, or None when the table doesn't exist.
 
-    On a CHUNKED table with a driver-small batch, the scope is
-    CHUNK-PRUNED: only the chunk files whose recorded ranges overlap
-    the batch keys are read; the provably-disjoint entries carry into
-    the commit by reference (commit_delta's ``carry_chunks``) — both
-    the metadata read and write of a merge are then O(matching
-    chunks), not O(live files)."""
-    if is_manifest_table(spark, table_path):
-        from prox_spark.table import (
-            _assemble,
-            _read_manifest_file,
-            split_chunks_by_key_sets,
-            split_files_by_key_sets,
-            table_versions,
-        )
+    ``key_rows``: the batch's rows already landed by the caller (any
+    Rows carrying the key columns) — skips the scope's own key-landing
+    job, the per-merge fixed cost that dominates sequential CDC
+    pipelines. ``prune=False`` forces a FULL-TABLE scope (touched =
+    every row, keep = nothing) even when stats could prune — required
+    when the batch keys contain NULLs, which footer min/max stats
+    cannot locate (a pruned scope would miss the NULL-keyed group's
+    file and a merge would duplicate that group).
 
-        latest = table_versions(spark, table_path)[-1]
-        doc = _read_manifest_file(spark, table_path, latest)
-        stat_cols = doc.get("stat_cols") or []
-        base_v = doc.get("version", latest)
-        if not prune:
-            return _MergeScope(
-                spark, table_path, keys,
-                read_table(spark, table_path), [], False, stat_cols, base_v,
-                None,
-            )
-        over_cap = False
-        if "chunks" in doc and set(keys) <= set(stat_cols):
-            if key_rows is None:
-                rows = (
-                    key_df.select(*keys).distinct()
-                    .limit(_KEY_SET_CAP + 1).collect()
-                )
-                if len(rows) <= _KEY_SET_CAP:
-                    key_rows = rows
-                else:
-                    # bulk merge: remember the key set overflowed so
-                    # the fallback below goes straight to range
-                    # pruning instead of re-running this exact
-                    # distinct-collect job
-                    over_cap = True
-            if key_rows is not None:
-                vals = {
-                    k: sorted({r[k] for r in key_rows if r[k] is not None})
-                    for k in keys
-                }
-                ranges = {k: (v[0], v[-1]) for k, v in vals.items() if v}
-                overlap, disjoint = split_chunks_by_key_sets(doc, vals)
-                partial = _assemble(
-                    spark, table_path, {**doc, "chunks": overlap}
-                )
-                touched_files, keep_loose = split_files_by_key_sets(
-                    partial, vals
-                )
-                touched = _read_files(
-                    spark, table_path, partial, touched_files
-                )
-                return _MergeScope(
-                    spark, table_path, keys, touched, keep_loose, False,
-                    stat_cols, base_v, ranges or None,
-                    carry_chunks=disjoint, base_manifest=partial,
-                )
-        manifest = _assemble(spark, table_path, doc)
-        if "files" in manifest and set(keys) <= set(stat_cols):
-            touched_files, keep, ranges = _prune_files(
-                manifest, key_df, keys, key_rows, force_ranges=over_cap
-            )
-            touched = _read_files(spark, table_path, manifest, touched_files)
-            return _MergeScope(
-                spark, table_path, keys, touched, keep, False, stat_cols,
-                base_v, ranges,
-            )
+    Pruning is exact key-SET pruning for a batch whose distinct keys
+    land (the CDC norm — scattered keys that a min/max range test
+    couldn't prune at all), per-column min/max range pruning beyond
+    the cap. On a CHUNKED table with landed keys only the chunk files
+    whose recorded ranges overlap the batch keys are read; the
+    provably-disjoint entries carry into the commit by reference
+    (commit_delta's ``carry_chunks``) — both the metadata read and
+    write of a merge are then O(matching chunks), not O(live files).
+
+    The commit's conflict scope is the batch's per-column key range
+    when the keys landed or were range-aggregated, else None
+    (strict-mode commit: full scopes, and small tables whose keys were
+    not landed)."""
+    versions = _manifest_versions(spark, table_path)
+    if not versions:
+        _, fs, path = _fs(spark, table_path)
+        if not fs.exists(path):
+            return None
+        # legacy plain dir: migrated by the first commit
         return _MergeScope(
-            spark, table_path, keys, read_table(spark, table_path), [], False,
-            stat_cols, base_v, None,
+            spark, table_path, key_df, keys, read_parquet(spark, table_path),
+            key_rows=key_rows,
         )
-    current = _current(spark, table_path)
-    if current is None:
-        return None
-    return _MergeScope(spark, table_path, keys, current, [], True)
+    doc = _read_manifest_file(spark, table_path, versions[-1])
+    doc.setdefault("version", versions[-1])
+    prunable = (
+        prune
+        and ("files" in doc or "chunks" in doc)
+        and set(keys) <= set(doc.get("stat_cols") or [])
+    )
+    # nothing worth pruning on a table of ≤2 files: no key-landing job
+    # (small tables — e.g. AQE-coalesced dimensions — hit this on
+    # every merge of a sequential pipeline)
+    small = len(doc.get("files", ())) <= 2 and "chunks" not in doc
+    if prunable and not small and key_rows is None:
+        key_rows = _collect_capped(key_df.select(*keys).distinct())
+    vals, ranges = (
+        _key_values(key_rows, keys) if key_rows is not None else (None, None)
+    )
+    carry = None
+    if prunable and vals is not None and "chunks" in doc:
+        overlap, carry = split_chunks_by_key_sets(doc, vals)
+        doc = {**doc, "chunks": overlap}
+    manifest = _assemble(spark, table_path, doc)
+    files = manifest.get("files", [])
+    if not prunable:
+        touched_files, keep, ranges = files, [], None
+    elif small:
+        touched_files, keep = files, []
+    elif vals is not None:
+        touched_files, keep = split_files_by_key_sets(manifest, vals)
+    else:
+        # the key set overflowed the cap: a bulk merge, where min/max
+        # range pruning (one tiny aggregate, no collect) is the right
+        # granularity anyway
+        ranges = _key_ranges(key_df, keys)
+        touched_files, keep = split_files_by_key_ranges(manifest, ranges)
+    return _MergeScope(
+        spark, table_path, key_df, keys,
+        _read_rows(spark, table_path, manifest, touched_files),
+        touched_files=touched_files, keep=keep, manifest=manifest,
+        key_rows=key_rows, key_values=vals, key_ranges=ranges,
+        carry_chunks=carry,
+    )
 
 
 def upsert_parquet(
@@ -499,14 +487,11 @@ def delete_keys(
     count is one semi-join over that subset (not a before/after
     full-table count), and the deletion set is small by nature, so AQE
     broadcasts it."""
-    current = _current(spark, table_path)
-    if current is None:
-        raise ValueError(f"no table at {table_path}")
-    missing = [k for k in keys if k not in current.columns]
-    if missing:
-        raise ValueError(f"delete keys not in table schema: {missing}")
     dset = keys_df.select(*keys).distinct()
     scope = _merge_scope(spark, table_path, dset, keys)
+    if scope is None:
+        raise ValueError(f"no table at {table_path}")
+    _check_keys(scope, keys)
     n_removed = scope.touched.join(dset, keys, "left_semi").count()
     scope.commit(scope.touched.join(dset, keys, "left_anti"))
     return n_removed
@@ -533,45 +518,31 @@ def delete_keys_mor(
     Returns the number of LIVE rows the delete removed (rows already
     masked by an earlier pending delete don't recount). A delete that
     matches nothing commits nothing. Requires a file-granular manifest
-    table (the copy-on-write path handles legacy layouts)."""
-    from prox_spark.table import commit_delete_file, is_manifest_table
+    table (the copy-on-write path handles legacy layouts).
 
-    if not is_manifest_table(spark, table_path):
+    The scope supplies everything: the targets are its touched files,
+    the count and the key file read its key frame, and the landed key
+    values give commit_delete_file's CAS the key scope it needs to
+    prove concurrently-added files disjoint on a lost race."""
+    from prox_spark.table import commit_delete_file
+
+    scope = _merge_scope(spark, table_path, keys_df, keys)
+    if scope is None or scope.manifest is None:
         raise ValueError(f"no manifest table at {table_path}")
-    manifest = read_manifest(spark, table_path)
-    if "files" not in manifest:
+    if "files" not in scope.manifest:
         raise ValueError(
             f"{table_path} predates file-granular manifests; use delete_keys"
         )
-    schema_cols = {f["name"] for f in manifest["schema"]["fields"]}
-    missing = [k for k in keys if k not in schema_cols]
-    if missing:
-        raise ValueError(f"delete keys not in table schema: {missing}")
-    dset = keys_df.select(*keys).distinct()
-    # land the (small-by-nature) key set once: it feeds the target
-    # prune AND gives commit_delete_file's CAS the key scope it needs
-    # to prove concurrently-added files disjoint on a lost race
-    key_rows = _collect_capped(dset)
-    key_vals = (
-        {
-            k: sorted({r[k] for r in key_rows if r[k] is not None})
-            for k in keys
-        }
-        if key_rows is not None
-        else None
-    )
-    if set(keys) <= set(manifest.get("stat_cols") or []):
-        targets, _, _ = _prune_files(manifest, dset, keys, key_rows)
-    else:
-        targets = list(manifest["files"])  # stats can't prune: all files
-    if not targets:
+    _check_keys(scope, keys)
+    if not scope.touched_files:
         return 0
-    live = _read_files(spark, table_path, manifest, targets)
-    n_removed = live.join(dset, keys, "left_semi").count()
+    dset = scope.key_frame()
+    n_removed = scope.touched.join(dset, keys, "left_semi").count()
     if n_removed == 0:
         return 0
     commit_delete_file(
-        spark, table_path, dset, keys, targets, key_values=key_vals
+        spark, table_path, dset, keys, scope.touched_files,
+        key_values=scope.key_values,
     )
     return n_removed
 
@@ -648,16 +619,13 @@ def upsert_scd2(
     batch_rows = _collect_capped(updates)
     if batch_rows is not None:
         updates = _local_df(spark, batch_rows, updates.schema)
-        scope_rows = batch_rows
-    else:
-        scope_rows = None
     fresh = (
         updates.withColumn("valid_from", F.col(effective_col).cast("timestamp_ntz"))
         .withColumn("valid_to", open_ended)
         .withColumn("is_current", F.lit(True))
         .drop(effective_col)
     )
-    scope = _merge_scope(spark, table_path, updates, keys, key_rows=scope_rows)
+    scope = _merge_scope(spark, table_path, updates, keys, key_rows=batch_rows)
     if scope is None:
         commit_snapshot(spark, table_path, fresh, stat_cols=keys)
         return
@@ -729,15 +697,13 @@ _VALID_OPS = ("insert", "update", "delete")
 
 
 def _validate_feed(changes: DataFrame, keys: list[str], op_col: str,
-                   rows: list | None = None) -> None:
-    """Reject unknown/NULL ops and duplicate key tuples. A feed within
-    the key-set cap validates driver-side from ONE collect (the common
-    CDC case — per-micro-batch feeds are small); a bulk feed pays one
-    aggregate job instead. ``rows``: the feed already collected by the
-    caller — skips this function's own collect."""
-    if rows is None:
-        rows = changes.select(*keys, op_col).limit(_KEY_SET_CAP + 1).collect()
-    if len(rows) <= _KEY_SET_CAP:
+                   rows: list | None) -> None:
+    """Reject unknown/NULL ops and duplicate key tuples. A feed that
+    landed driver-side (``rows``: its (keys, op) rows, the common CDC
+    case — per-micro-batch feeds are small) validates from those rows
+    with no job; a bulk feed (``rows`` None) pays one aggregate job
+    instead."""
+    if rows is not None:
         unknown = sorted(
             {r[op_col] for r in rows if r[op_col] not in _VALID_OPS}, key=str
         )
@@ -804,37 +770,19 @@ def apply_changes(
     insert/update payloads, one delta commit — work ∝ touched files +
     feed, never table size."""
     # CDC feeds are micro-batch-small by nature: ONE capped collect of
-    # (keys, op) serves both validation and file pruning, saving the
-    # separate distinct-collect job per applied batch. The feed's
-    # DataFrames stay distributed — unlike upsert_scd2's fast path,
-    # the typical apply_changes feed lineage (a small staged diff) is
-    # cheap to re-execute, and measured end-to-end the local-relation
-    # substitution LOST time here (Python-RDD scan per downstream job
-    # outweighs one saved collect), so only the collect is shared.
+    # (keys, op) serves validation, file pruning and the anti-join's
+    # key frame, saving the scope's own key-landing job per applied
+    # batch. The payload rows stay distributed — unlike upsert_scd2's
+    # fast path, the typical apply_changes feed lineage (a small
+    # staged diff) is cheap to re-execute, and measured end-to-end the
+    # createDataFrame substitution LOST time here (Python-RDD scan per
+    # downstream job outweighs one saved collect).
     rows = _collect_capped(changes.select(*keys, op_col))
-    _validate_feed(changes, keys, op_col, rows=rows)
+    _validate_feed(changes, keys, op_col, rows)
     scope = _merge_scope(spark, table_path, changes, keys, key_rows=rows)
     if scope is None:
         raise ValueError(f"no table at {table_path}")
-    changed_keys = changes.select(*keys).distinct()
-    if rows is not None:
-        # the key tuples are already on the driver: a VALUES relation
-        # (pure-JVM LocalRelation — NOT the createDataFrame Python-RDD
-        # scan an earlier round measured as a loss here) spares the
-        # anti-join a second scan of the feed lineage per applied
-        # batch (r13, guide §1.2). Temporal/decimal keys fall back to
-        # the distributed distinct.
-        try:
-            changed_keys = values_df_like(
-                spark,
-                # dedupe preserving collected order (sorted() would
-                # trip over NULL keys)
-                list(dict.fromkeys(tuple(r[k] for k in keys) for r in rows)),
-                changes.select(*keys).schema,
-            )
-        except TypeError:
-            pass
-    survivors = scope.touched.join(changed_keys, keys, "left_anti")
+    survivors = scope.touched.join(scope.key_frame(), keys, "left_anti")
     upserts = (
         changes.filter(F.col(op_col) != "delete")
         .drop(op_col)

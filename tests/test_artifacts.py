@@ -603,6 +603,70 @@ def test_crashed_registry_upsert_cannot_double_append_postings(spark):
     got = sorted(map(tuple, maintained_postings(spark, idx).collect()))
     assert got == want
 
+
+def test_postings_refresh_keeps_an_append_racing_its_commit(
+    spark, monkeypatch
+):
+    """A commit that lands on the append-postings index between the
+    refresh's manifest read and its commit survives: the refresh
+    commits against the manifest it read, so the racing file rebases
+    in instead of being treated as one the refresh rewrote."""
+    from pyspark.sql.types import StructType
+
+    import prox_spark.artifacts as A
+    from prox_spark.queries.search import _tokens_tf
+
+    s = _scratch()
+    base, reg, idx = f"{s}/base", f"{s}/reg", f"{s}/pidx"
+    commit_snapshot(
+        spark, base, _docs(spark, 0, 50).select("doc_id", "text"),
+        stat_cols=["doc_id"], n_files=2,
+    )
+    commit_snapshot(
+        spark, idx, _tokens_tf(read_table(spark, base)),
+        stat_cols=["term"], n_files=2,
+    )
+    register_artifact(
+        spark, reg, "postings", base, idx,
+        {"covered": 1, "fold_factor": 100.0},
+    )
+    prev = read_manifest(spark, base)
+    commit_delta(
+        spark, base, _docs(spark, 50, 70).select("doc_id", "text"),
+        list(prev["files"]), update_key_ranges={},
+    )
+    raced = [("zz_raced", 9000 + i, 1) for i in range(5)]
+    real = A.read_manifest
+    reads = {"n": 0}
+
+    def racing_read(spark_, path, *a, **k):
+        m = real(spark_, path, *a, **k)
+        if path == idx:
+            reads["n"] += 1
+            if reads["n"] == 2:  # the refresh's base read, not coverage
+                cur = real(spark_, idx)
+                commit_delta(
+                    spark_, idx,
+                    spark_.createDataFrame(
+                        raced, StructType.fromJson(cur["schema"])
+                    ),
+                    list(cur["files"]), base_version=int(cur["version"]),
+                    update_key_ranges={},
+                )
+        return m
+
+    monkeypatch.setattr(A, "read_manifest", racing_read)
+    out = maintain_artifacts(spark, reg)
+    monkeypatch.setattr(A, "read_manifest", real)
+    assert out[idx]["status"] == "refreshed", out
+    assert reads["n"] >= 2
+    got = {
+        tuple(r) for r in read_table(spark, idx)
+        .filter(F.col("term") == "zz_raced").collect()
+    }
+    assert got == set(raced), "racing append dropped by the refresh commit"
+
+
 def test_maintenance_races_live_base_writers(spark):
     """Registry maintenance racing live base commits (upserts,
     appends, MoR deletes, compaction) across EVERY registered kind —

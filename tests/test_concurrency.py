@@ -181,6 +181,41 @@ def test_threaded_upsert_vs_compaction_never_silent_loss(spark, tmp_path):
         assert {(i, "base") for i in range(40)} <= got
 
 
+def test_compaction_keeps_an_append_between_resolve_and_read_once(
+    spark, tmp_path, monkeypatch
+):
+    """An append that lands right after compact_table resolves the
+    manifest is neither folded into the compacted rows nor dropped: the
+    compaction reads the manifest it resolved and rebases the append's
+    files in, so every id appears exactly once."""
+    import prox_spark.table as T
+
+    path = str(tmp_path / "t")
+    _base(spark, path)
+    real = T.read_manifest
+    state = {"fired": False}
+
+    def racing_read(spark_, table_path, *a, **k):
+        m = real(spark_, table_path, *a, **k)
+        if not state["fired"]:
+            state["fired"] = True
+            commit_delta(
+                spark_, table_path,
+                _df(spark_, [(1000 + i, "raced") for i in range(10)]),
+                m["files"], base_version=m["version"], update_key_ranges={},
+            )
+        return m
+
+    monkeypatch.setattr(T, "read_manifest", racing_read)
+    compact_table(spark, path, n_files=2)
+    monkeypatch.setattr(T, "read_manifest", real)
+    assert state["fired"]
+    ids = [r.id for r in read_table(spark, path).select("id").collect()]
+    assert len(ids) == 110 and len(set(ids)) == 110, (
+        f"{len(ids)} rows for {len(set(ids))} ids after compaction"
+    )
+
+
 def test_threaded_disjoint_appends_both_land(spark, tmp_path):
     path = str(tmp_path / "t")
     _base(spark, path)
