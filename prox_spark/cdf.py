@@ -48,6 +48,7 @@ from pyspark.sql.types import LongType, StringType, StructType
 
 from prox_spark import manifest as M
 from prox_spark.io import read_parquet
+from prox_spark.local_frames import empty_df
 from prox_spark.manifest import CHANGE_TYPE_COL, COMMIT_VERSION_COL
 from prox_spark.table import _manifest_versions, _read_files, read_manifest
 
@@ -148,7 +149,7 @@ def read_table_changes(
         schema = schema.add(CHANGE_TYPE_COL, StringType()).add(
             COMMIT_VERSION_COL, LongType()
         )
-        return spark.createDataFrame([], schema)
+        return empty_df(spark, schema)
     # add-column evolution mid-range: older versions' frames miss the
     # new columns — align by name with NULL back-fill (the same
     # semantics their files read with under the evolved schema)

@@ -41,7 +41,7 @@ from prox_spark.hashing import (
 )
 from prox_spark.io import read_parquet
 from prox_spark.llm_jobs import TRAIN_LT, VAL_LT
-from prox_spark.local_frames import values_df
+from prox_spark.local_frames import empty_df, values_df
 from prox_spark.neardup import (
     DOT_DUCK,
     JACCARD_THRESHOLD,
@@ -4205,7 +4205,7 @@ def q206_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cross_split_pairs bigint, naive_cross_pairs bigint"
     )
     if not per_split:  # empty corpus: VALUES () would be a parse error
-        return spark.createDataFrame([], schema)
+        return empty_df(spark, schema)
     vals = ", ".join(
         f"('{r['split']}', CAST({int(r['n_docs'])} AS BIGINT), "
         f"CAST({int(r['n_clusters'])} AS BIGINT), "

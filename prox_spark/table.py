@@ -19,7 +19,12 @@ from pyspark.sql.types import StructType
 
 from prox_spark import manifest as M
 from prox_spark.io import read_parquet
-from prox_spark.local_frames import values_df
+from prox_spark.local_frames import (
+    empty_df,
+    key_set_sql,
+    values_df,
+    values_df_like,
+)
 from prox_spark.manifest import DATA_DIR, MANIFEST_DIR
 
 _SMALL_COMMIT_CONF_LOCK = threading.Lock()
@@ -194,7 +199,9 @@ def _read_files(
     of data files it targets (the files that existed — and could hold
     the key — when the delete committed). Files are grouped by their
     applicable-delete signature and each group anti-joins its delete
-    sets (broadcast: deletion batches are small by nature); untargeted
+    sets (broadcast: deletion batches are small by nature), or filters
+    with a literal key set where the entry inlines its ``values``
+    (:func:`_inline_delete_values`); untargeted
     files — including every file added AFTER the delete, so a
     re-inserted key is never swallowed — stream through untouched.
 
@@ -213,7 +220,9 @@ def _read_files(
 
     schema = StructType.fromJson(manifest["schema"])
     if not files:
-        return spark.createDataFrame([], schema)
+        # a JVM empty relation: the optimizer folds a merge's anti-join
+        # and union over it, so a pure append writes in one job
+        return empty_df(spark, schema)
     file_set = set(files)
     deletes = [
         d
@@ -266,12 +275,24 @@ def _read_files(
             )
         for i in d_sig:
             d = deletes[i]
+            if d.get("values") is not None:
+                # inlined key values: a literal filter, no job to read
+                # and broadcast the key file
+                (k,) = d["keys"]
+                sql = key_set_sql([schema[k]], [(v,) for v in d["values"]])
+                df = df.filter(~F.expr(sql))
+                continue
             dset = (
                 read_parquet(spark, M.resolve(table_path, d["file"]))
                 .select(*d["keys"])
                 .distinct()
             )
             df = df.join(F.broadcast(dset), d["keys"], "left_anti")
+        if d_sig:
+            # the USING anti-join moved the key columns first; every
+            # part keeps the declared order, which a merge over them
+            # publishes as the table schema
+            df = df.select(*schema.names)
         parts.append(df)
     return reduce(lambda a, b: a.unionByName(b), parts)
 
@@ -632,7 +653,10 @@ def commit_delta(
     # NOTHING (pure append — keep = all previous files) is excluded:
     # its size signal is the unknown new-data volume, not the zero
     # touched bytes, and squeezing a multi-GB append through 4
-    # partitions with AQE off would be the wrong sizing.
+    # partitions with AQE off would be the wrong sizing. Keeping AQE on
+    # costs a pure append nothing: its touched side is an empty
+    # LocalRelation (_read_files), the merge's join and union fold
+    # away, and the write is one scan-sort-write job with no exchange.
     small_commit = (
         bool(stat_cols)
         and not cluster
@@ -1444,15 +1468,20 @@ def commit_delete_file(
     keys: list[str],
     targets: list[str],
     key_values: dict | None = None,
+    base_manifest: dict | None = None,
+    carry_chunks: list | None = None,
 ) -> int:
     """Commit a MERGE-ON-READ equality delete: write the deleted key
     tuples as one tiny parquet and publish a new version whose DATA
     FILES ARE UNCHANGED — the manifest just gains a ``deletes`` entry
     naming the key file, its key columns, and the exact data files it
     applies to (``targets``: the files that could hold a deleted key
-    when the delete committed). Readers anti-join targeted files
-    against the key set (:func:`_read_files`); files added later are
-    untargeted by construction, so re-inserting a deleted key works.
+    when the delete committed) — and, for a single-column key set
+    small enough for a literal filter, the deleted ``values`` inline.
+    Readers anti-join targeted files against the key set, or filter
+    them by the inlined values (:func:`_read_files`); files added
+    later are untargeted by construction, so re-inserting a deleted
+    key works.
 
     This is the Iceberg-v2 equality-delete / Delta deletion-vector
     pattern, and the 100 TB answer to "delete 100 user ids from a
@@ -1460,8 +1489,20 @@ def commit_delete_file(
     the physical rewrite happens when a later merge or compaction
     touches those files (both fold pending deletes in and drop the
     entry via :func:`commit_delta`'s carry-forward). Returns the new
-    version."""
-    prev = read_manifest(spark, table_path)
+    version.
+
+    ``base_manifest`` / ``carry_chunks`` as in :func:`commit_delta`:
+    the (possibly chunk-pruned) manifest ``targets`` were computed
+    from, and the unread chunk entries that carry by reference. The
+    CAS then publishes against that version, so a file added since the
+    targets were read goes through the rebase check below instead of
+    escaping the mask. Omitted, the latest manifest is read here."""
+    partial = carry_chunks is not None
+    prev = (
+        read_manifest(spark, table_path)
+        if base_manifest is None
+        else base_manifest
+    )
     if "files" not in prev:
         raise ValueError(
             f"{table_path} predates file-granular manifests; use the "
@@ -1473,20 +1514,33 @@ def commit_delete_file(
         raise ValueError(f"delete targets not in current version: {unknown}")
     v = int(prev["version"]) + 1
     del_rel = f"{DATA_DIR}/del-{v:08d}-{uuid.uuid4().hex[:8]}"
-    # one part file: a deletion batch is driver-small by nature
-    keys_df.select(*keys).distinct().coalesce(1).write.mode("error").parquet(
-        f"{table_path}/{del_rel}"
+    values = _inline_delete_values(prev, keys_df, keys, key_values)
+    key_rows = keys_df.select(*keys)
+    # inlined values are already the distinct deleted keys: as a VALUES
+    # relation the key file is written with no distinct shuffle
+    key_rows = (
+        key_rows.distinct()
+        if values is None
+        else values_df_like(spark, [(x,) for x in values], key_rows.schema)
     )
+    # one part file: a deletion batch is driver-small by nature
+    key_rows.coalesce(1).write.mode("error").parquet(f"{table_path}/{del_rel}")
     entry = {"file": del_rel, "keys": list(keys), "targets": list(targets)}
+    if values is not None:
+        entry["values"] = values
     cur_v, cur = v - 1, prev
     for attempt in range(6):
         # the data layout is untouched: every chunk carries by
         # reference, so the commit writes one key file plus a snapshot
-        # doc, never a chunk
+        # doc, never a chunk; after a rebase ``cur`` is fully assembled
+        # and covers the formerly-unread chunks itself
+        first = cur is prev
         manifest, _ = M.next_doc(
             cur, cur_v + 1, list(cur["files"]), [], {}, {},
             stat_cols=cur.get("stat_cols") or [], schema=cur["schema"],
             write_json=_json_writer(spark, table_path),
+            carry_entries=carry_chunks if first else None,
+            partial=first and partial,
             cluster_curve=cur.get("cluster_curve") or "range",
             index_of=cur.get("index_of"),
             extra_meta={"deletes": [*(cur.get("deletes") or []), entry]},
@@ -1519,7 +1573,14 @@ def commit_delete_file(
             ]
             hot_adds: list[str] = []
             if not gone:
-                prev_files = set(prev["files"])
+                # a chunk-pruned base lists only the chunks it read:
+                # judge the adds against the complete base file list
+                base = (
+                    read_manifest(spark, table_path, v - 1)
+                    if partial
+                    else prev
+                )
+                prev_files = set(base["files"])
                 added = [f for f in cur["files"] if f not in prev_files]
                 if added and key_values is None:
                     hot_adds = added
@@ -1545,6 +1606,36 @@ def commit_delete_file(
                     f"merge-on-read delete for {table_path} conflicts: {why}"
                 ) from None
     raise AssertionError("unreachable")
+
+
+def _inline_delete_values(
+    manifest: dict,
+    keys_df: DataFrame,
+    keys: list[str],
+    key_values: dict | None,
+) -> list | None:
+    """The deleted values of a single-column delete, to inline in its
+    ``deletes`` entry so :func:`_read_files` drops them with a literal
+    key-set filter instead of reading and broadcasting the key file (a
+    job per read of a targeted file). None — readers keep the
+    anti-join — for composite keys, keys that did not land, a batch
+    key type other than the table's, more values than the batch-key
+    filter's bound, or a value with no exact literal. The key file is
+    written either way: streaming and data-source readers use it."""
+    from prox_spark.upsert import _KEY_FILTER_CAP  # upsert imports table
+
+    if key_values is None or len(keys) != 1:
+        return None
+    (k,) = keys
+    field = StructType.fromJson(manifest["schema"])[k]
+    values = key_values[k]
+    if (
+        keys_df.schema[k].dataType != field.dataType
+        or len(values) > _KEY_FILTER_CAP
+        or key_set_sql([field], [(v,) for v in values]) is None
+    ):
+        return None
+    return values
 
 
 def _files_carrying(

@@ -302,6 +302,38 @@ def test_mor_delete_rebases_over_append_and_aborts_on_rewrite(
     assert _table(spark, path) == (before - {(8, "base")}) | {(8, "rewrote")}
 
 
+def test_mor_delete_conflicts_with_an_append_after_its_scope_read(
+    spark, tmp_path, monkeypatch
+):
+    """An append landing between delete_keys_mor's scope read and its
+    commit is not a target: committing against the latest version would
+    leave the appended copy of the deleted key visible while the delete
+    reports it removed. The delete commits against the version its
+    targets came from, so it loses the CAS race and its rebase finds the
+    appended file may hold the key: a loud conflict, table unchanged."""
+    import prox_spark.table as T
+    from prox_spark.upsert import delete_keys_mor
+
+    path = str(tmp_path / "t")
+    _base(spark, path)
+    real = T.commit_delete_file
+
+    def racing_commit(spark_, table_path, *a, **k):
+        m = read_manifest(spark_, table_path)
+        commit_delta(
+            spark_, table_path, _df(spark_, [(7, "raced")]),
+            m["files"], base_version=m["version"], update_key_ranges={},
+        )
+        return real(spark_, table_path, *a, **k)
+
+    monkeypatch.setattr(T, "commit_delete_file", racing_commit)
+    with pytest.raises(CommitConflictError, match="may hold deleted keys"):
+        delete_keys_mor(spark, path, _df(spark, [(7, "x")]), ["id"])
+    monkeypatch.setattr(T, "commit_delete_file", real)
+    got = _table(spark, path)
+    assert {(7, "base"), (7, "raced")} <= got and len(got) == 101
+
+
 def test_streaming_appends_rebase_over_midstream_compaction(
     spark, tmp_path, monkeypatch
 ):

@@ -1,11 +1,13 @@
-"""Metadata IO per keyed write: each merge, delete and compaction
-resolves the table once (one ``_manifests`` listing and one manifest
-read) and commits against that manifest, so the only other listing is
-the commit's own version probe. Counted on a flat 8-file table by
-wrapping the two table.py primitives every listing and every manifest
-read go through."""
+"""Metadata IO and Spark jobs per keyed write: each merge, delete and
+compaction resolves the table once (one ``_manifests`` listing and one
+manifest read) and commits against that manifest, so the only other
+listing is the commit's own version probe. Counted on a flat 8-file
+table by wrapping the two table.py primitives every listing and every
+manifest read go through; jobs are counted per job group."""
 
 from __future__ import annotations
+
+import itertools
 
 import pytest
 
@@ -65,7 +67,7 @@ def test_mor_delete_resolves_once(spark, flat, io_counts):
     counts = io_counts()
     n = delete_keys_mor(spark, flat, _df(spark, [(7, "x")]), ["id"])
     assert n == 1
-    assert counts["listings"] <= 2 and counts["reads"] <= 2, counts
+    assert counts["listings"] <= 2 and counts["reads"] == 1, counts
 
 
 def test_read_table_lists_once(spark, flat, io_counts):
@@ -79,3 +81,47 @@ def test_compaction_resolves_once(spark, flat, io_counts):
     compact_table(spark, flat, n_files=2)
     assert counts["listings"] <= 2 and counts["reads"] == 1, counts
     assert read_table(spark, flat).count() == 1000
+
+
+_groups = itertools.count()
+
+
+def _jobs(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"keyed-commit-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_keyed_commit_job_counts(spark, flat):
+    """A driver-small keyed commit is one key-landing job plus one
+    write: the batch keys land without a shuffle, the touched rows drop
+    them with a literal key-set filter, and an append's empty touched
+    set folds away. The delete adds its live-row count (a shuffle-map
+    job and a result job) and its key-file write; it inlines its key
+    values, so a later upsert of a file it targets reads that file's
+    pending delete as a literal filter, not a key-file broadcast."""
+    _, upsert = _jobs(spark, lambda: upsert_parquet(
+        spark, flat, _df(spark, [(5, "u"), (600, "u")]), ["id"]
+    ))
+    _, append = _jobs(spark, lambda: upsert_parquet(
+        spark, flat, _df(spark, [(5000 + i, "a") for i in range(50)]), ["id"]
+    ))
+    n, delete = _jobs(spark, lambda: delete_keys_mor(
+        spark, flat, _df(spark, [(7, "x")]), ["id"]
+    ))
+    _, after_delete = _jobs(spark, lambda: upsert_parquet(
+        spark, flat, _df(spark, [(8, "u")]), ["id"]
+    ))
+    assert n == 1
+    counts = (upsert, append, delete, after_delete)
+    assert upsert <= 2 and append <= 2 and delete <= 4, counts
+    assert after_delete <= 2, counts
+    assert read_table(spark, flat).count() == 1049
