@@ -40,8 +40,7 @@ path; a FOREIGN entry (absolute path or URI, ``file:`` included) is a
 shallow clone's reference into its source table and resolves as-is.
 
 Optional keys: ``deletes`` (merge-on-read entries {file, keys,
-targets}, plus ``values`` — the deleted values inline — for a small
-single-column key set), ``renames`` ({from, to, version}: applies to files born
+targets}), ``renames`` ({from, to, version}: applies to files born
 before ``version``), ``dropped_cols`` ({col, version}),
 ``cluster_curve`` (absent = range), ``index_of``, ``data_change``
 (false on a rewrite that moved no visible row) and ``restored_from``.

@@ -19,12 +19,7 @@ from pyspark.sql.types import StructType
 
 from prox_spark import manifest as M
 from prox_spark.io import read_parquet
-from prox_spark.local_frames import (
-    empty_df,
-    key_set_sql,
-    values_df,
-    values_df_like,
-)
+from prox_spark.local_frames import empty_df, values_df
 from prox_spark.manifest import DATA_DIR, MANIFEST_DIR
 
 _SMALL_COMMIT_CONF_LOCK = threading.Lock()
@@ -199,9 +194,7 @@ def _read_files(
     of data files it targets (the files that existed — and could hold
     the key — when the delete committed). Files are grouped by their
     applicable-delete signature and each group anti-joins its delete
-    sets (broadcast: deletion batches are small by nature), or filters
-    with a literal key set where the entry inlines its ``values``
-    (:func:`_inline_delete_values`); untargeted
+    sets (broadcast: deletion batches are small by nature); untargeted
     files — including every file added AFTER the delete, so a
     re-inserted key is never swallowed — stream through untouched.
 
@@ -275,13 +268,6 @@ def _read_files(
             )
         for i in d_sig:
             d = deletes[i]
-            if d.get("values") is not None:
-                # inlined key values: a literal filter, no job to read
-                # and broadcast the key file
-                (k,) = d["keys"]
-                sql = key_set_sql([schema[k]], [(v,) for v in d["values"]])
-                df = df.filter(~F.expr(sql))
-                continue
             dset = (
                 read_parquet(spark, M.resolve(table_path, d["file"]))
                 .select(*d["keys"])
@@ -1476,12 +1462,9 @@ def commit_delete_file(
     FILES ARE UNCHANGED — the manifest just gains a ``deletes`` entry
     naming the key file, its key columns, and the exact data files it
     applies to (``targets``: the files that could hold a deleted key
-    when the delete committed) — and, for a single-column key set
-    small enough for a literal filter, the deleted ``values`` inline.
-    Readers anti-join targeted files against the key set, or filter
-    them by the inlined values (:func:`_read_files`); files added
-    later are untargeted by construction, so re-inserting a deleted
-    key works.
+    when the delete committed). Readers anti-join targeted files
+    against the key set (:func:`_read_files`); files added later are
+    untargeted by construction, so re-inserting a deleted key works.
 
     This is the Iceberg-v2 equality-delete / Delta deletion-vector
     pattern, and the 100 TB answer to "delete 100 user ids from a
@@ -1514,20 +1497,11 @@ def commit_delete_file(
         raise ValueError(f"delete targets not in current version: {unknown}")
     v = int(prev["version"]) + 1
     del_rel = f"{DATA_DIR}/del-{v:08d}-{uuid.uuid4().hex[:8]}"
-    values = _inline_delete_values(prev, keys_df, keys, key_values)
-    key_rows = keys_df.select(*keys)
-    # inlined values are already the distinct deleted keys: as a VALUES
-    # relation the key file is written with no distinct shuffle
-    key_rows = (
-        key_rows.distinct()
-        if values is None
-        else values_df_like(spark, [(x,) for x in values], key_rows.schema)
-    )
     # one part file: a deletion batch is driver-small by nature
-    key_rows.coalesce(1).write.mode("error").parquet(f"{table_path}/{del_rel}")
+    keys_df.select(*keys).distinct().coalesce(1).write.mode("error").parquet(
+        f"{table_path}/{del_rel}"
+    )
     entry = {"file": del_rel, "keys": list(keys), "targets": list(targets)}
-    if values is not None:
-        entry["values"] = values
     cur_v, cur = v - 1, prev
     for attempt in range(6):
         # the data layout is untouched: every chunk carries by
@@ -1606,36 +1580,6 @@ def commit_delete_file(
                     f"merge-on-read delete for {table_path} conflicts: {why}"
                 ) from None
     raise AssertionError("unreachable")
-
-
-def _inline_delete_values(
-    manifest: dict,
-    keys_df: DataFrame,
-    keys: list[str],
-    key_values: dict | None,
-) -> list | None:
-    """The deleted values of a single-column delete, to inline in its
-    ``deletes`` entry so :func:`_read_files` drops them with a literal
-    key-set filter instead of reading and broadcasting the key file (a
-    job per read of a targeted file). None — readers keep the
-    anti-join — for composite keys, keys that did not land, a batch
-    key type other than the table's, more values than the batch-key
-    filter's bound, or a value with no exact literal. The key file is
-    written either way: streaming and data-source readers use it."""
-    from prox_spark.upsert import _KEY_FILTER_CAP  # upsert imports table
-
-    if key_values is None or len(keys) != 1:
-        return None
-    (k,) = keys
-    field = StructType.fromJson(manifest["schema"])[k]
-    values = key_values[k]
-    if (
-        keys_df.schema[k].dataType != field.dataType
-        or len(values) > _KEY_FILTER_CAP
-        or key_set_sql([field], [(v,) for v in values]) is None
-    ):
-        return None
-    return values
 
 
 def _files_carrying(

@@ -156,14 +156,14 @@ def _key_values(rows, keys: list[str]) -> tuple[dict, dict | None]:
 _KEY_SET_CAP = 50_000
 
 # bound on the distinct landed key tuples the batch-key filter renders
-# as a literal IN list (and a MoR delete inlines in its manifest
-# entry). Planning a literal IN grows with its length, while a join
-# against the key frame costs one fixed broadcast-build job: on 4
-# cores, filter+count over a 20k-row bigint-keyed table took 0.19 s vs
-# the join's 0.25 s at 1,024 keys, 0.26 vs 0.26 s at 4,096 and 0.59 vs
-# 0.37 s at 16,384. The bound sits a quarter of the way to that
-# crossover, leaving room for string and composite keys, whose
-# literals plan slower, and keeps an inlined delete entry a few KB.
+# as a literal IN list. Planning a literal IN grows with its length,
+# while a join against the key frame costs one fixed broadcast-build
+# job. On 4 cores, filter+count vs anti-join+count over a 20k-row
+# 8-file table: bigint keys 0.19/0.25 s at 1,024 keys, 0.26/0.26 s at
+# 4,096, 0.59/0.37 s at 16,384; string keys 0.26/0.29 s at 1,024,
+# 0.32/0.31 s at 4,096; (bigint, string) keys 0.21/0.23 s at 256,
+# 0.25/0.21 s at 1,024, 0.48/0.22 s at 4,096. The bound is a quarter
+# of the single-column crossover and about the composite one.
 _KEY_FILTER_CAP = 1024
 
 _LIMIT_CONF_LOCK = __import__("threading").Lock()
@@ -579,9 +579,7 @@ def delete_keys_mor(
     the entry). Deleting 100 user ids from a 100 TB table writes
     kilobytes. The trade is a broadcast anti-join per read of the
     targeted files until then — Iceberg v2 equality-deletes / Delta
-    deletion vectors make the same one — except that a single-column
-    key set within ``_KEY_FILTER_CAP`` rides inline in the manifest
-    entry, and reads drop it with a literal filter, with no job.
+    deletion vectors make the same one.
 
     Returns the number of LIVE rows the delete removed (rows already
     masked by an earlier pending delete don't recount). A delete that

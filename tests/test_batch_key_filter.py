@@ -106,35 +106,3 @@ def test_literal_and_join_paths_agree(spark, tmp_path, monkeypatch, case):
     assert literal == joined
     assert literal[2][0] == [c.split()[0] for c in CASES[case][0].split(", ")]
 
-
-def test_mor_delete_inlines_single_column_values(spark, tmp_path):
-    """A single-column MoR delete inlines its values in the manifest
-    entry, and reads drop them with a literal filter (no join); a
-    composite-key delete keeps the key-file anti-join."""
-    from prox_spark.table import read_manifest
-
-    single, composite = str(tmp_path / "single"), str(tmp_path / "composite")
-    rows = [(i, i % 3, "base") for i in range(100)]
-    for path in (single, composite):
-        commit_snapshot(
-            spark, path, spark.createDataFrame(rows, "id long, b long, v string"),
-            stat_cols=["id"], n_files=4,
-        )
-    gone = spark.createDataFrame([(7, 1), (42, 0), (None, 0)], "id long, b long")
-    assert delete_keys_mor(spark, single, gone.select("id"), ["id"]) == 2
-    assert delete_keys_mor(spark, composite, gone, ["id", "b"]) == 2
-
-    def plan(path):
-        df = read_table(spark, path)
-        return df, df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-
-    (entry,) = read_manifest(spark, single)["deletes"]
-    assert entry["values"] == [7, 42]
-    df, p = plan(single)
-    assert "Join" not in p
-    assert {r.id for r in df.collect()} == set(range(100)) - {7, 42}
-    (entry,) = read_manifest(spark, composite)["deletes"]
-    assert "values" not in entry
-    df, p = plan(composite)
-    assert "Join" in p
-    assert {r.id for r in df.collect()} == set(range(100)) - {7, 42}

@@ -105,9 +105,7 @@ def test_keyed_commit_job_counts(spark, flat):
     write: the batch keys land without a shuffle, the touched rows drop
     them with a literal key-set filter, and an append's empty touched
     set folds away. The delete adds its live-row count (a shuffle-map
-    job and a result job) and its key-file write; it inlines its key
-    values, so a later upsert of a file it targets reads that file's
-    pending delete as a literal filter, not a key-file broadcast."""
+    job and a result job) and its key-file write."""
     _, upsert = _jobs(spark, lambda: upsert_parquet(
         spark, flat, _df(spark, [(5, "u"), (600, "u")]), ["id"]
     ))
@@ -117,11 +115,7 @@ def test_keyed_commit_job_counts(spark, flat):
     n, delete = _jobs(spark, lambda: delete_keys_mor(
         spark, flat, _df(spark, [(7, "x")]), ["id"]
     ))
-    _, after_delete = _jobs(spark, lambda: upsert_parquet(
-        spark, flat, _df(spark, [(8, "u")]), ["id"]
-    ))
     assert n == 1
-    counts = (upsert, append, delete, after_delete)
+    counts = (upsert, append, delete)
     assert upsert <= 2 and append <= 2 and delete <= 4, counts
-    assert after_delete <= 2, counts
     assert read_table(spark, flat).count() == 1049
