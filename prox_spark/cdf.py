@@ -132,11 +132,6 @@ def read_table_changes(
         if start_version > 0
         else {}
     )
-    if start_version > 0 and "files" not in prev:
-        raise ValueError(
-            f"{table_path} version {start_version} predates file-granular "
-            "manifests; the change feed needs files/born records"
-        )
     frames: list[DataFrame] = []
     for v in needed:
         cur = read_manifest(spark, table_path, v, ref)

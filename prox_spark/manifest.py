@@ -26,10 +26,10 @@ never rewritten, only deleted by vacuum.
 
 SNAPSHOT DOC: ``version``, ``schema`` (Spark struct JSON),
 ``stat_cols`` and the file set, either inline (``files``, ``stats``
-{file: {col: [min, max]} or null}, and optionally ``born`` {file:
-birth version} and ``sizes`` {file: bytes}) or CHUNKED (``chunks``:
-entries {file, n, ranges?} naming chunk documents that hold the same
-four maps for at most ``CHUNK_SIZE`` files). A table goes chunked once
+{file: {col: [min, max]} or null}, ``born`` {file: birth version} and
+``sizes`` {file: bytes}; a table with no files omits the last two) or
+CHUNKED (``chunks``: entries {file, n, ranges?} naming chunk documents
+that hold the same four maps for at most ``CHUNK_SIZE`` files). A table goes chunked once
 a commit would list more than ``CHUNK_THRESHOLD`` files and stays
 chunked; a commit carries every chunk whose members it kept by
 reference and packs the rest, plus its new files, into fresh chunks
@@ -69,6 +69,7 @@ from __future__ import annotations
 import os
 import re
 import uuid
+from bisect import bisect_left
 from typing import NamedTuple
 
 MANIFEST_DIR = "_manifests"
@@ -267,6 +268,32 @@ def overlaps(fstats: dict | None, key_ranges: dict[str, tuple]) -> bool:
             if (lo is not None and fr[1] < lo) or (
                 hi is not None and fr[0] > hi
             ):
+                return False
+        except TypeError:
+            continue
+    return True
+
+
+def overlaps_sets(fstats: dict | None, key_values: dict[str, list]) -> bool:
+    """Could a file (or chunk, or row group) with stats ``fstats``
+    {col: [min, max]} hold one of ``key_values`` {col: SORTED values}
+    on every listed column? One bisect per column, so scattered keys
+    prune per value where a min/max envelope would keep everything in
+    between. Unknown stats, missing columns and incomparable types
+    never prune. An empty list admits nothing its column has stats
+    for, which is exact: no value can match (a merge batch's list is
+    empty when its keys there are all NULL, and NULL matches no row
+    under an equi-join). Necessary, not sufficient, for a multi-column
+    tuple match: never lossy."""
+    if fstats is None:
+        return True
+    for col, vals in key_values.items():
+        fr = fstats.get(col)
+        if fr is None:
+            continue
+        try:
+            i = bisect_left(vals, fr[0])
+            if i >= len(vals) or vals[i] > fr[1]:
                 return False
         except TypeError:
             continue

@@ -20,6 +20,8 @@ Staging is Spark-free (pyarrow), deterministic (content derived from
 md5 of row ids, fixed snapshot-dir suffixes), idempotent (temp file +
 os.replace, existing files reused) — the fixture_store recipe, so
 whichever of queries()/oracle_sql() runs first sees a complete table.
+The manifests are built by the format's own writer and rewritten when
+the staged copy differs, so a fixture always has the committed layout.
 """
 
 from __future__ import annotations
@@ -33,7 +35,9 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from prox_spark import manifest as M
 from prox_spark.hashing import (
     _HEXV_DUCK,
     _cms_bucket_duck,
@@ -69,42 +73,90 @@ def _cdc_versions() -> dict[int, list[tuple[int, str, str]]]:
     return {1: v1, 2: v2}
 
 
-def stage_cdc_table(root: str = CDC_ROOT) -> tuple[str, dict[int, str]]:
-    """Materialize the 2-version manifest table on disk (no-op when
-    already staged). Returns (table_path, {version: abs snapshot dir}).
+_CDC_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("source", StringType()),
+        StructField("text", StringType()),
+    ]
+)
 
-    The on-disk shape is exactly what table.commit_snapshot produces
-    (data/snap-<v>-<suffix>/ + _manifests/manifest-<v>.json) so
-    table.read_table resolves it natively; the write path itself is
-    commit-protocol-tested in tests/test_table_format.py — this stager
-    only needs the bytes, Spark-free, for the oracle side."""
+
+def _write_parquet_once(path: str, table: pa.Table) -> None:
+    """Write ``table`` to ``path`` unless a staged copy exists (temp
+    file + os.replace: a reader never sees a partial file)."""
+    if os.path.exists(path):
+        return
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, path)
+
+
+def _write_json_if_changed(path: str, doc: dict) -> None:
+    """Publish ``doc`` at ``path`` unless the file already holds it; a
+    file that differs (a manifest staged in an older layout) is
+    replaced."""
+    text = json.dumps(doc)
+    if os.path.exists(path):
+        with open(path) as f:
+            if f.read() == text:
+                return
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+def _stage_manifests(root: str, schema: StructType,
+                     commits: list[tuple[list[str], bool]]) -> None:
+    """Publish versions 1..n of the table at ``root``, one per
+    (new files, append) commit whose data files are staged: each doc
+    is built by the format's own writer (``manifest.next_doc``) with
+    the files' sizes read from disk and no stat columns, so the
+    fixture is the committed layout by construction. An append keeps
+    the previous version's files; otherwise the version is a full
+    snapshot."""
+    cur: dict = {}
+    for v, (new_files, append) in enumerate(commits, start=1):
+        cur, _ = M.next_doc(
+            cur, v, list(cur.get("files", [])) if append else [], new_files,
+            dict.fromkeys(new_files),
+            {f: os.path.getsize(os.path.join(root, f)) for f in new_files},
+            stat_cols=[], schema=schema.jsonValue(),
+            write_json=lambda rel, doc: _write_json_if_changed(
+                os.path.join(root, rel), doc
+            ),
+        )
+        _write_json_if_changed(os.path.join(root, M.manifest_rel(v)), cur)
+
+
+def stage_cdc_table(root: str = CDC_ROOT) -> tuple[str, dict[int, str]]:
+    """Materialize the 2-version table of :func:`_cdc_versions` on
+    disk, Spark-free and idempotent. Each version is a full snapshot
+    of one file, ``data/snap-<v>-<suffix>/part-00000.parquet``, with
+    the manifest :func:`_stage_manifests` builds; a manifest staged in
+    an older layout is rewritten. Returns (table_path, {version: abs
+    snapshot dir}) — the dirs are what the DuckDB oracles read."""
     snaps: dict[int, str] = {}
+    commits = []
     for v, rows in sorted(_cdc_versions().items()):
         suffix = hashlib.md5(f"cdc-snap:{v}".encode()).hexdigest()[:8]
-        snap_rel = f"data/snap-{v:08d}-{suffix}"
-        snap_dir = os.path.join(root, snap_rel)
-        data_file = os.path.join(snap_dir, "part-00000.parquet")
-        snaps[v] = snap_dir
-        mdir = os.path.join(root, "_manifests")
-        mpath = os.path.join(mdir, f"manifest-{v:08d}.json")
-        if os.path.exists(data_file) and os.path.exists(mpath):
-            continue
-        os.makedirs(snap_dir, exist_ok=True)
-        os.makedirs(mdir, exist_ok=True)
-        table = pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                "source": pa.array([r[1] for r in rows], pa.string()),
-                "text": pa.array([r[2] for r in rows], pa.string()),
-            }
+        rel = f"data/snap-{v:08d}-{suffix}/part-00000.parquet"
+        _write_parquet_once(
+            os.path.join(root, rel),
+            pa.table(
+                {
+                    "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                    "source": pa.array([r[1] for r in rows], pa.string()),
+                    "text": pa.array([r[2] for r in rows], pa.string()),
+                }
+            ),
         )
-        tmp = data_file + ".tmp"
-        pq.write_table(table, tmp)
-        os.replace(tmp, data_file)
-        mtmp = mpath + ".tmp"
-        with open(mtmp, "w") as f:
-            json.dump({"version": v, "data": snap_rel}, f)
-        os.replace(mtmp, mpath)
+        snaps[v] = os.path.dirname(os.path.join(root, rel))
+        commits.append(([rel], False))
+    _stage_manifests(root, _CDC_SCHEMA, commits)
     return root, snaps
 
 
@@ -1275,44 +1327,38 @@ META_ROOT = os.path.join(
 # per-generation (born version -> (n_files, rows_per_file))
 _META_GENS = {1: (3, 60), 2: (1, 25), 3: (1, 15)}
 
-_META_SCHEMA_JSON = {
-    "type": "struct",
-    "fields": [
-        {"name": "doc_id", "type": "long", "nullable": True, "metadata": {}},
-        {"name": "source", "type": "string", "nullable": True, "metadata": {}},
-        {"name": "n_chars", "type": "long", "nullable": True, "metadata": {}},
-    ],
-}
+_META_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("source", StringType()),
+        StructField("n_chars", LongType()),
+    ]
+)
 
 
 def stage_meta_table(root: str = META_ROOT) -> tuple[str, dict[int, str]]:
-    """Materialize a 3-version modern-format manifest table on disk,
-    Spark-free and idempotent (stage_cdc_table recipe): v1 commits 3
-    files, v2 and v3 append one each. Manifests carry the commit-time
-    ``sizes`` (actual byte sizes) and ``born`` records that
-    files_metadata exposes — the writer-path equivalents are
-    commit-protocol-tested in tests/test_table_format.py; this stager
-    only needs deterministic bytes both engines can read."""
+    """Materialize a 3-version table on disk, Spark-free and
+    idempotent (the :func:`stage_cdc_table` recipe): v1 commits 3
+    files, v2 and v3 append one each, under one
+    ``data/gen-<v>-<suffix>/`` dir per version. The manifests carry
+    the ``sizes`` and ``born`` records files_metadata exposes, built
+    by :func:`_stage_manifests`. Returns (table_path, {version: abs
+    generation dir})."""
     gens: dict[int, str] = {}
-    mdir = os.path.join(root, "_manifests")
-    files: list[str] = []
-    sizes: dict[str, int] = {}
-    born: dict[str, int] = {}
+    commits = []
     for v in sorted(_META_GENS):
         n_files, n_rows = _META_GENS[v]
         suffix = hashlib.md5(f"meta-gen:{v}".encode()).hexdigest()[:8]
         gen_rel = f"data/gen-{v:08d}-{suffix}"
-        gen_dir = os.path.join(root, gen_rel)
-        gens[v] = gen_dir
-        mpath = os.path.join(mdir, f"manifest-{v:08d}.json")
+        gens[v] = os.path.join(root, gen_rel)
+        new_files = []
         for k in range(n_files):
             rel = f"{gen_rel}/part-{k:05d}.parquet"
-            data_file = os.path.join(root, rel)
-            if not os.path.exists(data_file):
-                os.makedirs(gen_dir, exist_ok=True)
-                first = v * 100_000 + k * 1_000
-                ids = list(range(first, first + n_rows))
-                table = pa.table(
+            first = v * 100_000 + k * 1_000
+            ids = list(range(first, first + n_rows))
+            _write_parquet_once(
+                os.path.join(root, rel),
+                pa.table(
                     {
                         "doc_id": pa.array(ids, pa.int64()),
                         "source": pa.array(
@@ -1330,27 +1376,11 @@ def stage_meta_table(root: str = META_ROOT) -> tuple[str, dict[int, str]]:
                             pa.int64(),
                         ),
                     }
-                )
-                tmp = data_file + ".tmp"
-                pq.write_table(table, tmp)
-                os.replace(tmp, data_file)
-            files.append(rel)
-            sizes[rel] = os.path.getsize(data_file)
-            if v > 1:
-                born[rel] = v
-        if not os.path.exists(mpath):
-            os.makedirs(mdir, exist_ok=True)
-            doc = {
-                "version": v,
-                "files": list(files),
-                "sizes": dict(sizes),
-                "born": dict(born),
-                "schema": _META_SCHEMA_JSON,
-            }
-            mtmp = mpath + ".tmp"
-            with open(mtmp, "w") as f:
-                json.dump(doc, f)
-            os.replace(mtmp, mpath)
+                ),
+            )
+            new_files.append(rel)
+        commits.append((new_files, True))
+    _stage_manifests(root, _META_SCHEMA, commits)
     return root, gens
 
 

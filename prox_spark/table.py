@@ -222,29 +222,27 @@ def _read_files(
         for d in (manifest.get("deletes") or [])
         if file_set & set(d["targets"])
     ]
-    renames = list(manifest.get("renames") or [])
-    born = manifest.get("born") or {}
-    if not deletes and not renames:
+    if not deletes and not manifest.get("renames"):
         return spark.read.schema(schema).parquet(
             *[M.resolve(table_path, f) for f in files]
         )
     d_sets = [set(d["targets"]) for d in deletes]
-    groups: dict[tuple, list[str]] = {}
+    # group by (applicable deletes, applicable renames); which renames
+    # apply depends only on the file's birth, so their versions name
+    # the set
+    groups: dict[tuple, tuple[list, list[str]]] = {}
     for f in files:
+        applicable = M.renames_for(manifest, f)
         sig = (
             tuple(i for i, ts in enumerate(d_sets) if f in ts),
-            tuple(
-                i for i, r in enumerate(renames)
-                if born.get(f, 0) < r["version"]
-            ),
+            tuple(r["version"] for r in applicable),
         )
-        groups.setdefault(sig, []).append(f)
+        groups.setdefault(sig, (applicable, []))[1].append(f)
     parts = []
-    for d_sig, r_sig in sorted(groups):
+    for (d_sig, _), (applicable, group) in sorted(groups.items()):
         # physical read schema for this group: declared names walked
         # back through the applicable renames, newest first (a chain
         # a->b->c reverses to the file's original name a)
-        applicable = [renames[i] for i in r_sig]
         read_fields = [
             type(fld)(
                 M.physical_name(fld.name, applicable),
@@ -254,7 +252,7 @@ def _read_files(
         ]
         read_schema = StructType(read_fields)
         df = spark.read.schema(read_schema).parquet(
-            *[M.resolve(table_path, f) for f in groups[(d_sig, r_sig)]]
+            *[M.resolve(table_path, f) for f in group]
         )
         if any(p.name != d.name for p, d in zip(read_fields, schema.fields)):
             # one positional select, not sequential withColumnRenamed:
@@ -283,39 +281,20 @@ def _read_files(
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-def _read_rows(
-    spark: SparkSession, table_path: str, manifest: dict,
-    files: list[str] | None = None,
-) -> DataFrame:
-    """The rows of ``files`` (default: every file) of an assembled
-    manifest; a legacy single-snapshot-dir manifest (round-3 format)
-    reads its data dir whole."""
-    if "files" in manifest:
-        return _read_files(
-            spark, table_path, manifest,
-            manifest["files"] if files is None else files,
-        )
-    return read_parquet(spark, f"{table_path}/{manifest['data']}")
-
-
 def read_table(
     spark: SparkSession, table_path: str, version: int | None = None,
     ref: str = "main",
 ) -> DataFrame:
     """Read the table at its latest committed version (or a pinned
     historical ``version``) on ``ref`` (main, or a branch created by
-    :func:`create_branch`). Falls back to a plain parquet read for
-    legacy directories that predate the manifest log. One manifest
+    :func:`create_branch`). A path with no manifest raises
+    ``ValueError``: every table is a manifest table. One manifest
     listing serves both the format probe and the version resolve."""
     versions = _manifest_versions(spark, table_path, ref)
     if ref == "main" and not versions:
-        if version is not None:
-            raise ValueError(f"{table_path} is not a manifest table")
-        return read_parquet(spark, table_path)
-    return _read_rows(
-        spark, table_path,
-        _manifest_at(spark, table_path, versions, version, ref),
-    )
+        raise ValueError(f"{table_path} is not a manifest table")
+    m = _manifest_at(spark, table_path, versions, version, ref)
+    return _read_files(spark, table_path, m, m["files"])
 
 
 def _write_json(jvm, fs, path: str, doc: dict):
@@ -599,25 +578,11 @@ def commit_delta(
     cluster = bool(stat_cols) and n_files is not None
     rewritten_bytes = 0
     if bool(stat_cols) and not cluster and prev.get("files"):
+        # the commit-time recorded sizes of the files this commit rewrites
         keep = set(keep_files)
-        sizes = prev.get("sizes") or {}
-        rewritten = [f for f in prev["files"] if f not in keep]
-        # commit-time recorded sizes; stat only legacy files committed
-        # before sizes were recorded. Only a file a concurrent vacuum
-        # removed since the manifest read is skipped — any other FS
-        # error raises rather than under-count and flip the layout
-        unsized = [f for f in rewritten if f not in sizes]
-        rewritten_bytes = sum(int(sizes[f]) for f in rewritten if f in sizes)
-        if unsized:
-            jvm2, fs2, _ = _fs(spark, table_path)
-        for f in unsized:
-            try:
-                rewritten_bytes += fs2.getFileStatus(
-                    jvm2.org.apache.hadoop.fs.Path(M.resolve(table_path, f))
-                ).getLen()
-            except Exception as ex:
-                if not _is_missing_file_error(ex):
-                    raise
+        rewritten_bytes = sum(
+            int(prev["sizes"][f]) for f in prev["files"] if f not in keep
+        )
         cluster = rewritten_bytes > 64 * 1024 * 1024
     if cluster:
         # the range-clustered write samples its input to pick range
@@ -899,11 +864,6 @@ def _validate_rebase(
     Raises :class:`CommitConflictError` unless every concurrent change
     is provably disjoint from what the losing commit read and wrote —
     see :func:`commit_delta` for the ``update_key_ranges`` modes."""
-    if "files" not in cur:
-        raise CommitConflictError(
-            "concurrent writer published a manifest without a file list; "
-            "cannot prove disjointness"
-        )
     for meta_key in (
         "schema", "renames", "dropped_cols", "stat_cols", "constraints"
     ):
@@ -1391,14 +1351,9 @@ def release_clone_pin(spark: SparkSession, dst_path: str) -> bool:
     versions = _manifest_versions(spark, dst_path)
     if not versions:
         raise ValueError(f"{dst_path} is not a manifest table")
-    # commit_delta carries cloned_from forward, so the LATEST manifest
-    # is authoritative; fall back to the genesis manifest for clones
-    # whose later commits predate the carry (legacy layouts)
+    # every commit carries cloned_from forward (a sticky key), so the
+    # LATEST manifest is authoritative
     info = _read_manifest_file(spark, dst_path, versions[-1]).get("cloned_from")
-    if not info and len(versions) > 1:
-        info = _read_manifest_file(
-            spark, dst_path, versions[0]
-        ).get("cloned_from")
     if not info or not info.get("tag"):
         return False
     try:
@@ -1420,9 +1375,8 @@ def files_metadata(
     maintenance decision (small-file compaction, storage accounting,
     incremental-scan planning) reads, exposed as a queryable
     DataFrame instead of an internal dict. Bytes/birth come from the
-    manifest's ``sizes``/``born`` records written at commit time
-    (zero FS RPCs); files predating those records report bytes=-1 /
-    born=1.
+    manifest's ``sizes``/``born`` records, which every commit writes
+    for every file (zero FS RPCs).
 
     Scale note: the frame materializes from the assembled manifest,
     which is driver-read by design (manifests are metadata, not
@@ -1430,16 +1384,7 @@ def files_metadata(
     docs the same way every reader's planning pass already does, so
     this adds no IO beyond one manifest read."""
     m = read_manifest(spark, table_path, version, ref)
-    if "files" not in m:
-        raise ValueError(
-            f"{table_path} version {m.get('version')} is a legacy "
-            "single-snapshot manifest with no per-file entries"
-        )
-    sizes = m.get("sizes") or {}
-    born = m.get("born") or {}
-    rows = [
-        (f, int(sizes.get(f, -1)), int(born.get(f, 1))) for f in m["files"]
-    ]
+    rows = [(f, int(m["sizes"][f]), int(m["born"][f])) for f in m["files"]]
     # VALUES relation, not createDataFrame: the Python-RDD scan behind
     # createDataFrame costs a fresh Python-worker task per consuming
     # job — q183's profile showed two 32-task ~5 s-CPU stages just to
@@ -1486,11 +1431,6 @@ def commit_delete_file(
         if base_manifest is None
         else base_manifest
     )
-    if "files" not in prev:
-        raise ValueError(
-            f"{table_path} predates file-granular manifests; use the "
-            "copy-on-write delete"
-        )
     live = set(prev["files"])
     unknown = [t for t in targets if t not in live]
     if unknown:
@@ -1540,11 +1480,8 @@ def commit_delete_file(
             cur_versions = _manifest_versions(spark, table_path)
             cur_v = cur_versions[-1]
             cur = read_manifest(spark, table_path, cur_v)
-            cur_files = set(cur["files"]) if "files" in cur else None
-            gone = [
-                t for t in targets
-                if cur_files is None or t not in cur_files
-            ]
+            cur_files = set(cur["files"])
+            gone = [t for t in targets if t not in cur_files]
             hot_adds: list[str] = []
             if not gone:
                 # a chunk-pruned base lists only the chunks it read:
@@ -1901,28 +1838,13 @@ def split_chunks_by_key_sets(
     (overlap, disjoint) for a key-based merge: a DISJOINT chunk's
     recorded per-chunk ranges prove that NO batch key value falls
     inside them on some column, so the chunk file is never read and
-    its entry carries into the next version by reference. One bisect
-    per (chunk, column) — the chunk-granular analog of
-    :func:`split_files_by_key_sets`. Entries without ranges are
+    its entry carries into the next version by reference
+    (:func:`prox_spark.manifest.overlaps_sets`, the rule files and the
+    connector prune by too). Entries without ranges are
     conservatively overlap."""
-    from bisect import bisect_left
-
     overlap, disjoint = [], []
     for entry in doc.get("chunks", []):
-        ranges = entry.get("ranges")
-        hit = True
-        if ranges:
-            for col, vals in key_values.items():
-                r = ranges.get(col)
-                if r is None or not vals:
-                    continue
-                try:
-                    i = bisect_left(vals, r[0])
-                except TypeError:  # incomparable types -> can't prune
-                    continue
-                if i >= len(vals) or vals[i] > r[1]:
-                    hit = False
-                    break
+        hit = M.overlaps_sets(entry.get("ranges"), key_values)
         (overlap if hit else disjoint).append(entry)
     return overlap, disjoint
 
@@ -1938,26 +1860,12 @@ def split_files_by_key_sets(
     the id space) prune almost everything, where a min/max RANGE test
     would span the whole table and prune nothing. Conservative for
     multi-column keys (per-column membership is necessary, not
-    sufficient, for a tuple match) — never lossy."""
-    from bisect import bisect_left
-
+    sufficient, for a tuple match) — never lossy
+    (:func:`prox_spark.manifest.overlaps_sets`)."""
     touched, untouched = [], []
     stats = manifest.get("stats") or {}
     for f in manifest.get("files", []):
-        fstats = stats.get(f)
-        hit = True
-        if fstats is not None:
-            for col, vals in key_values.items():
-                fr = fstats.get(col)
-                if fr is None or vals is None:
-                    continue
-                try:
-                    i = bisect_left(vals, fr[0])
-                except TypeError:  # incomparable types -> can't prune
-                    continue
-                if i >= len(vals) or vals[i] > fr[1]:
-                    hit = False
-                    break
+        hit = M.overlaps_sets(stats.get(f), key_values)
         (touched if hit else untouched).append(f)
     return touched, untouched
 
@@ -2063,18 +1971,14 @@ def _value_incidences(
 
     from pyspark.sql import functions as F
 
-    renames = list(manifest.get("renames") or [])
-    born = manifest.get("born") or {}
-    groups: dict[tuple, list[str]] = {}
+    groups: dict[tuple, tuple[list, list[str]]] = {}
     for f in files:
-        sig = tuple(
-            i for i, r in enumerate(renames)
-            if born.get(f, 0) < r["version"]
-        )
-        groups.setdefault(sig, []).append(f)
+        applicable = M.renames_for(manifest, f)
+        sig = tuple(r["version"] for r in applicable)
+        groups.setdefault(sig, (applicable, []))[1].append(f)
     parts = []
-    for sig, fs in sorted(groups.items()):
-        phys = M.physical_name(col, [renames[i] for i in sig])
+    for _, (applicable, fs) in sorted(groups.items()):
+        phys = M.physical_name(col, applicable)
         df = read_parquet(spark, *[M.resolve(table_path, f) for f in fs])
         parts.append(
             df.select(
@@ -2237,7 +2141,7 @@ def compact_table(
     and then keep that append's files a second time on rebase."""
     manifest = read_manifest(spark, table_path)
     cols = stat_cols if stat_cols is not None else (manifest.get("stat_cols") or [])
-    df = _read_rows(spark, table_path, manifest)
+    df = _read_files(spark, table_path, manifest, manifest["files"])
     nf = n_files if n_files is not None else 8
     if not cols:
         # no clustering columns: plain file-count compaction
@@ -2284,21 +2188,11 @@ def compact_small_files(
     (n_rewritten, n_kept), or None when fewer than two files are under
     the threshold (nothing to consolidate — a no-op, no new version)."""
     manifest = read_manifest(spark, table_path)
-    if "files" not in manifest:
-        raise ValueError(f"{table_path} predates file-granular manifests")
-    jvm, fs, _ = _fs(spark, table_path)
     limit = int(min_file_mb * 1024 * 1024)
-    sizes = manifest.get("sizes") or {}
     small, big = [], []
     small_bytes = 0
     for f in manifest["files"]:
-        # commit-time recorded size when available; stat only legacy
-        # files committed before sizes were recorded in the manifest
-        n = sizes.get(f)
-        if n is None:
-            n = fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(M.resolve(table_path, f))
-            ).getLen()
+        n = manifest["sizes"][f]  # commit-time recorded size
         if n < limit:
             small.append(f)
             small_bytes += n
@@ -2350,9 +2244,7 @@ def maintain_table(
       (:func:`compact_small_files`); file sizes come from the
       manifest's ``sizes`` record (written at commit time from the
       same directory listing that named the files), so the decision
-      costs zero FS RPCs on tables committed since the record
-      exists — only legacy files without a recorded size fall back
-      to a per-file stat;
+      costs zero FS RPCs;
     - fold pending merge-on-read deletes into a full re-cluster once
       more than ``max_pending_deletes`` entries accrue — each entry
       is a per-read anti-join on its targeted files, so unbounded
@@ -2380,30 +2272,14 @@ def maintain_table(
     manifest = read_manifest(spark, table_path)
     out: dict = {"compacted_small": None, "folded_deletes": False,
                  "refreshed_indexes": {}, "vacuumed": []}
-    if "files" not in manifest:
-        return out
     if len(manifest.get("deletes") or []) > max_pending_deletes:
         compact_table(spark, table_path)
         out["folded_deletes"] = True
     else:
-        sizes = manifest.get("sizes") or {}
         limit = int(min_file_mb * 1024 * 1024)
-        stat_fallback = [f for f in manifest["files"] if f not in sizes]
-        n_small = sum(1 for f in manifest["files"] if sizes.get(f, limit) < limit)
-        if n_small <= max_small_files and stat_fallback:
-            # legacy files committed before sizes were recorded: stat
-            # only those, and only until the threshold is crossed
-            jvm, fs, _ = _fs(spark, table_path)
-            for f in stat_fallback:
-                try:
-                    if fs.getFileStatus(
-                        jvm.org.apache.hadoop.fs.Path(M.resolve(table_path, f))
-                    ).getLen() < limit:
-                        n_small += 1
-                except Exception:  # noqa: PERF203 - racing vacuum/rewrite
-                    continue
-                if n_small > max_small_files:
-                    break
+        n_small = sum(
+            1 for f in manifest["files"] if manifest["sizes"][f] < limit
+        )
         if n_small > max_small_files:
             out["compacted_small"] = compact_small_files(
                 spark, table_path, min_file_mb=min_file_mb
@@ -2424,27 +2300,14 @@ def table_history(spark: SparkSession, table_path: str) -> list[dict]:
     oldest first — version number, data-file count, total data bytes,
     pending merge-on-read delete entries (and how many data files they
     target), and the declared stat/cluster columns. All driver-side
-    manifest + FileSystem metadata; no Spark job. The operational
-    companion to time travel: pick a version to pin, estimate a
-    vacuum's reclaim, or see how much of the table a pending delete
-    still masks. One version listing + one size fetch per DISTINCT
-    file across all versions (carried-over files dominate a merge
-    history, so this is O(versions + files), not O(versions x files)
-    — it matters on object stores where each stat is an RPC)."""
-    jvm, fs, _ = _fs(spark, table_path)
+    manifest metadata (bytes are the commit-time recorded sizes); no
+    Spark job and no file stat. The operational companion to time
+    travel: pick a version to pin, estimate a vacuum's reclaim, or see
+    how much of the table a pending delete still masks. One version
+    listing, one read per manifest and one per DISTINCT chunk (carried
+    chunks repeat across a merge history)."""
     out = []
     sizes: dict[str, int] = {}
-
-    def _size(f: str) -> int:
-        if f not in sizes:
-            try:
-                sizes[f] = fs.getFileStatus(
-                    jvm.org.apache.hadoop.fs.Path(M.resolve(table_path, f))
-                ).getLen()
-            except Exception:
-                sizes[f] = 0  # vacuumed-from-under or in-flight: unknown
-        return sizes[f]
-
     chunk_files: dict[str, list[str]] = {}  # carried chunks repeat
     for v in _manifest_versions(spark, table_path):  # ONE listing
         m = _read_manifest_file(spark, table_path, v)
@@ -2454,18 +2317,12 @@ def table_history(spark: SparkSession, table_path: str) -> list[dict]:
                 if e["file"] not in chunk_files:
                     cdoc = _read_json(spark, table_path, e["file"])
                     chunk_files[e["file"]] = cdoc["files"]
-                    # commit-time recorded sizes pre-seed the cache:
-                    # zero stat RPCs for files committed since the
-                    # sizes record exists
                     sizes.update(cdoc.get("sizes") or {})
                 files.extend(chunk_files[e["file"]])
         else:
-            files = m.get("files")
+            files = m["files"]
             sizes.update(m.get("sizes") or {})
-        if files is None:  # legacy single-snapshot-dir manifest
-            out.append({"version": v, "legacy_data_dir": m.get("data")})
-            continue
-        nbytes = sum(_size(f) for f in files)
+        nbytes = sum(sizes[f] for f in files)
         deletes = m.get("deletes") or []
         out.append(
             {
@@ -2564,24 +2421,21 @@ def vacuum(
         kept_chunks.update(
             e["file"].rsplit("/", 1)[-1] for e in m.get("chunks") or []
         )
-        if "files" in m:
-            # foreign (shallow-clone) entries live under the SOURCE
-            # table and are never candidates in the local sweep below —
-            # protecting them here would only pollute kept_dirs
-            kept_dirs.update(
-                f.split("/")[1]
-                for f in m["files"]
-                if "/" in f and not M.is_foreign(f)
-            )
-            # merge-on-read delete key files are data too: retiring one
-            # that a kept manifest still references would resurrect rows
-            kept_dirs.update(
-                d["file"].split("/")[1]
-                for d in m.get("deletes") or []
-                if not M.is_foreign(d["file"])
-            )
-        else:
-            kept_dirs.add(m["data"].split("/", 1)[1])
+        # foreign (shallow-clone) entries live under the SOURCE table
+        # and are never candidates in the local sweep below —
+        # protecting them here would only pollute kept_dirs
+        kept_dirs.update(
+            f.split("/")[1]
+            for f in m["files"]
+            if "/" in f and not M.is_foreign(f)
+        )
+        # merge-on-read delete key files are data too: retiring one
+        # that a kept manifest still references would resurrect rows
+        kept_dirs.update(
+            d["file"].split("/")[1]
+            for d in m.get("deletes") or []
+            if not M.is_foreign(d["file"])
+        )
 
     for v in keep:
         _protect(v)

@@ -169,30 +169,6 @@ def _filter_in_sets(filters) -> dict[str, list]:
     return {c: sorted(v) for c, v in sets.items()}
 
 
-def _set_overlaps(fstats: dict | None, key_sets: dict[str, list]) -> bool:
-    """Could a file with footer stats ``fstats`` contain ANY of the
-    listed values on every constrained column? Unknown stats never
-    prune; incomparable values count as possible (conservative)."""
-    if fstats is None:
-        return True
-    for col, vals in key_sets.items():
-        fr = fstats.get(col)
-        if fr is None:
-            continue
-        hit = False
-        for v in vals:
-            try:
-                if fr[0] <= v <= fr[1]:
-                    hit = True
-                    break
-            except TypeError:
-                hit = True  # incomparable: cannot rule the value out
-                break
-        if not hit:
-            return False
-    return True
-
-
 # one scan task reads up to this many bytes of packed small files —
 # Spark's own spark.sql.files.maxPartitionBytes default, applied to
 # the manifest's recorded sizes so a 10^6-small-file table doesn't
@@ -279,7 +255,7 @@ class ProxTableReader(DataSourceReader):
         return [
             f for f in files
             if M.overlaps(stats.get(f), self.key_ranges)
-            and _set_overlaps(stats.get(f), self.key_sets)
+            and M.overlaps_sets(stats.get(f), self.key_sets)
         ]
 
     def partitions(self):
@@ -353,7 +329,7 @@ class ProxTableReader(DataSourceReader):
             }
             # per-value In-list skipping: the group survives only if
             # SOME listed value can fall inside its min/max
-            if M.overlaps(declared, self.key_ranges) and _set_overlaps(
+            if M.overlaps(declared, self.key_ranges) and M.overlaps_sets(
                 declared, self.key_sets
             ):
                 keep.append(rg)

@@ -673,11 +673,6 @@ class TableChangesDataSource(DataSource):
                 f"{self.options['path']} is not a manifest table"
             )
         doc = load_manifest(self.options["path"], versions[-1])
-        if "schema" not in doc:
-            raise ValueError(
-                "manifest records no schema (legacy table); pass an "
-                "explicit schema to readStream"
-            )
         st = StructType.fromJson(doc["schema"])
         # declare every column nullable: non-nullability recorded by a
         # literal-typed commit is not a promise this source can keep —

@@ -7,9 +7,8 @@ The reference's load step truncates and reloads whole Redshift tables
 preactions); at 100 TB a daily full rewrite is untenable — you merge
 the day's changed rows into the standing table instead. Without
 adopting Delta/Iceberg/Hudi, the parquet-native pattern is
-copy-on-write — but copy-on-write of WHAT? Round 3 rewrote the whole
-table per merge (snapshot-granular commits); this version rewrites
-only the files whose key range intersects the update batch.
+copy-on-write, file by file: a merge rewrites only the files whose key
+range intersects the update batch.
 
 Every keyed write (the merges, ``apply_changes``, both deletes, and
 the materialized-view fold in :mod:`prox_spark.mv`) goes through one
@@ -43,18 +42,16 @@ Because commits cluster data by the merge keys (range partition +
 sort + per-file min/max + bloom filters), steady-state merge cost is
 ∝ the update batch's key spread, not table size — the same
 matched-file pruning a Delta MERGE gets from data skipping. A table
-whose stats don't cover the merge keys (or a legacy plain directory)
-degrades gracefully to the full rewrite.
+whose stats don't cover the merge keys degrades gracefully to the full
+rewrite.
 
 Every merge publishes through the manifest log: new files are fully
 written before a single atomic manifest rename makes them current, so
 a concurrent reader sees the previous version or the new one — never
 a mix, and old versions stay readable (time travel) until vacuumed.
-
-Pre-manifest plain-parquet targets are migrated on first merge: their
-rows become the ``current`` side and the merged result is committed as
-version 1; the legacy root files are then removed (single-writer
-assumption, as for all merges here).
+An absent path is created as a manifest table by the merges; a path
+that exists without a manifest (a plain parquet directory) is refused
+with ``ValueError`` and left untouched.
 """
 
 from __future__ import annotations
@@ -64,32 +61,19 @@ from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from prox_spark.io import read_parquet
 from prox_spark.local_frames import key_set_sql, values_df_like
 from prox_spark.table import (
     _assemble,
     _fs,
     _manifest_versions,
+    _read_files,
     _read_manifest_file,
-    _read_rows,
     commit_delta,
     commit_snapshot,
     split_chunks_by_key_sets,
     split_files_by_key_ranges,
     split_files_by_key_sets,
 )
-
-
-def _drop_legacy_files(spark: SparkSession, table_path: str) -> None:
-    """After migrating a plain parquet dir to manifest format, remove
-    the now-shadowed root data files (everything except the manifest
-    log and snapshot dirs)."""
-    from prox_spark.table import DATA_DIR, MANIFEST_DIR
-
-    _, fs, path = _fs(spark, table_path)
-    for st in fs.listStatus(path):
-        if st.getPath().getName() not in (DATA_DIR, MANIFEST_DIR):
-            fs.delete(st.getPath(), True)
 
 
 def _check_keys(scope, keys: list[str]) -> None:
@@ -301,8 +285,7 @@ class _MergeScope:
     ``keep``          — file names provably free of batch keys, carried
                         into the next version verbatim;
     ``manifest``      — the manifest the scope read (chunk-pruned when
-                        the table is chunked), or None for a legacy
-                        plain dir;
+                        the table is chunked);
     ``key_values``    — sorted distinct landed key values per column,
                         or None when the keys were not landed;
     ``key_frame()``   — the batch's distinct key tuples;
@@ -312,18 +295,18 @@ class _MergeScope:
     ``commit(df)``    — publish ``keep`` + newly-written ``df`` against
                         ``manifest``.
 
-    For legacy plain dirs / stat-less manifests, ``touched`` is the
-    whole table and ``keep`` is empty — a full rewrite, exactly the
-    pre-file-granular behavior."""
+    When the table's stat columns don't cover the keys (or pruning is
+    off), ``touched`` is the whole table and ``keep`` is empty — a
+    full rewrite."""
 
     spark: SparkSession
     table_path: str
     key_df: DataFrame
     keys: list
     touched: DataFrame
+    manifest: dict
     touched_files: list = field(default_factory=list)
     keep: list = field(default_factory=list)
-    manifest: dict | None = None
     key_rows: list | None = None
     key_values: dict | None = None
     key_ranges: dict | None = None
@@ -400,7 +383,7 @@ class _MergeScope:
         return df.filter(cond)
 
     def commit(self, merged: DataFrame, extra_meta: dict | None = None) -> None:
-        m = self.manifest or {}
+        m = self.manifest
         # preserve the table's declared stat columns (they may be a
         # SUPERSET of this merge's keys — committing just the keys
         # would silently shrink them and break file pruning for later
@@ -415,8 +398,6 @@ class _MergeScope:
             base_manifest=self.manifest,
             extra_meta=extra_meta,
         )
-        if self.manifest is None:
-            _drop_legacy_files(self.spark, self.table_path)
 
 
 def _merge_scope(
@@ -428,7 +409,8 @@ def _merge_scope(
     prune: bool = True,
 ) -> _MergeScope | None:
     """Resolve the table once and build the scope of a keyed write
-    over ``key_df``'s keys, or None when the table doesn't exist.
+    over ``key_df``'s keys, or None when the table doesn't exist. A
+    path that exists without a manifest raises ``ValueError``.
 
     ``key_rows``: the batch's rows already landed by the caller (any
     Rows carrying the key columns) — skips the scope's own key-landing
@@ -457,18 +439,10 @@ def _merge_scope(
         _, fs, path = _fs(spark, table_path)
         if not fs.exists(path):
             return None
-        # legacy plain dir: migrated by the first commit
-        return _MergeScope(
-            spark, table_path, key_df, keys, read_parquet(spark, table_path),
-            key_rows=key_rows,
-        )
+        raise ValueError(f"{table_path} is not a manifest table")
     doc = _read_manifest_file(spark, table_path, versions[-1])
     doc.setdefault("version", versions[-1])
-    prunable = (
-        prune
-        and ("files" in doc or "chunks" in doc)
-        and set(keys) <= set(doc.get("stat_cols") or [])
-    )
+    prunable = prune and set(keys) <= set(doc.get("stat_cols") or [])
     # nothing worth pruning on a table of ≤2 files: no key-landing job
     # (small tables — e.g. AQE-coalesced dimensions — hit this on
     # every merge of a sequential pipeline)
@@ -483,7 +457,7 @@ def _merge_scope(
         overlap, carry = split_chunks_by_key_sets(doc, vals)
         doc = {**doc, "chunks": overlap}
     manifest = _assemble(spark, table_path, doc)
-    files = manifest.get("files", [])
+    files = manifest["files"]
     if not prunable:
         touched_files, keep, ranges = files, [], None
     elif small:
@@ -498,8 +472,8 @@ def _merge_scope(
         touched_files, keep = split_files_by_key_ranges(manifest, ranges)
     return _MergeScope(
         spark, table_path, key_df, keys,
-        _read_rows(spark, table_path, manifest, touched_files),
-        touched_files=touched_files, keep=keep, manifest=manifest,
+        _read_files(spark, table_path, manifest, touched_files), manifest,
+        touched_files=touched_files, keep=keep,
         key_rows=key_rows, key_values=vals, key_ranges=ranges,
         carry_chunks=carry,
     )
@@ -583,8 +557,7 @@ def delete_keys_mor(
 
     Returns the number of LIVE rows the delete removed (rows already
     masked by an earlier pending delete don't recount). A delete that
-    matches nothing commits nothing. Requires a file-granular manifest
-    table (the copy-on-write path handles legacy layouts).
+    matches nothing commits nothing.
 
     The scope supplies everything: the targets are its touched files,
     the count is its batch-key filter over them, the key file is its
@@ -599,12 +572,8 @@ def delete_keys_mor(
     from prox_spark.table import commit_delete_file
 
     scope = _merge_scope(spark, table_path, keys_df, keys)
-    if scope is None or scope.manifest is None:
+    if scope is None:
         raise ValueError(f"no manifest table at {table_path}")
-    if "files" not in scope.manifest:
-        raise ValueError(
-            f"{table_path} predates file-granular manifests; use delete_keys"
-        )
     _check_keys(scope, keys)
     if not scope.touched_files:
         return 0

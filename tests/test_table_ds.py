@@ -898,14 +898,17 @@ def test_in_list_prunes_per_value_not_envelope(spark, tbl):
     row-identical to read_table."""
     from pyspark.sql.datasource import In
 
+    from prox_spark.manifest import overlaps_sets
     from prox_spark.table import read_table
-    from prox_spark.table_ds import ProxTableReader, _set_overlaps
+    from prox_spark.table_ds import ProxTableReader
     from prox_spark.table_stream import load_manifest
 
-    assert _set_overlaps({"doc_id": (0, 9)}, {"doc_id": [3, 1000003]})
-    assert not _set_overlaps(
+    assert overlaps_sets({"doc_id": (0, 9)}, {"doc_id": [3, 1000003]})
+    assert not overlaps_sets(
         {"doc_id": (100, 400)}, {"doc_id": [3, 1000003]}
     )
+    # an empty value list admits nothing the column has stats for
+    assert not overlaps_sets({"doc_id": (0, 9)}, {"doc_id": []})
     mm = load_manifest(tbl)
     rd = ProxTableReader({}, mm, tbl)
     full = rd.pruned_files()

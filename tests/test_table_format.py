@@ -1,6 +1,6 @@
 """Manifest-log table format (prox_spark/table.py): atomic commits,
 snapshot isolation for concurrent readers, time travel, vacuum, and
-legacy-directory migration through the upsert operators."""
+the refusal of paths that hold no manifest."""
 
 from __future__ import annotations
 
@@ -75,21 +75,71 @@ def test_vacuum_drops_old_versions_keeps_latest(spark, tmp_path):
         read_table(spark, path, version=1)
 
 
-def test_legacy_plain_dir_migrates_on_first_merge(spark, tmp_path):
-    """A pre-manifest plain parquet dir: first upsert merges its rows,
-    commits version 1, and removes the shadowed root files."""
-    path = str(tmp_path / "legacy")
-    _df(spark, [(1, "a"), (2, "b")]).write.parquet(path)
-    assert not is_manifest_table(spark, path)
-
-    upsert_parquet(spark, path, _df(spark, [(2, "B")]), ["id"])
-    assert is_manifest_table(spark, path)
-    got = {(r.id, r.v) for r in read_table(spark, path).collect()}
-    assert got == {(1, "a"), (2, "B")}
-    # root holds only the manifest log + snapshots now
+def _tree_bytes(root) -> dict:
+    """{relative path: bytes} of every file under ``root``."""
     import os
 
-    assert sorted(os.listdir(path)) == ["_manifests", "data"]
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            p = os.path.join(d, n)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = f.read()
+    return out
+
+
+def test_plain_parquet_dir_is_refused(spark, tmp_path):
+    """Every table is a manifest table: reading, merging into or
+    deleting from a plain parquet directory raises ValueError and
+    leaves its files byte-identical."""
+    from prox_spark.upsert import delete_keys, delete_keys_mor
+
+    path = str(tmp_path / "plain")
+    _df(spark, [(1, "a"), (2, "b")]).write.parquet(path)
+    before = _tree_bytes(path)
+    keys = spark.createDataFrame([(2,)], "id long")
+    calls = {
+        "read_table": lambda: read_table(spark, path),
+        "upsert_parquet": lambda: upsert_parquet(
+            spark, path, _df(spark, [(2, "B")]), ["id"]
+        ),
+        "delete_keys": lambda: delete_keys(spark, path, keys, ["id"]),
+        "delete_keys_mor": lambda: delete_keys_mor(spark, path, keys, ["id"]),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match="not a manifest table"):
+            call()
+        assert _tree_bytes(path) == before, name
+    assert not is_manifest_table(spark, path)
+
+
+def test_stale_fixture_manifests_are_restaged(spark, tmp_path):
+    """A fixture root whose manifests are in the old single-snapshot
+    layout ({"version", "data"}) is restaged in the writer's layout,
+    and each version reads back exactly its rows."""
+    import json
+    import os
+
+    from prox_spark.queries.table_q import _cdc_versions, stage_cdc_table
+    from prox_spark.table import read_manifest
+
+    root = str(tmp_path / "cdc")
+    _, snaps = stage_cdc_table(root)
+    for v, snap in snaps.items():
+        with open(f"{root}/_manifests/manifest-{v:08d}.json", "w") as f:
+            json.dump({"version": v, "data": os.path.relpath(snap, root)}, f)
+
+    stage_cdc_table(root)
+    want = _cdc_versions()
+    for v in (1, 2):
+        m = read_manifest(spark, root, v)
+        assert {"files", "sizes", "born", "schema"} <= set(m), m
+        assert "data" not in m
+        for f in m["files"]:
+            assert m["sizes"][f] == os.path.getsize(f"{root}/{f}")
+            assert m["born"][f] == v
+        got = read_table(spark, root, version=v).collect()
+        assert sorted(tuple(r) for r in got) == sorted(want[v])
 
 
 def test_failed_commit_leaves_table_readable(spark, tmp_path):
